@@ -57,6 +57,10 @@ object DedupQueries {
     */
   val NumHashes = 16
   val BandRows = 4
+  // q149 collects band evidence as bit_or(shiftleft(1L, band)): one bit
+  // per band in a long, and shiftleft wraps mod 64 past the 64th band.
+  require(NumHashes / BandRows <= 64,
+    s"${NumHashes / BandRows} bands do not fit q149's 64-bit band mask")
   val SimHashBits = 60
 
   /** Strongly-universal permutation family over Z_p (p = 2^31-1):

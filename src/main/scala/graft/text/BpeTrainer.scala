@@ -47,11 +47,11 @@ object BpeTrainer {
     // (interpreted per element) while ArraysZip is codegen'd — this
     // runs once per trainer step over the whole vocab, so the adjacent
     // pairing stays inside whole-stage codegen. Rows identical: both
-    // zip the same two slices positionally.
-    w.select(explode(arrays_zip(slice(syms, lit(1), n1),
-        slice(syms, lit(2), n1))).as("p"), col("wcnt"))
-      .select(col("p").getField("0").as("a"),
-        col("p").getField("1").as("b"), col("wcnt"))
+    // zip the same two slices positionally. The slices are aliased so the
+    // struct fields are named a and b, not Spark's positional fallback.
+    w.select(explode(arrays_zip(slice(syms, lit(1), n1).as("a"),
+        slice(syms, lit(2), n1).as("b"))).as("p"), col("wcnt"))
+      .select(col("p.a"), col("p.b"), col("wcnt"))
       .groupBy("a", "b").agg(sum("wcnt").as("cnt"))
   }
 

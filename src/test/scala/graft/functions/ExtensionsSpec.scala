@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.SharedSpark
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `spark.sql.extensions=graft.functions.GraftExtensions`; that static
   * conf only takes effect when the session CREATES the SparkContext, so
   * in this shared-context test JVM we exercise the same object through
-  * the programmatic `withExtensions` hook). The sibling session shares
+  * the programmatic `withExtensions` hook). The session is built from
+  * SharedSpark's builder, so if this suite runs first the context it
+  * creates carries graft's configuration. The sibling session shares
   * the existing context — extensions are per-session state — and the
   * active/default sessions are restored afterwards; it must NOT stop()
   * the shared context.
@@ -21,10 +24,8 @@ class ExtensionsSpec extends AnyFunSuite {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s = SparkSession.builder()
-        .master("local[2]")
+      val s = SharedSpark.builder
         .withExtensions(new GraftExtensions)
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
       val v = s.sql(
         """SELECT dot_product(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
