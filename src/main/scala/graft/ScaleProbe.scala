@@ -872,9 +872,10 @@ object ScaleProbe {
     graft.dedup.DedupQueries.advanceDedupIndex(
       base.filter(col("doc_id") >= 500 && col("doc_id") < 550)
         .select("doc_id", "text"), idx, Some(1L))
+    val live = graft.sources.ArtifactVersions.live(idx)
     def cloneBatch(comp: String, to: Long): Unit = {
-      val src = java.nio.file.Paths.get(idx, comp, "batch-1")
-      val dst = java.nio.file.Paths.get(idx, comp, s"batch-$to")
+      val src = java.nio.file.Paths.get(live, comp, "batch-1")
+      val dst = java.nio.file.Paths.get(live, comp, s"batch-$to")
       java.nio.file.Files.createDirectories(dst)
       Option(src.toFile.listFiles).getOrElse(Array.empty).foreach(f =>
         java.nio.file.Files.copy(f.toPath, dst.resolve(f.getName)): Unit)

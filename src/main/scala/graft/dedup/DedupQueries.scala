@@ -232,7 +232,9 @@ object DedupQueries {
     * agreeing band" is a per-row predicate over the joined signature
     * columns, and keeping exactly those rows yields one row per
     * distinct pair with no exchange at all (guide §2.4 "remove
-    * shuffles outright"). Row set and est_jaccard are identical to
+    * shuffles outright"). The predicate checks the row's own band
+    * slots too, so a bucket collision can never emit a pair twice.
+    * Row set and est_jaccard are identical to
     * verifiedPairsFrom(candidatesFromBands(bands), sig).
     *
     * PRECONDITION (shared with the old shape, stated since r19): the
@@ -259,14 +261,12 @@ object DedupQueries {
       (j * BandRows until (j + 1) * BandRows)
         .map(i => col(s"a.h$i") === col(s"b.h$i")).reduce(_ && _)
     }
-    // true iff no band before this row's own fully agrees (band 0
-    // trivially qualifies); rows failing it are the duplicate
-    // candidates the old distinct() removed
+    // true iff this row's own band agrees on every slot and no earlier
+    // band does; rows failing it are the duplicate candidates the old
+    // distinct() removed, or bucket collisions
     val isFirstAgreeingBand = coalesce(bandAgrees.indices.map { j =>
-      val noEarlier =
-        if (j == 0) lit(true)
-        else bandAgrees.take(j).map(e => !e).reduce(_ && _)
-      when(col("band") === j, noEarlier)
+      when(col("band") === j,
+        bandAgrees.take(j).map(e => !e).foldLeft(bandAgrees(j))(_ && _))
     }: _*)
     cand.join(a, col("doc_a") === col("a.doc_id"))
       .join(b, col("doc_b") === col("b.doc_id"))
@@ -1508,89 +1508,27 @@ object DedupQueries {
        WHERE $docWhere
        ORDER BY d.doc_id"""
 
-  /** N-GRAM WINDOW INDEX — the persisted-artifact form of the q152
-    * machinery, for span scrubbing AT INGEST (q154): the corpus's
-    * distinct w-token window hashes are built once as a columnar
-    * artifact; every arriving doc is scrubbed of any span the corpus
-    * already contains (no first-copy exception — the retained copy
-    * lives in the corpus), and admitted text ADVANCES the index by
-    * appending its own distinct window hashes. Consumers are
-    * set-semantics (left-semi), so the advance is a pure append —
-    * re-added hashes are harmless, never a rewrite.
-    *
-    * The artifact lives under a VERSIONED root
-    * ([[graft.sources.ArtifactVersions]]): build and
-    * [[compactNgramIndex]] publish immutable `vN` directories behind
-    * the atomic CURRENT pointer; only the LIVE version's grams dir
-    * ever receives advance appends. Appends accumulate one file and
-    * one distinct-set per batch — replays (the at-least-once sink
-    * caveat) and cross-batch overlap add duplicate rows — so
-    * compaction periodically rewrites the distinct set under the next
-    * version and flips the pointer, with in-flight readers keeping
-    * whichever version they resolved (q156 declares the whole loop).
+  /** N-GRAM WINDOW INDEX (component `grams`): the corpus's distinct
+    * w-token window hashes, for span scrubbing AT INGEST (q154). Every
+    * arriving doc is scrubbed of any span the corpus already contains,
+    * and admitted text advances the index with its own window hashes.
+    * Consumers are set-semantics (left-semi), so re-added hashes are
+    * harmless and compaction never changes a scrub.
     */
-  def buildNgramIndex(docs: DataFrame, w: Int, root: String): Unit = {
-    val v = graft.sources.ArtifactVersions.prepareNext(root)
-    windowHashesOf(docs, w).select("h").distinct()
-      .write.parquet(v + "/grams")
-    graft.sources.ArtifactVersions.publish(root, v)
-  }
+  def buildNgramIndex(docs: DataFrame, w: Int, root: String): Unit =
+    graft.sources.ArtifactVersions.build(root,
+      "grams" -> windowHashesOf(docs, w).select("h").distinct())
 
-  /** The live version's grams dir — build/compact publish versions,
-    * the advance path appends into the live one.
-    */
-  private def liveGramsDir(root: String): String =
-    graft.sources.ArtifactVersions.current(root)
-      .getOrElse(sys.error(s"no published n-gram index under $root")) +
-      "/grams"
-
-  /** The live grams table — recursive-lookup read (build files plus
-    * committed streaming-advance batch dirs).
-    */
   private[graft] def liveGrams(s: SparkSession, root: String): DataFrame =
-    graft.sources.BatchCommits.readComponent(s, liveGramsDir(root))
+    graft.sources.ArtifactVersions.read(s, root, "grams")
 
-  /** Append the admitted (post-scrub) docs' window hashes. With a
-    * `batchId`, the append is an atomic fenced batch commit — a
-    * replayed micro-batch is skipped ([[graft.sources.BatchCommits]]),
-    * so the streaming advance is exactly-once; without one (the batch
-    * lifecycle flows, which model replay explicitly, e.g. q156) it is
-    * a plain append.
-    */
   def advanceNgramIndex(admitted: DataFrame, w: Int, root: String,
-      batchId: Option[Long] = None): Unit = {
-    val grams = windowHashesOf(admitted, w).select("h").distinct()
-    batchId match {
-      case Some(id) =>
-        graft.sources.BatchCommits.appendBatch(grams, liveGramsDir(root), id): Unit
-      case None =>
-        grams.write.mode("append").parquet(liveGramsDir(root))
-    }
-  }
+      batchId: Option[Long] = None): Unit =
+    graft.sources.ArtifactVersions.advance(root, batchId,
+      windowHashesOf(admitted, w).select("h").distinct())("grams" -> identity)
 
-  /** COMPACT the live grams artifact into the next version: one
-    * distinct over the accumulated appends, written fresh and
-    * atomically published. Scrub results are provably unchanged
-    * (left-semi consumers are set-semantics; DedupSpec pins frame
-    * equality), the duplicate rows the batch lifecycle flows' modelled
-    * replays leave behind are gone, and the small-files accumulation
-    * resets to one write.
-    *
-    * The old version's NEWEST `batch-<id>` fence markers carry over as
-    * EMPTY marker dirs in the new version (readers see no files; the
-    * fence sees the id): without the carry, a batch whose advance
-    * committed into vN, followed by a compaction publishing vN+1 and a
-    * crash before the stream checkpoint, would replay its (set-harmless
-    * but duplicate) append into vN+1. Only the
-    * [[graft.sources.BatchCommits.MarkerKeep]] newest ids are carried —
-    * older ids are beyond the checkpoint's replay horizon, and carrying
-    * all of them forever is an unbounded inode leak. Stranded staging
-    * dirs of crashed attempts are swept at the same time.
-    */
-  def compactNgramIndex(s: SparkSession, root: String): Unit = {
-    liveGramsDir(root): Unit // fail fast if no version was ever published
-    graft.sources.BatchCommits.compactArtifact(s, root, Seq("grams"))
-  }
+  def compactNgramIndex(s: SparkSession, root: String): Unit =
+    graft.sources.ArtifactVersions.compact(s, root, Seq("grams"))
 
   /** Scrub arrivals against the persisted index: a window is removable
     * iff its hash EXISTS in the artifact (left-semi join — arrival-side
@@ -1660,7 +1598,7 @@ object DedupQueries {
     compactNgramIndex(s, root)
     val nAfter = liveGrams(s, root).count()
     val live = java.nio.file.Paths.get(graft.sources.ArtifactVersions
-      .current(root).get).getFileName.toString
+      .live(root)).getFileName.toString
     spanScrubHashesAgainstIndex(s, arrivals, arrHashes, root, w)
       .agg(count(lit(1)).as("rescrub_docs"),
         sum("n_removed").as("rescrub_removed"),
@@ -1913,7 +1851,7 @@ object DedupQueries {
     */
   private[graft] def advanceIngestFlow(s: SparkSession, docs: DataFrame,
       split1: Long, split2: Long): DataFrame = {
-    val idx = tempIndexDir("graft_dedup_advance")
+    val idx = graft.TempArtifacts.dir("graft_dedup_advance")
     buildDedupIndex(docs.filter(col("doc_id") < split1), idx)
     val phase1 = incrementalIngest(
       docs.filter(col("doc_id") < split2), split1,
@@ -1993,44 +1931,24 @@ object DedupQueries {
          ORDER BY doc_id"""
   }
 
-  /** Artifact lifecycle of the dedup index (the fit-once/serve-many
-    * shape [[graft.similarity.SimilarityQueries.fitIvfQuantizer]]
-    * already has, applied to MinHash): ONE build job writes the
-    * signature and band tables as parquet; every later dedup/ingest
-    * query reads columnar artifacts instead of re-tokenizing and
-    * re-hashing the corpus text. At 100 TB the rebuild is hours of
-    * wasted compute PER QUERY — the index is maintained, not derived.
-    * The reference's only analogue is its flux-function memoization
-    * (vpicdataset.py:371-376); this is the same idea at corpus scale
-    * minus the stale-reuse quirk: the build is an explicit step keyed
-    * by the corpus snapshot, never an implicit cache.
+  /** The dedup index ([[graft.sources.ArtifactVersions]] components
+    * `signatures` (doc_id, h0..h15) and `bands` (doc_id, band,
+    * bucket)): every later dedup/ingest query reads these columnar
+    * tables instead of re-tokenizing and re-hashing the corpus text.
     */
   def buildDedupIndex(docs: DataFrame, path: String): Unit =
     buildDedupIndexFrom(minhashSignaturesOf(docs), path)
 
   /** Build from an arbitrary signature table — the word-token and
-    * shingle pipelines share one artifact layout (signatures + bands
-    * parquet), so every serve-side reader works on either.
+    * shingle pipelines share one artifact layout, so every serve-side
+    * reader works on either.
     */
   def buildDedupIndexFrom(signatures: DataFrame, path: String): Unit = {
     val sig = graft.CacheScope.retain(signatures)
-    sig.write.mode("overwrite").parquet(path + "/signatures")
-    bandsOf(sig).write.mode("overwrite").parquet(path + "/bands")
+    graft.sources.ArtifactVersions.build(path,
+      "signatures" -> sig, "bands" -> bandsOf(sig))
   }
 
-  /** ADVANCE the persisted index: append the signatures and band
-    * entries of newly-admitted documents. This is the missing half of
-    * the artifact lifecycle — build once per corpus snapshot, then
-    * advance per ingest batch, never rebuild. Appending per-row
-    * signatures is EXACTLY equivalent to rebuilding from the advanced
-    * corpus because both tables are row-wise per-document (one sig row
-    * and four band rows per doc, each a pure function of that doc's
-    * text) — DedupIndexSpec asserts the equivalence frame-to-frame.
-    * Caller contract: the admitting batch's own reads of the artifact
-    * must be materialized (committed) before advancing — q119 models
-    * this with an eager localCheckpoint of the batch decision, the
-    * in-engine stand-in for a pipeline's batch-output commit.
-    */
   /** One micro-batch of the STREAMING ingest path
     * (Streams.nearDupIngestSink): admission decisions for `batch`
     * against the persisted index at `path`, with the same candidate /
@@ -2066,144 +1984,57 @@ object DedupQueries {
     }
   }
 
-  /** The dedup index's live component root: `path` itself for the flat
-    * build layout, or the live version dir once [[compactDedupIndex]]
-    * has moved the artifact under [[graft.sources.ArtifactVersions]]
-    * (the flat layout is the implicit v0 — every pre-compaction flow
-    * and spec keeps its exact semantics).
-    */
-  private def liveDedupDir(path: String): String =
-    graft.sources.ArtifactVersions.current(path).getOrElse(path)
-
-  /** With a `batchId`, both component appends are atomic fenced batch
-    * commits ([[graft.sources.BatchCommits]]): a replayed micro-batch
-    * skips the committed component(s) and completes only what a crash
-    * left missing — the streaming advance is exactly-once. Without
-    * one, plain appends (the single-JVM batch lifecycle flows).
+  /** Append the admitted docs' signature and band rows. The caller
+    * commits (materializes) the admitting batch's own reads of the
+    * artifact before advancing — q119 with an eager localCheckpoint.
     */
   def advanceDedupIndex(admitted: DataFrame, path: String,
-      batchId: Option[Long] = None): Unit = {
-    val live = liveDedupDir(path)
-    // LOCAL persist, not CacheScope: the streaming sink calls this once
-    // per micro-batch and never reaches a harness flush point — a
-    // retain here would pin one signature frame per batch for the
-    // stream's lifetime. The cache lifetime is exactly this call.
-    val sig = signaturesPerRow(admitted).persist()
-    try batchId match {
-      case Some(id) =>
-        graft.sources.BatchCommits.appendBatch(sig, live + "/signatures", id)
-        graft.sources.BatchCommits.appendBatch(bandsOf(sig), live + "/bands", id): Unit
-      case None =>
-        sig.write.mode("append").parquet(live + "/signatures")
-        bandsOf(sig).write.mode("append").parquet(live + "/bands")
-    } finally sig.unpersist(): Unit
-    // Visibility guarantee: a pre-advance read of this artifact may be
-    // cached (q119's phase 1 retains the signature read of the same
-    // path). Measured on this Spark version the fresh post-advance
-    // read does NOT match the cached plan (DedupIndexSpec's "advance
-    // visibility" case passes with this line removed) — but that
-    // hinges on CacheManager plan-matching internals, so the contract
-    // is made explicit: invalidate and recache everything under the
-    // artifact path before returning.
-    admitted.sparkSession.catalog.refreshByPath(path)
-  }
+      batchId: Option[Long] = None): Unit =
+    graft.sources.ArtifactVersions.advance(path, batchId,
+      signaturesPerRow(admitted))("signatures" -> identity, "bands" -> bandsOf)
 
-  /** Per-JVM memoized dedup-index artifact for the q117 serve path:
-    * ONE build per (corpus dir) per JVM into a temp dir deleted on
-    * exit. Bench runs a query's lambda three times — memoizing makes
-    * run 1 pay the build and runs 2-3 measure the SERVE-ONLY cost the
-    * artifact exists to demonstrate (min-of-3 = serve), and stops
-    * every bench/verify invocation from accumulating a fresh index
-    * copy on disk.
+  /** An index served once per corpus per JVM, keyed on the documents'
+    * content: bench run 1 pays the build, later runs measure serving.
     */
-  private val dedupIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
+  private def servedIndex(d: String, prefix: String)(
+      build: String => Unit): String =
+    graft.TempArtifacts.served(
+      graft.TempArtifacts.fingerprint(d, "documents"), prefix)(build)
+
+  /** The pre-arrival corpus's index, for the q117 ingest flow. */
   private def servedDedupIndex(s: SparkSession, docs: DataFrame,
       d: String): String =
-    dedupIndexCache.computeIfAbsent(d, _ => {
-      val idx = tempIndexDir("graft_dedup_index")
-      buildDedupIndex(docs.filter(col("doc_id") < NeardupArrivalSplit), idx)
-      idx
-    })
+    servedIndex(d, "graft_dedup_index")(buildDedupIndex(
+      docs.filter(col("doc_id") < NeardupArrivalSplit), _))
 
-  /** FULL-corpus twin of [[servedDedupIndex]] (which indexes only the
-    * pre-arrival subset for the ingest flow): one build per corpus per
-    * JVM, serving the pair-graph dashboard queries (q112, q149). Keyed
-    * separately — the two artifacts cover different document sets.
-    */
+  /** The full corpus's index, for the pair-graph dashboards. */
   private def servedFullDedupIndex(s: SparkSession, docs: DataFrame,
       d: String): String =
-    dedupIndexCache.computeIfAbsent(d + "|full", _ => {
-      val idx = tempIndexDir("graft_dedup_index_full")
-      buildDedupIndex(docs, idx)
-      idx
-    })
+    servedIndex(d, "graft_dedup_index_full")(buildDedupIndex(docs, _))
 
-  /** SHINGLE-signature twin of [[servedFullDedupIndex]], serving the
-    * shingle-LSH queries (q51, q95) — the last two of the five
-    * LSH-family queries that used to rebuild and retain their
-    * signature lineage per query.
-    */
+  /** The shingle-signature index, for the shingle-LSH queries. */
   private def servedShingleDedupIndex(s: SparkSession, docs: DataFrame,
       d: String): String =
-    dedupIndexCache.computeIfAbsent(d + "|shingle", _ => {
-      val idx = tempIndexDir("graft_dedup_index_shingle")
-      buildDedupIndexFrom(
-        signaturesFromTokens(shingleSets(docs, ShingleW)), idx)
-      idx
-    })
+    servedIndex(d, "graft_dedup_index_shingle")(buildDedupIndexFrom(
+      signaturesFromTokens(shingleSets(docs, ShingleW)), _))
 
-  /** N-gram window index over the pre-arrival corpus, built once per
-    * corpus per JVM (the servedDedupIndex pattern) — q154's serve path.
-    */
+  /** The pre-arrival corpus's n-gram window index, for q154. */
   private def servedNgramIndex(s: SparkSession, docs: DataFrame,
       d: String): String =
-    dedupIndexCache.computeIfAbsent(d + "|ngram", _ => {
-      val idx = tempIndexDir("graft_ngram_index")
-      buildNgramIndex(docs.filter(col("doc_id") < NeardupArrivalSplit),
-        DupW, idx)
-      idx
-    })
+    servedIndex(d, "graft_ngram_index")(buildNgramIndex(
+      docs.filter(col("doc_id") < NeardupArrivalSplit), DupW, _))
 
-  /** Temp artifact dir deleted on JVM exit — index artifacts must not
-    * accumulate across bench/verify invocations (the pre-round-9 q117
-    * leaked three copies per bench run).
-    */
-  private def tempIndexDir(prefix: String): String =
-    graft.TempArtifacts.dir(prefix)
-
-  /** Read back the persisted signature table (doc_id, h0..h15).
-    * Recursive-lookup read of the LIVE version's component: the build's
-    * flat files plus the streaming advance's committed `batch-<id>`
-    * dirs.
-    */
   def indexSignatures(s: SparkSession, path: String): DataFrame =
-    graft.sources.BatchCommits.readComponent(s,
-      liveDedupDir(path) + "/signatures")
+    graft.sources.ArtifactVersions.read(s, path, "signatures")
 
-  /** Read back the persisted band table (doc_id, band, bucket). */
   def indexBands(s: SparkSession, path: String): DataFrame =
-    graft.sources.BatchCommits.readComponent(s, liveDedupDir(path) + "/bands")
+    graft.sources.ArtifactVersions.read(s, path, "bands")
 
-  /** COMPACT the live dedup index into the next
-    * [[graft.sources.ArtifactVersions]] version — the q156 grams
-    * discipline transplanted to `signatures/` + `bands/`: a streaming
-    * ingest otherwise accumulates one `batch-<id>` parquet dir per
-    * micro-batch forever, degrading every recursive-lookup read (the
-    * listing is linear in committed batches — ScaleProbe's
-    * `batch_dirs` sweep puts a number on the knee). The shared
-    * [[graft.sources.BatchCommits.compactArtifact]] lifecycle: one
-    * FULL-ROW distinct rewrite per component (a doc's rows are pure
-    * functions of its text, so the duplicates the UNfenced batch
-    * lifecycle flows' modelled replays leave are byte-identical and
-    * collapse exactly, while a doc_id genuinely re-admitted with new
-    * text keeps both rows — the served frame is identical to the
-    * uncompacted read either way; DedupIndexSpec pins frame equality
-    * across the flip), fence markers carried, staging swept, flat v0
-    * retired after its grace flip.
+  /** A doc's rows are pure functions of its text, so the distinct
+    * rewrite keeps the served pair graph (DedupIndexSpec pins it).
     */
   def compactDedupIndex(s: SparkSession, path: String): Unit =
-    graft.sources.BatchCommits.compactArtifact(
+    graft.sources.ArtifactVersions.compact(
       s, path, Seq("signatures", "bands"))
 
   /** CTE chain computing MinHash signatures (`sig`) and their band

@@ -409,23 +409,6 @@ object CodecQueries {
       })
   }
 
-  /** Serve the media-stats artifact a [[graft.streaming.Streams
-    * .mediaIngestSink]] stream maintains (live version's `stats`
-    * component: committed batch dirs and/or compacted rows).
-    */
-  def servedMediaStats(s: org.apache.spark.sql.SparkSession,
-      root: String): org.apache.spark.sql.DataFrame =
-    graft.sources.BatchCommits.readComponent(s,
-      graft.sources.ArtifactVersions.current(root).getOrElse(root)
-        + "/stats")
-
-  /** Compaction hook for the media-stats artifact (the decision log is
-    * its only component).
-    */
-  def compactMediaStats(s: org.apache.spark.sql.SparkSession,
-      root: String): Unit =
-    graft.sources.BatchCommits.compactArtifact(s, root, Seq("stats"))
-
   /** q160's thumbnail geometry (distinct from q159's 4x3). */
   val PngThumbW = 5
   val PngThumbH = 4
@@ -1250,7 +1233,7 @@ object CodecQueries {
         // replay batch 0 after the flips: must be fenced, not re-append
         graft.streaming.Streams.mediaIngestBatch(even, 0L, root,
           compactEvery = 0)
-        servedMediaStats(s, root)
+        graft.sources.ArtifactVersions.read(s, root, "stats")
           .groupBy("kind", "status", "codec")
           .agg(count(lit(1)).as("n"),
             sum(when(col("exact_sum") >= 0, col("exact_sum"))

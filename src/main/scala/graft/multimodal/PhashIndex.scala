@@ -4,21 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** PERSISTED perceptual-hash index — the image-side twin of the dedup
-  * index lifecycle (build → serve → advance → compact): how a
-  * multimodal corpus keeps itself near-dup-free at ingest without ever
-  * re-hashing the corpus. Components under the artifact root:
+  * index: how a multimodal corpus keeps itself near-dup-free at ingest
+  * without ever re-hashing the corpus. [[graft.sources.ArtifactVersions]]
+  * components:
   *
   *   - `hashes`: (doc_id, hash) — one 56-bit dHash per image
   *   - `bands`:  (doc_id, band, v) — the 4 x 14-bit LSH bands
-  *
-  * Same artifact discipline as the text indexes: flat build layout is
-  * the implicit v0; streaming/batch advances append fenced
-  * `batch-<id>` commits; compaction rewrites under the next
-  * [[graft.sources.ArtifactVersions]] version behind the atomic
-  * CURRENT pointer. Appending per-image rows is EXACTLY equivalent to
-  * rebuilding from the advanced corpus because both tables are
-  * row-wise pure functions of each image's pixels (PhashIndexSpec
-  * asserts the equivalence frame-to-frame).
   *
   * Scale shape: ingest work is arrival-side only — decode+hash per
   * arrival, one band equi-join against the index, hamming verify
@@ -38,43 +29,24 @@ object PhashIndex {
 
   def buildPhashIndex(hashes: DataFrame, path: String): Unit = {
     val h = graft.CacheScope.retain(hashes)
-    h.write.mode("overwrite").parquet(path + "/hashes")
-    bandsOf(h).write.mode("overwrite").parquet(path + "/bands")
+    graft.sources.ArtifactVersions.build(path,
+      "hashes" -> h, "bands" -> bandsOf(h))
   }
-
-  private def liveDir(path: String): String =
-    graft.sources.ArtifactVersions.current(path).getOrElse(path)
 
   def indexHashes(s: SparkSession, path: String): DataFrame =
-    graft.sources.BatchCommits.readComponent(s, liveDir(path) + "/hashes")
+    graft.sources.ArtifactVersions.read(s, path, "hashes")
 
   def indexBands(s: SparkSession, path: String): DataFrame =
-    graft.sources.BatchCommits.readComponent(s, liveDir(path) + "/bands")
+    graft.sources.ArtifactVersions.read(s, path, "bands")
 
-  /** Advance with admitted images' (doc_id, hash) rows. With a
-    * `batchId` both component appends are atomic fenced batch commits
-    * (exactly-once under replay); without, plain appends (the
-    * single-JVM batch flows).
-    */
+  /** Advance with admitted images' (doc_id, hash) rows. */
   def advancePhashIndex(admitted: DataFrame, path: String,
-      batchId: Option[Long] = None): Unit = {
-    val live = liveDir(path)
-    val h = admitted.select("doc_id", "hash").persist()
-    try batchId match {
-      case Some(id) =>
-        graft.sources.BatchCommits.appendBatch(h, live + "/hashes", id)
-        graft.sources.BatchCommits.appendBatch(bandsOf(h),
-          live + "/bands", id): Unit
-      case None =>
-        h.write.mode("append").parquet(live + "/hashes")
-        bandsOf(h).write.mode("append").parquet(live + "/bands")
-    } finally h.unpersist(): Unit
-    admitted.sparkSession.catalog.refreshByPath(path)
-  }
+      batchId: Option[Long] = None): Unit =
+    graft.sources.ArtifactVersions.advance(path, batchId,
+      admitted.select("doc_id", "hash"))("hashes" -> identity, "bands" -> bandsOf)
 
   def compactPhashIndex(s: SparkSession, path: String): Unit =
-    graft.sources.BatchCommits.compactArtifact(s, path,
-      Seq("hashes", "bands"))
+    graft.sources.ArtifactVersions.compact(s, path, Seq("hashes", "bands"))
 
   /** Admission decisions for arriving image hashes against the
     * persisted index: banded candidates (pigeonhole-complete at the

@@ -876,14 +876,9 @@ object SimilarityQueries {
     Q("q118_indexed_ann",
       (s, d) => {
         val f = graft.CacheScope.retain(flat(s, d))
-        // per-JVM memoized build (the q117 discipline): run 1 pays the
-        // build, later runs measure SERVE-ONLY — and no index copy
-        // accumulates on disk across bench/verify invocations
-        val idx = ivfIndexCache.computeIfAbsent(d, _ => {
-          val p = graft.TempArtifacts.dir("graft_ivf_index")
-          buildIvfIndex(f, p)
-          p
-        })
+        val idx = graft.TempArtifacts.served(
+          graft.TempArtifacts.fingerprint(d, "embeddings"),
+          "graft_ivf_index")(buildIvfIndex(f, _))
         serveIvfRecall(s, f, idx)
       },
       Some(ivfRecallOracleSql)),
@@ -1549,25 +1544,19 @@ object SimilarityQueries {
     semanticLeakPairsOf(s, d, valf, semanticLeakTrainIndex(s, d))
   }
 
-  /** The persisted train-side IVF index the split would ship with —
-    * per-JVM memoized build (the q118 serve-only discipline). Keyed
-    * by a CONTENT fingerprint (file names + sizes + mtimes of the
-    * embeddings parquet), not the bare directory: an in-process
-    * overwrite into a reused dir must build a fresh index, never
-    * serve candidates from the stale one.
+  /** The persisted train-side IVF index the split would ship with,
+    * served per JVM.
     */
   private[graft] def semanticLeakTrainIndex(s: SparkSession,
       d: String): String =
-    semLeakIndexCache.computeIfAbsent(
-        embeddingsFingerprint(d), _ => {
+    graft.TempArtifacts.served(graft.TempArtifacts.fingerprint(d,
+        "embeddings"), "graft_ivf_split") { p =>
       val f = graft.CacheScope.retain(flat(s, d))
-      val p = graft.TempArtifacts.dir("graft_ivf_split")
       buildIvfIndex(f.join(
         vecSplitOf(s, d).filter(col("split") === "train")
           .select("vec_id"),
         Seq("vec_id"), "left_semi"), p)
-      p
-    })
+    }
 
   /** The q187 candidate-cosine body over an ARBITRARY flat val side
     * (vec_id, i, v) served from the persisted index at `idx` — the
@@ -1647,51 +1636,6 @@ object SimilarityQueries {
       .filter(col("cos") >= SemLeakT)
   }
 
-  private val semLeakIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
-  /** Content fingerprint of a dataset dir's embeddings parquet: every
-    * regular file's name, size, NANOSECOND mtime, and a CRC32 of its
-    * TAIL KiB (the parquet footer — schema, row counts, column-chunk
-    * offsets — lives there, so a rewrite that changes any data
-    * changes the hashed bytes even when size and a coarse mtime
-    * collide), path-sorted — the [[semLeakIndexCache]] key, so
-    * rewriting the embeddings under a reused directory can never
-    * serve the previous data's index, including same-millisecond
-    * in-place rewrites on coarse-mtime filesystems. Metadata-scale:
-    * at most 1 KiB read per file.
-    */
-  private def embeddingsFingerprint(d: String): String = {
-    val p = java.nio.file.Paths.get(d, "embeddings.parquet")
-    if (!java.nio.file.Files.exists(p)) return d
-    val sb = new StringBuilder(d).append('#')
-    val walk = java.nio.file.Files.walk(p)
-    try walk.sorted(java.util.Comparator.comparing[java.nio.file.Path,
-        String](_.toString))
-      .forEach { f =>
-        if (java.nio.file.Files.isRegularFile(f)) {
-          val size = java.nio.file.Files.size(f)
-          val tailCrc = {
-            val n = math.min(size, 1024L).toInt
-            val b = new Array[Byte](n)
-            val raf = new java.io.RandomAccessFile(f.toFile, "r")
-            try { raf.seek(size - n); raf.readFully(b) }
-            finally raf.close()
-            val c = new java.util.zip.CRC32
-            c.update(b)
-            c.getValue
-          }
-          sb.append(p.relativize(f)).append(':')
-            .append(size).append(':')
-            .append(java.nio.file.Files.getLastModifiedTime(f)
-              .to(java.util.concurrent.TimeUnit.NANOSECONDS))
-            .append(':').append(tailCrc).append(';'): Unit
-        }
-      }
-    finally walk.close()
-    sb.toString
-  }
-
   /** The shared q187/q188 oracle CTE chain (train-side centroids +
     * assignments, val-side nprobe probe, candidate cosine, `leaks`),
     * closed by the query-specific `tail`.
@@ -1748,20 +1692,15 @@ object SimilarityQueries {
     */
   val DriftBudget = 0.05
 
-  /** q150's body: versioned build -> publish -> advance -> drift
-    * trigger -> conditional full rebuild under the next version ->
-    * serve from CURRENT. Fresh version root per call (advance mutates
-    * v1; a memoized copy would be poisoned, the q119/q130 discipline).
+  /** q150's body: build v1 -> advance -> drift trigger -> conditional
+    * full rebuild as v2 -> serve the live version. Fresh root per call
+    * (advance mutates v1; a memoized copy would be poisoned).
     */
   def indexRebuildFlow(s: SparkSession, f: DataFrame, split: Long,
       budget: Double): DataFrame = {
-    import graft.sources.ArtifactVersions
     val root = graft.TempArtifacts.dir("graft_ivf_versions")
-    val v1 = ArtifactVersions.prepareNext(root)
-    buildIvfIndex(f.filter(col("vec_id") < split), v1)
-    ArtifactVersions.publish(root, v1)
-    val live = ArtifactVersions.current(root).get
-    advanceIvfIndex(f.filter(col("vec_id") >= split), live)
+    buildIvfIndex(f.filter(col("vec_id") < split), root)
+    advanceIvfIndex(f.filter(col("vec_id") >= split), root)
     // the trigger: one scalar off the k-row drift table (k = number of
     // lists — metadata-scale; this collect is the scheduler's poll,
     // not a data-sized driver loop). Drift is SERVED from the artifact
@@ -1770,17 +1709,13 @@ object SimilarityQueries {
     // assigned to them — re-deriving both cost a second corpus-wide
     // assignment join per run (the plan's single biggest execution).
     val maxDrift = centroidDriftFrom(f,
-        indexCentroids(s, live), indexAssignments(s, live))
+        indexCentroids(s, root), indexAssignments(s, root))
       .agg(max("drift")).head().getDouble(0)
     val rebuilt = maxDrift > budget
-    if (rebuilt) {
-      val v2 = ArtifactVersions.prepareNext(root)
-      buildIvfIndex(f, v2)
-      ArtifactVersions.publish(root, v2)
-    }
-    val serveDir = ArtifactVersions.current(root).get
-    val version = java.nio.file.Paths.get(serveDir).getFileName.toString
-    serveIvfRecall(s, f, serveDir)
+    if (rebuilt) buildIvfIndex(f, root)
+    val version = java.nio.file.Paths.get(
+      graft.sources.ArtifactVersions.live(root)).getFileName.toString
+    serveIvfRecall(s, f, root)
       .select(lit(version).as("live_version"), lit(rebuilt).as("rebuilt"),
         lit(maxDrift).as("max_drift"),
         col("n_candidates"), col("hits"), col("recall_at_10"))
@@ -2048,24 +1983,18 @@ object SimilarityQueries {
       : org.apache.spark.ml.clustering.KMeansModel =
     org.apache.spark.ml.clustering.KMeansModel.load(path)
 
-  /** Artifact lifecycle of the IVF index (the ANN-side analogue of
-    * [[graft.dedup.DedupQueries.buildDedupIndex]]): ONE build job
-    * writes the centroid table and the nearest-centroid assignment of
-    * every vector as parquet; every later probe reads them instead of
-    * re-running the corpus-sized assignment join. Uses the q89/q80
-    * deterministic per-label-mean quantizer so the artifact path stays
-    * oracle-checkable (the trained-KMeans path keeps
-    * [[fitIvfQuantizer]]'s in-memory model).
-    *
-    * `f` is the flat (vec_id, label, i, v) view of the embeddings.
+  /** The IVF index ([[graft.sources.ArtifactVersions]] components
+    * `centroids` and `assignments`): the q89/q80 deterministic
+    * per-label-mean quantizer, so the artifact stays oracle-checkable,
+    * and every vector's nearest-centroid list. `f` is the flat
+    * (vec_id, label, i, v) view of the embeddings.
     */
   def buildIvfIndex(f: DataFrame, path: String): Unit = {
     val cent = graft.CacheScope.retain(
       f.groupBy("label", "i").agg(avg("v").as("c"))
         .select(col("label").as("clabel"), col("i").as("ci"), col("c")))
-    cent.write.mode("overwrite").parquet(path + "/centroids")
-    assignToCentroids(f, cent)
-      .write.mode("overwrite").parquet(path + "/assignments")
+    graft.sources.ArtifactVersions.build(path,
+      "centroids" -> cent, "assignments" -> assignToCentroids(f, cent))
   }
 
   /** Nearest-centroid list assignment of a flat (vec_id, i, v) relation
@@ -2081,61 +2010,28 @@ object SimilarityQueries {
       .agg(min(struct(col("d2"), col("clabel"))).as("m"))
       .select(col("vec_id"), col("m.clabel").as("lst"))
 
-  /** q130: append arriving vectors' list assignments to a persisted IVF
-    * index, against its FROZEN centroids. Cost per batch: the batch's
-    * rows x k centroid rows (broadcast) — never a corpus re-scan.
-    * With a `batchId`, the append is an atomic fenced batch commit
-    * ([[graft.sources.BatchCommits]]) — replayed micro-batches are
-    * skipped, so the streaming advance is exactly-once.
+  /** q130: append arriving vectors' list assignments against the
+    * index's FROZEN centroids (centroids drift only at the next full
+    * rebuild). Cost per batch: the batch's rows x k centroid rows.
     */
   def advanceIvfIndex(arrivals: DataFrame, path: String,
-      batchId: Option[Long] = None): Unit = {
-    val live = liveIvfDir(path)
-    val cent = arrivals.sparkSession.read.parquet(live + "/centroids")
-    val assigned = assignToCentroids(arrivals, cent)
-    batchId match {
-      case Some(id) => graft.sources.BatchCommits.appendBatch(
-        assigned, live + "/assignments", id): Unit
-      case None =>
-        assigned.write.mode("append").parquet(live + "/assignments")
-    }
-  }
+      batchId: Option[Long] = None): Unit =
+    graft.sources.ArtifactVersions.advance(path, batchId, arrivals)(
+      "assignments" -> (a => assignToCentroids(a,
+        indexCentroids(a.sparkSession, path))))
 
-  /** The IVF index's live component root: `path` itself for the flat
-    * build layout, or the live version dir once [[compactIvfIndex]]
-    * has moved the artifact under [[graft.sources.ArtifactVersions]]
-    * (flat = implicit v0; pre-compaction flows keep their exact
-    * semantics).
-    */
-  private def liveIvfDir(path: String): String =
-    graft.sources.ArtifactVersions.current(path).getOrElse(path)
-
-  /** Read back the persisted assignment lists — recursive-lookup read
-    * of the LIVE version (build files plus committed streaming-advance
-    * batch dirs).
-    */
   def indexAssignments(s: SparkSession, path: String): DataFrame =
-    graft.sources.BatchCommits.readComponent(s,
-      liveIvfDir(path) + "/assignments")
+    graft.sources.ArtifactVersions.read(s, path, "assignments")
 
-  /** The persisted centroid table of the LIVE version. */
   def indexCentroids(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(liveIvfDir(path) + "/centroids")
+    graft.sources.ArtifactVersions.read(s, path, "centroids")
 
-  /** COMPACT the live IVF index into the next versioned copy — the
-    * shared [[graft.sources.BatchCommits.compactArtifact]] lifecycle
-    * for `assignments/` (one FULL-ROW distinct rewrite: an assignment
-    * row is a pure function of the vector and the FROZEN centroids, so
-    * duplicate rows from unfenced modelled replays are byte-identical
-    * and collapse exactly, while a vec_id re-streamed with a corrected
-    * embedding keeps both rows — the served candidate set is identical
-    * to the uncompacted read either way). The tiny frozen centroid
-    * table is copied into the new version so every version dir is a
-    * complete, self-contained artifact; fence markers carry, staging
-    * is swept, flat v0 is retired after its grace flip.
+  /** An assignment row is a pure function of the vector and the frozen
+    * centroids, so the distinct rewrite keeps the served candidate set;
+    * the centroid table is copied verbatim.
     */
   def compactIvfIndex(s: SparkSession, path: String): Unit =
-    graft.sources.BatchCommits.compactArtifact(
+    graft.sources.ArtifactVersions.compact(
       s, path, Seq("assignments"), copied = Seq("centroids"))
 
   /** The q118/q130 serve path: probe vec 0's nprobe=2 nearest lists from
@@ -2162,9 +2058,6 @@ object SimilarityQueries {
       .select(col("n_candidates"), col("hits"),
         round(col("hits").cast("double") / 10.0, 4).as("recall_at_10"))
   }
-
-  private val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
 
   /** q130: vectors below are the base (index-build) corpus; the rest
     * arrive and are advanced into the artifact.

@@ -4,9 +4,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** EXACTLY-ONCE batch appends for parquet-directory artifact
-  * components (dedup signatures/bands, n-gram grams, IVF assignment
-  * lists, streaming decision logs).
+/** The per-batch fence: EXACTLY-ONCE batch appends for a parquet
+  * directory, either a component of an [[ArtifactVersions]] artifact
+  * or a streaming decision log.
   *
   * The problem: Structured Streaming's foreachBatch is at-least-once —
   * a crash between the batch's side effects and the checkpoint commit
@@ -117,13 +117,13 @@ object BatchCommits {
       // a concurrent/replayed committer won the rename — the target is
       // a committed DIRECTORY holding our exact payload, discard ours
       case _: java.nio.file.FileSystemException if Files.isDirectory(target) =>
-        deleteRecursively(staging)
+        ArtifactVersions.deleteRecursively(staging)
         false
       case e: java.nio.file.FileSystemException =>
         // NOT the commit race (no committed directory at the target —
         // e.g. a stray file from a botched manual restore): surface it;
         // a silent false here would drop the batch's rows forever
-        deleteRecursively(staging)
+        ArtifactVersions.deleteRecursively(staging)
         throw e
     }
   }
@@ -143,7 +143,7 @@ object BatchCommits {
     Option(new java.io.File(dir).listFiles).getOrElse(Array.empty)
       .filter(f => f.isDirectory && (f.getName.startsWith(prefix)
         || legacy.contains(f.getName)))
-      .foreach(f => deleteRecursively(f.toPath))
+      .foreach(f => ArtifactVersions.deleteRecursively(f.toPath))
   }
 
   /** How many of a component's newest batch fence markers a compaction
@@ -204,203 +204,4 @@ object BatchCommits {
     */
   def readComponent(s: SparkSession, dir: String): DataFrame =
     s.read.option("recursiveFileLookup", "true").parquet(dir)
-
-  /** COMPACT an artifact's batch-committed components into the next
-    * [[ArtifactVersions]] version — the ONE lifecycle all three
-    * persisted indexes share (grams, dedup signatures/bands, IVF
-    * assignments). Streaming ingest leaves one committed `batch-<id>`
-    * dir per micro-batch and [[readComponent]]'s listing is linear in
-    * them (ScaleProbe's `batch_dirs` sweep: 2.19 s at 1000 dirs vs
-    * 0.14 s compacted), so a long-running stream must fold them back
-    * into one write on a cadence. Per component: the FULL-ROW distinct
-    * set is rewritten under vN+1 — replayed appends from the UNfenced
-    * batch lifecycle flows are byte-identical and collapse exactly,
-    * while rows that genuinely differ (a key re-delivered with new
-    * content) are all preserved, keeping the served frame identical to
-    * the uncompacted read (a KEYED dedup here would pick a
-    * nondeterministic winner and change serve results across the
-    * flip); the newest [[MarkerKeep]] fence markers carry over so a
-    * replay landing after the flip still fences; stranded staging dirs
-    * are swept. `copied` components (tiny frozen tables — IVF
-    * centroids) are rewritten verbatim so every version dir is a
-    * complete, self-contained artifact.
-    *
-    * Flat-layout handling: an index built directly under `root` (no
-    * published version — the implicit v0) compacts into v1 and the
-    * flat component dirs then serve as the grace copy for readers that
-    * resolved pre-flip; the NEXT compaction retires them (old != root
-    * means the flat copy has been out of live for a full flip — the
-    * same keep=2 grace [[ArtifactVersions.pruneVersions]] grants real
-    * versions, which otherwise would never match the flat dirs).
-    *
-    * Ends by dropping cached plans resolved against the old version's
-    * paths, so post-compaction reads see the live version.
-    *
-    * COST BUDGET (what a flip should charge): one distinct rewrite —
-    * a full scan + one hash shuffle + one write — per component that
-    * may hold MULTIPLE parquet writes (2+ committed batch dirs, any
-    * flat files: the unfenced lifecycle flows append flat part-files,
-    * so flat bytes can be several writes including modelled replays).
-    * A component whose state is EXACTLY ONE committed `batch-<id>`
-    * dir and nothing else is provably one atomic rename of one
-    * attempt's output — it cannot hold cross-write replay duplicates,
-    * so it takes the IDENTITY FAST PATH: a verbatim file copy, no
-    * Spark job, no shuffle. `copied` components (tiny frozen tables)
-    * are a verbatim copy whenever they are flat — the old Spark
-    * rewrite never dedup'd them either, so the copy is byte-stronger
-    * and job-free. At sf0.1 a grams+signatures+bands+assignments flip
-    * with fresh arrivals in every component is ~12 Spark jobs / a few
-    * seconds; a flip where a component did not grow past one batch is
-    * proportionally cheaper because it copies instead of rewriting.
-    */
-  def compactArtifact(s: SparkSession, root: String,
-      components: Seq[String], copied: Seq[String] = Nil): Unit = {
-    val old = ArtifactVersions.current(root).getOrElse(root)
-    val v = ArtifactVersions.prepareNext(root)
-    for (c <- components) {
-      singleWriteFiles(s"$old/$c") match {
-        // the copy PRESERVES the batch-dir name: the new version's
-        // component is again exactly one committed batch dir, so the
-        // NEXT flip takes the identity path too (a flat copy would
-        // make the next flip's detector see flat files, fall back to
-        // the distinct rewrite, and merge the in-write duplicate rows
-        // this path exists to preserve)
-        case Some((batchName, files)) =>
-          copyFilesInto(files, s"$v/$c/$batchName")
-        case None =>
-          readComponent(s, s"$old/$c").distinct().write.parquet(s"$v/$c")
-      }
-      carryMarkers(s"$old/$c", s"$v/$c")
-      sweepStaging(s"$old/$c")
-    }
-    // frozen tables: verbatim copy when flat (the rewrite here never
-    // distinct'd, so the copy is semantics-identical and job-free);
-    // Spark rewrite only if the layout is unexpectedly nested
-    for (c <- copied)
-      flatFiles(s"$old/$c") match {
-        case Some(files) => copyFilesInto(files, s"$v/$c")
-        case None => s.read.parquet(s"$old/$c").write.parquet(s"$v/$c")
-      }
-    ArtifactVersions.publish(root, v)
-    if (old != root)
-      (components ++ copied).foreach(c =>
-        deleteRecursively(Paths.get(root, c)))
-    s.catalog.refreshByPath(root)
-  }
-
-  /** An artifact's FRAGMENTATION: the largest NON-EMPTY `batch-*` dir
-    * count across the live version's components — the unbounded
-    * growth driver every serve read must LIST (the `batch_dirs`
-    * probe: ~15x slower at 1000 dirs, 1-2 orders worse on an object
-    * store). Carried fence MARKERS (empty dirs) are deliberately
-    * excluded: a compaction leaves up to [[MarkerKeep]] of them, a
-    * bounded constant — counting them would hold the metric at
-    * MarkerKeep forever and make any trigger threshold <= MarkerKeep
-    * re-compact on every call without ever converging. Components are
-    * discovered as the live version's immediate subdirectories, so
-    * callers need not know an index's component layout.
-    */
-  def fragmentation(root: String): Int = {
-    val live = ArtifactVersions.current(root).getOrElse(root)
-    Option(new java.io.File(live).listFiles).getOrElse(Array.empty)
-      .filter(_.isDirectory)
-      .map { c =>
-        Option(c.listFiles).getOrElse(Array.empty)
-          .count(d => d.isDirectory && d.getName.startsWith("batch-")
-            && visible(Option(d.listFiles).getOrElse(Array.empty)).nonEmpty)
-      }
-      .maxOption.getOrElse(0)
-  }
-
-  /** Out-of-band maintenance trigger — the SLA-friendly alternative to
-    * the in-stream cadence (Streams.compactOnCadence runs the rewrite
-    * INSIDE a micro-batch, stalling it): compact `root` via the
-    * index's own `compact` function only when some component has
-    * accumulated at least `minBatchDirs` batch dirs, then retire old
-    * versions. Safe to run between batches of a live stream — the
-    * compaction publishes under the same versioned flip and carries
-    * the fence markers, so in-flight replays still fence. Threshold
-    * guidance from the `batch_dirs` probe: serve reads stay near-flat
-    * through ~100 dirs, so a threshold around 64-100 keeps listing
-    * cost bounded while amortizing the rewrite over many batches.
-    * The floor is 2: a single-batch-dir component is already optimal
-    * (and the identity fast path re-emits it as one batch dir, so a
-    * threshold of 1 would re-publish a version on every call, never
-    * converging). Returns true iff a compaction ran.
-    */
-  def compactIfFragmented(s: SparkSession, root: String,
-      minBatchDirs: Int)(compact: (SparkSession, String) => Unit)
-      : Boolean = {
-    require(minBatchDirs >= 2,
-      s"compactIfFragmented($root): minBatchDirs=$minBatchDirs — one " +
-        "committed batch dir is already the compact state (the " +
-        "identity fast path preserves it), so a threshold below 2 " +
-        "would publish a new version on every call without converging")
-    val frag = fragmentation(root) >= minBatchDirs
-    if (frag) {
-      compact(s, root)
-      ArtifactVersions.pruneVersions(root): Unit
-    }
-    frag
-  }
-
-  /** The IDENTITY-COMPACTION detector: if the component's current
-    * state is exactly ONE committed `batch-<id>` dir (non-empty, with
-    * siblings at most empty marker dirs) and NO flat data files, that
-    * state is one atomic rename of one attempt's output — it cannot
-    * contain cross-write replay duplicates (the thing the distinct
-    * rewrite exists to collapse), and a verbatim file copy preserves
-    * the served frame EXACTLY (including any legitimate duplicate
-    * rows within the one write, which a distinct would wrongly
-    * merge). Flat files do NOT qualify: the unfenced lifecycle flows
-    * append flat part-files, so flat bytes may span several writes.
-    * Returns the batch dir's name plus its data files, or None when a
-    * real rewrite is required.
-    */
-  private def singleWriteFiles(dir: String)
-      : Option[(String, Seq[java.io.File])] = {
-    val entries = visible(
-      Option(new java.io.File(dir).listFiles).getOrElse(Array.empty))
-    val (dirs, files) = entries.partition(_.isDirectory)
-    if (files.nonEmpty || !dirs.forall(_.getName.startsWith("batch-"))) None
-    else {
-      val nonEmpty = dirs.filter(d =>
-        visible(Option(d.listFiles).getOrElse(Array.empty)).nonEmpty)
-      if (nonEmpty.length == 1)
-        Some((nonEmpty.head.getName,
-          visible(nonEmpty.head.listFiles).filter(_.isFile).toSeq))
-      else None
-    }
-  }
-
-  /** A flat dir's data files (no subdirectories at all), or None. */
-  private def flatFiles(dir: String): Option[Seq[java.io.File]] = {
-    val entries = visible(
-      Option(new java.io.File(dir).listFiles).getOrElse(Array.empty))
-    if (entries.nonEmpty && entries.forall(_.isFile)) Some(entries.toSeq)
-    else None
-  }
-
-  private def visible(fs: Array[java.io.File]): Array[java.io.File] =
-    fs.filterNot(f =>
-      f.getName.startsWith(".") || f.getName.startsWith("_"))
-
-  /** Copy one write's data files verbatim into `dest` (names within a
-    * single parquet write are already unique part-files). On an object
-    * store this is a server-side copy — still no scan, no shuffle.
-    */
-  private def copyFilesInto(files: Seq[java.io.File], dest: String): Unit = {
-    Files.createDirectories(Paths.get(dest))
-    files.foreach(f => Files.copy(f.toPath,
-      Paths.get(dest, f.getName), StandardCopyOption.REPLACE_EXISTING): Unit)
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.exists(p)) {
-      if (Files.isDirectory(p))
-        Option(p.toFile.listFiles).getOrElse(Array.empty)
-          .foreach(f => deleteRecursively(f.toPath))
-      Files.deleteIfExists(p): Unit
-    }
-  }
 }

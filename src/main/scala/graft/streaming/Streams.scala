@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
+import graft.sources.ArtifactVersions
+
 /** Structured-Streaming surface over the `events` schema. Every transform
   * here takes a (possibly streaming) DataFrame with the events columns
   * (ts TIMESTAMP_NTZ-compatible, user_id, event_type, value) and returns a
@@ -204,7 +206,7 @@ object Streams {
 
   /** The advance sinks' shared compaction cadence: every `every`
     * committed batches, fold each artifact's batch dirs into the next
-    * version ([[graft.sources.BatchCommits.compactArtifact]] via the
+    * version ([[graft.sources.ArtifactVersions.compact]] via the
     * per-index compact functions) and retire old versions — a
     * long-running stream must not accumulate one batch dir per
     * micro-batch (the serve-read listing is linear in them) nor one
@@ -218,7 +220,7 @@ object Streams {
     * cadence bounds batch-dir count. `compactEvery` therefore trades
     * one slow batch per cycle for bounded serve reads; a deployment
     * with hard per-batch SLAs should disable it here and run
-    * [[graft.sources.BatchCommits.compactIfFragmented]] out-of-band
+    * [[graft.sources.ArtifactVersions.compactIfFragmented]] out-of-band
     * instead (same per-index compact functions, same versioned-flip
     * protocol, safe between batches of a live stream — the fence
     * markers carry across the flip — and threshold-gated on the
@@ -229,8 +231,13 @@ object Streams {
     if (every > 0 && (batchId + 1) % every == 0)
       artifacts.foreach { case (path, compact) =>
         compact(s, path)
-        graft.sources.ArtifactVersions.pruneVersions(path): Unit
+        ArtifactVersions.pruneVersions(path): Unit
       }
+
+  /** Compaction of a versioned sink log with one component. */
+  private def compactLog(component: String)
+      : (SparkSession, String) => Unit =
+    (s, root) => ArtifactVersions.compact(s, root, Seq(component))
 
   /** Streaming span scrub + index advance — q154's loop live: each
     * micro-batch of arriving docs is scrubbed against the persisted
@@ -505,16 +512,11 @@ object Streams {
     */
   private[graft] def mediaCurationBatch(batch: DataFrame, batchId: Long,
       outDir: String, compactEvery: Int): Unit = {
-    import graft.sources.{ArtifactVersions, BatchCommits}
-    val live = ArtifactVersions.current(outDir).getOrElse(outDir)
-    if (!BatchCommits.isCommitted(s"$live/audit", batchId))
-      BatchCommits.appendBatch(
-        graft.multimodal.CodecQueries.mediaCurationDecisions(batch).toDF()
-          .withColumn("batch_id", lit(batchId)),
-        s"$live/audit", batchId): Unit
+    ArtifactVersions.advance(outDir, Some(batchId),
+      graft.multimodal.CodecQueries.mediaCurationDecisions(batch).toDF()
+        .withColumn("batch_id", lit(batchId)))("audit" -> identity)
     compactOnCadence(batch.sparkSession, batchId, compactEvery,
-      Seq(outDir -> ((s: org.apache.spark.sql.SparkSession, r: String) =>
-        graft.sources.BatchCommits.compactArtifact(s, r, Seq("audit")))))
+      Seq(outDir -> compactLog("audit")))
   }
 
   /** One micro-batch of [[mediaIngestSink]] — exposed for the
@@ -522,15 +524,11 @@ object Streams {
     */
   private[graft] def mediaIngestBatch(batch: DataFrame, batchId: Long,
       outDir: String, compactEvery: Int): Unit = {
-    import graft.sources.{ArtifactVersions, BatchCommits}
-    val live = ArtifactVersions.current(outDir).getOrElse(outDir)
-    if (!BatchCommits.isCommitted(s"$live/stats", batchId))
-      BatchCommits.appendBatch(
-        graft.multimodal.CodecQueries.mediaDecisions(batch).toDF()
-          .withColumn("batch_id", lit(batchId)),
-        s"$live/stats", batchId): Unit
+    ArtifactVersions.advance(outDir, Some(batchId),
+      graft.multimodal.CodecQueries.mediaDecisions(batch).toDF()
+        .withColumn("batch_id", lit(batchId)))("stats" -> identity)
     compactOnCadence(batch.sparkSession, batchId, compactEvery,
-      Seq(outDir -> graft.multimodal.CodecQueries.compactMediaStats _))
+      Seq(outDir -> compactLog("stats")))
   }
 
   /** STREAMING IMAGE NEAR-DUP INGEST — [[nearDupIngestSink]]'s image
@@ -605,28 +603,24 @@ object Streams {
   private[graft] def imageCurationBatch(batch: DataFrame, batchId: Long,
       indexPath: String, outDir: String, compactEvery: Int): Unit = {
     import graft.multimodal.{CodecQueries, PhashIndex}
-    import graft.sources.{ArtifactVersions, BatchCommits}
     val s = batch.sparkSession
-    val live = ArtifactVersions.current(outDir).getOrElse(outDir)
-    if (!BatchCommits.isCommitted(s"$live/audit", batchId)) {
-      val localPins = scala.collection.mutable.Buffer.empty[DataFrame]
-      try
-        BatchCommits.appendBatch(
-          CodecQueries.imageCurationIngestDecisions(batch, indexPath,
-              pin = df => {
-                val p = df.persist(); localPins += p; p
-              })
-            .withColumn("batch_id", lit(batchId)),
-          s"$live/audit", batchId): Unit
-      finally localPins.foreach(_.unpersist(false))
-    }
+    val localPins = scala.collection.mutable.Buffer.empty[DataFrame]
+    try
+      ArtifactVersions.advance(outDir, Some(batchId),
+        CodecQueries.imageCurationIngestDecisions(batch, indexPath,
+            pin = df => {
+              val p = df.persist(); localPins += p; p
+            })
+          .withColumn("batch_id", lit(batchId)))("audit" -> identity)
+    finally localPins.foreach(_.unpersist(false))
     // the advance payload derives from the COMMITTED audit rows. On a
     // replay AFTER a compaction flip the batch dir survives only as an
     // EMPTY carried fence marker (no part files): the audit compacts
     // on the cadence, and compaction runs strictly AFTER the (itself
     // fenced) index advance in this body — so a marker with no data
     // proves the advance already landed and there is nothing to apply.
-    val batchDir = new java.io.File(s"$live/audit/batch-$batchId")
+    val batchDir = new java.io.File(
+      s"${ArtifactVersions.live(outDir)}/audit/batch-$batchId")
     val hasData = Option(batchDir.listFiles).exists(_.exists(f =>
       !f.getName.startsWith(".") && !f.getName.startsWith("_")))
     if (hasData) {
@@ -637,8 +631,7 @@ object Streams {
         indexPath, Some(batchId))
     }
     compactOnCadence(s, batchId, compactEvery, Seq(
-      outDir -> ((ss: org.apache.spark.sql.SparkSession, r: String) =>
-        BatchCommits.compactArtifact(ss, r, Seq("audit"))),
+      outDir -> compactLog("audit"),
       indexPath -> PhashIndex.compactPhashIndex _))
   }
 

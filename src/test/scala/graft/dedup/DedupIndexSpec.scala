@@ -128,15 +128,15 @@ class DedupIndexSpec extends AnyFunSuite {
     assert(DedupQueries.indexBands(spark, idx).collect().toSet == wantBands)
     assert(DedupQueries.pairsFromIndexUnsorted(spark, idx).collect().toSet
       == wantPairs)
-    // the flat pre-compaction layout is v0: a live version dir now
-    // resolves, and a post-flip advance must land INSIDE it
-    val live = graft.sources.ArtifactVersions.current(idx)
-    assert(live.nonEmpty && live.get != idx)
+    // a live version dir resolves, and a post-flip advance must land
+    // INSIDE it
+    val live = graft.sources.ArtifactVersions.live(idx)
+    assert(live != idx)
     DedupQueries.advanceDedupIndex(
       docs.filter(col("doc_id") >= 40 && col("doc_id") < 45)
         .select("doc_id", "text"), idx)
     assert(DedupQueries.indexSignatures(spark, idx).count() == 45)
-    assert(new java.io.File(live.get + "/signatures").exists)
+    assert(new java.io.File(live + "/signatures").exists)
     graft.CacheScope.flush(spark)
   }
 
@@ -212,5 +212,33 @@ class DedupIndexSpec extends AnyFunSuite {
     assert(exhaustive == Set(2L),
       s"exhaustive pairing should drop exactly C, got $exhaustive")
     graft.CacheScope.flush(spark)
+  }
+
+  test("served indexes follow the input's content: rewriting the " +
+      "documents under the same dir serves a fresh index") {
+    import java.nio.file.{Files, Paths}
+    val d = Files.createTempDirectory("graft_served_sf").toString
+    Option(new java.io.File(sf).listFiles).get.foreach(f =>
+      Files.copy(f.toPath, Paths.get(d, f.getName)): Unit)
+    val q51 = graft.QueryRegistry.queries("q51_shingle_minhash_pairs")
+    val full = q51(spark, d).collect().toSeq
+    graft.CacheScope.flush(spark)
+    // rewrite documents.parquet in place with the even doc ids only
+    val staged = Files.createTempDirectory("graft_served_docs").toString
+    graft.Tables.documents(spark, d).filter(col("doc_id") % 2 === 0)
+      .write.mode("overwrite").parquet(staged)
+    Files.delete(Paths.get(d, "documents.parquet"))
+    Files.move(Paths.get(staged), Paths.get(d, "documents.parquet"))
+    val rewritten = q51(spark, d).collect().toSeq
+    graft.CacheScope.flush(spark)
+    val idx = Files.createTempDirectory("graft_served_fresh").toString
+    DedupQueries.buildDedupIndexFrom(DedupQueries.signaturesFromTokens(
+      DedupQueries.shingleSets(graft.Tables.documents(spark, d),
+        DedupQueries.ShingleW)), idx)
+    val want = DedupQueries.pairsFromIndexUnsorted(spark, idx)
+      .orderBy("doc_a", "doc_b").collect().toSeq
+    graft.CacheScope.flush(spark)
+    assert(full != want, "the rewrite must change the pair set")
+    assert(rewritten == want, "q51 served the stale index")
   }
 }

@@ -199,11 +199,10 @@ class DedupSpec extends AnyFunSuite {
       .spanScrubAgainstIndex(spark, arrivals, root, w).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getString(4))).toSet
-    def grams() = spark.read.parquet(
-      graft.sources.ArtifactVersions.current(root).get + "/grams").count()
+    def grams() = DedupQueries.liveGrams(spark, root).count()
     val (before, nBefore) = (scrub(), grams())
     DedupQueries.compactNgramIndex(spark, root)
-    assert(graft.sources.ArtifactVersions.current(root).get.endsWith("v2"),
+    assert(graft.sources.ArtifactVersions.live(root).endsWith("v2"),
       "compaction must publish the next version")
     assert(grams() < nBefore, "the replayed duplicate rows must be gone")
     assert(scrub() == before, "compaction changed scrub results")
@@ -344,5 +343,26 @@ class DedupSpec extends AnyFunSuite {
     val pairSet = fused.map(p => (p._1, p._2)).toSet
     assert(Set((0L, 1L), (0L, 4L), (1L, 4L)).subsetOf(pairSet), fused)
     graft.CacheScope.flush(spark)
+  }
+
+  test("band verify: a forged bucket collision cannot emit a pair twice") {
+    val n = DedupQueries.NumHashes
+    val br = DedupQueries.BandRows
+    // doc 2 disagrees with doc 1 on every band-0 slot and agrees on the
+    // rest (12 of 16 slots: est_jaccard 0.75)
+    val sigA = (0 until n).map(_.toLong)
+    val sigB = sigA.zipWithIndex.map { case (h, i) =>
+      if (i < br) h + 100L else h }
+    val sig = Seq((1L, sigA), (2L, sigB)).toDF("doc_id", "h")
+      .select(col("doc_id") +: (0 until n).map(i => col("h")(i).as(s"h$i")): _*)
+    // band 0's buckets collide although its slots differ; band 1 truly
+    // agrees; bands 2 and 3 stay in per-doc buckets
+    val bands = Seq((1L, 0, "forged"), (2L, 0, "forged"),
+      (1L, 1, "4,5,6,7"), (2L, 1, "4,5,6,7"),
+      (1L, 2, "a2"), (2L, 2, "b2"), (1L, 3, "a3"), (2L, 3, "b3"))
+      .toDF("doc_id", "band", "bucket")
+    val got = DedupQueries.verifiedPairsFromBands(bands, sig)
+      .as[(Long, Long, Double)].collect().toSeq
+    assert(got == Seq((1L, 2L, 0.75)), got)
   }
 }

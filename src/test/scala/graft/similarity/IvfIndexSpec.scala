@@ -82,10 +82,10 @@ class IvfIndexSpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("graft_ivf_spec").toString
     SimilarityQueries.buildIvfIndex(f, idx)
     val n = emb.count()
-    val assign = spark.read.parquet(idx + "/assignments")
+    val assign = SimilarityQueries.indexAssignments(spark, idx)
     assert(assign.count() == n)
     assert(assign.select("vec_id").distinct().count() == n)
-    val cent = spark.read.parquet(idx + "/centroids")
+    val cent = SimilarityQueries.indexCentroids(spark, idx)
     val labels = emb.select("label").distinct().count()
     val dims = f.select("i").distinct().count()
     assert(cent.count() == labels * dims)
@@ -125,8 +125,8 @@ class IvfIndexSpec extends AnyFunSuite {
     // the frozen centroid table rides into the new version unchanged
     assert(SimilarityQueries.indexCentroids(spark, idx).collect().toSet
       == wantCent)
-    val live = graft.sources.ArtifactVersions.current(idx)
-    assert(live.nonEmpty && live.get != idx)
+    val live = graft.sources.ArtifactVersions.live(idx)
+    assert(live != idx)
     // a post-flip advance lands inside the live version
     SimilarityQueries.advanceIvfIndex(arr, idx)
     assert(SimilarityQueries.indexAssignments(spark, idx).count()
@@ -151,14 +151,14 @@ class IvfIndexSpec extends AnyFunSuite {
     val ref = java.nio.file.Files
       .createTempDirectory("graft_ivf_ref_spec").toString
     SimilarityQueries.buildIvfIndex(f.filter(col("vec_id") < split), ref)
-    val refAssign = spark.read.parquet(ref + "/centroids")
+    val refAssign = SimilarityQueries.indexCentroids(spark, ref)
     val allToBase = f.join(broadcast(refAssign), col("i") === col("ci"))
       .groupBy("vec_id", "clabel")
       .agg(sum((col("v") - col("c")) * (col("v") - col("c"))).as("d2"))
       .groupBy("vec_id")
       .agg(min(struct(col("d2"), col("clabel"))).as("m"))
       .select(col("vec_id"), col("m.clabel").as("lst"))
-    val advanced = spark.read.parquet(adv + "/assignments")
+    val advanced = SimilarityQueries.indexAssignments(spark, adv)
     assert(advanced.count() == f.select("vec_id").distinct().count())
     assert(advanced.join(allToBase, Seq("vec_id", "lst"), "left_anti")
       .isEmpty, "advanced artifact diverges from frozen-centroid rule")

@@ -67,24 +67,34 @@ class ArtifactVersionsSpec extends AnyFunSuite {
       .select("doc_id", "text")
     val root = java.nio.file.Files
       .createTempDirectory("graft_artver_idx").toString
-    // v1: base corpus, published and resolved by a "reader"
-    val v1 = ArtifactVersions.prepareNext(root)
-    DedupQueries.buildDedupIndex(docs.filter(col("doc_id") < 25), v1)
-    ArtifactVersions.publish(root, v1)
-    val readerPath = ArtifactVersions.current(root).get
+    // v1: base corpus, built and resolved by a "reader"
+    DedupQueries.buildDedupIndex(docs.filter(col("doc_id") < 25), root)
+    val readerPath = ArtifactVersions.live(root)
+    assert(readerPath.endsWith("v1"))
     assert(DedupQueries.indexSignatures(spark, readerPath).count() == 25)
-    // rebuild (e.g. a drift trigger fired): the wider corpus goes into
-    // v2 while the v1 reader keeps serving
-    val v2 = ArtifactVersions.prepareNext(root)
-    DedupQueries.buildDedupIndex(docs.filter(col("doc_id") < 40), v2)
+    // rebuild (e.g. a drift trigger fired): the wider corpus becomes v2
+    DedupQueries.buildDedupIndex(docs.filter(col("doc_id") < 40), root)
     assert(DedupQueries.indexSignatures(spark, readerPath).count() == 25,
-      "reader disturbed by an unpublished rebuild")
-    ArtifactVersions.publish(root, v2)
+      "reader disturbed by a rebuild")
     // new resolutions see v2; the held v1 path stays intact
-    assert(DedupQueries.indexSignatures(spark,
-      ArtifactVersions.current(root).get).count() == 40)
+    assert(ArtifactVersions.live(root).endsWith("v2"))
+    assert(DedupQueries.indexSignatures(spark, root).count() == 40)
     assert(DedupQueries.indexSignatures(spark, readerPath).count() == 25,
       "published rebuild must not rewrite old versions")
+    graft.CacheScope.flush(spark)
+  }
+
+  test("a rebuild never disturbs a reader's already-resolved frame") {
+    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
+      .select("doc_id", "text")
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_artver_reader").toString
+    DedupQueries.buildDedupIndex(docs.filter(col("doc_id") < 25), root)
+    val reader = DedupQueries.indexSignatures(spark, root)
+    assert(reader.count() == 25)
+    DedupQueries.buildDedupIndex(docs.filter(col("doc_id") < 40), root)
+    assert(reader.count() == 25, "the rebuild replaced the reader's files")
+    assert(DedupQueries.indexSignatures(spark, root).count() == 40)
     graft.CacheScope.flush(spark)
   }
 }

@@ -168,7 +168,8 @@ class ReplayFenceSpec extends AnyFunSuite {
     val (ngB, ddB, outB) = fresh("b")
     Streams.curationIngestBatch(b1, 0L, ngB, ddB, w, outB, 0)
     for (c <- Seq("/signatures/batch-0", "/bands/batch-0")) {
-      val p = java.nio.file.Paths.get(ddB + c)
+      val p = java.nio.file.Paths.get(
+        graft.sources.ArtifactVersions.live(ddB) + c)
       Option(p.toFile.listFiles).getOrElse(Array.empty)
         .foreach(f => java.nio.file.Files.delete(f.toPath))
       java.nio.file.Files.delete(p)
@@ -212,7 +213,7 @@ class ReplayFenceSpec extends AnyFunSuite {
   }
 
   test("a fenced IVF advance replayed AFTER a compaction flip is still " +
-      "a no-op; the second flip retires the flat v0 components") {
+      "a no-op; the prune after the second flip retires the built version") {
     import graft.similarity.SimilarityQueries
     val f = graft.Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("label"),
@@ -221,6 +222,7 @@ class ReplayFenceSpec extends AnyFunSuite {
     val split = SimilarityQueries.AnnAdvanceSplit
     val idx = tmp("graft_rf_ivf_flip")
     SimilarityQueries.buildIvfIndex(f.filter(col("vec_id") < split), idx)
+    val built = graft.sources.ArtifactVersions.live(idx)
     val arr = f.filter(col("vec_id") >= split).localCheckpoint(true)
     SimilarityQueries.advanceIvfIndex(arr, idx, Some(0L))
     SimilarityQueries.compactIvfIndex(spark, idx)
@@ -228,13 +230,14 @@ class ReplayFenceSpec extends AnyFunSuite {
     SimilarityQueries.advanceIvfIndex(arr, idx, Some(0L)) // the replay
     assert(snap(SimilarityQueries.indexAssignments(spark, idx)) == want,
       "replay advanced the compacted IVF index despite the carried marker")
-    // the flat build layout survives the FIRST flip as the grace copy...
-    assert(new java.io.File(idx, "assignments").isDirectory)
+    // the built version survives the FIRST flip as the grace copy...
+    assert(new java.io.File(built, "assignments").isDirectory)
     SimilarityQueries.compactIvfIndex(spark, idx)
-    // ...and the SECOND flip retires it (grace window over); the
-    // served frame is unchanged
-    assert(!new java.io.File(idx, "assignments").exists)
-    assert(!new java.io.File(idx, "centroids").exists)
+    graft.sources.ArtifactVersions.pruneVersions(idx)
+    // ...and the prune after the SECOND flip retires it (grace window
+    // over); the served frame is unchanged
+    assert(!new java.io.File(built, "assignments").exists)
+    assert(!new java.io.File(built, "centroids").exists)
     assert(snap(SimilarityQueries.indexAssignments(spark, idx)) == want)
     graft.CacheScope.flush(spark)
   }
@@ -302,9 +305,9 @@ class ReplayFenceSpec extends AnyFunSuite {
     val root1 = tmp("graft_rf_idc1")
     val c1 = s"$root1/grams"
     assert(BatchCommits.appendBatch(Seq(7L, 7L, 8L).toDF("x"), c1, 0L))
-    BatchCommits.compactArtifact(spark, root1, Seq("grams"))
-    val v1 = ArtifactVersions.current(root1).get
-    assert(BatchCommits.readComponent(spark, s"$v1/grams")
+    ArtifactVersions.compact(spark, root1, Seq("grams"))
+    val v1 = ArtifactVersions.live(root1)
+    assert(ArtifactVersions.read(spark, root1, "grams")
       .as[Long].collect().sorted.toSeq == Seq(7L, 7L, 8L),
       "identity compaction altered a single write's rows")
     assert(new java.io.File(s"$v1/grams", "batch-0").isDirectory,
@@ -317,10 +320,10 @@ class ReplayFenceSpec extends AnyFunSuite {
       "fast path must copy into the committed batch dir, not flat")
     // ...so a SECOND flip with no new writes is identity again and the
     // duplicate rows survive it too
-    BatchCommits.compactArtifact(spark, root1, Seq("grams"))
-    val v1b = ArtifactVersions.current(root1).get
+    ArtifactVersions.compact(spark, root1, Seq("grams"))
+    val v1b = ArtifactVersions.live(root1)
     assert(v1b != v1)
-    assert(BatchCommits.readComponent(spark, s"$v1b/grams")
+    assert(ArtifactVersions.read(spark, root1, "grams")
       .as[Long].collect().sorted.toSeq == Seq(7L, 7L, 8L),
       "second identity flip merged the single write's duplicate rows")
     // two writes with a byte-identical replayed payload (the unfenced
@@ -329,9 +332,8 @@ class ReplayFenceSpec extends AnyFunSuite {
     val c2 = s"$root2/grams"
     assert(BatchCommits.appendBatch(Seq(1L, 2L).toDF("x"), c2, 0L))
     assert(BatchCommits.appendBatch(Seq(1L, 2L).toDF("x"), c2, 1L))
-    BatchCommits.compactArtifact(spark, root2, Seq("grams"))
-    val v2 = ArtifactVersions.current(root2).get
-    assert(spark.read.parquet(s"$v2/grams")
+    ArtifactVersions.compact(spark, root2, Seq("grams"))
+    assert(ArtifactVersions.read(spark, root2, "grams")
       .as[Long].collect().sorted.toSeq == Seq(1L, 2L),
       "multi-write compaction no longer collapses replayed rows")
   }
@@ -380,31 +382,31 @@ class ReplayFenceSpec extends AnyFunSuite {
         docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
           .localCheckpoint(true), w, idx, Some(bid))
     }
-    val fragBefore = BatchCommits.fragmentation(idx)
+    val fragBefore = ArtifactVersions.fragmentation(idx)
     assert(fragBefore >= 3, s"expected >=3 batch dirs, got $fragBefore")
     val want = snap(DedupQueries.liveGrams(spark, idx))
-    val verBefore = ArtifactVersions.current(idx)
+    val verBefore = ArtifactVersions.live(idx)
     // below threshold: nothing happens
-    assert(!BatchCommits.compactIfFragmented(spark, idx,
+    assert(!ArtifactVersions.compactIfFragmented(spark, idx,
       fragBefore + 1)(DedupQueries.compactNgramIndex))
-    assert(ArtifactVersions.current(idx) == verBefore,
+    assert(ArtifactVersions.live(idx) == verBefore,
       "no-op trigger must not publish a version")
     // at threshold: compacts, fragmentation collapses (markers are
     // excluded from the metric — else any threshold <= MarkerKeep
     // would re-trigger forever), served grams identical
-    assert(BatchCommits.compactIfFragmented(spark, idx,
+    assert(ArtifactVersions.compactIfFragmented(spark, idx,
       fragBefore)(DedupQueries.compactNgramIndex))
-    val verAfter = ArtifactVersions.current(idx)
+    val verAfter = ArtifactVersions.live(idx)
     assert(verAfter != verBefore)
     assert(snap(DedupQueries.liveGrams(spark, idx)) == want,
       "compaction changed the served grams")
-    assert(BatchCommits.fragmentation(idx) <= 1,
+    assert(ArtifactVersions.fragmentation(idx) <= 1,
       "fragmentation did not collapse")
     // the trigger CONVERGES: an immediate re-run at the same
     // threshold finds nothing to do and publishes nothing
-    assert(!BatchCommits.compactIfFragmented(spark, idx,
+    assert(!ArtifactVersions.compactIfFragmented(spark, idx,
       fragBefore)(DedupQueries.compactNgramIndex))
-    assert(ArtifactVersions.current(idx) == verAfter,
+    assert(ArtifactVersions.live(idx) == verAfter,
       "converged trigger must not publish another version")
     graft.CacheScope.flush(spark)
   }

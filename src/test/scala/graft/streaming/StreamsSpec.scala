@@ -355,7 +355,7 @@ class StreamsSpec extends AnyFunSuite {
       mem.addData(b2: _*); q.processAllAvailable()
     } finally q.stop()
     // two advances, two compactions: v1 (build) -> v2 -> v3 live
-    assert(graft.sources.ArtifactVersions.current(idxS).get.endsWith("v3"),
+    assert(graft.sources.ArtifactVersions.live(idxS).endsWith("v3"),
       "per-batch compaction must have published v3")
     val got = graft.sources.BatchCommits.readComponent(spark, out)
       .select("doc_id", "n_tokens", "n_spans", "n_removed", "clean_text")
@@ -716,7 +716,7 @@ class StreamsSpec extends AnyFunSuite {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
     } finally q.stop()
-    def served() = CodecQueries.servedMediaStats(spark, out)
+    def served() = graft.sources.ArtifactVersions.read(spark, out, "stats")
       .select("media_id", "kind", "status", "codec", "width", "height",
         "n_units", "exact_sum", "error")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
@@ -766,8 +766,7 @@ class StreamsSpec extends AnyFunSuite {
       mem.addData(b2: _*); q.processAllAvailable()
     } finally q.stop()
     def served() = {
-      val live = graft.sources.ArtifactVersions.current(out).getOrElse(out)
-      graft.sources.BatchCommits.readComponent(spark, s"$live/audit")
+      graft.sources.ArtifactVersions.read(spark, out, "audit")
         .select("media_id", "kind", "reason", "keep", "gate_stat")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
           r.getBoolean(3), r.getLong(4))).sortBy(_._1).toSeq
@@ -836,8 +835,7 @@ class StreamsSpec extends AnyFunSuite {
       mem.addData(b2: _*); q.processAllAvailable()
     } finally q.stop()
     def served() = {
-      val live = graft.sources.ArtifactVersions.current(out).getOrElse(out)
-      graft.sources.BatchCommits.readComponent(spark, s"$live/audit")
+      graft.sources.ArtifactVersions.read(spark, out, "audit")
         .select("media_id", "reason", "keep", "gate_stat", "hash",
           "dup_of")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getBoolean(2),
