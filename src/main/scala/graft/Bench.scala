@@ -6,23 +6,19 @@ import org.apache.spark.sql.SparkSession
   * MEASUREMENT SEMANTICS: each query is forced with count(), so
   * Catalyst may prune value-only expressions in the final projection
   * that cannot change the row count — the number is "time to compute
-  * the result set", applied identically every round, which keeps
-  * round-over-round comparisons valid. Full-materialization costs
-  * (every column priced, the plan a consumer writing results would
-  * pay) are measured where they are the point: Verify writes parquet,
-  * and Profile/ScaleProbe force priced columns with agg(sum(...)) —
-  * the round-13 q158 work was found and fixed through exactly that
-  * forced path after count() had hidden a 15 s evaluation cost.
+  * the result set", applied identically to every query and every run,
+  * which keeps run-over-run comparisons valid. Full-materialization
+  * costs (every column priced) are measured where they are the point:
+  * Verify writes parquet, and graftbench forces every column through
+  * its fingerprint aggregate.
   *
-  * Round 9 adds per-query FORENSICS (a SparkListener window around each
-  * query's three runs): job/task counts, shuffle read/write bytes,
+  * Per-query FORENSICS (a SparkListener window around each query's
+  * three runs): job/task counts, shuffle read/write bytes,
   * task-attributed GC ms, spill bytes, plus a whole-JVM GC-time delta
-  * and the post-query size of Spark's scratch dirs. Motivation: two
-  * LSH-band queries (q30/q95) read 3.5-4.2x their isolated cost
-  * in-suite across rounds 7-8 with the code unchanged — the forensic
-  * fields make the inflation source (GC debt vs shuffle-dir growth vs
-  * genuine recompute) visible IN the bench artifact instead of needing
-  * a by-hand isolated re-measure every round.
+  * and the post-query size of Spark's scratch dirs — so an in-suite
+  * inflation of a query over its isolated cost shows its source (GC
+  * debt vs shuffle-dir growth vs genuine recompute) in the bench
+  * artifact itself.
   */
 object Bench {
   private class Forensics extends org.apache.spark.scheduler.SparkListener {
@@ -91,23 +87,12 @@ object Bench {
     val forensics = new Forensics
     spark.sparkContext.addSparkListener(forensics)
     // Three timed runs per query, report the min: the first run absorbs
-    // parquet page-cache and codegen warmup plus host-VM noise; min-of-3
-    // (vs min-of-2) cuts the residual run-to-run jitter that made
-    // sub-second queries look 3-5x off between driver rounds.
+    // parquet page-cache and codegen warmup plus host-VM noise; the
+    // third cuts the residual jitter of sub-second queries.
     val Runs = 3
     // Dev aid: SPARK_GRAFT_ONLY=q1,q2 restricts to a comma-separated
     // subset (substring match) for single-query iteration.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
-    // Dev aid: SPARK_GRAFT_BENCH_FORCE=1 forces FULL materialization of
-    // every column via the noop sink instead of count() — the number a
-    // consumer writing results would pay (count() lets Catalyst prune
-    // value-only projections; see the measurement-semantics note
-    // above). Diagnostics only: the driver's round-over-round gate and
-    // BENCH_LOCAL.json stay count()-based for comparability.
-    val forceAll = sys.env.get("SPARK_GRAFT_BENCH_FORCE").contains("1")
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      if (forceAll) df.write.format("noop").mode("overwrite").save()
-      else { df.count(); () }
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
       only.forall(_.exists(n.contains)) }
     val results = selected.map { case (name, fn) =>
@@ -115,7 +100,7 @@ object Bench {
       val gc0 = jvmGcMs()
       val timed = try (0 until Runs).map { _ =>
         val t0 = System.nanoTime()
-        val ok = try { force(fn(spark, sfDir)); true }
+        val ok = try { fn(spark, sfDir).count(); true }
         catch { case _: Throwable => false }
         (ok, (System.nanoTime() - t0) / 1e9)
       } finally CacheScope.flush(spark, blocking = true)
@@ -161,29 +146,23 @@ object Bench {
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val json = s"""{"metric":"total","value":$total,"unit":"sec","runs":$Runs,"queries":$qs,"forensics":$fo,"sf":"$sfDir"}"""
     println(json)
-    // The driver parses a bounded TAIL of captured stdout; the full
-    // line above overflows it (170+ queries of forensics), which has
-    // left BENCH_r*.json `parsed: null` for several rounds. End stdout
+    // A consumer that parses a bounded TAIL of captured stdout cannot
+    // read the full line above (200+ queries of forensics). End stdout
     // with a COMPACT summary line (no per-query map) so the tail is
     // parseable JSON; the full artifact of record is the file below.
     // "total_summary", not "total": line-oriented consumers that grep
     // or sum metric:total lines must not conflate this tail line with
     // the full forensics line above or double-count the suite.
     println(s"""{"metric":"total_summary","value":$total,"unit":"sec","runs":$Runs,"n_queries":${results.size},"sf":"$sfDir","detail":"BENCH_LOCAL.json"}""")
-    // The driver captures sbt stdout, where the `[info] ` prefix and tail
-    // truncation have defeated its JSON parser three rounds straight
-    // (BENCH_r07-r09 all `parsed: null`). Persist the identical line to a
-    // file as the machine-readable artifact of record: repo-root
-    // BENCH_LOCAL.json (committed each round) or SPARK_GRAFT_BENCH_OUT.
-    // The committed default is FULL-SUITE ONLY — a SPARK_GRAFT_ONLY dev
-    // iteration must not clobber the round's official numbers with a
-    // partial total (point SPARK_GRAFT_BENCH_OUT somewhere to keep a
-    // filtered run's JSON).
-    // forced-materialization runs never overwrite the committed
-    // count()-based artifact — they measure different semantics
+    // Captured sbt stdout can carry an `[info] ` prefix and be
+    // truncated, so the identical line is also persisted to a file as
+    // the machine-readable artifact of record: repo-root
+    // BENCH_LOCAL.json or SPARK_GRAFT_BENCH_OUT. The default is
+    // FULL-SUITE ONLY — a SPARK_GRAFT_ONLY dev iteration must not
+    // clobber the committed numbers with a partial total (point
+    // SPARK_GRAFT_BENCH_OUT somewhere to keep a filtered run's JSON).
     val outPath = sys.env.get("SPARK_GRAFT_BENCH_OUT")
-      .orElse(if (only.isEmpty && !forceAll) Some("BENCH_LOCAL.json")
-        else None)
+      .orElse(if (only.isEmpty) Some("BENCH_LOCAL.json") else None)
     outPath match {
       case Some(p) =>
         try {
@@ -195,9 +174,8 @@ object Bench {
             System.err.println(s"[bench] could not write $p: $e")
         }
       case None =>
-        val why = if (forceAll) "forced-materialization run" else "filtered run"
         System.err.println(
-          s"[bench] $why: BENCH_LOCAL.json left untouched " +
+          "[bench] filtered run: BENCH_LOCAL.json left untouched " +
             "(set SPARK_GRAFT_BENCH_OUT to keep this run's JSON)")
     }
     spark.stop()

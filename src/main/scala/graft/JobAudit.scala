@@ -2,18 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev tool (not part of the driver contract): per-JOB time attribution
-  * for named declared queries — the generalization of
-  * ScaleProbe.g19JobAudit to the whole registry. For each query it
-  * replays the Bench methodology (warmup run + timed run, count()
-  * force, CacheScope flush between runs) while a listener buckets every
-  * job by its root call site (AQE query-stage jobs share the root
-  * action's SQL execution id, so they fold into the action that
-  * spawned them). Output: per-site job counts and summed job wall ms
-  * for the FINAL (warm) run — the breakdown that says which action
+/** Dev tool (beside the Verify/Bench entry points): where one named query's
+  * time goes. For each query it prints the formatted physical plan,
+  * then replays the Bench methodology (warmup runs + a timed run,
+  * count() force, CacheScope flush between runs) while a listener
+  * buckets every job by its root call site (AQE query-stage jobs share
+  * the root action's SQL execution id, so they fold into the action
+  * that spawned them). Output: per-site job counts and summed job wall
+  * ms for the FINAL (warm) run — the breakdown that says which action
   * inside a multi-action operator is worth optimizing.
   *
   *   sbt "runMain graft.JobAudit q111_semantic_dedup q104_cluster_policy_compare"
+  *   SPARK_GRAFT_SF_DIR=<testdata>/sf0.001 sbt "runMain graft.JobAudit q01_pricing_summary"
   */
 object JobAudit {
   def main(args: Array[String]): Unit = {
@@ -29,9 +29,17 @@ object JobAudit {
     val names = if (args.nonEmpty) args.toSeq else Seq("g19_find_structures")
     names.foreach { name =>
       val fn = QueryRegistry.queries(name)
-      // warmup runs (codegen + page cache), flushed like Bench
-      (0 until 2).foreach { _ =>
-        try { fn(spark, sfDir).count(); () } catch { case _: Throwable => () }
+      // warmup runs (codegen + page cache), flushed like Bench; the
+      // last one's frame prints its plan
+      (0 until 2).foreach { i =>
+        try {
+          val df = fn(spark, sfDir)
+          if (i == 1) {
+            println(s"[audit] ===== $name plan")
+            df.explain("formatted")
+          }
+          df.count(); ()
+        } catch { case _: Throwable => () }
         CacheScope.flush(spark, blocking = true)
       }
       System.gc()

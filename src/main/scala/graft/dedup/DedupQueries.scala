@@ -130,10 +130,10 @@ object DedupQueries {
     * one hash per token, and the explode path pays TWO shuffles).
     */
   def signaturesPerRow(docs: DataFrame): DataFrame = {
-    // ONE fused pass (r18): the previous shape built an
-    // array<struct<x1,x2>> with a transform() and then ran NumHashes
-    // separate array_min(transform(...)) projections — 17 interpreted
-    // HOF walks of every token array per row (HOFs are
+    // ONE fused pass: building an
+    // array<struct<x1,x2>> with a transform() and then running NumHashes
+    // separate array_min(transform(...)) projections costs 17
+    // interpreted HOF walks of every token array per row (HOFs are
     // CodegenFallback). [[graft.functions.MinHashSigs]] computes all
     // slots in one tight pass with identical arithmetic (bit-parity
     // pinned by DedupSpec's per-row ≡ explode-path test). The array is
@@ -165,7 +165,7 @@ object DedupQueries {
 
   /** (doc_id, band, bucket) LSH band entries of a signature table.
     * ONE posexplode over the per-band bucket array, not a per-band
-    * unionAll (r18): the union shape re-evaluated the whole signature
+    * unionAll: the union shape re-evaluates the whole signature
     * lineage once per band — 4x the md5/min work on every unpersisted
     * per-row path (the streaming/arrival side). Rows are identical:
     * pos IS the band index.
@@ -220,9 +220,9 @@ object DedupQueries {
     verifiedPairsFromBands(bandsOf(sig), sig)
   }
 
-  /** The fused candidates+verify leg (r19): band-bucket join, dedup of
+  /** The fused candidates+verify leg: band-bucket join, dedup of
     * multi-band pairs, and signature verification in ONE map-side pass
-    * with NO pair exchange. candidatesFromBands paid a full distinct()
+    * with NO pair exchange. candidatesFromBands pays a full distinct()
     * shuffle of the raw candidate list ((doc_a, doc_b) for every shared
     * band — 37 MB/run on q112 at sf0.1, the ONLY non-metadata exchange
     * in that plan) just to collapse pairs sharing several bands. The
@@ -237,7 +237,7 @@ object DedupQueries {
     * Row set and est_jaccard are identical to
     * verifiedPairsFrom(candidatesFromBands(bands), sig).
     *
-    * PRECONDITION (shared with the old shape, stated since r19): the
+    * PRECONDITION (shared with the distinct()+verify path): the
     * band and signature tables must be duplicate-ROW-free. Every
     * serving flow satisfies it — indexes are built once (memoized
     * builds) or advanced through FENCED batch commits, and compaction
@@ -680,8 +680,8 @@ object DedupQueries {
     // graph, SERVED from the persisted full-corpus dedup index
     // ([[servedFullDedupIndex]]) — the dashboard reads columnar
     // signature/band parquet instead of being the suite's third
-    // from-scratch LSH recompute (the r10 bench showed exactly these
-    // retained recomputes detonating 4-10x under heap pressure).
+    // from-scratch LSH recompute (retained recomputes like these
+    // were measured detonating 4-10x under heap pressure).
     Q("q112_source_overlap",
       (s, d) => {
         val docs = Tables.documents(s, d)
@@ -926,11 +926,11 @@ object DedupQueries {
     // tiny aggregation — never a token-level cross-source join. The
     // exact-Jaccard calibration audit ([[exactSourceJaccardOf]]) is
     // deliberately NOT part of the declared query: it is a token-level
-    // cross-source join, a calibration-time probe (ScaleProbe), never
-    // the steady-state path — and with it gone, every source pair
-    // appears in the dashboard (previously a zero-token-overlap pair
-    // vanished through the inner join to the exact table, exactly
-    // where the estimate is most misleading).
+    // cross-source join, a calibration-time check (QueriesSpec), never
+    // the steady-state path — so every source pair appears in the
+    // dashboard (an inner join to the exact table would drop a
+    // zero-token-overlap pair, exactly where the estimate is most
+    // misleading).
     // ---- q149: NEAR-DUP EXPLAIN — for every verified q30 pair, WHICH
     // bands collided (the evidence trail): the dedup-QA surface that
     // answers "why were these two merged" without rerunning anything
@@ -952,7 +952,7 @@ object DedupQueries {
         // collision stream is shuffled exactly once (re-joining
         // verified pairs against per-band rows and re-grouping, the
         // old shape, shuffled the same evidence twice)
-        // band evidence as a BIT MASK (r19): collect_set+countDistinct
+        // band evidence as a BIT MASK: collect_set+countDistinct
         // planned an ObjectHashAggregate chain (object buffers + a
         // distinct Expand) over the ~2.3M-candidate pair stream —
         // measured 25-36 s / 250 s task-GC / 258 MB spill on the
@@ -1068,7 +1068,7 @@ object DedupQueries {
     * rule, corpus-wide). Docs without an embedding row simply cannot
     * be semantic dups — both engines agree by construction.
     */
-  def dedupCascadeOf(docs: DataFrame, emb: DataFrame): DataFrame = {
+  private def dedupCascadeOf(docs: DataFrame, emb: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // stage 1 shuffles (doc_id, content hash) — ~40 bytes/row — not
     // full documents: nothing downstream reads s1's text (signatures
@@ -1088,7 +1088,7 @@ object DedupQueries {
     // mega-buckets) never sees it. Equivalent to corpus-wide pairs
     // filtered to survivors: pair evidence is a function of the two
     // endpoints alone, and an exact-dup's surviving twin carries the
-    // identical signature. Measured in ScaleProbe's cascade sweep.
+    // identical signature.
     val nearDrop = graft.CacheScope.retain(
       pairsFromSignaturesUnsorted(
         minhashSignaturesOf(docs.join(surv1, Seq("doc_id"))))
@@ -1119,7 +1119,7 @@ object DedupQueries {
     * pair space rides a broadcast nested loop, never a data-sized
     * cartesian.
     */
-  def sourceSketchUnionOf(docs: DataFrame): DataFrame = {
+  private def sourceSketchUnionOf(docs: DataFrame): DataFrame = {
     val srcOf = docs.select(col("doc_id"), col("source"))
     val srcSigs = graft.CacheScope.retain {
       val m = (0 until NumHashes).map(i => min(col(s"h$i")).as(s"h$i"))
@@ -1138,8 +1138,8 @@ object DedupQueries {
     * report exact_jaccard = 0 next to their (possibly nonzero, hash-
     * agreement) estimate. This is a distinct-(source, token) cross-
     * source self-join — linear in the union vocabulary but token-scale,
-    * not metadata-scale, so it runs as a calibration-time probe
-    * (ScaleProbe `q138_calibration`), never in the declared query.
+    * not metadata-scale, so it runs as a calibration-time check
+    * (QueriesSpec), never in the declared query.
     */
   def exactSourceJaccardOf(docs: DataFrame): DataFrame = {
     val srcOf = docs.select(col("doc_id"), col("source"))
@@ -1278,7 +1278,7 @@ object DedupQueries {
     val grams = windowHashesOf(docs, w).select("doc_id", "h")
     // (doc, hash) pre-aggregation: map-side combine collapses intra-doc
     // repeats before any shuffle; retained — it feeds the global counts
-    // AND the per-doc join (batch-only path: q97 + ScaleProbe)
+    // AND the per-doc join (batch-only path: q97)
     val dh = graft.CacheScope.retain(
       grams.groupBy("doc_id", "h").agg(count(lit(1)).as("c")))
     val gc = dh.groupBy("h").agg(sum("c").as("cnt"))
@@ -1339,8 +1339,7 @@ object DedupQueries {
   def dupSpanRemoval(docs: DataFrame, w: Int): DataFrame = {
     // retained: the window-hash stream feeds the firsts aggregation AND
     // the removable join — uncached it is derived twice per run
-    // (forced-bench finding; batch-only path, q152/ScaleProbe, so the
-    // harness flush point exists)
+    // (batch-only path, q152, so the harness flush point exists)
     val wins = graft.CacheScope.retain(windowHashesOf(docs, w))
     val firsts = wins.groupBy("h")
       .agg(min(struct(col("doc_id"), col("pos"))).as("f"))
@@ -1390,9 +1389,8 @@ object DedupQueries {
   /** Merge removable window starts into maximal spans and reassemble
     * each doc's cleaned text (the islands + fold half of q152/q154).
     * UNSORTED — the declared queries add the oracle-parity
-    * `orderBy(doc_id)` themselves, so the streaming sink and the
-    * ScaleProbe sweeps never pay a per-batch global sort for an
-    * output order nothing consumes.
+    * `orderBy(doc_id)` themselves, so the streaming sink never pays a
+    * per-batch global sort for an output order nothing consumes.
     */
   private def scrubSpans(docs: DataFrame, removable: DataFrame,
       w: Int): DataFrame = {
@@ -1586,7 +1584,7 @@ object DedupQueries {
       .select(col("doc_id"), col("clean_text").as("text"))
       .write.parquet(root + "/admitted")
     val admitted = s.read.parquet(root + "/admitted")
-    // NOTE (r19, measured): retaining the admitted gram set and
+    // NOTE (measured): retaining the admitted gram set and
     // appending the cached copy twice was tried — the InMemoryRelation
     // pins the distinct at the static shuffle width, so each append
     // wrote 32 files instead of the AQE-coalesced few and every later
@@ -2088,10 +2086,9 @@ object DedupQueries {
   val FuzzyEditFrac = 0.3
 
   /** The q120 operator over an arbitrary documents table (doc_id,
-    * text): (doc_id, kept) for every doc — public so ScaleProbe can
-    * drive it at replicated scale.
+    * text): (doc_id, kept) for every doc.
     */
-  def fuzzyDedupOf(docs: DataFrame): DataFrame = {
+  private def fuzzyDedupOf(docs: DataFrame): DataFrame = {
     val sig = graft.CacheScope.retain(minhashSignaturesOf(docs))
     val bands = bandsOf(sig)
     val bm = bands.groupBy("band", "bucket").agg(min("doc_id").as("m"))
@@ -2362,7 +2359,7 @@ object DedupQueries {
     * or shingle unit) — `sig` is read twice (edges + verification), so
     * callers should pass a retained/persisted frame.
     */
-  def dedupClustersStarFrom(docs: DataFrame, sig: DataFrame): DataFrame =
+  private def dedupClustersStarFrom(docs: DataFrame, sig: DataFrame): DataFrame =
     dedupClustersStarParts(docs, bandsOf(sig), sig)
 
   /** The star policy over caller-supplied band and signature tables —
@@ -2440,8 +2437,8 @@ object DedupQueries {
     * (q100): 0.85 on the rounded cosine keeps the output at
     * hundreds-of-pairs scale on the similarity-dense synthetic corpus.
     */
-  val SparseCosT = 0.85
-  val SparseCosDocLimit = 400
+  private val SparseCosT = 0.85
+  private val SparseCosDocLimit = 400
 
   /** Full-corpus thresholds (q105/q106): high enough that the output is
     * twins-only, so no doc bound is needed in either engine. Both
@@ -2601,7 +2598,7 @@ object DedupQueries {
       tok.groupBy("doc_id")
         .agg(sort_array(collect_list(col("token"))).as("set"))), t)
 
-  /** [[setSimJoin]] over per-doc SORTED SET ARRAYS (r19) — the entry
+  /** [[setSimJoin]] over per-doc SORTED SET ARRAYS — the entry
     * the declared queries use: the set arrays are built PER ROW
     * (sort_array over array_distinct — no corpus-wide distinct shuffle,
     * no collect_list exchange of every token string, the two heaviest
@@ -2630,8 +2627,8 @@ object DedupQueries {
       .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
         col("l.n").as("na"), col("r.n").as("nb"))
       .distinct()
-    // Verification on per-doc SORTED ARRAYS (r18): the token-level
-    // verify (cand ⋈ tok ⋈ tok + pair aggregate) shuffled Σ_pairs |set|
+    // Verification on per-doc SORTED ARRAYS: the token-level
+    // verify (cand ⋈ tok ⋈ tok + pair aggregate) shuffles Σ_pairs |set|
     // rows; the intersection is a codegen'd merge scan per candidate
     // PAIR row ([[graft.functions.SortedIntersectCount]]). set elements
     // are distinct per doc by contract, so the merge count IS

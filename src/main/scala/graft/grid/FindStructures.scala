@@ -66,8 +66,8 @@ object FindStructures {
     * and a narrow static shuffle width (8).
     *
     * Why: under AQE every exchange materializes as its own query-stage
-    * job, and the round-8 job audit (ScaleProbe.g19JobAudit) attributed
-    * 47 of g19's 65 jobs to exactly that, on stages whose payloads are
+    * job, and a per-site job audit of g19 with AQE on attributed 47
+    * of its 65 jobs to exactly that, on stages whose payloads are
     * KILOBYTES (the whole sf0.1 grid is ~10k cells). On a small
     * fixed-topology uniform grid AQE has nothing to re-plan (no skew,
     * nothing worth coalescing beyond a sane static width), so its
@@ -108,13 +108,12 @@ object FindStructures {
     // Scope AQE off for small grids (see [[AqeCellFloor]]) through a
     // CHILD session: `newSession()` shares the SparkContext, cache and
     // data, but isolates SQL confs — a concurrent query on the
-    // caller's session can never inherit the flip (the round-9
-    // mutate-and-restore was session-global for the window's
+    // caller's session can never inherit the flip (a mutate-and-restore
+    // on the caller's session would be session-global for the window's
     // duration). Every dataframe of this pipeline — including the
     // RETURNED variables — is rebound to the child, so the consumer's
     // final joins over these toy-scale masks also skip AQE's per-stage
-    // job quanta instead of paying ~16 of them after the old restore
-    // point (measured in ScaleProbe.g19JobAudit).
+    // job quanta (~16 of them otherwise).
     val session = b1.df.sparkSession
     val aqeScoped =
       b1.timeAxis.length.toLong * nz * nx < AqeCellFloor
@@ -175,10 +174,10 @@ object FindStructures {
         // checkpointed local table instead of re-planning the chain's
         // tail joins as post-return query stages. The chain's internal
         // persists go through a LOCAL pin and are freed the moment the
-        // checkpoint lands (the r14 footprint finding: grid-sized
-        // intermediates whose consumers all finish inside this Future
-        // stayed resident until the harness flush, stacking cache
-        // pressure under every later stage); big grids keep the
+        // checkpoint lands (grid-sized intermediates whose consumers
+        // all finish inside this Future would otherwise stay resident
+        // until the harness flush, stacking cache pressure under every
+        // later stage); big grids keep the
         // CacheScope default since the returned plan is lazy.
         if (aqeScoped) {
           val pins = scala.collection.mutable.Buffer.empty[DataFrame]

@@ -62,7 +62,7 @@ object GridQueries {
       val e = Tables.events(s, d).select("event_id", "value")
       // nCells as a broadcast scalar, not a driver-side e.count(): the
       // fixture builds without running a job, so declared queries stay
-      // fully lazy until their own action (round-6 verdict nit). The
+      // fully lazy until their own action. The
       // persist is lazy too — the first consuming action materializes.
       val nCells = broadcast(
         e.agg((count(lit(1)) / Cells).cast("long").as("nc")))

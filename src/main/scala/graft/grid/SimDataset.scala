@@ -201,8 +201,9 @@ final case class SimDataset(
     // coordinate columns the trajectory carries; the line section does
     // not apply (no static mesh to section).
     //
-    // `it` REBASE (round 9, closing the round-8 mixed-dataset
-    // foot-gun): when the dataset's static-mesh variables agree on how
+    // `it` REBASE (closes the mixed-dataset foot-gun of absolute dyn
+    // `it` next to rebased grid `it`): when the dataset's static-mesh
+    // variables agree on how
     // the timeslice maps into index space (one distinct (offset, kept)
     // across their time axes — the universal case: variables of one
     // simulation share the time axis), DynVar `it` is filtered to the

@@ -95,7 +95,7 @@ object Topology {
       .withColumn("c10", col("f10") - level)
       .withColumn("c11", col("f11") - level), Seq.empty)
 
-  // Negative result, measured round 7: a multi-field cellCorners (both
+  // Negative result, measured: a multi-field cellCorners (both
   // fields' corners in the same two window passes, persisted so the
   // intersection join's two sides share it) made g19 SLOWER — 12.5 s vs
   // 10.0 s — because every contour consumer here reads an
@@ -348,7 +348,7 @@ object Topology {
     // min-aggregation of messages is duplicate-tolerant, so a distinct()
     // here would buy nothing and cost a full shuffle of the edge list.
     //
-    // NEGATIVE RESULT (round 9, don't retry): scoping AQE off (+ static
+    // NEGATIVE RESULT (measured, don't retry): scoping AQE off (+ static
     // width 8) around the iterative solve — the lever that won 11%
     // inside FindStructures — cut job counts 2-3x here but REGRESSED
     // wall on every CC-heavy query (q104 3.53->4.16 s, q50 3.08->3.29,
@@ -358,7 +358,7 @@ object Topology {
     // which static planning cannot see through a checkpointed lineage.
     val e0 = graft.CacheScope.retain(
       edges.select((k :+ col("s") :+ col("t")): _*))
-    // SIZE-GATED DRIVER SOLVE (r18): the contracted graph is usually
+    // SIZE-GATED DRIVER SOLVE: the contracted graph is usually
     // tiny relative to the data that produced it (tile-boundary roots,
     // star-contracted LSH buckets, >=T cosine pairs), yet the iterative
     // loop below pays one scheduled job PER ROUND — 2-8 rounds of

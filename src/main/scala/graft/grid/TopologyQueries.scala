@@ -334,24 +334,15 @@ object TopologyQueries {
     // "registered outputs" of the reference pipeline, canonically
     // ordered. The DuckDB twin recomputes all nine stages in SQL.
     //
-    // Bench note: 7.4-7.8 s min-of-3 at any SF, and most of it is
-    // fixed per-run cost (planning + codegen + scheduling), not a
-    // data-scaling term. The job-count history, each step measured by
-    // ScaleProbe.g19JobAudit: 65 jobs (round 8: 47 were AQE
-    // query-stage materializations of KB-scale exchanges) -> 30
-    // (round 9: AQE scoped off + static width 8 for sub-floor grids)
-    // -> 20 (round 10: the scope moved into a child newSession so the
-    // RETURNED masks also execute AQE-off — the ~16 post-return query
-    // stages collapsed to 2 one-job counts — and statically
-    // single-tile CC solves became lazy, folding 4 eager checkpoints
-    // into their consumers). Round-7 structural cuts (fused smoothing
-    // passes, CollapseWindow-adjacent gradients, the current-sheet
-    // chain overlapped on its own thread, sign-keyed currentSheets)
-    // took 21.5 s to ~10 s; rounds 9-10 took the composition overhead
-    // 10 -> 7.4 s. What remains is the spine collect, the separatrix
-    // solve, and the overlapped current-sheet chain — real work plus
-    // ~20 scheduling quanta that amortize at cluster scale (the grid
-    // sweep's data term is ~flat through n=96).
+    // Cost note: most of a g19 run is fixed per-run cost (planning +
+    // codegen + scheduling), not a data-scaling term. Small grids run
+    // AQE-off at a static shuffle width inside a child newSession, so
+    // the returned masks also execute AQE-off, and statically
+    // single-tile CC solves stay lazy (no eager checkpoint per solve).
+    // What remains is the spine collect, the separatrix solve, and the
+    // overlapped current-sheet chain — real work plus scheduling
+    // quanta that amortize at cluster scale
+    // (`sbt "runMain graft.JobAudit g19_find_structures"` lists them).
     Q("g19_find_structures",
       (s, d) => {
         val res = FindStructures(g19Input(s, d), smoothing = 1.0, deTol = 5.0)
@@ -360,8 +351,8 @@ object TopologyQueries {
           .select(col("it"), col("iz"), col("ix"), col("value").as(out))
         // sep and ostruct are projections of the SAME checkpointed
         // frame — read it once (Result.sepMasks) instead of re-joining
-        // the two mask variables on the grid key (r18: −1 join, −2
-        // exchanges in the final assembly; values identical)
+        // the two mask variables on the grid key (one join and two
+        // exchanges fewer in the final assembly; values identical)
         res.sepMasks
           .join(m("current_sheets", "cs"), Seq("it", "iz", "ix"))
           .withColumn("n_x", lit(res.xCoords.size))
@@ -409,10 +400,9 @@ object TopologyQueries {
   private val G19Shift2 = 50.0
 
   /** The g19 input dataset — the events-refold fixture the master
-    * pipeline runs on. Factored out of the query so the Profile harness
-    * can drive [[FindStructures]] stages on the same input.
+    * pipeline runs on.
     */
-  def g19Input(s: SparkSession, d: String): SimDataset = {
+  private def g19Input(s: SparkSession, d: String): SimDataset = {
     val n2 = G19N * G19N
     val g0 = graft.Tables.events(s, d)
       .filter(col("event_id") < n2)

@@ -213,8 +213,8 @@ object CodecQueries {
     * compressed-domain-prefilter semantics (byte-identical chunks
     * cannot be a cut and skip decode entirely; only differing pairs
     * pay the real JPEG decoder to confirm visual change), shared by
-    * the query body and both ScaleProbe legs so the probe always
-    * measures the shipped rule. Returns the cut frame indices plus
+    * the query body and CodecsSpec so the test always checks the
+    * shipped rule. Returns the cut frame indices plus
     * the decode-work accounting (frames decoded, stored bytes
     * decoded).
     *
@@ -960,7 +960,7 @@ object CodecQueries {
 
     // ---- q165: MULTIMODAL PAIR CURATION — the (media, caption)
     // filtering step a CLIP/LAION-style training set is built with,
-    // composed from this round's surfaces: a pair is kept iff its
+    // composed from the codec surfaces: a pair is kept iff its
     // media DECODES (the q164 gate — corrupt payloads fail the magic
     // sniff), meets a per-modality SIZE floor computed from DECODED
     // facts (min pixels / samples / frames — metadata is never
@@ -1752,7 +1752,7 @@ object CodecQueries {
     // train at one channel count, so stereo frames downmix to
     // (L+R)/2. This is also the ONE declared query driving the WAV
     // parser's multi-channel leg (channels=2 interleaved decode —
-    // unit-tested since r13, never query-covered until now). Division
+    // covered by unit tests and by this query). Division
     // semantics are pinned: DuckDB's integer `//` TRUNCATES TOWARD
     // ZERO ((-5)//2 = -2, verified — it is not Python floor
     // division), which is exactly Java/Scala Int `/`, so the plain
@@ -1861,8 +1861,8 @@ object CodecQueries {
              ORDER BY media_id""")),
 
     // ---- q191: MJPEG SHOT BOUNDARIES + KEYFRAMES — the q167/q176
-    // pair routed through the COMPRESSED path (the r15 judge's open
-    // item: both ran Y4M-only): detect scene cuts on a scene-
+    // pair routed through the COMPRESSED path (both run Y4M-only):
+    // detect scene cuts on a scene-
     // structured MJPEG-AVI and emit the keyframe AT each cut, the
     // standard sample-where-content-changes policy. The scale story
     // is the COMPRESSED-DOMAIN PREFILTER: within a scene the muxed

@@ -73,7 +73,7 @@ object JoinOps {
       (rand(42) * salt).cast("int"))
     val replicated = small.withColumn("__salt",
       explode(array((0 until salt).map(lit): _*)))
-    // SHUFFLE_HASH (r18): left to the planner, the salt-replicated side
+    // SHUFFLE_HASH: left to the planner, the salt-replicated side
     // is small enough on a bench-scale input that AQE picks a broadcast
     // join — which builds the salt-times-inflated relation single-
     // threaded in the exchange (measured ~1.3 s of driver wall on q49
@@ -110,8 +110,7 @@ object JoinOps {
     * the skew selects the keys, and the whole thing stays ONE lazy
     * plan (the census is a map-side-combined agg plus a one-row
     * scalar broadcast — no driver-side decision). Result is identical
-    * to `big.join(small, key)`; ScaleProbe's skew_remediation sweep
-    * records the per-task shuffle spread collapsing.
+    * to `big.join(small, key)` (JoinOpsSpec).
     */
   def profiledSaltedJoin(big: DataFrame, small: DataFrame, key: String,
       salt: Int, hotXMean: Double = 4.0): DataFrame = {

@@ -22,15 +22,15 @@ import org.apache.spark.sql.types.{LongType, StructField}
   */
 object Ranking {
 
-  /** Exclusive prefix sums of per-partition totals, keyed by partition
-    * id. Input order is irrelevant (sorted here); P entries, driver
-    * side.
+  /** Exclusive prefix sums of per-partition totals, indexed by
+    * partition id 0..max id (an absent id contributes 0). Input order
+    * is irrelevant; P entries, driver side.
     */
-  private def exclusivePrefix(totals: Array[(Int, Long)]): Map[Int, Long] = {
-    var acc = 0L
-    totals.sortBy(_._1).map { case (pid, n) =>
-      val off = acc; acc += n; (pid, off)
-    }.toMap
+  private def exclusivePrefix(totals: Array[(Int, Long)]): Array[Long] = {
+    val byPid = totals.toMap
+    val n = if (totals.isEmpty) 0 else totals.map(_._1).max + 1
+    (0 until n).scanLeft(0L)((acc, p) => acc + byPid.getOrElse(p, 0L))
+      .init.toArray
   }
 
   /** Append exact global rank `out` (1-based long) ordering by
@@ -49,23 +49,21 @@ object Ranking {
     // exchange + sort
     val parted = graft.CacheScope.retain(
       df.repartitionByRange(sortCols: _*).sortWithinPartitions(sortCols: _*))
-    // per-partition counts as a SQL aggregate (r19): the old
-    // rdd.mapPartitionsWithIndex pass deserialized every row to an
-    // external Row just to count it, and the numbering pass converted
-    // every row OUT and back IN through createDataFrame. Both passes
-    // now stay columnar/codegen: counts are a metadata-scale collect,
-    // and the rank is a pure projection — monotonically_increasing_id
-    // on the cached sorted partitioning is documented as
+    // per-partition counts as a SQL aggregate, not an
+    // rdd.mapPartitionsWithIndex pass (which deserializes every row to
+    // an external Row just to count it), and the rank as a pure
+    // projection, not a createDataFrame round trip: both passes stay
+    // columnar/codegen. monotonically_increasing_id on the cached
+    // sorted partitioning is documented as
     // (partitionId << 33) + record-number-within-partition, so
-    // (id & (2^33 - 1)) is exactly the running counter the RDD pass
-    // maintained, and the partition's global offset rides in via a
-    // tiny literal array indexed by spark_partition_id. Still no
-    // window, no join, no hash exchange in the returned plan.
+    // (id & (2^33 - 1)) is the within-partition running counter, and
+    // the partition's global offset rides in via a tiny literal array
+    // indexed by spark_partition_id. No window, no join, no hash
+    // exchange in the returned plan.
     val counts = parted
       .groupBy(spark_partition_id().as("__pid"))
       .agg(count(lit(1)).as("n")).collect()
       .map(r => (r.getInt(0), r.getLong(1)))
-    val cmap = counts.toMap
     // monotonically_increasing_id keeps the within-partition record
     // number in the LOW 33 bits — a partition at or past 2^33 rows
     // would wrap into the partition-id bits and silently corrupt
@@ -76,13 +74,7 @@ object Ranking {
         s"globalRank: range partition $pid holds $n rows (>= 2^33) - " +
           "monotonically_increasing_id's record counter would wrap; " +
           "raise spark.sql.shuffle.partitions for this sort") }
-    val maxPid = if (counts.isEmpty) -1 else counts.map(_._1).max
-    val offsets = new Array[Long](maxPid + 1)
-    var acc = 0L
-    var p = 0
-    while (p <= maxPid) {
-      offsets(p) = acc; acc += cmap.getOrElse(p, 0L); p += 1
-    }
+    val offsets = exclusivePrefix(counts)
     val mask = (1L << 33) - 1
     parted.withColumn(out,
       element_at(typedLit(offsets.toSeq), spark_partition_id() + lit(1))

@@ -1131,13 +1131,12 @@ object RelationalQueries {
       .orderBy("rk")
   }
 
-  /** q133's body, parameterized on the lineitem relation so ScaleProbe
-    * can sweep replicated inputs. See the q133 entry for semantics and
-    * the scale rationale of each step.
+  /** q133's body, parameterized on the lineitem relation. See the q133
+    * entry for semantics and the scale rationale of each step.
     */
-  def copurchasePagerankOf(lineitem: DataFrame): DataFrame = {
+  private def copurchasePagerankOf(lineitem: DataFrame): DataFrame = {
     val Damp = 0.85; val Iters = 3
-    // Edge-build shape note (r19, measured): the mirror alternative —
+    // Edge-build shape note (measured): the mirror alternative —
     // collect each basket's part set, enumerate i<j pairs with two
     // Generates, aggregate the half-sized unordered pair table, union
     // its mirror — was built and benchmarked (subset A/B vs an
@@ -1187,11 +1186,11 @@ object RelationalQueries {
       .orderBy(col("pagerank").desc, col("part_id")).limit(20)
   }
 
-  /** q135's body, parameterized on the events relation so ScaleProbe
-    * can sweep replicated inputs. See the q135 entry for the boundary
-    * rule and why the sweep rides [[Ranking.globalCumSum]].
+  /** q135's body, parameterized on the events relation. See the q135
+    * entry for the boundary rule and why the sweep rides
+    * [[Ranking.globalCumSum]].
     */
-  def peakConcurrencyOf(events: DataFrame): DataFrame = {
+  private def peakConcurrencyOf(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val cum = Window.partitionBy("user_id").orderBy("ts", "event_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -68,8 +68,7 @@ object SimilarityQueries {
     * assignment never sees a pair straddling a cluster boundary; top-2
     * probing makes those pairs reachable — and gives singleton-cluster
     * vectors a second candidate pool — at ≈2x the bounded pair space
-    * (still linear in n by the quantizer geometry). ScaleProbe's
-    * `multiprobe` probe measures the recall gained and the cost paid.
+    * (still linear in n by the quantizer geometry).
     */
   private[graft] val SemNProbe = 2
 
@@ -1072,8 +1071,7 @@ object SimilarityQueries {
     // shuffle on vec_id, parallel by key — never the single-task
     // global window). Tie-break is deterministic: 6-dp-rounded cosine
     // desc, then neighbor id. The exact variant is the q37-style full
-    // pair join; ScaleProbe's `multiprobe` probe measures recall vs
-    // that ground truth for probe widths 1 and 2.
+    // pair join.
     Q("q116_knn_graph",
       (s, d) => knnGraphOf(Tables.embeddings(s, d)).orderBy("vec_id", "rnk"),
       Some(knnGraphOracleSql)),
@@ -1220,8 +1218,7 @@ object SimilarityQueries {
     // equi-joins, the winner is a top-1 PARTITIONED window with the
     // q116 tie-break. A vector whose candidates are all same-label
     // emits nothing — at production scale nProbe widens until the
-    // negative pool suffices (the q111 multiprobe trade, measured in
-    // ScaleProbe).
+    // negative pool suffices (the q111 multiprobe trade).
     Q("q137_hard_negatives",
       (s, d) => hardNegativesOf(Tables.embeddings(s, d)).orderBy("vec_id"),
       Some(s"""WITH ${clusterCosineCteSql},
@@ -1533,8 +1530,6 @@ object SimilarityQueries {
 
   /** The q187 pair set: (train_vec, val_vec, cos >= [[SemLeakT]]),
     * cosines exact on the index-served, list-bounded candidates only.
-    * `private[graft]`: ScaleProbe's `semantic_leak` sweep drives the
-    * same body over replicated corpora.
     */
   private[graft] def semanticLeakPairs(s: SparkSession, d: String): DataFrame = {
     val f = graft.CacheScope.retain(flat(s, d))
@@ -1581,7 +1576,7 @@ object SimilarityQueries {
     // `corpus`: an already-pinned corpus flat view — a multi-batch
     // caller (q192 runs three batch bodies per query) pins the corpus
     // ONCE and passes it in, instead of each batch body re-persisting
-    // and re-materializing the identical frame (r19; the live
+    // and re-materializing the identical frame (the live
     // streaming sink keeps per-batch local pins — a stream has no
     // flush point for a query-scoped retain)
     val f = corpus.getOrElse(pin(flat(s, d)))
@@ -1599,11 +1594,11 @@ object SimilarityQueries {
     // candidate dots in the q111 LIST-CO-GROUPED shape: both sides keyed
     // by (lst, i), so the pair expansion happens only INSIDE the list
     // join and each candidate pair is priced once per shared list (max
-    // dedupes the <= nprobe copies — the dot is identical). The earlier
+    // dedupes the <= nprobe copies — the dot is identical). The other
     // shape (materialize candidate pairs, then re-join each side's
-    // components per pair) expanded every pair 64x BEFORE its joins —
-    // measured 2.5x slower than the brute-force scan it was supposed to
-    // beat (ScaleProbe `semantic_leak`).
+    // components per pair) expands every pair 64x BEFORE its joins —
+    // measured 2.5x slower than the brute-force val x train scan it is
+    // supposed to beat.
     val valSide = probe.join(
       valf.select(col("vec_id").as("val_vec"), col("i"),
         col("v").as("av")), "val_vec")
@@ -1703,10 +1698,10 @@ object SimilarityQueries {
     advanceIvfIndex(f.filter(col("vec_id") >= split), root)
     // the trigger: one scalar off the k-row drift table (k = number of
     // lists — metadata-scale; this collect is the scheduler's poll,
-    // not a data-sized driver loop). Drift is SERVED from the artifact
-    // (r19): post-advance, the live centroid table is the base
+    // not a data-sized driver loop). Drift is SERVED from the artifact:
+    // post-advance, the live centroid table is the base
     // centroids and the live assignment table is the full corpus
-    // assigned to them — re-deriving both cost a second corpus-wide
+    // assigned to them — re-deriving both costs a second corpus-wide
     // assignment join per run (the plan's single biggest execution).
     val maxDrift = centroidDriftFrom(f,
         indexCentroids(s, root), indexAssignments(s, root))
@@ -1800,7 +1795,7 @@ object SimilarityQueries {
   }
 
   /** The drift table from an EXISTING centroid/assignment pair — the
-    * artifact-served leg (r19): q150 advances the v1 index before
+    * artifact-served leg: q150 advances the v1 index before
     * polling drift, at which point the artifact's centroid table IS
     * the base centroids and its assignment table (build rows plus the
     * advance append) IS assignToCentroids(full corpus, base) — so the
@@ -1882,28 +1877,28 @@ object SimilarityQueries {
 
   private[graft] def clusterBoundedCosineOf(emb: DataFrame,
       nProbe: Int = SemNProbe): (DataFrame, DataFrame) = {
-    // Centroid distances WITHOUT the flat explode (r18): the old path
-    // posexploded every vector and pushed n_vec x n_cent x dim rows
+    // Centroid distances WITHOUT the flat explode: the flat path
+    // posexplodes every vector and pushes n_vec x n_cent x dim rows
     // through a broadcast join and a hash aggregate (16M rows at
     // sf0.1) just to compute n_vec x n_cent scalars. The array form
     // crossJoins each vector row with the (broadcast, metadata-scale)
     // centroid table and evaluates the squared-L2 fold per PAIR row in
     // codegen — same flop count, no row explosion, no aggregate hash
-    // table. Bit-parity with the old sum: SquaredL2 accumulates in
+    // table. Bit-parity with the flat sum: SquaredL2 accumulates in
     // ascending index order, which is exactly the order the hash
-    // aggregate accumulated (posexplode emits i ascending within a
+    // aggregate accumulates (posexplode emits i ascending within a
     // vector's partition), and each element term casts to double
-    // BEFORE subtracting, as the flat path did. The kernel is the
+    // BEFORE subtracting, as the flat path does. The kernel is the
     // codegen'd SquaredL2 expression, not an aggregate(zip_with(...))
     // fold — HOFs are CodegenFallback and evaluate interpreted.
     val cent = emb.filter(col("vec_id") % SemSeedStride === 0)
       .select(col("vec_id").as("clabel"), col("embedding").as("ce"))
     val d2 = graft.functions.VectorOps.sqDist(col("embedding"), col("ce"))
-    // ONE wide row per vector (r19): the probe list is folded in the
+    // ONE wide row per vector: the probe list is folded in the
     // same aggregate that consumes the (broadcast) centroid crossJoin —
     // sort_array over the k-struct list picks the nProbe nearest by
-    // (d2, clabel), exactly the old window's orderBy and tie rule.
-    // Replaces: the window's full exchange+sort of the n x k distance
+    // (d2, clabel), exactly a ranking window's orderBy and tie rule,
+    // without the window's full exchange+sort of the n x k distance
     // rows, plus the ranked-to-embedding re-join (the vector rides the
     // aggregate via first(); every group's values are identical). The
     // partial aggregate collapses each vector's k rows map-side, so the
@@ -1941,10 +1936,9 @@ object SimilarityQueries {
   /** The q116 operator over an arbitrary embeddings table (vec_id,
     * embedding): cluster-bounded candidates (multi-probe, `nProbe`
     * nearest centroids per vector) mirrored both ways, then per-vector
-    * top-`k` via a PARTITIONED window — public so ScaleProbe can drive
-    * it at replicated scale and compare probe widths.
+    * top-`k` via a PARTITIONED window.
     */
-  def knnGraphOf(emb: DataFrame, k: Int = KnnK,
+  private[graft] def knnGraphOf(emb: DataFrame, k: Int = KnnK,
       nProbe: Int = SemNProbe): DataFrame = {
     val (_, half) = clusterBoundedCosineOf(emb, nProbe)
     val sym = half.union(
@@ -2227,12 +2221,10 @@ object SimilarityQueries {
       nProbes: Int = AnnNProbes, k: Int = 10): DataFrame =
     annIvfRecallOf(flat(s, d), nProbes, k)
 
-  /** Same, over an arbitrary flat (vec_id, i, v) frame — lets the
-    * ScaleProbe `ann_train` rung feed replicated corpora through the
-    * identical training loop (q46 adds its table read at the query
-    * edge).
+  /** Same, over an arbitrary flat (vec_id, i, v) frame (q46 adds its
+    * table read at the query edge).
     */
-  def annIvfRecallOf(flat0: DataFrame,
+  private[graft] def annIvfRecallOf(flat0: DataFrame,
       nProbes: Int = AnnNProbes, k: Int = 10): DataFrame = {
     val f = graft.CacheScope.retain(flat0)
     val qf = graft.CacheScope.retain(f.select(col("vec_id"), col("i"),

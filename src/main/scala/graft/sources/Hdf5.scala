@@ -4,9 +4,8 @@ import java.io.RandomAccessFile
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets.US_ASCII
 
-/** A REAL (minimal) HDF5 codec, pure JVM — retires the last
-  * env-blocked adjudication the same way the r14 media codecs did:
-  * the reference ingests VPIC dumps through `pyvpic.open` over HDF5
+/** A REAL (minimal) HDF5 codec, pure JVM, built like the media
+  * codecs: the reference ingests VPIC dumps through `pyvpic.open` over HDF5
   * (/root/reference/src/datasets/vpicdataset.py:9,194), and with no
   * HDF5 library in this environment the tree had been mocked with
   * raw `data.bin` files. This module writes and validates a
@@ -300,8 +299,9 @@ object Hdf5 {
   }
 
   /** STORED bytes decoded by [[decodeChunk]] in this JVM — the
-    * ScaleProbe counter behind the chunk-pruning claim (a pruned scan
-    * must inflate ONLY intersecting chunks' bytes). Local-mode
+    * counter behind the chunk-pruning claim (a pruned scan must
+    * inflate ONLY intersecting chunks' bytes), asserted by
+    * VPICSourceSpec's bytes-inflated pruning test. Local-mode
     * instrumentation; cost is one atomic add per CHUNK, nothing
     * per-element.
     */

@@ -382,7 +382,7 @@ object Streams {
         // quality rules IN PLACE on the persisted batch (per-row HOFs,
         // no flags-back-on-doc_id self-join per micro-batch); the pin
         // holds METADATA ONLY — (doc_id, keep), never the batch text
-        // a second time (the q144 r14 lesson: `cleaned` is the one
+        // a second time (as in q144: `cleaned` is the one
         // text barrier, every other barrier is fingerprint-width)
         val flags = pin(graft.text.TextQueries.withQualityFlags(
             cleaned.select(col("doc_id"), col("clean_text").as("text")))

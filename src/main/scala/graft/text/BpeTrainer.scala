@@ -43,7 +43,7 @@ object BpeTrainer {
     // slice length max(n-1, 0): a fully-merged word has ONE symbol and
     // contributes no pairs (sequence(1, n-1) would throw on n = 1)
     val n1 = greatest(size(syms) - 1, lit(0))
-    // arrays_zip, not zip_with (r19): ZipWith is CodegenFallback
+    // arrays_zip, not zip_with: ZipWith is CodegenFallback
     // (interpreted per element) while ArraysZip is codegen'd — this
     // runs once per trainer step over the whole vocab, so the adjacent
     // pairing stays inside whole-stage codegen. Rows identical: both

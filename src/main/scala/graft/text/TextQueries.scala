@@ -1594,10 +1594,8 @@ SELECT * FROM rep ORDER BY doc_id""")),
     *       would also lose its port; conditioning the strip on the
     *       scheme needs a backref or a two-pass split, and the two
     *       engines' backref syntaxes differ;
-    *   (b) [CLOSED in r17 — full normalization shipped; the former
-    *       closed-repertoire disclosure is retired] percent handling
-    *       is still POSITIONAL, not component-aware: an encoded
-    *       unreserved char in the QUERY decodes too (RFC-equivalent,
+    *   (b) percent handling is POSITIONAL, not component-aware: an
+    *       encoded unreserved char in the QUERY decodes too (RFC-equivalent,
     *       but a server distinguishing `a%41` from `aA` in a query
     *       VALUE — legal if unusual — would see them merged);
     *   (c) the authority lowering would also lowercase any hex in a
@@ -2032,11 +2030,9 @@ rep AS (
 
   /** q122's body over any documents relation — chunk k covers tokens
     * [k*S, k*S + W); one stateless projection, explode factor
-    * ~n_tokens/S per doc. Public so ScaleProbe can sweep synthetic
-    * long-doc corpora (the 100k-token shape the operator was built
-    * for but the gate corpus never exercises).
+    * ~n_tokens/S per doc.
     */
-  def chunksOf(docs: DataFrame): DataFrame =
+  private def chunksOf(docs: DataFrame): DataFrame =
     docs
       .withColumn("toks", split(col("text"), " "))
       .withColumn("n", size(col("toks")))
@@ -2057,9 +2053,9 @@ rep AS (
 
   /** q132's body: the Gopher/RefinedWeb-style quality rules as one
     * narrow per-row HOF pass — (doc_id, ok_len, ok_wordlen, ok_stop,
-    * ok_rep, keep). Shared by the composed curation pipeline (q144).
+    * ok_rep, keep).
     */
-  def qualityFlagsOf(docs: DataFrame): DataFrame =
+  private def qualityFlagsOf(docs: DataFrame): DataFrame =
     withQualityFlags(docs.select("doc_id", "text"))
       .select("doc_id", "ok_len", "ok_wordlen", "ok_stop", "ok_rep",
         "keep")
@@ -2497,8 +2493,8 @@ rep AS (
     * — calls the clean gate on the real text.
     */
   def curationPipelineOf(docs: DataFrame): DataFrame = {
-    // THE CACHE CARRIES NO TEXT (r14 finding: two full-text retains
-    // cached the corpus twice and froze AQE under the persist
+    // THE CACHE CARRIES NO TEXT (measured: two full-text retains
+    // cache the corpus twice and freeze AQE under the persist
     // barriers — 473 tasks / ~15x the sum of the parts). One pass
     // over the scan computes the q132 rules IN PLACE plus the md5
     // content fingerprint, and retains ONLY (doc_id, source, lang,
@@ -2556,10 +2552,9 @@ rep AS (
   /** q136's body: Efraimidis-Spirakis A-ES weighted sampling without
     * replacement per source stratum through the bounded TopK UDAF —
     * k-row map-side buffers, one O(k)-per-group shuffle, no sort of
-    * the stratum (ScaleProbe's weighted_sample sweep measures the
-    * shape on replicated strata).
+    * the stratum.
     */
-  def weightedSampleOf(docs: DataFrame): DataFrame = {
+  private def weightedSampleOf(docs: DataFrame): DataFrame = {
     val topk = udaf(new graft.functions.Aggregators.TopK(EsK))
     val u = ((col("doc_id") % EsLcgM * LcgA + LcgC) % EsLcgM)
       .cast("double") / EsLcgM.toDouble

@@ -20,7 +20,7 @@ class ComposedFlowsSpec extends AnyFunSuite {
 
   /** Write a documents table (full driver schema) into a temp SF dir. */
   private def docsDir(rows: Seq[(Long, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sf").toString
+    val dir = graft.TempArtifacts.dir("graft_sf")
     rows.map { case (id, text, src) =>
       (id, text, "en", src, text.length.toLong)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -29,7 +29,7 @@ class ComposedFlowsSpec extends AnyFunSuite {
   }
 
   private def embDir(rows: Seq[(Long, Array[Float], Int)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sf").toString
+    val dir = graft.TempArtifacts.dir("graft_sf")
     rows.toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir

@@ -28,7 +28,7 @@ class DedupIndexSpec extends AnyFunSuite {
 
   test("index round-trip: signatures and bands survive parquet exactly") {
     val docs = graft.Tables.documents(spark, sf).limit(50)
-    val idx = java.nio.file.Files.createTempDirectory("graft_idx_spec").toString
+    val idx = graft.TempArtifacts.dir("graft_idx_spec")
     DedupQueries.buildDedupIndex(docs, idx)
     val direct = DedupQueries.minhashSignaturesOf(docs)
     val readBack = DedupQueries.indexSignatures(spark, idx)
@@ -44,7 +44,7 @@ class DedupIndexSpec extends AnyFunSuite {
   test("pair graph served from the artifact equals the recompute path " +
       "(the q112/q149 serve discipline)") {
     val docs = graft.Tables.documents(spark, sf)
-    val idx = java.nio.file.Files.createTempDirectory("graft_idx_pairs").toString
+    val idx = graft.TempArtifacts.dir("graft_idx_pairs")
     DedupQueries.buildDedupIndex(docs, idx)
     val served = DedupQueries.pairsFromIndexUnsorted(spark, idx)
       .collect().toSet
@@ -52,8 +52,7 @@ class DedupIndexSpec extends AnyFunSuite {
     assert(served.nonEmpty && served == recomputed)
     graft.CacheScope.flush(spark)
     // same layout, shingle signatures (the q51/q95 serve route)
-    val sIdx = java.nio.file.Files.createTempDirectory("graft_idx_shingle")
-      .toString
+    val sIdx = graft.TempArtifacts.dir("graft_idx_shingle")
     DedupQueries.buildDedupIndexFrom(DedupQueries.signaturesFromTokens(
       DedupQueries.shingleSets(docs, DedupQueries.ShingleW)), sIdx)
     graft.CacheScope.flush(spark)
@@ -70,7 +69,7 @@ class DedupIndexSpec extends AnyFunSuite {
   test("star clusters served from the artifact equal the recompute path " +
       "(the q50/q99 serve discipline)") {
     val docs = graft.Tables.documents(spark, sf)
-    val idx = java.nio.file.Files.createTempDirectory("graft_idx_star").toString
+    val idx = graft.TempArtifacts.dir("graft_idx_star")
     DedupQueries.buildDedupIndex(docs, idx)
     val served = DedupQueries.dedupClustersStarFromIndex(docs, idx)
       .collect().toSet
@@ -82,13 +81,13 @@ class DedupIndexSpec extends AnyFunSuite {
 
   test("advance: artifact-after-advance equals rebuild-from-advanced-corpus") {
     val docs = graft.Tables.documents(spark, sf)
-    val idx = java.nio.file.Files.createTempDirectory("graft_idx_adv").toString
+    val idx = graft.TempArtifacts.dir("graft_idx_adv")
     DedupQueries.buildDedupIndex(docs.filter(col("doc_id") < 25), idx)
     DedupQueries.advanceDedupIndex(
       docs.filter(col("doc_id") >= 25 && col("doc_id") < 40)
         .select("doc_id", "text"), idx)
     val rebuilt =
-      java.nio.file.Files.createTempDirectory("graft_idx_rebuild").toString
+      graft.TempArtifacts.dir("graft_idx_rebuild")
     DedupQueries.buildDedupIndex(docs.filter(col("doc_id") < 40), rebuilt)
     val sa = DedupQueries.indexSignatures(spark, idx)
     val sb = DedupQueries.indexSignatures(spark, rebuilt)
@@ -104,7 +103,7 @@ class DedupIndexSpec extends AnyFunSuite {
       "duplicate rows from unfenced modelled replays collapse, and a " +
       "post-flip advance lands in the live version") {
     val docs = graft.Tables.documents(spark, sf)
-    val idx = java.nio.file.Files.createTempDirectory("graft_idx_cmp").toString
+    val idx = graft.TempArtifacts.dir("graft_idx_cmp")
     DedupQueries.buildDedupIndex(docs.filter(col("doc_id") < 25), idx)
     val adv = docs.filter(col("doc_id") >= 25 && col("doc_id") < 40)
       .select("doc_id", "text").localCheckpoint(true)
@@ -217,21 +216,21 @@ class DedupIndexSpec extends AnyFunSuite {
   test("served indexes follow the input's content: rewriting the " +
       "documents under the same dir serves a fresh index") {
     import java.nio.file.{Files, Paths}
-    val d = Files.createTempDirectory("graft_served_sf").toString
+    val d = graft.TempArtifacts.dir("graft_served_sf")
     Option(new java.io.File(sf).listFiles).get.foreach(f =>
       Files.copy(f.toPath, Paths.get(d, f.getName)): Unit)
     val q51 = graft.QueryRegistry.queries("q51_shingle_minhash_pairs")
     val full = q51(spark, d).collect().toSeq
     graft.CacheScope.flush(spark)
     // rewrite documents.parquet in place with the even doc ids only
-    val staged = Files.createTempDirectory("graft_served_docs").toString
+    val staged = graft.TempArtifacts.dir("graft_served_docs")
     graft.Tables.documents(spark, d).filter(col("doc_id") % 2 === 0)
       .write.mode("overwrite").parquet(staged)
     Files.delete(Paths.get(d, "documents.parquet"))
     Files.move(Paths.get(staged), Paths.get(d, "documents.parquet"))
     val rewritten = q51(spark, d).collect().toSeq
     graft.CacheScope.flush(spark)
-    val idx = Files.createTempDirectory("graft_served_fresh").toString
+    val idx = graft.TempArtifacts.dir("graft_served_fresh")
     DedupQueries.buildDedupIndexFrom(DedupQueries.signaturesFromTokens(
       DedupQueries.shingleSets(graft.Tables.documents(spark, d),
         DedupQueries.ShingleW)), idx)

@@ -137,7 +137,7 @@ class DynMeshSpec extends AnyFunSuite {
       zooms = Map("z" -> (0.0, 0.3)))
     assert(sliced.dynVars("b").df.select("it").as[Int].collect().toSeq == Seq(1))
     // export/load round-trip carries the moving-point variable
-    val dir = java.nio.file.Files.createTempDirectory("graft_dyn").toString
+    val dir = graft.TempArtifacts.dir("graft_dyn")
     ds.export(dir)
     val back = SimDataset.load(spark, dir)
     assert(back.dynVars.keySet == Set("b"))
@@ -280,7 +280,7 @@ class DynMeshSpec extends AnyFunSuite {
     val clash = SimDataset(Map.empty,
       Map("dyn_b" -> field.copy(label = "dyn_b"))).addVar(dv)
     intercept[IllegalArgumentException] {
-      clash.export(java.nio.file.Files.createTempDirectory("graft_clash").toString)
+      clash.export(graft.TempArtifacts.dir("graft_clash"))
     }
   }
 

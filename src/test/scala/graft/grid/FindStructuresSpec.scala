@@ -98,7 +98,7 @@ class FindStructuresSpec extends AnyFunSuite {
     // the full reference entry-point composition (ingest vpicdataset.py:
     // 142-230, analytics :295-533) through the DSv2 source: write the
     // island field as a mock tree, reload it, run the pipeline.
-    val dir = java.nio.file.Files.createTempDirectory("vpic_fs").toString
+    val dir = graft.TempArtifacts.dir("vpic_fs")
     graft.sources.VPICSource.writeMock2d(dir,
       time = Array(0.0),
       zAxis = (0 until N).map(_.toDouble).toArray,

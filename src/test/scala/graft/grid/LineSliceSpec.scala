@@ -108,7 +108,7 @@ class LineSliceSpec extends AnyFunSuite {
   }
 
   test("paramsFromFile parses key=value lines with comments") {
-    val f = java.nio.file.Files.createTempFile("params", ".txt")
+    val f = java.nio.file.Paths.get(graft.TempArtifacts.dir("params"), "params.txt")
     java.nio.file.Files.writeString(f,
       "# header\nd_per_de = 4\nlx 25.6  # box size\n\nbad_line_without_value\n")
     val p = SimDataset.paramsFromFile(f.toString)

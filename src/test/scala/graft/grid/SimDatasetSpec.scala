@@ -59,7 +59,7 @@ class SimDatasetSpec extends AnyFunSuite {
   }
 
   test("export/load round-trips params, axes, and data") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ds").toString
+    val dir = graft.TempArtifacts.dir("graft_ds")
     val ds = SimDataset(Map("d_per_de" -> "2", "note" -> "a\"b"),
       Map("a" -> mkVar("a", 2, 3, 3, 1.0)))
     ds.export(dir)

@@ -9,7 +9,7 @@ class PhashIndexSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
 
   private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString
+    graft.TempArtifacts.dir(p)
 
   private def frame(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(_.toSeq).toSet

@@ -59,8 +59,7 @@ class IvfIndexSpec extends AnyFunSuite {
       .withColumn("features",
         array_to_vector(transform(col("embedding"), x => x.cast("double"))))
     val fitted = SimilarityQueries.fitIvfQuantizer(emb)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_model_spec").toString
+    val dir = graft.TempArtifacts.dir("graft_ivf_model_spec")
     SimilarityQueries.saveIvfQuantizer(fitted, dir)
     val loaded = SimilarityQueries.loadIvfQuantizer(spark, dir)
     assert(fitted.clusterCenters.map(_.toArray.toSeq).toSeq
@@ -79,7 +78,7 @@ class IvfIndexSpec extends AnyFunSuite {
     val f = emb.select(col("vec_id"), col("label"),
         posexplode(col("embedding")).as(Seq("i", "v")))
       .withColumn("v", col("v").cast("double"))
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_spec").toString
+    val idx = graft.TempArtifacts.dir("graft_ivf_spec")
     SimilarityQueries.buildIvfIndex(f, idx)
     val n = emb.count()
     val assign = SimilarityQueries.indexAssignments(spark, idx)
@@ -103,8 +102,7 @@ class IvfIndexSpec extends AnyFunSuite {
         posexplode(col("embedding")).as(Seq("i", "v")))
       .withColumn("v", col("v").cast("double"))
     val split = SimilarityQueries.AnnAdvanceSplit
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft_ivf_cmp_spec").toString
+    val idx = graft.TempArtifacts.dir("graft_ivf_cmp_spec")
     SimilarityQueries.buildIvfIndex(f.filter(col("vec_id") < split), idx)
     val arr = f.filter(col("vec_id") >= split).localCheckpoint(true)
     // two UNfenced advances — the modelled at-least-once duplicates
@@ -142,14 +140,12 @@ class IvfIndexSpec extends AnyFunSuite {
       .withColumn("v", col("v").cast("double"))
     val split = SimilarityQueries.AnnAdvanceSplit
     // build from the base half, advance the arrivals in
-    val adv = java.nio.file.Files
-      .createTempDirectory("graft_ivf_adv_spec").toString
+    val adv = graft.TempArtifacts.dir("graft_ivf_adv_spec")
     SimilarityQueries.buildIvfIndex(f.filter(col("vec_id") < split), adv)
     SimilarityQueries.advanceIvfIndex(
       f.filter(col("vec_id") >= split), adv)
     // reference: one shot, every vector against the SAME base centroids
-    val ref = java.nio.file.Files
-      .createTempDirectory("graft_ivf_ref_spec").toString
+    val ref = graft.TempArtifacts.dir("graft_ivf_ref_spec")
     SimilarityQueries.buildIvfIndex(f.filter(col("vec_id") < split), ref)
     val refAssign = SimilarityQueries.indexCentroids(spark, ref)
     val allToBase = f.join(broadcast(refAssign), col("i") === col("ci"))

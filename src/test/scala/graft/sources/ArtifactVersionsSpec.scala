@@ -15,8 +15,7 @@ class ArtifactVersionsSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
 
   test("prepare/publish mechanics: numbering, pointer, late visibility") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_artver").toString
+    val root = graft.TempArtifacts.dir("graft_artver")
     assert(ArtifactVersions.current(root).isEmpty)
     val v1 = ArtifactVersions.prepareNext(root)
     assert(v1.endsWith("v1"))
@@ -33,8 +32,7 @@ class ArtifactVersionsSpec extends AnyFunSuite {
 
   test("pruneVersions retires only versions beyond the grace window, " +
       "never the live one or prepared-but-unpublished ones") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_artver_prune").toString
+    val root = graft.TempArtifacts.dir("graft_artver_prune")
     // nothing published yet: prune is a no-op even with dirs present
     val v1 = ArtifactVersions.prepareNext(root)
     assert(ArtifactVersions.pruneVersions(root).isEmpty)
@@ -65,8 +63,7 @@ class ArtifactVersionsSpec extends AnyFunSuite {
   test("zero-downtime dedup-index rebuild: old version serves during and after") {
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_artver_idx").toString
+    val root = graft.TempArtifacts.dir("graft_artver_idx")
     // v1: base corpus, built and resolved by a "reader"
     DedupQueries.buildDedupIndex(docs.filter(col("doc_id") < 25), root)
     val readerPath = ArtifactVersions.live(root)
@@ -87,8 +84,7 @@ class ArtifactVersionsSpec extends AnyFunSuite {
   test("a rebuild never disturbs a reader's already-resolved frame") {
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_artver_reader").toString
+    val root = graft.TempArtifacts.dir("graft_artver_reader")
     DedupQueries.buildDedupIndex(docs.filter(col("doc_id") < 25), root)
     val reader = DedupQueries.indexSignatures(spark, root)
     assert(reader.count() == 25)

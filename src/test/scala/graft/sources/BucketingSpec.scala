@@ -13,7 +13,7 @@ class BucketingSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
 
   test("join of co-bucketed tables is shuffle-free and correct") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_buckets").toString
+    val dir = graft.TempArtifacts.dir("graft_buckets")
     val li = Tables.lineitem(spark, sf)
       .select(col("l_orderkey").as("okey"), col("l_extendedprice"))
     val ord = Tables.orders(spark, sf)

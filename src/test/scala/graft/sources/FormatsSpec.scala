@@ -9,7 +9,7 @@ class FormatsSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
 
   private def roundTrip(format: String): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_$format").toString
+    val dir = graft.TempArtifacts.dir(s"graft_$format")
     val src = Tables.nation(spark, sf)
     Formats.export(src, dir, format)
     val back = Formats.load(spark, dir, format, Some(src.schema))

@@ -22,8 +22,8 @@ class Hdf5PropertiesSpec extends AnyFunSuite {
     (0 until n).flatMap(i =>
       gen.apply(Gen.Parameters.default, Seed(431L + i)))
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_h5prop").resolve("t.h5").toString
+  private def tmp(): String =
+    java.nio.file.Paths.get(graft.TempArtifacts.dir("graft_h5prop"), "t.h5").toString
 
   /** One generated dataset shape. `sparseMod > 0` omits every chunk
     * whose linear chunk-grid index is divisible by it (deterministic,

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * declared subset (the WAV/AVI parser discipline).
   */
 class Hdf5Spec extends AnyFunSuite {
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft_h5").resolve("t.h5").toString
+  private def tmp(): String =
+    java.nio.file.Paths.get(graft.TempArtifacts.dir("graft_h5"), "t.h5").toString
 
   private def roundTrip(littleEndian: Boolean): Unit = {
     val rnd = new scala.util.Random(if (littleEndian) 51 else 50)

@@ -10,7 +10,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("partitioned write prunes non-matching partitions at plan time") {
     val docs = Tables.documents(spark, sf)
-    val path = java.nio.file.Files.createTempDirectory("layout").toString
+    val path = graft.TempArtifacts.dir("layout")
     Layout.writePartitioned(docs, path, "source")
 
     val filtered = Layout.readPartitioned(spark, path)
@@ -30,7 +30,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("round trip preserves rows across the partition layout") {
     val docs = Tables.documents(spark, sf)
-    val path = java.nio.file.Files.createTempDirectory("layout_rt").toString
+    val path = graft.TempArtifacts.dir("layout_rt")
     Layout.writePartitioned(docs, path, "lang")
     val back = Layout.readPartitioned(spark, path)
     assert(back.count() == docs.count())

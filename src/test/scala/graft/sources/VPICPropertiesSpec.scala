@@ -62,8 +62,7 @@ class VPICPropertiesSpec extends AnyFunSuite {
   test("every layout x compression x datatype x pruning combination " +
     "returns exactly the generated cells") {
     samples(genCfg, 36).zipWithIndex.foreach { case (c, ti) =>
-      val d = java.nio.file.Files
-        .createTempDirectory(s"vpic_prop$ti").toString
+      val d = graft.TempArtifacts.dir(s"vpic_prop$ti")
       val time = Array.tabulate(c.nt)(_.toDouble)
       val z = Array.tabulate(c.nz)(_ * 0.5)
       val y = Array.tabulate(c.ny)(_ * 0.25)

@@ -12,7 +12,7 @@ class VPICSourceSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_vpic").toString
+    val d = graft.TempArtifacts.dir("graft_vpic")
     VPICSource.writeMock2d(d,
       time = Array(0.0, 0.5, 1.0, 1.5, 2.0),
       zAxis = Array(0.0, 0.25, 0.5),
@@ -64,7 +64,7 @@ class VPICSourceSpec extends AnyFunSuite {
   }
 
   test("loadDataset rebuilds a SimDataset with axes, coords, and params") {
-    val pf = java.nio.file.Files.createTempFile("vpic_info", ".txt")
+    val pf = java.nio.file.Paths.get(graft.TempArtifacts.dir("vpic_info"), "info.txt")
     java.nio.file.Files.writeString(pf, "dt = 0.5 # step\nnppc 64\n")
     val ds = VPICSource.loadDataset(spark, dir, paramFile = Some(pf.toString))
     assert(ds.variables.keySet === Set("ex", "bz", "ne"))
@@ -91,7 +91,7 @@ class VPICSourceSpec extends AnyFunSuite {
   }
 
   test("duplicate leaf names across dataset paths are rejected, not shadowed") {
-    val d2 = java.nio.file.Files.createTempDirectory("graft_vpic2").toString
+    val d2 = graft.TempArtifacts.dir("graft_vpic2")
     VPICSource.writeMock2d(d2, Array(0.0), Array(0.0, 1.0), Array(0.0, 1.0),
       Map("fields/ex" -> ((it, iz, ix) => 1.0),
           "hydro2/ex" -> ((it, iz, ix) => 2.0)))
@@ -100,7 +100,7 @@ class VPICSourceSpec extends AnyFunSuite {
   }
 
   test("truncated data.bin fails the read with EOFException, not a hang") {
-    val d3 = java.nio.file.Files.createTempDirectory("graft_vpic3").toString
+    val d3 = graft.TempArtifacts.dir("graft_vpic3")
     VPICSource.writeMock2d(d3, Array(0.0, 1.0, 2.0), Array(0.0, 1.0), Array(0.0, 1.0),
       Map("f/v" -> ((it, iz, ix) => it.toDouble)))
     val bin = java.nio.file.Paths.get(d3, "f/v", VPICSource.DataFile)
@@ -115,7 +115,7 @@ class VPICSourceSpec extends AnyFunSuite {
   }
 
   test("singleton mesh dims are squeezed from the axis list") {
-    val d1 = java.nio.file.Files.createTempDirectory("graft_vpic1").toString
+    val d1 = graft.TempArtifacts.dir("graft_vpic1")
     VPICSource.writeMock2d(d1, Array(0.0, 1.0), Array(0.0), Array(0.0, 0.5),
       Map("f/v" -> ((it, iz, ix) => it + ix.toDouble)))
     val ds = VPICSource.loadDataset(spark, d1)
@@ -123,7 +123,7 @@ class VPICSourceSpec extends AnyFunSuite {
   }
 
   test("non-degenerate 3-D (z,y,x) tree ingests with a full iy axis") {
-    val d4 = java.nio.file.Files.createTempDirectory("graft_vpic4").toString
+    val d4 = graft.TempArtifacts.dir("graft_vpic4")
     def f(it: Int, iz: Int, iy: Int, ix: Int): Double =
       it * 1000.0 + iz * 100.0 + iy * 10.0 + ix
     VPICSource.writeMock(d4,
@@ -170,10 +170,10 @@ class VPICSourceSpec extends AnyFunSuite {
     val time = Array(0.0, 1.0, 2.0)
     val z = Array(0.0, 0.5); val y = Array(0.0, 0.25, 0.5)
     val x = Array(0.0, 1.0, 2.0, 3.0)
-    val dPlain = java.nio.file.Files.createTempDirectory("vpic_p").toString
+    val dPlain = graft.TempArtifacts.dir("vpic_p")
     VPICSource.writeMock(dPlain, time, z, y, x,
       Map("fields/ex" -> (fe _), "fields/bz" -> (fb _)))
-    val dInter = java.nio.file.Files.createTempDirectory("vpic_i").toString
+    val dInter = graft.TempArtifacts.dir("vpic_i")
     VPICSource.writeMockInterleaved(dInter, time, z, y, x,
       Seq("fields/ex" -> (fe _), "fields/bz" -> (fb _)))
     def rows(d: String) = spark.read.format("graft-vpic")
@@ -206,15 +206,14 @@ class VPICSourceSpec extends AnyFunSuite {
     val z = Array(0.0, 0.5); val y = Array(0.0, 0.25, 0.5)
     val x = Array(0.0, 1.0, 2.0, 3.0)
     val vars = Map("fields/ex" -> (fe _), "fields/bz" -> (fb _))
-    val dPlain = java.nio.file.Files.createTempDirectory("vpic_hp").toString
+    val dPlain = graft.TempArtifacts.dir("vpic_hp")
     VPICSource.writeMock(dPlain, time, z, y, x, vars)
     def rows(d: String) = spark.read.format("graft-vpic")
       .option("path", d).option("chunkSteps", "2").load()
       .orderBy("var", "it", "iz", "iy", "ix").collect().toSeq
     val want = rows(dPlain)
     Seq(false, true).foreach { le =>
-      val dH5 = java.nio.file.Files
-        .createTempDirectory(s"vpic_h5_$le").toString
+      val dH5 = graft.TempArtifacts.dir(s"vpic_h5_$le")
       VPICSource.writeHdf5Tree(dH5, time, z, y, x, vars,
         littleEndian = le)
       // the container is REAL HDF5 bytes
@@ -253,15 +252,14 @@ class VPICSourceSpec extends AnyFunSuite {
     val z = Array(0.0, 0.5); val y = Array(0.0, 0.25, 0.5)
     val x = Array(0.0, 1.0, 2.0, 3.0)
     val vars = Map("fields/ex" -> (fe _), "fields/bz" -> (fb _))
-    val dCont = java.nio.file.Files.createTempDirectory("vpic_cc").toString
+    val dCont = graft.TempArtifacts.dir("vpic_cc")
     VPICSource.writeHdf5Tree(dCont, time, z, y, x, vars)
     def rows(d: String) = spark.read.format("graft-vpic")
       .option("path", d).load()
       .orderBy("var", "it", "iz", "iy", "ix").collect().toSeq
     val want = rows(dCont)
     Seq(false, true).foreach { le =>
-      val dChk = java.nio.file.Files
-        .createTempDirectory(s"vpic_ck_$le").toString
+      val dChk = graft.TempArtifacts.dir(s"vpic_ck_$le")
       // one leg plain-deflate, one shuffle+deflate (the h5py default)
       VPICSource.writeHdf5Tree(dChk, time, z, y, x, vars,
         littleEndian = le, chunkTime = Some(2), gzip = true,
@@ -280,7 +278,7 @@ class VPICSourceSpec extends AnyFunSuite {
       assert(ds.variables("bz").timeAxis.toSeq == time.toSeq)
     }
     // f32 variables: every value must equal the WIDENED float exactly
-    val dF32 = java.nio.file.Files.createTempDirectory("vpic_f32").toString
+    val dF32 = graft.TempArtifacts.dir("vpic_f32")
     VPICSource.writeHdf5Tree(dF32, time, z, y, x,
       Map("fields/w" -> ((it: Int, iz: Int, iy: Int, ix: Int) =>
         fe(it, iz, iy, ix) / 3.0)),
@@ -295,15 +293,51 @@ class VPICSourceSpec extends AnyFunSuite {
     assert(got.length === 5 * 2 * 3 * 4)
   }
 
+  test("a pushed it-range on a chunked+gzip tree inflates exactly the " +
+    "stored bytes of the chunks it intersects") {
+    // the storage chunk is the pruning granularity: it < 10 over 20
+    // steps in 5-step chunks intersects the first two chunks of each
+    // variable, and must never decompress a neighbor's bytes
+    val d = graft.TempArtifacts.dir("vpic_inflate")
+    VPICSource.writeHdf5Tree(d, Array.tabulate(20)(_.toDouble),
+      Array(0.0, 0.5), Array(0.0, 0.25, 0.5), Array(0.0, 1.0, 2.0, 3.0),
+      Map("a/v1" -> ((it: Int, iz: Int, iy: Int, ix: Int) =>
+            it + iz + iy + ix.toDouble),
+          "b/v2" -> ((it: Int, iz: Int, iy: Int, ix: Int) =>
+            it * 2.0 - iz + iy - ix)),
+      chunkTime = Some(5), gzip = true)
+    def inflated(f: => Unit): Long = {
+      Hdf5.decodedStoredBytes.set(0L)
+      f
+      Hdf5.decodedStoredBytes.get()
+    }
+    def scan = spark.read.format("graft-vpic").option("path", d).load()
+    val full = inflated(scan.select("value").agg(sum("value")).collect(): Unit)
+    val pruned = inflated(
+      scan.filter(col("it") < 10).agg(sum("value")).collect(): Unit)
+    val want = Hdf5.index(java.nio.file.Paths.get(d, VPICSource.Hdf5File)
+        .toString).filterNot(_.path.startsWith("grid/")).map { ds =>
+      ds.layout match {
+        case Hdf5.H5Chunked(cd, _, _, chunks, _) =>
+          chunks.filter(c => c.offset(0) < 10 && c.offset(0) + cd(0) > 0)
+            .map(_.storedBytes).sum
+        case other => fail(s"${ds.path}: expected a chunked layout, got $other")
+      }
+    }.sum
+    assert(want > 0)
+    assert(pruned === want)
+    assert(pruned < full)
+  }
+
   test("an HDF5 tree missing a grid axis or carrying a non-rank-4 " +
     "variable is rejected with the path named") {
-    val d = java.nio.file.Files.createTempDirectory("vpic_h5bad").toString
+    val d = graft.TempArtifacts.dir("vpic_h5bad")
     Hdf5.write(java.nio.file.Paths.get(d, VPICSource.Hdf5File).toString,
       Seq(("grid/time", Array(2L), Array(0.0, 1.0)),
         ("fields/flat", Array(4L), Array(1.0, 2, 3, 4))))
     val e1 = intercept[IllegalArgumentException](VPICSource.listVars(d))
     assert(e1.getMessage.contains("fields/flat"))
-    val d2 = java.nio.file.Files.createTempDirectory("vpic_h5bad2").toString
+    val d2 = graft.TempArtifacts.dir("vpic_h5bad2")
     Hdf5.write(java.nio.file.Paths.get(d2, VPICSource.Hdf5File).toString,
       Seq(("grid/time", Array(2L), Array(0.0, 1.0)),
         ("f/v", Array(2L, 1L, 1L, 1L), Array(1.0, 2))))
@@ -321,8 +355,7 @@ class VPICSourceSpec extends AnyFunSuite {
     val z = Array(0.0, 0.5); val y = Array(0.0, 0.25)
     val x = Array(0.0, 1.0, 2.0)
     Seq(false, true).foreach { le =>
-      val d = java.nio.file.Files
-        .createTempDirectory(s"vpic_sp_$le").toString
+      val d = graft.TempArtifacts.dir(s"vpic_sp_$le")
       // the MIDDLE time chunk (t offset 2) was never written — the
       // restart-dump shape; fill value -5
       VPICSource.writeHdf5Tree(d, time, z, y, x,
@@ -363,8 +396,7 @@ class VPICSourceSpec extends AnyFunSuite {
     val z = Array(0.0, 0.5); val y = Array(0.0)
     val x = Array(0.0, 1.0)
     Seq(None, Some(2)).foreach { chunk => // contiguous AND chunked
-      val d = java.nio.file.Files
-        .createTempDirectory(s"vpic_int_${chunk.isDefined}").toString
+      val d = graft.TempArtifacts.dir(s"vpic_int_${chunk.isDefined}")
       VPICSource.writeHdf5Tree(d, time, z, y, x,
         Map("aux/ranks" -> (fi _)), littleEndian = true,
         chunkTime = chunk, gzip = chunk.isDefined,
@@ -383,7 +415,7 @@ class VPICSourceSpec extends AnyFunSuite {
 
   test("COMPACT axis datasets load driver-side; a COMPACT rank-4 " +
     "variable is rejected by the scan with the layout named") {
-    val d = java.nio.file.Files.createTempDirectory("vpic_cmp").toString
+    val d = graft.TempArtifacts.dir("vpic_cmp")
     Hdf5.writeSpecs(
       java.nio.file.Paths.get(d, VPICSource.Hdf5File).toString, Seq(
         Hdf5.H5Write("grid/time", Array(2L), Array(0.0, 1.0),
@@ -404,7 +436,7 @@ class VPICSourceSpec extends AnyFunSuite {
     assert(r.getAs[Double]("value") === 6.0)
     assert(r.getAs[Double]("z") === 0.5)
     // a compact VARIABLE: planning rejects loudly, never a mis-scan
-    val d2 = java.nio.file.Files.createTempDirectory("vpic_cmp2").toString
+    val d2 = graft.TempArtifacts.dir("vpic_cmp2")
     Hdf5.writeSpecs(
       java.nio.file.Paths.get(d2, VPICSource.Hdf5File).toString, Seq(
         Hdf5.H5Write("grid/time", Array(2L), Array(0.0, 1.0)),
@@ -421,7 +453,7 @@ class VPICSourceSpec extends AnyFunSuite {
   }
 
   test("truncated interleaved.bin fails with the named EOF diagnostic") {
-    val d = java.nio.file.Files.createTempDirectory("vpic_it").toString
+    val d = graft.TempArtifacts.dir("vpic_it")
     VPICSource.writeMockInterleaved(d, Array(0.0, 1.0), Array(0.0, 1.0),
       Array(0.0), Array(0.0, 1.0),
       Seq("f/a" -> ((it, _, _, _) => it.toDouble),

@@ -19,7 +19,7 @@ class ReplayFenceSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
 
   private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString
+    graft.TempArtifacts.dir(p)
 
   private def docs = graft.Tables.documents(spark, sf)
     .select("doc_id", "text")

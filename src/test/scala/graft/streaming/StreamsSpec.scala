@@ -107,7 +107,7 @@ class StreamsSpec extends AnyFunSuite {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
     val df = mem.toDF.toDF("event_id", "ts", "user_id", "event_type", "value")
-    val ckpt = java.nio.file.Files.createTempDirectory("fb_ckpt").toString
+    val ckpt = graft.TempArtifacts.dir("fb_ckpt")
     // the idempotent-sink pattern: upsert keyed by batchId — replays
     // overwrite rather than double-apply
     val applied = new java.util.concurrent.ConcurrentHashMap[Long, Seq[Long]]()
@@ -243,8 +243,8 @@ class StreamsSpec extends AnyFunSuite {
   test("parquet sink round-trip: streamed rows land in files and read back") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val out = graft.TempArtifacts.dir("graft_sink")
+    val ckpt = graft.TempArtifacts.dir("graft_ckpt")
     val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
     val df = mem.toDF.toDF("event_id", "ts", "user_id", "event_type", "value")
     val q = Streams.dedupStream(df)
@@ -319,7 +319,7 @@ class StreamsSpec extends AnyFunSuite {
     val w = DedupQueries.DupW
     val split1 = 25L; val split2 = 40L
     def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
+      graft.TempArtifacts.dir(p)
     // batch 1 gets a guaranteed-duplicated arrival: an exact copy of
     // doc 0 (indexed), so the scrub provably fires
     val dup = docs.filter(col("doc_id") === 0L)
@@ -378,7 +378,7 @@ class StreamsSpec extends AnyFunSuite {
     val w = DedupQueries.DupW
     val split1 = 25L; val split2 = 40L
     def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
+      graft.TempArtifacts.dir(p)
     // planted arrivals: an exact twin of indexed doc 0 (scrubs to
     // empty -> quality_drop), two copies of a NOVEL quality-passing
     // doc (the span stage can't see intra-batch copies; the dedup
@@ -494,7 +494,7 @@ class StreamsSpec extends AnyFunSuite {
     graft.CacheScope.flush(spark)
     // stream: same base index, two micro-batches at the same boundaries
     def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
+      graft.TempArtifacts.dir(p)
     val idx = tmp("graft_idx_stream")
     graft.dedup.DedupQueries.buildDedupIndex(
       docs.filter(col("doc_id") < split1), idx)
@@ -552,8 +552,7 @@ class StreamsSpec extends AnyFunSuite {
     val sf = "/root/testdata/sf0.001"
     val docs = graft.Tables.documents(spark, sf).select("doc_id", "text")
     val whole = TextQueries.tokenSketchOf(docs)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_cms_stream").toString + "/profile.cms"
+    val path = graft.TempArtifacts.dir("graft_cms_stream") + "/profile.cms"
     TextQueries.buildTokenSketch(docs.filter(col("doc_id") < 25), path)
     val b1 = docs.filter(col("doc_id") >= 25 && col("doc_id") < 40)
       .as[(Long, String)].collect().toSeq
@@ -561,7 +560,7 @@ class StreamsSpec extends AnyFunSuite {
       .as[(Long, String)].collect().toSeq
     val mem = MemoryStream[(Long, String)]
     val q = Streams.cmsAdvanceSink(mem.toDF.toDF("doc_id", "text"), path,
-      java.nio.file.Files.createTempDirectory("graft_cms_ckpt").toString)
+      graft.TempArtifacts.dir("graft_cms_ckpt"))
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
@@ -589,7 +588,7 @@ class StreamsSpec extends AnyFunSuite {
       .withColumn("v", col("v").cast("double"))
     val split = SimilarityQueries.AnnAdvanceSplit
     def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
+      graft.TempArtifacts.dir(p)
     // reference: build base, advance ALL arrivals in one shot
     val ref = tmp("graft_ivf_stream_ref")
     SimilarityQueries.buildIvfIndex(f.filter(col("vec_id") < split), ref)
@@ -626,7 +625,7 @@ class StreamsSpec extends AnyFunSuite {
     import graft.multimodal.{CodecQueries, PhashIndex}
     val sf = "/root/testdata/sf0.001"
     def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
+      graft.TempArtifacts.dir(p)
     val idx = tmp("graft_phash_stream")
     // corpus: PPM variants below 100
     PhashIndex.buildPhashIndex(
@@ -706,7 +705,7 @@ class StreamsSpec extends AnyFunSuite {
     // the stats artifact the sink maintains must still equal the batch
     // decisions exactly
     def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
+      graft.TempArtifacts.dir(p)
     val out = tmp("graft_media_out")
     val mem = MemoryStream[(Long, String, Array[Byte])]
     val q = Streams.mediaIngestSink(
@@ -755,7 +754,7 @@ class StreamsSpec extends AnyFunSuite {
         d.gate_stat)).sortBy(_._1).toSeq
     val (b1, b2) = all.splitAt(all.length / 2)
     def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
+      graft.TempArtifacts.dir(p)
     val out = tmp("graft_mcur_out")
     val mem = MemoryStream[(Long, String, Array[Byte])]
     val q = Streams.mediaCurationSink(
@@ -799,7 +798,7 @@ class StreamsSpec extends AnyFunSuite {
     import graft.multimodal.{CodecQueries, PhashIndex}
     val sf = "/root/testdata/sf0.001"
     def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
+      graft.TempArtifacts.dir(p)
     def buildIdx(): String = {
       val idx = tmp("graft_icur_idx")
       val corpus = CodecQueries.gatedImageHashes(
@@ -889,7 +888,7 @@ class StreamsSpec extends AnyFunSuite {
     import graft.similarity.SimilarityQueries
     val sf = "/root/testdata/sf0.001"
     def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
+      graft.TempArtifacts.dir(p)
     val idx = SimilarityQueries.semanticLeakTrainIndex(spark, sf)
     // reference: the batch audit over the full val side
     val expected = SimilarityQueries.semanticLeakPairs(spark, sf)
@@ -948,7 +947,7 @@ class StreamsSpec extends AnyFunSuite {
     import graft.text.TextQueries
     val sf = "/root/testdata/sf0.001"
     def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
+      graft.TempArtifacts.dir(p)
     val arrivals = graft.Tables.documents(spark, sf)
       .select(col("doc_id"), TextQueries.messyUrl.as("url"))
     val batches = (0 to 2).map(k =>
