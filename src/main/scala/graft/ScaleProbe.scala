@@ -4,15 +4,17 @@ import org.apache.spark.sql.functions._
 
 /** Dev-only scaling probe behind README's "Scale design" numbers. Each
   * rung prints `[scale]` lines; `SPARK_GRAFT_PROBE=a,b` runs only the
-  * rungs whose name contains one of the given substrings:
+  * rungs whose name contains one of the given substrings. The session
+  * and data follow `SPARK_GRAFT_CPUS` and `SPARK_GRAFT_SF_DIR` (default
+  * sf0.1), as for Bench:
   *
   *   SPARK_GRAFT_PROBE=skew_join sbt "runMain graft.ScaleProbe"
   *
-  * The dedup rungs replicate the sf0.1 corpus k-fold (doc_id offsets
+  * The dedup rungs replicate the corpus k-fold (doc_id offsets
   * keep ids unique, so every doc gains k-1 exact twins — the DEGENERATE
   * mega-bucket case for LSH).
   *
-  * Measured on local[32]:
+  * Measured on local[32] at sf0.1 (5,000 documents):
   *   clusters  (star-contracted CC)  k=1: ~7s warm   k=10: ~8s  — linear
   *   minhash_pairs (pairwise est graph) k=1: 6.1M rows, k=4: 97.9M rows
   *     — exactly 16x for 4x docs: the k^2 pair blowup BY CONSTRUCTION.
@@ -46,10 +48,10 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.configure(
-      SparkSession.builder().master("local[32]"), "32").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val base = Tables.documents(spark, "/root/testdata/sf0.1")
+    val spark = GraftSession.get()
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val base = Tables.documents(spark, sfDir)
+    lazy val nBase = base.count()
     def corpus(k: Int) = (0 until k).map { i =>
       base.select((col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"), col("text"))
     }.reduce(_ unionAll _)
@@ -59,7 +61,8 @@ object ScaleProbe {
         val t0 = System.nanoTime()
         val n = f(c)
         CacheScope.flush(spark)
-        println(f"[scale] $name k=$k docs=${5000L * k} rows=$n time=${(System.nanoTime() - t0) / 1e9}%.2f s")
+        val dt = (System.nanoTime() - t0) / 1e9
+        println(f"[scale] $name k=$k docs=${nBase * k} rows=$n time=$dt%.2f s")
       }
     val only = sys.env.get("SPARK_GRAFT_PROBE").map(_.split(',').toSeq)
     def enabled(name: String) = only.forall(_.exists(name.contains))
@@ -69,8 +72,9 @@ object ScaleProbe {
     if (enabled("minhash_pairs")) probe("minhash_pairs", Seq(1, 4))(c =>
       graft.dedup.DedupQueries.minhashPairsOf(c).count())
     if (enabled("vpic")) vpicThroughput(spark)
-    if (enabled("neardup_stream")) streamingNearDupLatency(spark, corpus(10))
-    if (enabled("skew_join")) aqeVsSalting(spark)
+    if (enabled("neardup_stream"))
+      streamingNearDupLatency(spark, sfDir, corpus(10))
+    if (enabled("skew_join")) aqeVsSalting(spark, sfDir)
     spark.stop()
   }
 
@@ -112,12 +116,13 @@ object ScaleProbe {
     * 10x corpus (50k docs) — evidence for the stream-static index shape
     * (Streams.nearDupCandidatesStream).
     */
-  private def streamingNearDupLatency(spark: SparkSession,
-      corpus10: org.apache.spark.sql.DataFrame): Unit = {
+  private def streamingNearDupLatency(spark: SparkSession, sfDir: String,
+      corpus10: org.apache.spark.sql.DataFrame): Unit = CacheScope.scoped {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val index = graft.dedup.DedupQueries.bandBucketsPerRow(corpus10).persist()
+    val index = CacheScope.retain(
+      graft.dedup.DedupQueries.bandBucketsPerRow(corpus10))
     println(s"[scale] neardup_stream index rows=${index.count()} (10x corpus)")
     val mem = MemoryStream[(Long, String)]
     // count-only sink: on this twin-heavy degenerate corpus every
@@ -134,7 +139,7 @@ object ScaleProbe {
       }
       .start()
     try {
-      val arrivals = Tables.documents(spark, "/root/testdata/sf0.1")
+      val arrivals = Tables.documents(spark, sfDir)
         .filter(col("doc_id") < 500)
         .select("doc_id", "text").as[(Long, String)].collect()
       for (b <- 0 until 3) {
@@ -151,7 +156,7 @@ object ScaleProbe {
           f"candidates=${counts.get()} " +
           f"latency=${(System.nanoTime() - t0) / 1e9}%.2f s")
       }
-    } finally { q.stop(); index.unpersist() }
+    } finally q.stop()
   }
 
   /** AQE skew-join vs declarative salting on the same skewed join —
@@ -161,18 +166,18 @@ object ScaleProbe {
     * the dim does not broadcast). AQE thresholds tuned down so the
     * optimizer can see the skew at probe scale.
     */
-  private def aqeVsSalting(spark: SparkSession): Unit = {
-    val dir = "/root/testdata/sf0.1"
+  private def aqeVsSalting(spark: SparkSession,
+      dir: String): Unit = CacheScope.scoped {
     val cust = Tables.customer(spark, dir).select("c_custkey", "c_nationkey")
     val nCust = cust.count()
-    val fact = (0 until 20).map { i =>
+    val fact = CacheScope.retain((0 until 20).map { i =>
       Tables.orders(spark, dir).select(
         (col("o_orderkey") + lit(i.toLong * 10000000L)).as("o_orderkey"),
         when(col("o_orderkey") % 5 < 2, lit(1L)) // 40% -> hot key 1
           .otherwise(pmod(col("o_orderkey") * 2654435761L, lit(nCust)) + 1)
           .as("c_custkey"),
         col("o_totalprice"))
-    }.reduce(_ unionAll _).persist()
+    }.reduce(_ unionAll _))
     println(s"[scale] skew_join fact rows=${fact.count()} (hot key = 40%)")
     val confs = Seq(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
@@ -200,7 +205,6 @@ object ScaleProbe {
         graft.relational.JoinOps.saltedJoin(
           fact, cust, "c_custkey", 16).count())
     } finally {
-      fact.unpersist()
       saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)

@@ -2,22 +2,43 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-/** Temp dirs for per-JVM artifacts (indexes, tokenizer models), deleted
-  * on JVM exit so bench/verify invocations never accumulate stale
-  * copies. In production these artifacts live at a durable path with
-  * their own lifecycle; the temp form exists for the self-contained
-  * harness queries.
+import org.apache.spark.sql.SparkSession
+
+/** Temp dirs for harness artifacts (indexes, tokenizer models, per-call
+  * version roots). In production these artifacts live at a durable path
+  * with their own lifecycle; the temp form exists for the self-contained
+  * harness queries. Every dir not yet deleted is removed by one JVM
+  * shutdown hook, so bench/verify invocations never accumulate stale
+  * copies.
   */
 object TempArtifacts {
+  private val undeleted =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+
+  private def rm(f: java.io.File): Unit = {
+    Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
+  }
+
+  sys.addShutdownHook(undeleted.forEach(d => rm(d)))
+
+  /** A fresh temp dir that lives until JVM exit. */
   def dir(prefix: String): String = {
     val d = Files.createTempDirectory(prefix).toFile
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(d)
-    }
+    undeleted.add(d)
     d.toString
+  }
+
+  /** A fresh temp dir for one call's artifact, deleted under
+    * [[CacheScope]]'s rule: when the innermost scope open on this thread
+    * exits, else at the session's next flush.
+    */
+  def perCall(s: SparkSession, prefix: String): String = {
+    val d = dir(prefix)
+    CacheScope.onRelease(s) { _ =>
+      val f = new java.io.File(d)
+      rm(f); undeleted.remove(f): Unit
+    }
+    d
   }
 
   private val servedDirs =

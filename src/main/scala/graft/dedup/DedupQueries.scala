@@ -1566,7 +1566,7 @@ object DedupQueries {
     */
   def indexCompactionFlow(s: SparkSession, docs: DataFrame, split: Long,
       w: Int): DataFrame = {
-    val root = graft.TempArtifacts.dir("graft_ngram_versions")
+    val root = graft.TempArtifacts.perCall(s, "graft_ngram_versions")
     buildNgramIndex(docs.filter(col("doc_id") < split), w, root)
     val nBase = liveGrams(s, root).count()
     val arrivals = docs.filter(col("doc_id") >= split)
@@ -1849,7 +1849,7 @@ object DedupQueries {
     */
   private[graft] def advanceIngestFlow(s: SparkSession, docs: DataFrame,
       split1: Long, split2: Long): DataFrame = {
-    val idx = graft.TempArtifacts.dir("graft_dedup_advance")
+    val idx = graft.TempArtifacts.perCall(s, "graft_dedup_advance")
     buildDedupIndex(docs.filter(col("doc_id") < split1), idx)
     val phase1 = incrementalIngest(
       docs.filter(col("doc_id") < split2), split1,
@@ -1954,16 +1954,15 @@ object DedupQueries {
     * contracted intra-batch leg, signature-agreement verify). The
     * result is eagerly localCheckpoint-ed — the batch-commit the
     * advance contract requires — so the caller can advance the
-    * artifact immediately after. Local persists (not CacheScope) keep
-    * the batch's cache lifetime inside this call: a foreachBatch body
-    * must not flush retains that belong to the enclosing query.
+    * artifact immediately after, and the call's retains are scoped to
+    * it.
     */
-  def ingestBatchDecisions(batch: DataFrame, path: String): DataFrame = {
-    val s = batch.sparkSession
-    val sigArr = signaturesPerRow(batch).persist()
-    val arrBands = bandsOf(sigArr).persist()
-    val idxSig = indexSignatures(s, path).persist()
-    try {
+  def ingestBatchDecisions(batch: DataFrame, path: String): DataFrame =
+    graft.CacheScope.scoped {
+      val s = batch.sparkSession
+      val sigArr = graft.CacheScope.retain(signaturesPerRow(batch))
+      val arrBands = graft.CacheScope.retain(bandsOf(sigArr))
+      val idxSig = graft.CacheScope.retain(indexSignatures(s, path))
       // EVERY arrival gets a decision row ('added' or 'dup') — a
       // downstream auditor must be able to distinguish a doc dropped
       // as a near-dup from one that never arrived; only the 'added'
@@ -1977,10 +1976,7 @@ object DedupQueries {
           when(col("__dup").isNotNull, lit("dup")).otherwise(lit("added"))
             .as("status"))
         .localCheckpoint(true)
-    } finally {
-      sigArr.unpersist(); arrBands.unpersist(); idxSig.unpersist(): Unit
     }
-  }
 
   /** Append the admitted docs' signature and band rows. The caller
     * commits (materializes) the admitting batch's own reads of the

@@ -156,7 +156,8 @@ object FindStructures {
     // overlap the spine's collect instead of queueing behind it, and at
     // cluster scale the two plans' stages interleave across executors.
     // (Concurrent job submission from one SparkSession is a supported
-    // Spark pattern; CacheScope registration is a concurrent TrieMap.)
+    // Spark pattern; a retain on this thread outside a scope goes to the
+    // session's concurrent flush list.)
     val sc = session.sparkContext
     val callerProps = PropagatedProps.map(k => k -> sc.getLocalProperty(k))
     val csFut = jyDfOpt.map { jyDf =>
@@ -173,20 +174,16 @@ object FindStructures {
         // thread, overlapped with the spine — the consumer then reads a
         // checkpointed local table instead of re-planning the chain's
         // tail joins as post-return query stages. The chain's internal
-        // persists go through a LOCAL pin and are freed the moment the
+        // retains are scoped to this thread and freed the moment the
         // checkpoint lands (grid-sized intermediates whose consumers
         // all finish inside this Future would otherwise stay resident
         // until the harness flush, stacking cache pressure under every
-        // later stage); big grids keep the
-        // CacheScope default since the returned plan is lazy.
-        if (aqeScoped) {
-          val pins = scala.collection.mutable.Buffer.empty[DataFrame]
-          try {
-            val cs = Topology.currentSheets(jySel, "jy_smooth", nz, nx,
-              csLimit, pin = df => { val p = df.persist(); pins += p; p })
-            cs.localCheckpoint(true)
-          } finally pins.foreach(_.unpersist(false))
-        } else Topology.currentSheets(jySel, "jy_smooth", nz, nx, csLimit)
+        // later stage); big grids return a lazy plan, so no scope is
+        // opened and the retains live until the flush.
+        if (aqeScoped) graft.CacheScope.scoped(
+          Topology.currentSheets(jySel, "jy_smooth", nz, nx, csLimit)
+            .localCheckpoint(true))
+        else Topology.currentSheets(jySel, "jy_smooth", nz, nx, csLimit)
       }(csEc)
     }
 
@@ -232,19 +229,16 @@ object FindStructures {
       classified.filter(_._3 == -1.0).map(c => (c._1, c._2, c._4)).toSeq
     // the sep/ostruct masks are read TWICE downstream (one variable
     // each): small grids checkpoint the tiny result eagerly (one
-    // in-window job replaces the consumer's re-derivation) and free the
-    // body's internal grid-sized persists immediately via a local pin;
-    // big grids scope a persist through CacheScope (lazy result — the
+    // in-window job replaces the consumer's re-derivation) inside a
+    // scope that frees the body's grid-sized retains as soon as it
+    // lands; big grids retain the lazy result until the flush (the
     // internals must survive until the consumer evaluates it)
     val seps =
-      if (aqeScoped) {
-        val pins = scala.collection.mutable.Buffer.empty[DataFrame]
-        try Topology.separatricesWithLevels(hess, "flux_fn",
-            timeIdx, xLevels, nz, nx, dPerDe * deTol,
-            pin = df => { val p = df.persist(); pins += p; p })
-          .localCheckpoint(true)
-        finally pins.foreach(_.unpersist(false))
-      } else graft.CacheScope.retain(Topology.separatricesWithLevels(
+      if (aqeScoped) graft.CacheScope.scoped(
+        Topology.separatricesWithLevels(hess, "flux_fn",
+            timeIdx, xLevels, nz, nx, dPerDe * deTol)
+          .localCheckpoint(true))
+      else graft.CacheScope.retain(Topology.separatricesWithLevels(
         hess, "flux_fn", timeIdx, xLevels, nz, nx, dPerDe * deTol))
 
     // current sheets on smoothed jy (hardcoded name, :482; chain built

@@ -20,49 +20,18 @@ object GridQueries {
   val Dz = 0.5
   val Dx = 0.5
 
-  /** Grid DataFrames are memoized per (session, dir) and persisted: every
-    * g-query starts from the same scan, so one cache serves them all
-    * (the grid is tiny relative to executor memory at any SF — it is a
-    * fixed 256-cell tiling of events). Entries are evicted (and their
-    * blocks unpersisted) when the owning SparkContext stops, and can be
-    * dropped eagerly via [[clearCache]] — no unbounded growth in
-    * long-lived multi-session processes.
+  /** Grid DataFrames are memoized per (session, dir) for the session's
+    * lifetime ([[graft.CacheScope.memo]]): every g-query starts from the
+    * same scan, so one cache serves them all (the grid is tiny relative
+    * to executor memory at any SF — it is a fixed 256-cell tiling of
+    * events).
     */
-  private val gridCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val listenerInstalled =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.SparkContext]()
-
-  /** Unpersist and drop every cached grid for `s` (all dirs), plus the
-    * derived caches keyed off the grid (null sets) so no layer can go
-    * stale against a rebuilt grid.
-    */
-  def clearCache(s: SparkSession): Unit = {
-    gridCache.keys.filter(_._1 == s).foreach { k =>
-      gridCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-    TopologyQueries.clearNullsCache(s)
-  }
-
   def grid(s: SparkSession, d: String): DataFrame =
-    gridCache.getOrElseUpdate((s, d), {
-      val sc = s.sparkContext
-      if (listenerInstalled.add(sc)) {
-        sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            // evict only THIS context's entries: sessions on other live
-            // contexts keep their persisted blocks
-            gridCache.keys.filter(_._1.sparkContext eq sc)
-              .foreach(gridCache.remove)
-            listenerInstalled.remove(sc)
-          }
-        })
-      }
+    graft.CacheScope.memo(s, s"grid:$d") {
       val e = Tables.events(s, d).select("event_id", "value")
       // nCells as a broadcast scalar, not a driver-side e.count(): the
       // fixture builds without running a job, so declared queries stay
-      // fully lazy until their own action. The
+      // fully lazy until their own action. The memo's
       // persist is lazy too — the first consuming action materializes.
       val nCells = broadcast(
         e.agg((count(lit(1)) / Cells).cast("long").as("nc")))
@@ -77,8 +46,7 @@ object GridQueries {
         .withColumn("t", col("it").cast("double"))
         .withColumn("z", col("iz") * Dz)
         .withColumn("x", col("ix") * Dx)
-        .persist()
-    })
+    }
 
   /** DuckDB CTE mirroring [[grid]] exactly. */
   val gridCte: String =

@@ -249,7 +249,6 @@ object Topology {
         .getOrElse(col("tmp") === col("p_id"))
       val jumped = gathered.join(ptr, jumpCond, "left")
         .withColumn("newcomp", least(col("tmp"), coalesce(col("p_comp"), col("tmp"))))
-      val t0 = System.nanoTime()
       // one job per round: the change count rides an accumulator inside
       // the materialization pass (overcount on task retry only flips an
       // extra harmless iteration). Rows are copied before caching
@@ -270,8 +269,6 @@ object Topology {
       changed = acc.value
       prevRdd.foreach(_.unpersist(false))
       prevRdd = Some(rdd)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] iter=$iter changed=$changed ${(System.nanoTime() - t0) / 1e9}%.2f s")
       lab = next.drop("ch")
       iter += 1
     }
@@ -334,9 +331,6 @@ object Topology {
     */
   private def graphCC(edges: DataFrame, keys: Seq[String],
       maxIter: Int): DataFrame = {
-    val spark = edges.sparkSession
-    def cut(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.localCheckpoint(true).rdd, df.schema)
     val k = keys.map(col)
     // Materialize the raw edge list ONCE before symmetrizing: the
     // unionAll of two selects would otherwise evaluate the (often
@@ -361,26 +355,39 @@ object Topology {
     // SIZE-GATED DRIVER SOLVE: the contracted graph is usually
     // tiny relative to the data that produced it (tile-boundary roots,
     // star-contracted LSH buckets, >=T cosine pairs), yet the iterative
-    // loop below pays one scheduled job PER ROUND — 2-8 rounds of
+    // loop pays one scheduled job PER ROUND — 2-8 rounds of
     // ~60-100 ms quanta per solve on the bench, and O(log diameter)
     // sequential barriers at any scale. Below the gate the edge list is
     // collected and solved with an in-memory min-root union-find: two
     // jobs total (the count that decides, reading the persist this
     // loop forced anyway, and the collect), and the result returns as
     // a LOCAL relation — downstream joins broadcast it without a
-    // shuffle. The gate is bytes-bounded (edges x ~40 B; the 2M default
-    // is ~100 MB transient driver heap) and configurable
-    // (spark.graft.cc.maxDriverEdges); above it, or for non-integral
-    // node ids, the distributed loop below runs unchanged — at 100 TB a
+    // shuffle. The gate is bytes-bounded (edges x ~40 B; 2M edges
+    // is ~100 MB transient driver heap); above it, or for non-integral
+    // node ids, the distributed loop [[graphCCLoop]] runs — at 100 TB a
     // contracted graph CAN exceed driver memory, and the fallback is
     // the design, not a safety valve.
     val nodeType = e0.schema("s").dataType
-    val gate = spark.conf.getOption("spark.graft.cc.maxDriverEdges")
-      .map(_.toLong).getOrElse(2000000L)
     val integralNodes = nodeType == org.apache.spark.sql.types.LongType ||
       nodeType == org.apache.spark.sql.types.IntegerType
-    if (integralNodes && e0.count() <= gate)
-      return driverCC(e0, keys, nodeType)
+    if (integralNodes && e0.count() <= MaxDriverEdges)
+      driverCC(e0, keys, nodeType)
+    else graphCCLoop(e0, keys, maxIter)
+  }
+
+  /** Largest edge list [[graphCC]] solves on the driver (x ~40 B). */
+  private val MaxDriverEdges = 2000000L
+
+  /** The distributed leg of [[graphCC]] over a (keys..., s, t) edge list
+    * `e0` that the caller has already materialized or cached: min-label
+    * propagation with pointer jumping, one job per round.
+    */
+  private[grid] def graphCCLoop(e0: DataFrame, keys: Seq[String],
+      maxIter: Int): DataFrame = {
+    val spark = e0.sparkSession
+    def cut(df: DataFrame): DataFrame =
+      spark.createDataFrame(df.localCheckpoint(true).rdd, df.schema)
+    val k = keys.map(col)
     val e = e0
       .unionAll(e0.select((k :+ col("t").as("s") :+ col("s").as("t")): _*))
     // node set: s-side of the symmetrized list covers every endpoint
@@ -418,13 +425,10 @@ object Topology {
       rdd.localCheckpoint()
       val next = org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(
         spark, rdd, withCh.schema)
-      val t0 = System.nanoTime()
       next.count() // materialize; fills the accumulator
       changed = acc.value
       prevRdd.foreach(_.unpersist(false))
       prevRdd = Some(rdd)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[graphcc] iter=$iter changed=$changed ${(System.nanoTime() - t0) / 1e9}%.2f s")
       lab = next.drop("ch")
       iter += 1
     }
@@ -738,8 +742,7 @@ object Topology {
     * Returns (it, iz, ix, cs) with cs in {-1, 0, +1}.
     */
   def currentSheets(grid: DataFrame, field: String, nz: Int, nx: Int,
-      csLimit: Double,
-      pin: DataFrame => DataFrame = graft.CacheScope.retain): DataFrame = {
+      csLimit: Double): DataFrame = {
     val mm = GridOps.minmaxFilter(grid, field, nz, nx, "fmax", "fmin")
     // scoped persist: the filtered fields feed the threshold aggregate,
     // the probe join, and both sheet branches (4 consumers). A
@@ -747,11 +750,11 @@ object Topology {
     // forces every cell of a time step through ONE task — a non-starter
     // at the 100 TB design point where a single `it` plane is billions
     // of cells; groupBy partial-aggregates map-side and broadcasts a
-    // per-it row back. `pin` (default CacheScope.retain) bounds the
-    // block lifetime to the harness query scope; an eager caller that
-    // checkpoints the result (FindStructures' small-grid leg) passes a
-    // local persist and frees these grid-sized blocks immediately.
-    val g = pin(grid.join(mm, Seq("it", "iz", "ix")))
+    // per-it row back. An eager caller that checkpoints the result
+    // (FindStructures' small-grid leg) runs this inside a
+    // CacheScope.scoped block, which frees these grid-sized blocks as
+    // soon as the checkpoint lands.
+    val g = graft.CacheScope.retain(grid.join(mm, Seq("it", "iz", "ix")))
     val thr = g.groupBy("it").agg(
       (avg("fmax") + lit(3) * stddev_pop("fmax")).as("max_thr"),
       (avg("fmin") - lit(3) * stddev_pop("fmin")).as("min_thr"))
@@ -778,7 +781,7 @@ object Topology {
     // pinned: ext is broadcast in TWO separate sub-plans (tagged and
     // seeds) — two exchanges, and on the lazy single-tile CC path each
     // would otherwise re-run the region labeling.
-    val ext = pin(withV.groupBy("sgn", "it", "comp")
+    val ext = graft.CacheScope.retain(withV.groupBy("sgn", "it", "comp")
       .agg(max_by(struct(col(field).as("v"), col("iz"), col("ix")),
         struct(col("sgn") * col(field), -col("iz"), -col("ix"))).as("e"))
       .select(col("sgn").as("r_sgn"), col("it").as("r_it"),
@@ -796,7 +799,7 @@ object Topology {
     // scoped persist: the grow labels feed both the seed lookup and
     // the final membership join — without it the solve's output plan
     // (checkpoint-join or fast-path projection) re-evaluates per use
-    val cc = pin(
+    val cc = graft.CacheScope.retain(
       connectedComponents(tagged, nx, keys = Seq("sgn", "rid", "it"),
         staticSingleTile = fitsOneTile(nz, nx)))
     val seeds = cc.join(broadcast(ext),
@@ -835,8 +838,7 @@ object Topology {
     */
   def separatrices(grid: DataFrame, psiField: String, it0: Int,
       xPoints: Seq[(Double, Double)], nz: Int, nx: Int,
-      tol: Double,
-      pin: DataFrame => DataFrame = graft.CacheScope.retain): DataFrame = {
+      tol: Double): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
     val g0 = grid.filter(col("it") === it0)
@@ -851,21 +853,21 @@ object Topology {
     // them with the X/O classification) use the WithLevels variant —
     // the level table becomes a local relation and this whole sampling
     // sub-plan (corner join + aggregation + persist) disappears.
-    val levels = pin(bilinearSample(g0, psiField, xdf, "level"))
-    separatricesBody(g0, psiField, it0, xPoints, nz, nx, tol, levels, pin)
+    val levels = graft.CacheScope.retain(
+      bilinearSample(g0, psiField, xdf, "level"))
+    separatricesBody(g0, psiField, it0, xPoints, nz, nx, tol, levels)
   }
 
   /** [[separatrices]] with the psi level at each X point already known
-    * (py, px, level) — no distributed sampling pass. `pin` scopes the
-    * body's intermediate persists: the default registers them with
-    * CacheScope (freed at the harness flush); a caller that eagerly
-    * checkpoints the returned masks passes a local persist and frees
-    * them as soon as the checkpoint lands.
+    * (py, px, level) — no distributed sampling pass. The body's
+    * intermediates are retained through CacheScope; a caller that
+    * eagerly checkpoints the returned masks does so inside a
+    * CacheScope.scoped block, which frees them as soon as the
+    * checkpoint lands.
     */
   def separatricesWithLevels(grid: DataFrame, psiField: String, it0: Int,
       xPointLevels: Seq[(Double, Double, Double)], nz: Int, nx: Int,
-      tol: Double,
-      pin: DataFrame => DataFrame = graft.CacheScope.retain): DataFrame = {
+      tol: Double): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
     val g0 = grid.filter(col("it") === it0)
@@ -876,18 +878,17 @@ object Topology {
       .map { case ((py, px, lv), i) => (i, it0, py, px, lv) }
       .toDF("xid", "it", "py", "px", "level")
     separatricesBody(g0, psiField, it0,
-      xPointLevels.map(p => (p._1, p._2)), nz, nx, tol, levels, pin)
+      xPointLevels.map(p => (p._1, p._2)), nz, nx, tol, levels)
   }
 
   private def separatricesBody(g0: DataFrame, psiField: String, it0: Int,
       xPoints: Seq[(Double, Double)], nz: Int, nx: Int,
-      tol: Double, levels: DataFrame,
-      pin: DataFrame => DataFrame): DataFrame = {
+      tol: Double, levels: DataFrame): DataFrame = {
     val spark = g0.sparkSession
     import spark.implicits._
     // pinned: the CC solve's eager labeling forces the marching-
     // squares pass; without the persist `pts` would re-run it.
-    val segs = pin(contourSegmentsAt(g0, psiField,
+    val segs = graft.CacheScope.retain(contourSegmentsAt(g0, psiField,
       levels.select(col("xid"), col("level"))))
     val segCells = segs.select("xid", "it", "iz", "ix").distinct()
     val comp = connectedComponents8(segCells, nx, keys = Seq("xid", "it"),
@@ -895,7 +896,7 @@ object Topology {
     // endpoint distances to the owning X point. Pinned: consumed by
     // both `keep` and `raster`, and on the lazy single-tile CC path a
     // re-scan would re-run the contour-component labeling.
-    val pts = pin(
+    val pts = graft.CacheScope.retain(
       segs.join(comp, Seq("xid", "it", "iz", "ix"))
         .select(col("xid"), col("comp"),
           explode(array(struct(col("y1").as("y"), col("x1").as("x")),
@@ -919,7 +920,7 @@ object Topology {
         yield (i, py.toInt + di, px.toInt + dj)
     }.filter { case (_, a, b) => a >= 0 && a < nz && b >= 0 && b < nx }
       .toDF("xid", "iz", "ix")
-    val localMask = pin(raster.unionAll(xpix).distinct()
+    val localMask = graft.CacheScope.retain(raster.unionAll(xpix).distinct()
       .withColumn("it", lit(it0)).withColumn("m", lit(1)))
     // SUPPORT-BOUNDED per-xid cell set instead of full-grid × xids:
     // gap_fill can only set cells within one step of a mask cell, and a
@@ -958,7 +959,7 @@ object Topology {
       .withColumn("it", lit(it0))
       .join(localMask, Seq("xid", "it", "iz", "ix"), "left")
       .withColumn("m", coalesce(col("m"), lit(0)))
-    val filled = pin(GridOps.gapFill(
+    val filled = graft.CacheScope.retain(GridOps.gapFill(
       full.select("xid", "it", "iz", "ix", "m"), "m", nz, nx,
       "filled", keys = Seq("xid", "it")))
 
@@ -975,7 +976,7 @@ object Topology {
       .select("xid", "it", "iz", "ix", "touch_edge")
     // pinned: zcomp feeds both the interior test and the final member
     // join; on the lazy single-tile CC path a re-scan would re-label.
-    val zcomp = pin(connectedComponents(
+    val zcomp = graft.CacheScope.retain(connectedComponents(
       zeros.select("xid", "it", "iz", "ix"), nx, keys = Seq("xid", "it"),
       staticSingleTile = fitsOneTile(nz, nx))
       .join(zeros, Seq("xid", "it", "iz", "ix")))

@@ -95,41 +95,17 @@ object TopologyQueries {
     * (session, dir) like the grid itself: g11 and g12 share one
     * persisted result (contour extraction + the segment-pair join are
     * the expensive half of both queries). The null set is tiny —
-    * O(contour crossings), not O(cells).
+    * O(contour crossings), not O(cells). The memo's persist is lazy:
+    * the first consuming action (g11 or g12) pays the materialization;
+    * building the query triggers no job.
     */
-  private val nullsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val nullsListener =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.SparkContext]()
-
-  /** Unpersist and drop every cached null set for `s` — called by
-    * [[GridQueries.clearCache]] so the derived layer can never outlive
-    * (and go stale against) the grid it was computed from.
-    */
-  def clearNullsCache(s: SparkSession): Unit =
-    nullsCache.keys.filter(_._1 == s).foreach { k =>
-      nullsCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
   private def nulls(s: SparkSession, d: String): DataFrame =
-    nullsCache.getOrElseUpdate((s, d), {
-      val sc = s.sparkContext
-      if (nullsListener.add(sc)) {
-        sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            nullsCache.keys.filter(_._1.sparkContext eq sc)
-              .foreach(nullsCache.remove)
-            nullsListener.remove(sc)
-          }
-        })
-      }
+    graft.CacheScope.memo(s, s"nulls:$d") {
       val g = grid(s, d)
-      // lazy persist: the first consuming action (g11 or g12) pays the
-      // materialization; building the query triggers no job
       Topology.segmentIntersections(
         Topology.contourSegments(g, "b1", L1),
-        Topology.contourSegments(g, "b2", L2)).persist()
-    })
+        Topology.contourSegments(g, "b2", L2))
+    }
 
   def defs: Seq[Q] = Seq(
     // ---- g10: marching-squares contour segments (reference 22f).

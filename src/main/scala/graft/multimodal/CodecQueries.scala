@@ -1222,7 +1222,7 @@ object CodecQueries {
     // whole exactly-once claim made hash-checkable.
     Q("q170_media_stats_served",
       (s, d) => {
-        val root = graft.TempArtifacts.dir("graft_media_stats")
+        val root = graft.TempArtifacts.perCall(s, "graft_media_stats")
         val media = corruptedMediaTable(s, d)
         val even = media.filter(col("media_id") % 2 === 0)
         val odd = media.filter(col("media_id") % 2 === 1)
@@ -1267,7 +1267,7 @@ object CodecQueries {
     // only; the corpus is never re-decoded.
     Q("q171_phash_ingest",
       (s, d) => {
-        val idx = graft.TempArtifacts.dir("graft_phash_idx")
+        val idx = graft.TempArtifacts.perCall(s, "graft_phash_idx")
         PhashIndex.buildPhashIndex(
           phashHashesOf(s, d, col("doc_id") % 6 === 0
             && col("doc_id") < PhashCorpusCutoff), idx)
@@ -1914,7 +1914,7 @@ object CodecQueries {
     // production shape); ingest work is arrival-side only.
     Q("q186_image_curation_neardup",
       (s, d) => {
-        val idx = graft.TempArtifacts.dir("graft_phash_cur_idx")
+        val idx = graft.TempArtifacts.perCall(s, "graft_phash_cur_idx")
         val corpus = gatedImageHashes(twinImageTable(s, d,
           col("doc_id") % 6 === 0
             && col("doc_id") < PhashCorpusCutoff)).toDF()
@@ -2152,17 +2152,13 @@ object CodecQueries {
       .toDF("media_id", "bytes")
   }
 
-  /** The composed q186 body: gate (one decode pass, METADATA-width pin
-    * — media_id/reason/stat/hash, never payloads) → survivor-only
+  /** The composed q186 body: gate (one decode pass, METADATA-width
+    * retain — media_id/reason/stat/hash, never payloads) → survivor-only
     * phash ingest against the persisted index → first-drop-wins merge.
-    * Batch callers use the CacheScope default; the streaming sink
-    * passes a local persist (no flush point in a stream).
     */
   def imageCurationIngestDecisions(arrivals: org.apache.spark.sql.DataFrame,
-      idxPath: String,
-      pin: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-        graft.CacheScope.retain): org.apache.spark.sql.DataFrame = {
-    val gated = pin(gatedImageHashes(arrivals).toDF())
+      idxPath: String): org.apache.spark.sql.DataFrame = {
+    val gated = graft.CacheScope.retain(gatedImageHashes(arrivals).toDF())
     val dec = PhashIndex.phashIngestDecisions(
       gated.filter(col("keep"))
         .select(col("media_id").as("doc_id"), col("hash")), idxPath)

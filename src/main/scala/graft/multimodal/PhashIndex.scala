@@ -54,37 +54,34 @@ object PhashIndex {
     * the LOWEST matching corpus doc as `dup_of`, or `added` with -1.
     * Every arrival gets a row — an auditor must distinguish "dropped
     * as near-dup" from "never arrived". Eagerly localCheckpoint-ed:
-    * the batch-commit the advance contract requires.
+    * the batch-commit the advance contract requires, so the call's
+    * retains are scoped to it.
     */
   def phashIngestDecisions(arrivals: DataFrame, path: String)
-      : DataFrame = {
+      : DataFrame = graft.CacheScope.scoped {
     val s = arrivals.sparkSession
-    val arr = arrivals.select("doc_id", "hash").persist()
-    val idxH = indexHashes(s, path).persist()
-    try {
-      val cand = bandsOf(arr).as("a")
-        .join(indexBands(s, path).as("c"),
-          col("a.band") === col("c.band") && col("a.v") === col("c.v"))
-        .select(col("a.doc_id").as("doc_id"),
-          col("c.doc_id").as("corpus_doc"))
-        .distinct()
-      val dups = cand
-        .join(arr.select(col("doc_id"), col("hash").as("ha")), "doc_id")
-        .join(idxH.select(col("doc_id").as("corpus_doc"),
-          col("hash").as("hc")), "corpus_doc")
-        .filter(bit_count(col("ha").bitwiseXOR(col("hc")))
-          <= PhashMaxHamming)
-        .groupBy("doc_id")
-        .agg(min(col("corpus_doc")).as("dup_of"))
-      arr.select("doc_id", "hash")
-        .join(dups, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("hash"),
-          when(col("dup_of").isNotNull, lit("dup")).otherwise(lit("added"))
-            .as("status"),
-          coalesce(col("dup_of"), lit(-1L)).as("dup_of"))
-        .localCheckpoint(true)
-    } finally {
-      arr.unpersist(); idxH.unpersist(): Unit
-    }
+    val arr = graft.CacheScope.retain(arrivals.select("doc_id", "hash"))
+    val idxH = graft.CacheScope.retain(indexHashes(s, path))
+    val cand = bandsOf(arr).as("a")
+      .join(indexBands(s, path).as("c"),
+        col("a.band") === col("c.band") && col("a.v") === col("c.v"))
+      .select(col("a.doc_id").as("doc_id"),
+        col("c.doc_id").as("corpus_doc"))
+      .distinct()
+    val dups = cand
+      .join(arr.select(col("doc_id"), col("hash").as("ha")), "doc_id")
+      .join(idxH.select(col("doc_id").as("corpus_doc"),
+        col("hash").as("hc")), "corpus_doc")
+      .filter(bit_count(col("ha").bitwiseXOR(col("hc")))
+        <= PhashMaxHamming)
+      .groupBy("doc_id")
+      .agg(min(col("corpus_doc")).as("dup_of"))
+    arr.select("doc_id", "hash")
+      .join(dups, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("hash"),
+        when(col("dup_of").isNotNull, lit("dup")).otherwise(lit("added"))
+          .as("status"),
+        coalesce(col("dup_of"), lit(-1L)).as("dup_of"))
+      .localCheckpoint(true)
   }
 }

@@ -898,7 +898,7 @@ object SimilarityQueries {
         val f = graft.CacheScope.retain(flat(s, d))
         // fresh dir per call: advance MUTATES the artifact — sharing
         // q118's memoized serve-only copy would poison it
-        val idx = graft.TempArtifacts.dir("graft_ivf_advance")
+        val idx = graft.TempArtifacts.perCall(s, "graft_ivf_advance")
         buildIvfIndex(f.filter(col("vec_id") < AnnAdvanceSplit), idx)
         advanceIvfIndex(f.filter(col("vec_id") >= AnnAdvanceSplit), idx)
         serveIvfRecall(s, f, idx)
@@ -1478,14 +1478,14 @@ object SimilarityQueries {
     Q("q192_semantic_leak_stream",
       (s, d) => {
         val idx = semanticLeakTrainIndex(s, d)
-        val audit = graft.TempArtifacts.dir("graft_semleak_audit")
+        val audit = graft.TempArtifacts.perCall(s, "graft_semleak_audit")
         val valVecs = Tables.embeddings(s, d)
           .join(vecSplitOf(s, d).filter(col("split") === "val")
             .select("vec_id"), Seq("vec_id"), "left_semi")
         val b0 = valVecs.filter(col("vec_id") % 2 === 0)
         val b1 = valVecs.filter(col("vec_id") % 2 === 1)
         // the corpus flat view is identical across the three batch
-        // bodies — pin it once for the query instead of per batch
+        // bodies — retain it once for the query instead of per batch
         val corpus = Some(graft.CacheScope.retain(flat(s, d)))
         graft.streaming.Streams.semanticLeakAuditBatch(b0, 0L, d, idx,
           audit, corpus)
@@ -1561,25 +1561,17 @@ object SimilarityQueries {
     * .semanticLeakAuditBatch]]). Train-side components and norms come
     * from the corpus at `d`; val norms from `valf` itself, so a true
     * arrival that is not in the corpus still scores exactly.
-    *
-    * `pin` is how the corpus flat view gets persisted: batch callers
-    * keep the default [[graft.CacheScope.retain]] (flushed by the
-    * harness); STREAM callers must pass a batch-local persist freed
-    * in a finally — retain has no flush point in a stream and would
-    * pin one corpus copy per micro-batch forever.
     */
   private[graft] def semanticLeakPairsOf(s: SparkSession, d: String,
       valf: DataFrame, idx: String,
-      pin: DataFrame => DataFrame = graft.CacheScope.retain,
       corpus: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // `corpus`: an already-pinned corpus flat view — a multi-batch
-    // caller (q192 runs three batch bodies per query) pins the corpus
-    // ONCE and passes it in, instead of each batch body re-persisting
-    // and re-materializing the identical frame (the live
-    // streaming sink keeps per-batch local pins — a stream has no
-    // flush point for a query-scoped retain)
-    val f = corpus.getOrElse(pin(flat(s, d)))
+    // `corpus`: an already-retained corpus flat view — a multi-batch
+    // caller (q192 runs three batch bodies per query) retains the
+    // corpus ONCE for the query and passes it in, instead of each
+    // batch body re-persisting and re-materializing the identical
+    // frame; without it the corpus is retained for the caller's scope
+    val f = corpus.getOrElse(graft.CacheScope.retain(flat(s, d)))
     val cent = indexCentroids(s, idx)
     // each val vector's nprobe nearest lists against the FROZEN
     // centroid table (metadata-scale, broadcast)
@@ -1693,7 +1685,7 @@ object SimilarityQueries {
     */
   def indexRebuildFlow(s: SparkSession, f: DataFrame, split: Long,
       budget: Double): DataFrame = {
-    val root = graft.TempArtifacts.dir("graft_ivf_versions")
+    val root = graft.TempArtifacts.perCall(s, "graft_ivf_versions")
     buildIvfIndex(f.filter(col("vec_id") < split), root)
     advanceIvfIndex(f.filter(col("vec_id") >= split), root)
     // the trigger: one scalar off the k-row drift table (k = number of

@@ -118,11 +118,9 @@ object ArtifactVersions {
 
   /** Append `rows`' derivations to the live version's components. With
     * a `batchId` each component commits fenced; `rows` is evaluated
-    * only if some component still lacks the batch, and is pinned for
-    * the call when several components derive from it (a local persist,
-    * not CacheScope: streaming sinks advance once per micro-batch and
-    * never reach a flush point). Cached plans under `root` are
-    * refreshed after the append.
+    * only if some component still lacks the batch, and is retained for
+    * the call (a scope of its own) when several components derive from
+    * it. Cached plans under `root` are refreshed after the append.
     */
   def advance(root: String, batchId: Option[Long], rows: => DataFrame)(
       components: (String, DataFrame => DataFrame)*): Unit = {
@@ -131,14 +129,18 @@ object ArtifactVersions {
       batchId.exists(BatchCommits.isCommitted(s"$dir/$c", _))
     }
     if (todo.nonEmpty) {
-      val r = if (todo.size > 1) rows.persist() else rows
-      try todo.foreach { case (c, derive) =>
-        batchId match {
-          case Some(id) => BatchCommits.appendBatch(derive(r), s"$dir/$c", id): Unit
-          case None => derive(r).write.mode("append").parquet(s"$dir/$c")
+      val s = graft.CacheScope.scoped {
+        val r = if (todo.size > 1) graft.CacheScope.retain(rows) else rows
+        todo.foreach { case (c, derive) =>
+          batchId match {
+            case Some(id) =>
+              BatchCommits.appendBatch(derive(r), s"$dir/$c", id): Unit
+            case None => derive(r).write.mode("append").parquet(s"$dir/$c")
+          }
         }
-      } finally if (todo.size > 1) r.unpersist(): Unit
-      r.sparkSession.catalog.refreshByPath(root)
+        r.sparkSession
+      }
+      s.catalog.refreshByPath(root)
     }
   }
 

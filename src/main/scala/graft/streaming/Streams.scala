@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
+import graft.CacheScope
 import graft.sources.ArtifactVersions
 
 /** Structured-Streaming surface over the `events` schema. Every transform
@@ -135,6 +136,8 @@ object Streams {
     * and skips repeats stays correct when a restart replays the last
     * uncommitted batch. This is how streaming writes reach sinks with
     * no native streaming support (JDBC upserts, file compaction, ...).
+    * Each `*Batch` body below runs in one [[graft.CacheScope.scoped]]
+    * block, so what a micro-batch retains is released when it returns.
     */
   def foreachBatchSink(events: DataFrame, checkpointDir: String)(
       f: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
@@ -171,12 +174,9 @@ object Streams {
   def nearDupIngestSink(docs: DataFrame, indexPath: String,
       checkpointDir: String, outDir: String, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nearDupIngestBatch(batch, batchId, indexPath, outDir, compactEvery)
-      }
-      .start()
+    foreachBatchSink(docs, checkpointDir) { (batch, batchId) =>
+      nearDupIngestBatch(batch, batchId, indexPath, outDir, compactEvery)
+    }
 
   /** One micro-batch of [[nearDupIngestSink]] — exposed so the spec
     * can force a replay (same batch, same id, twice) and assert the
@@ -185,7 +185,8 @@ object Streams {
     * only the admitted side advances the artifact.
     */
   private[graft] def nearDupIngestBatch(batch: DataFrame, batchId: Long,
-      indexPath: String, outDir: String, compactEvery: Int = 0): Unit = {
+      indexPath: String, outDir: String, compactEvery: Int = 0)
+      : Unit = CacheScope.scoped {
     import graft.sources.BatchCommits
     if (!BatchCommits.isCommitted(outDir, batchId))
       BatchCommits.appendBatch(
@@ -270,12 +271,9 @@ object Streams {
   def spanScrubSink(docs: DataFrame, indexPath: String, w: Int,
       checkpointDir: String, outDir: String, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        spanScrubBatch(batch, batchId, indexPath, w, outDir, compactEvery)
-      }
-      .start()
+    foreachBatchSink(docs, checkpointDir) { (batch, batchId) =>
+      spanScrubBatch(batch, batchId, indexPath, w, outDir, compactEvery)
+    }
 
   /** One micro-batch of [[spanScrubSink]] — exposed for the forced-
     * replay spec. The scrub is evaluated once, straight into the
@@ -284,7 +282,7 @@ object Streams {
     */
   private[graft] def spanScrubBatch(batch: DataFrame, batchId: Long,
       indexPath: String, w: Int, outDir: String,
-      compactEvery: Int): Unit = {
+      compactEvery: Int): Unit = CacheScope.scoped {
     import graft.sources.BatchCommits
     val s = batch.sparkSession
     if (!BatchCommits.isCommitted(outDir, batchId))
@@ -309,9 +307,7 @@ object Streams {
     * entirely known substrings scrubs to empty and dies here),
     * (3) REPETITION-GATED (q158's Gopher signals over the quality
     * survivors — stage-ordered after the cheap rules, before the
-    * index probes; its evaluation barriers are LOCAL persists scoped
-    * to the batch, since CacheScope.retain is forbidden in
-    * foreachBatch), and (4) NEAR-DUP SCORED against the dedup index
+    * index probes), and (4) NEAR-DUP SCORED against the dedup index
     * (q119's decisions). Every arrival lands in `outDir` with its
     * audit row (batch id, CLEANED text, tokens span-removed,
     * first-drop-wins status: quality_drop / repetition_drop / dup /
@@ -349,73 +345,58 @@ object Streams {
       dedupIdx: String, w: Int, checkpointDir: String, outDir: String,
       compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        curationIngestBatch(batch, batchId, ngramIdx, dedupIdx, w,
-          outDir, compactEvery)
-      }
-      .start()
+    foreachBatchSink(docs, checkpointDir) { (batch, batchId) =>
+      curationIngestBatch(batch, batchId, ngramIdx, dedupIdx, w,
+        outDir, compactEvery)
+    }
 
   /** One micro-batch of [[curationIngestSink]] — exposed for the
     * forced-replay spec.
     */
   private[graft] def curationIngestBatch(batch: DataFrame, batchId: Long,
       ngramIdx: String, dedupIdx: String, w: Int, outDir: String,
-      compactEvery: Int): Unit = {
+      compactEvery: Int): Unit = CacheScope.scoped {
     import graft.dedup.DedupQueries
     import graft.sources.BatchCommits
     val s = batch.sparkSession
     if (!BatchCommits.isCommitted(outDir, batchId)) {
-      // local persists, never CacheScope.retain (no flush point in a
-      // stream); cleaned feeds the gate AND the audit projection, and
-      // the repetition gate's internal barriers go through `pin` so
-      // they unpersist with the batch instead of accumulating forever
-      val localPins = scala.collection.mutable.Buffer.empty[DataFrame]
-      val pin: DataFrame => DataFrame =
-        df => { val p = df.persist(); localPins += p; p }
-      val cleaned = DedupQueries
+      // cleaned feeds the gate AND the audit projection
+      val cleaned = CacheScope.retain(DedupQueries
         .spanScrubAgainstIndex(s, batch, ngramIdx, w)
-        .select(col("doc_id"), col("clean_text"), col("n_removed"))
-        .persist()
-      try {
-        // quality rules IN PLACE on the persisted batch (per-row HOFs,
-        // no flags-back-on-doc_id self-join per micro-batch); the pin
-        // holds METADATA ONLY — (doc_id, keep), never the batch text
-        // a second time (as in q144: `cleaned` is the one
-        // text barrier, every other barrier is fingerprint-width)
-        val flags = pin(graft.text.TextQueries.withQualityFlags(
-            cleaned.select(col("doc_id"), col("clean_text").as("text")))
-          .select("doc_id", "keep"))
-        val qSurv = cleaned
-          .join(flags.filter(col("keep")).select("doc_id"),
-            Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), col("clean_text").as("text"))
-        // Gopher repetition gate (q158), survivor-only — the same
-        // stage order as q144's batch pipeline, so stream ≡ batch
-        val rep = graft.text.TextQueries.repetitionGate(qSurv, pin)
-          .select(col("doc_id"), col("keep_repetition"))
-        val survivors = qSurv.join(rep, "doc_id")
-          .filter(col("keep_repetition")).select("doc_id", "text")
-        // localCheckpoint'ed inside — one stable evaluation
-        val decisions =
-          DedupQueries.ingestBatchDecisions(survivors, dedupIdx)
-        BatchCommits.appendBatch(
-          cleaned
-            .join(flags, Seq("doc_id"))
-            .join(rep, Seq("doc_id"), "left")
-            .join(decisions, Seq("doc_id"), "left")
-            .select(col("doc_id"), col("clean_text"),
-              col("n_removed"),
-              when(!col("keep"), lit("quality_drop"))
-                .when(!col("keep_repetition"), lit("repetition_drop"))
-                .otherwise(col("status")).as("status"),
-              lit(batchId).as("batch_id")),
-          outDir, batchId): Unit
-      } finally {
-        cleaned.unpersist()
-        localPins.foreach(_.unpersist()): Unit
-      }
+        .select(col("doc_id"), col("clean_text"), col("n_removed")))
+      // quality rules IN PLACE on the retained batch (per-row HOFs,
+      // no flags-back-on-doc_id self-join per micro-batch); the retain
+      // holds METADATA ONLY — (doc_id, keep), never the batch text
+      // a second time (as in q144: `cleaned` is the one
+      // text barrier, every other barrier is fingerprint-width)
+      val flags = CacheScope.retain(graft.text.TextQueries.withQualityFlags(
+          cleaned.select(col("doc_id"), col("clean_text").as("text")))
+        .select("doc_id", "keep"))
+      val qSurv = cleaned
+        .join(flags.filter(col("keep")).select("doc_id"),
+          Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), col("clean_text").as("text"))
+      // Gopher repetition gate (q158), survivor-only — the same
+      // stage order as q144's batch pipeline, so stream ≡ batch
+      val rep = graft.text.TextQueries.repetitionGate(qSurv)
+        .select(col("doc_id"), col("keep_repetition"))
+      val survivors = qSurv.join(rep, "doc_id")
+        .filter(col("keep_repetition")).select("doc_id", "text")
+      // localCheckpoint'ed inside — one stable evaluation
+      val decisions =
+        DedupQueries.ingestBatchDecisions(survivors, dedupIdx)
+      BatchCommits.appendBatch(
+        cleaned
+          .join(flags, Seq("doc_id"))
+          .join(rep, Seq("doc_id"), "left")
+          .join(decisions, Seq("doc_id"), "left")
+          .select(col("doc_id"), col("clean_text"),
+            col("n_removed"),
+            when(!col("keep"), lit("quality_drop"))
+              .when(!col("keep_repetition"), lit("repetition_drop"))
+              .otherwise(col("status")).as("status"),
+            lit(batchId).as("batch_id")),
+        outDir, batchId): Unit
     }
     val admitted = s.read.parquet(outDir + s"/batch-$batchId")
       .filter(col("status") === "added")
@@ -446,16 +427,13 @@ object Streams {
   def ivfAdvanceSink(vecs: DataFrame, indexPath: String,
       checkpointDir: String, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.similarity.SimilarityQueries.advanceIvfIndex(batch, indexPath,
-          Some(batchId))
-        compactOnCadence(batch.sparkSession, batchId, compactEvery,
-          Seq(indexPath ->
-            graft.similarity.SimilarityQueries.compactIvfIndex _))
-      }
-      .start()
+    foreachBatchSink(vecs, checkpointDir) { (batch, batchId) =>
+      graft.similarity.SimilarityQueries.advanceIvfIndex(batch, indexPath,
+        Some(batchId))
+      compactOnCadence(batch.sparkSession, batchId, compactEvery,
+        Seq(indexPath ->
+          graft.similarity.SimilarityQueries.compactIvfIndex _))
+    }
 
   /** STREAMING MEDIA INGEST GATE: decode-validate-on-ingest for the
     * multimodal codec stack. Each micro-batch of arriving media rows
@@ -481,12 +459,9 @@ object Streams {
   def mediaIngestSink(media: DataFrame, checkpointDir: String,
       outDir: String, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mediaIngestBatch(batch, batchId, outDir, compactEvery)
-      }
-      .start()
+    foreachBatchSink(media, checkpointDir) { (batch, batchId) =>
+      mediaIngestBatch(batch, batchId, outDir, compactEvery)
+    }
 
   /** STREAMING MEDIA CURATION — the q181 unified gate run live:
     * every arriving payload is decode-validated and its modality's
@@ -500,18 +475,15 @@ object Streams {
   def mediaCurationSink(media: DataFrame, checkpointDir: String,
       outDir: String, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mediaCurationBatch(batch, batchId, outDir, compactEvery)
-      }
-      .start()
+    foreachBatchSink(media, checkpointDir) { (batch, batchId) =>
+      mediaCurationBatch(batch, batchId, outDir, compactEvery)
+    }
 
   /** One micro-batch of [[mediaCurationSink]] — exposed for the
     * forced-replay spec.
     */
   private[graft] def mediaCurationBatch(batch: DataFrame, batchId: Long,
-      outDir: String, compactEvery: Int): Unit = {
+      outDir: String, compactEvery: Int): Unit = CacheScope.scoped {
     ArtifactVersions.advance(outDir, Some(batchId),
       graft.multimodal.CodecQueries.mediaCurationDecisions(batch).toDF()
         .withColumn("batch_id", lit(batchId)))("audit" -> identity)
@@ -523,7 +495,7 @@ object Streams {
     * forced-replay spec.
     */
   private[graft] def mediaIngestBatch(batch: DataFrame, batchId: Long,
-      outDir: String, compactEvery: Int): Unit = {
+      outDir: String, compactEvery: Int): Unit = CacheScope.scoped {
     ArtifactVersions.advance(outDir, Some(batchId),
       graft.multimodal.CodecQueries.mediaDecisions(batch).toDF()
         .withColumn("batch_id", lit(batchId)))("stats" -> identity)
@@ -544,18 +516,16 @@ object Streams {
   def phashIngestSink(hashes: DataFrame, indexPath: String,
       checkpointDir: String, outDir: String, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    hashes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        phashIngestBatch(batch, batchId, indexPath, outDir, compactEvery)
-      }
-      .start()
+    foreachBatchSink(hashes, checkpointDir) { (batch, batchId) =>
+      phashIngestBatch(batch, batchId, indexPath, outDir, compactEvery)
+    }
 
   /** One micro-batch of [[phashIngestSink]] — exposed for the
     * forced-replay spec.
     */
   private[graft] def phashIngestBatch(batch: DataFrame, batchId: Long,
-      indexPath: String, outDir: String, compactEvery: Int): Unit = {
+      indexPath: String, outDir: String, compactEvery: Int)
+      : Unit = CacheScope.scoped {
     import graft.multimodal.PhashIndex
     import graft.sources.BatchCommits
     if (!BatchCommits.isCommitted(outDir, batchId))
@@ -581,7 +551,7 @@ object Streams {
     * reads it. EXACTLY-ONCE: audit commits first, the advance payload
     * derives from the COMMITTED audit rows (the [[phashIngestSink]]
     * discipline), so a post-crash replay appends exactly what the
-    * original attempt decided. The per-batch pin holds METADATA only
+    * original attempt decided. The per-batch retain holds METADATA only
     * (media_id/reason/stat/hash — never payloads or decoded pixels,
     * the q144 lesson); q186 is the batch twin and StreamsSpec pins
     * stream ≡ batch on the same arrivals.
@@ -589,30 +559,22 @@ object Streams {
   def imageCurationSink(media: DataFrame, indexPath: String,
       checkpointDir: String, outDir: String, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        imageCurationBatch(batch, batchId, indexPath, outDir,
-          compactEvery)
-      }
-      .start()
+    foreachBatchSink(media, checkpointDir) { (batch, batchId) =>
+      imageCurationBatch(batch, batchId, indexPath, outDir,
+        compactEvery)
+    }
 
   /** One micro-batch of [[imageCurationSink]] — exposed for the
     * forced-replay spec.
     */
   private[graft] def imageCurationBatch(batch: DataFrame, batchId: Long,
-      indexPath: String, outDir: String, compactEvery: Int): Unit = {
+      indexPath: String, outDir: String, compactEvery: Int)
+      : Unit = CacheScope.scoped {
     import graft.multimodal.{CodecQueries, PhashIndex}
     val s = batch.sparkSession
-    val localPins = scala.collection.mutable.Buffer.empty[DataFrame]
-    try
-      ArtifactVersions.advance(outDir, Some(batchId),
-        CodecQueries.imageCurationIngestDecisions(batch, indexPath,
-            pin = df => {
-              val p = df.persist(); localPins += p; p
-            })
-          .withColumn("batch_id", lit(batchId)))("audit" -> identity)
-    finally localPins.foreach(_.unpersist(false))
+    ArtifactVersions.advance(outDir, Some(batchId),
+      CodecQueries.imageCurationIngestDecisions(batch, indexPath)
+        .withColumn("batch_id", lit(batchId)))("audit" -> identity)
     // the advance payload derives from the COMMITTED audit rows. On a
     // replay AFTER a compaction flip the batch dir survives only as an
     // EMPTY carried fence marker (no part files): the audit compacts
@@ -657,39 +619,30 @@ object Streams {
   def semanticLeakSink(vecs: DataFrame, corpusDir: String,
       indexPath: String, checkpointDir: String, outDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        semanticLeakAuditBatch(batch, batchId, corpusDir, indexPath,
-          outDir)
-      }
-      .start()
+    foreachBatchSink(vecs, checkpointDir) { (batch, batchId) =>
+      semanticLeakAuditBatch(batch, batchId, corpusDir, indexPath,
+        outDir)
+    }
 
   /** One micro-batch of [[semanticLeakSink]] — exposed for the
     * forced-replay spec and q192's batch-twin harness.
     */
   private[graft] def semanticLeakAuditBatch(batch: DataFrame,
       batchId: Long, corpusDir: String, indexPath: String,
-      outDir: String, corpus: Option[DataFrame] = None): Unit = {
+      outDir: String, corpus: Option[DataFrame] = None)
+      : Unit = CacheScope.scoped {
     import graft.sources.BatchCommits
     import graft.similarity.SimilarityQueries
-    if (!BatchCommits.isCommitted(outDir, batchId)) {
-      // batch-LOCAL persist for the corpus flat view, freed in a
-      // finally — never CacheScope.retain here (no flush point in a
-      // stream; retaining would pin one corpus copy per micro-batch).
-      // A multi-batch BATCH caller (q192) passes `corpus` pinned once
-      // for the whole query instead.
-      val localPins = scala.collection.mutable.Buffer.empty[DataFrame]
-      try
-        BatchCommits.appendBatch(
-          SimilarityQueries.semanticLeakPairsOf(batch.sparkSession,
-              corpusDir, SimilarityQueries.flatVecs(batch), indexPath,
-              pin = df => { val p = df.persist(); localPins += p; p },
-              corpus = corpus)
-            .withColumn("batch_id", lit(batchId)),
-          outDir, batchId): Unit
-      finally localPins.foreach(_.unpersist(false))
-    }
+    // without `corpus` the corpus flat view is retained per batch; a
+    // multi-batch BATCH caller (q192) passes it retained once for the
+    // whole query instead
+    if (!BatchCommits.isCommitted(outDir, batchId))
+      BatchCommits.appendBatch(
+        SimilarityQueries.semanticLeakPairsOf(batch.sparkSession,
+            corpusDir, SimilarityQueries.flatVecs(batch), indexPath,
+            corpus = corpus)
+          .withColumn("batch_id", lit(batchId)),
+        outDir, batchId): Unit
   }
 
   /** STREAMING URL FRONTIER — q193's canonicalization + first-copy-
@@ -713,18 +666,15 @@ object Streams {
   def urlFrontierSink(urls: DataFrame, frontierPath: String,
       checkpointDir: String, outDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    urls.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        urlFrontierBatch(batch, batchId, frontierPath, outDir)
-      }
-      .start()
+    foreachBatchSink(urls, checkpointDir) { (batch, batchId) =>
+      urlFrontierBatch(batch, batchId, frontierPath, outDir)
+    }
 
   /** One micro-batch of [[urlFrontierSink]] — exposed for the
     * forced-replay spec and q194's batch-twin harness.
     */
   private[graft] def urlFrontierBatch(batch: DataFrame, batchId: Long,
-      frontierPath: String, outDir: String): Unit = {
+      frontierPath: String, outDir: String): Unit = CacheScope.scoped {
     import graft.sources.BatchCommits
     val s = batch.sparkSession
     if (!BatchCommits.isCommitted(outDir, batchId))
@@ -761,13 +711,10 @@ object Streams {
     */
   def cmsAdvanceSink(docs: DataFrame, sketchPath: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.text.TextQueries.advanceTokenSketch(batch, sketchPath,
-          Some(batchId))
-      }
-      .start()
+    foreachBatchSink(docs, checkpointDir) { (batch, batchId) =>
+      graft.text.TextQueries.advanceTokenSketch(batch, sketchPath,
+        Some(batchId))
+    }
 
   /** Custom state: running per-user count/total via
     * flatMapGroupsWithState (reference has no streaming; this is the

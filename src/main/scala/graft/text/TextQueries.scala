@@ -1329,8 +1329,8 @@ SELECT * FROM rep ORDER BY doc_id""")),
     // decision log with one window — see [[urlFrontierDecisions]].
     Q("q194_url_frontier_stream",
       (s, d) => {
-        val frontier = graft.TempArtifacts.dir("graft_url_frontier")
-        val audit = graft.TempArtifacts.dir("graft_url_frontier_audit")
+        val frontier = graft.TempArtifacts.perCall(s, "graft_url_frontier")
+        val audit = graft.TempArtifacts.perCall(s, "graft_url_frontier_audit")
         val arrivals = Tables.documents(s, d)
           .select(col("doc_id"), messyUrl.as("url"))
         def b(k: Int) = arrivals.filter(col("doc_id") % 3 === k)
@@ -2114,12 +2114,11 @@ rep AS (
     * longest doc), no driver action, everything shuffles on (doc,
     * gram) hashes.
     */
-  def repetitionSignalsOf(docs: DataFrame,
-      pin: DataFrame => DataFrame = graft.CacheScope.retain): DataFrame = {
+  def repetitionSignalsOf(docs: DataFrame): DataFrame = {
     val allNs = RepTopNs ++ RepDupNs
-    // pinned: the token stream, the final per-doc select, and the
+    // retained: the token stream, the final per-doc select, and the
     // prefix-sum leg all read it
-    val base = pin(docs.select(col("doc_id"),
+    val base = graft.CacheScope.retain(docs.select(col("doc_id"),
       split(col("text"), " ").as("toks"),
       greatest(length(replace(col("text"), lit(" "), lit(""))), lit(1))
         .as("tot")))
@@ -2162,12 +2161,12 @@ rep AS (
     }
     // pinned: the window stream feeds the per-gram count AND the
     // duplicated-coverage back-join
-    val wins = pin(ctx
+    val wins = graft.CacheScope.retain(ctx
       .select(col("doc_id"), explode(array(winCols: _*)).as("w"))
       .select(col("doc_id"), col("w.n").as("n"), col("w.pos").as("pos"),
         col("w.gram").as("gram"))
       .filter(col("gram").isNotNull))
-    val cnts = pin(
+    val cnts = graft.CacheScope.retain(
       wins.groupBy("doc_id", "n", "gram").agg(count(lit(1)).as("c")))
     val topA = cnts.filter(col("n") <= RepTopNs.max)
       .groupBy("doc_id", "n")
@@ -2200,7 +2199,7 @@ rep AS (
     // prefix sums of token lengths: chars([lo, hi]) = cum[hi]-cum[lo-1];
     // pinned — the island pricing joins it twice (hi and lo-1) and
     // Spark has no common-subplan reuse above the exchange
-    val cums = pin(base.select(col("doc_id"),
+    val cums = graft.CacheScope.retain(base.select(col("doc_id"),
         posexplode(col("toks")).as(Seq("p0", "tok")))
       .select(col("doc_id"), (col("p0") + 1).as("p"),
         length(col("tok")).cast("long").as("l"))
@@ -2280,18 +2279,17 @@ rep AS (
     * shuffling on (doc, line-text) hashes — linear, no window
     * function, no driver action.
     */
-  def lineRepetitionSignalsOf(docs: DataFrame,
-      pin: DataFrame => DataFrame = graft.CacheScope.retain): DataFrame = {
+  def lineRepetitionSignalsOf(docs: DataFrame): DataFrame = {
     // The line/paragraph arrays are interpreted HOFs (no codegen), and
     // projection collapse INLINES every reference to a derived column —
     // left as one chained plan, the lines -> ls -> augmented-lines ->
     // paras chain re-evaluates the line-building transform ~10x per
     // row across the two dupFrac legs (measured: 10.3 s of q158's
     // 9.9 s suite cost at sf0.1; 0.9 s with the barriers). Two
-    // pinned row-count-preserving caches fix each HOF result so it
+    // retained row-count-preserving caches fix each HOF result so it
     // is computed exactly once per row; downstream references then
     // slice/concat the MATERIALIZED array, which is cheap.
-    val lined = pin(docs
+    val lined = graft.CacheScope.retain(docs
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .withColumn("L", (lit(3) + col("doc_id") % 5).cast("int"))
       .withColumn("P", (lit(2) + col("doc_id") % 3).cast("int"))
@@ -2300,7 +2298,7 @@ rep AS (
       .select(col("doc_id"), col("P"), expr(
         """transform(sequence(0, nlines - 1),
            j -> array_join(slice(toks, j * L + 1, L), ' '))""").as("lines0")))
-    val base = pin(lined
+    val base = graft.CacheScope.retain(lined
       .select(col("doc_id"), col("P"), expr(
         s"""CASE WHEN doc_id % $RepAugLineEvery = 0
             THEN concat(lines0, slice(lines0, 1, P),
@@ -2335,22 +2333,18 @@ rep AS (
     * sink call it on the real text — a real arrival must never be
     * dropped because test scaffolding appended a synthetic repeat.
     *
-    * `pin` injects the evaluation barriers the two halves need (each
-    * derived frame is read by 2+ consumers, and the line half's
-    * interpreted HOFs re-evaluate ~10x without one): batch queries use
-    * the default [[graft.CacheScope.retain]] (the harness flushes it);
-    * a `foreachBatch` caller MUST pass a local-persist pin and
-    * unpersist after its actions — retain inside a stream pins one
-    * frame per micro-batch forever (see Streams.curationIngestBatch
-    * for the canonical stream-side pin).
+    * The two halves retain their evaluation barriers through
+    * [[graft.CacheScope.retain]] (each derived frame is read by 2+
+    * consumers, and the line half's interpreted HOFs re-evaluate ~10x
+    * without one), so the barriers live as long as the caller's
+    * CacheScope lifetime: the query, or the micro-batch's scope.
     */
-  def repetitionGate(docs: DataFrame,
-      pin: DataFrame => DataFrame = graft.CacheScope.retain): DataFrame = {
+  def repetitionGate(docs: DataFrame): DataFrame = {
     val sigCols = (RepTopNs.map(n => s"top_${n}_frac")
       ++ RepDupNs.map(n => s"dup_${n}_frac")
       ++ Seq("dup_line_frac", "dup_para_frac")).map(col)
-    repetitionSignalsOf(docs, pin)
-      .join(lineRepetitionSignalsOf(docs, pin), Seq("doc_id"))
+    repetitionSignalsOf(docs)
+      .join(lineRepetitionSignalsOf(docs), Seq("doc_id"))
       .select(col("doc_id") +: sigCols :+
         (col("keep_ngram") && col("keep_line")).as("keep_repetition"): _*)
   }

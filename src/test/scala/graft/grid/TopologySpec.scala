@@ -149,17 +149,16 @@ class TopologySpec extends AnyFunSuite {
   test("graphComponents driver fast path matches the distributed loop") {
     // keyed edge list with a LONG chain (forces many loop iterations),
     // a star, a triangle, and an isolated pair across two key groups —
-    // the gate conf toggles which solver runs; labels must be identical
+    // graphComponents takes the driver leg at this size; the
+    // distributed loop is called directly. Labels must be identical
     val chain = (1L until 40L).map(i => (0, i, i + 1))
     val star = Seq((0, 100L, 101L), (0, 100L, 102L), (0, 100L, 103L))
     val other = Seq((1, 5L, 9L), (1, 9L, 2L), (1, 50L, 60L), (1, 60L, 50L))
     val edges = (chain ++ star ++ other).toDF("k", "s", "t")
-    def solve() = Topology.graphComponents(edges, Seq("k"))
+    val loop = Topology.graphCCLoop(edges, Seq("k"), maxIter = 1000)
       .as[(Int, Long, Long)].collect().toSet
-    spark.conf.set("spark.graft.cc.maxDriverEdges", "0") // force the loop
-    val loop = try solve()
-    finally spark.conf.set("spark.graft.cc.maxDriverEdges", "2000000")
-    val drv = solve()
+    val drv = Topology.graphComponents(edges, Seq("k"))
+      .as[(Int, Long, Long)].collect().toSet
     graft.CacheScope.flush(spark)
     assert(drv == loop, "driver union-find and distributed loop differ")
     // spot-check semantics: chain collapses to min id 1, key groups stay apart

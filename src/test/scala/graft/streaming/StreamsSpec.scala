@@ -408,47 +408,38 @@ class StreamsSpec extends AnyFunSuite {
     }
     // the hand-composed batch twin of one sink iteration (same stage
     // order as the sink: scrub -> quality -> repetition gate -> dedup)
-    def batchStep(b: Seq[(Long, String)], ng: String, dd: String,
-        bid: Long): Seq[(Long, Long, String, Long)] = {
-      val pins = scala.collection.mutable.Buffer
-        .empty[org.apache.spark.sql.DataFrame]
-      val pin: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame =
-        df => { val p = df.persist(); pins += p; p }
-      val cleaned = DedupQueries.spanScrubAgainstIndex(spark,
-          b.toDF("doc_id", "text"), ng, w)
-        .select(col("doc_id"), col("clean_text").as("text"),
-          col("n_removed")).persist()
-      try {
-        val flagged = graft.text.TextQueries.withQualityFlags(cleaned)
-          .select("doc_id", "text", "n_removed", "keep")
-        val qSurv = flagged.filter(col("keep")).select("doc_id", "text")
-        val rep = graft.text.TextQueries.repetitionGate(qSurv, pin)
-          .select(col("doc_id"), col("keep_repetition"))
-        val survivors = qSurv.join(rep, "doc_id")
-          .filter(col("keep_repetition")).select("doc_id", "text")
-        val decisions = DedupQueries.ingestBatchDecisions(survivors, dd)
-        val audit = flagged
-          .join(rep, Seq("doc_id"), "left")
-          .join(decisions, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("n_removed"),
-            when(!col("keep"), lit("quality_drop"))
-              .when(!col("keep_repetition"), lit("repetition_drop"))
-              .otherwise(col("status")).as("status"),
-            lit(bid).as("batch_id"))
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-            r.getLong(3))).toSeq
-        val admitted = survivors.join(
-          decisions.filter(col("status") === "added").select("doc_id"),
-          "doc_id").localCheckpoint(true)
-        DedupQueries.advanceNgramIndex(admitted, w, ng)
-        DedupQueries.advanceDedupIndex(admitted, dd)
-        audit
-      } finally {
-        cleaned.unpersist()
-        pins.foreach(_.unpersist()): Unit
-      }
+    def batchStep(b: Seq[(Long, String)], ng: String, dd: String, bid: Long)
+        : Seq[(Long, Long, String, Long)] = graft.CacheScope.scoped {
+      val cleaned = graft.CacheScope.retain(
+        DedupQueries.spanScrubAgainstIndex(spark,
+            b.toDF("doc_id", "text"), ng, w)
+          .select(col("doc_id"), col("clean_text").as("text"),
+            col("n_removed")))
+      val flagged = graft.text.TextQueries.withQualityFlags(cleaned)
+        .select("doc_id", "text", "n_removed", "keep")
+      val qSurv = flagged.filter(col("keep")).select("doc_id", "text")
+      val rep = graft.text.TextQueries.repetitionGate(qSurv)
+        .select(col("doc_id"), col("keep_repetition"))
+      val survivors = qSurv.join(rep, "doc_id")
+        .filter(col("keep_repetition")).select("doc_id", "text")
+      val decisions = DedupQueries.ingestBatchDecisions(survivors, dd)
+      val audit = flagged
+        .join(rep, Seq("doc_id"), "left")
+        .join(decisions, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("n_removed"),
+          when(!col("keep"), lit("quality_drop"))
+            .when(!col("keep_repetition"), lit("repetition_drop"))
+            .otherwise(col("status")).as("status"),
+          lit(bid).as("batch_id"))
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
+          r.getLong(3))).toSeq
+      val admitted = survivors.join(
+        decisions.filter(col("status") === "added").select("doc_id"),
+        "doc_id").localCheckpoint(true)
+      DedupQueries.advanceNgramIndex(admitted, w, ng)
+      DedupQueries.advanceDedupIndex(admitted, dd)
+      audit
     }
     val (ngB, ddB) = freshIdx("batch")
     val want = (batchStep(b1, ngB, ddB, 0L) ++ batchStep(b2, ngB, ddB, 1L))
