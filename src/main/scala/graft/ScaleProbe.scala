@@ -15,7 +15,10 @@ import org.apache.spark.sql.functions._
   * mega-bucket case for LSH).
   *
   * Measured on local[32] at sf0.1 (5,000 documents):
-  *   clusters  (star-contracted CC)  k=1: ~7s warm   k=10: ~8s  — linear
+  *   clusters  (star-contracted CC)  k=1: ~7s   k=10: ~8s  — linear
+  *     (timed before the warm-up call existed, so k=1 there includes
+  *     start-up; with it, at sf0.001 on local[4]: warmup 5.7 s, then
+  *     k=1 1.4 s, k=4 2.0 s, k=10 3.1 s for 500 / 2,000 / 5,000 docs)
   *   minhash_pairs (pairwise est graph) k=1: 6.1M rows, k=4: 97.9M rows
   *     — exactly 16x for 4x docs: the k^2 pair blowup BY CONSTRUCTION.
   * That contrast is the design argument for [[graft.dedup.DedupQueries
@@ -55,15 +58,21 @@ object ScaleProbe {
     def corpus(k: Int) = (0 until k).map { i =>
       base.select((col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"), col("text"))
     }.reduce(_ unionAll _)
-    def probe(name: String, ks: Seq[Int])(f: org.apache.spark.sql.DataFrame => Long): Unit =
-      for (k <- ks) {
+    def probe(name: String, ks: Seq[Int])(f: org.apache.spark.sql.DataFrame => Long): Unit = {
+      def run(label: String, k: Int): Unit = {
         val c = corpus(k)
         val t0 = System.nanoTime()
         val n = f(c)
         CacheScope.flush(spark)
         val dt = (System.nanoTime() - t0) / 1e9
-        println(f"[scale] $name k=$k docs=${nBase * k} rows=$n time=$dt%.2f s")
+        println(f"[scale] $name $label docs=${nBase * k} rows=$n time=$dt%.2f s")
       }
+      // one call at the first k before the rungs, printed as `warmup`:
+      // every rung is then a warm run (JIT and codegen paid), so the
+      // first rung measures scaling, not start-up
+      run(s"warmup k=${ks.head}", ks.head)
+      ks.foreach(k => run(s"k=$k", k))
+    }
     val only = sys.env.get("SPARK_GRAFT_PROBE").map(_.split(',').toSeq)
     def enabled(name: String) = only.forall(_.exists(name.contains))
     if (enabled("clusters")) probe("clusters", Seq(1, 4, 10))(c =>

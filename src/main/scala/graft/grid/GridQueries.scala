@@ -25,6 +25,13 @@ object GridQueries {
     * same scan, so one cache serves them all (the grid is tiny relative
     * to executor memory at any SF — it is a fixed 256-cell tiling of
     * events).
+    *
+    * The memo is hash-partitioned by `it` (AQE sizes the partition
+    * count). A plane is always NZ x NX = 256 cells, so one plane per task
+    * is bounded at any SF, and `HashPartitioning(it)` satisfies every
+    * per-plane operator downstream — windows over (it, iz) / (it, ix),
+    * `groupBy`/`Window.partitionBy("it")` — which then read the cache on
+    * every core with no exchange. Never re-partition it downstream.
     */
   def grid(s: SparkSession, d: String): DataFrame =
     graft.CacheScope.memo(s, s"grid:$d") {
@@ -46,6 +53,7 @@ object GridQueries {
         .withColumn("t", col("it").cast("double"))
         .withColumn("z", col("iz") * Dz)
         .withColumn("x", col("ix") * Dx)
+        .repartition(col("it"))
     }
 
   /** DuckDB CTE mirroring [[grid]] exactly. */

@@ -18,8 +18,11 @@ import org.apache.spark.sql.expressions.Window
   *    independent fills (one per X point / per current-sheet region) run
   *    in ONE driver loop — the reference's nested Python loops
   *    (vpicdataset.py:444, 506, 514) become tags in a single plan.
+  *
+  * Serializable so that task closures calling its private helpers (the
+  * tile-local union-find) ship the module reference, not a failure.
   */
-object Topology {
+object Topology extends Serializable {
 
   /** Cells with all four corner values of `field`:
     * f00=(iz,ix), f01=(iz,ix+1), f10=(iz+1,ix), f11=(iz+1,ix+1).
@@ -550,7 +553,7 @@ object Topology {
   private def ccTiled(cells: DataFrame, nx: Int, dirs8: Boolean,
       keys: Seq[String], maxIter: Int, tile: Int,
       staticSingleTile: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types._
     val spark = cells.sparkSession
     val nk = keys.length
@@ -562,12 +565,14 @@ object Topology {
       :+ col("iz").cast("int") :+ col("ix").cast("int")): _*)
     val keyFields = sel.schema.fields.take(nk).toSeq
 
-    // 1. tile-local union-find. The tile shuffle stays in Tungsten: rows
-    // are hash-repartitioned and sorted by (keys, tz, tx) as a DataFrame
-    // (Exchange + sort operate on serialized rows), and only the
-    // post-shuffle streaming pass deserializes — holding ONE tile
-    // (<= tile^2 cells) on heap at a time, where the previous RDD
-    // groupByKey shuffled Java Rows and materialized per-tile Iterables.
+    // 1. tile-local union-find, one (keys, tz, tx) group at a time. The
+    // grouping asks for clustering by (keys, tz, tx) instead of forcing a
+    // repartition: an input already hash-partitioned by the keys (the
+    // grid memo, partitioned by `it`) is labeled where it lies, and any
+    // other input gets one Tungsten exchange + sort. Only the labeling
+    // deserializes, holding ONE tile (<= tile^2 cells) on heap at a time.
+    // A Dataset operator, not an RDD round trip: `.rdd` would make AQE
+    // execute the upstream stages when the frame is built.
     val withTile = sel
       .withColumn("tz", floor(col("iz").cast("double") / tile).cast("int"))
       .withColumn("tx", floor(col("ix").cast("double") / tile).cast("int"))
@@ -581,64 +586,50 @@ object Topology {
     val extentOpt =
       if (staticSingleTile) None else Some(new TileExtentAccumulator)
     extentOpt.foreach(spark.sparkContext.register(_, "cc tile extent"))
-    val labeledRdd = withTile
-      .repartition(gcols: _*).sortWithinPartitions(gcols: _*)
-      .rdd.mapPartitions { it =>
-        val bit = it.buffered
-        def gk(r: Row): Seq[Any] =
-          r.toSeq.take(nk) :+ r.getInt(nk + 2) :+ r.getInt(nk + 3)
-        new Iterator[Iterator[Row]] {
-          def hasNext: Boolean = bit.hasNext
-          def next(): Iterator[Row] = {
-            val k = gk(bit.head)
-            val kv = bit.head.toSeq.take(nk)
-            extentOpt.foreach(
-              _.add((bit.head.getInt(nk + 2), bit.head.getInt(nk + 3))))
-            val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-            while (bit.hasNext && gk(bit.head) == k) {
-              val r = bit.next()
-              val iz = r.getInt(nk); val ix = r.getInt(nk + 1)
-              // the static hint is a caller CONTRACT (the accumulator
-              // path demotes out-of-tile grids to the full solve; this
-              // path has no accumulator) — violating it must fail
-              // loudly, never silently split a component
-              if (staticSingleTile
-                  && (iz < 0 || iz >= tile || ix < 0 || ix >= tile))
-                throw new IllegalArgumentException(
-                  s"staticSingleTile CC received cell ($iz, $ix) outside" +
-                    s" [0, $tile) - caller's single-tile hint is wrong")
-              buf += ((iz, ix))
-            }
-            localLabels(buf, nx, offs).map { case (iz, ix, root) =>
-              // Seq[Any]: a bare Seq(iz, ix, root) would widen Int -> Long
-              Row.fromSeq(kv ++ Seq[Any](iz, ix, root))
-            }
-          }
-        }.flatten
-      }
     val labSchema = StructType(keyFields ++ Seq(
       StructField("iz", IntegerType), StructField("ix", IntegerType),
       StructField("root", LongType)))
+    val tileKey = StructType(
+      withTile.schema.fields.take(nk) ++ withTile.schema.fields.takeRight(2))
+    def labelTile(k: Row, rows: Iterator[Row]): Iterator[Row] = {
+      val kv = k.toSeq.take(nk)
+      extentOpt.foreach(_.add((k.getInt(nk), k.getInt(nk + 1))))
+      val cellsOfTile = rows.map { r =>
+        val iz = r.getInt(nk); val ix = r.getInt(nk + 1)
+        // the static hint is a caller CONTRACT (the accumulator path
+        // demotes out-of-tile grids to the full solve; this path has no
+        // accumulator) — violating it must fail loudly, never silently
+        // split a component
+        if (staticSingleTile && (iz < 0 || iz >= tile || ix < 0 || ix >= tile))
+          throw new IllegalArgumentException(
+            s"staticSingleTile CC received cell ($iz, $ix) outside" +
+              s" [0, $tile) - caller's single-tile hint is wrong")
+        (iz, ix)
+      }.toVector
+      localLabels(cellsOfTile, nx, offs).map { case (iz, ix, root) =>
+        // Seq[Any]: a bare Seq(iz, ix, root) would widen Int -> Long
+        Row.fromSeq(kv ++ Seq[Any](iz, ix, root))
+      }
+    }
+    val labeledLazy = withTile.groupBy(gcols: _*)
+      .as[Row, Row](Encoders.row(tileKey), Encoders.row(withTile.schema))
+      .flatMapGroups(labelTile _)(Encoders.row(labSchema))
     // STATIC single-tile path: when the caller knows every cell index
     // lies in [0, tile) on both axes (a grid with nz, nx <= tile), the
     // whole grid is ONE tile by construction — local roots ARE the
     // components and no boundary graph can exist. The labeling then
-    // stays a LAZY plan (shuffle + in-task union-find) that fuses into
+    // stays a LAZY plan (grouping + in-task union-find) that fuses into
     // whichever job consumes it: no eager localCheckpoint, no extent
-    // accumulator, no per-solve scheduling quantum. This is the
-    // composition-overhead fix for pipelines that chain several CC
-    // solves on toy-scale grids (g19: four solves = four eager jobs
-    // before this path); consumers that read the result twice must
-    // retain it, since there is no checkpoint to absorb a re-scan.
+    // accumulator, no job at construction. Consumers that read the
+    // result twice must retain it, since there is no checkpoint to
+    // absorb a re-scan.
     if (staticSingleTile)
-      return spark.createDataFrame(labeledRdd, labSchema)
-        .withColumn("comp", col("root"))
+      return labeledLazy.withColumn("comp", col("root"))
         .select((keys.map(col) :+ col("iz") :+ col("ix") :+ col("comp")): _*)
     val extent = extentOpt.get
     // localCheckpoint (not persist): the backing blocks are cleaned by the
     // ContextCleaner once unreferenced — no cache-manager pinning.
-    val labeled = spark.createDataFrame(labeledRdd, labSchema)
-      .localCheckpoint(true)
+    val labeled = labeledLazy.localCheckpoint(true)
 
     // 2. cross-tile edges between local roots (boundary cells only).
     // pmod/floor-division to agree with step 1's Math.floorDiv tiling on
@@ -711,7 +702,9 @@ object Topology {
 
   /** True when a grid with extents (nz, nx) provably fits one CC tile
     * (all indices in [0, tile) on both axes) — callers pass this as
-    * `staticSingleTile` to get the lazy, checkpoint-free solve.
+    * `staticSingleTile` to get the lazy, checkpoint-free solve. "Lazy"
+    * holds under AQE too: building the solve starts no Spark job; the
+    * labeling runs inside whichever action consumes it.
     */
   def fitsOneTile(nz: Int, nx: Int, tile: Int = 512): Boolean =
     nz <= tile && nx <= tile
@@ -891,11 +884,17 @@ object Topology {
     val segs = graft.CacheScope.retain(contourSegmentsAt(g0, psiField,
       levels.select(col("xid"), col("level"))))
     val segCells = segs.select("xid", "it", "iz", "ix").distinct()
+    // Both solves below are cut from their input's plan: the body joins
+    // each labeling back with its own input and keeps composing on the
+    // result, and on an uncut plan every later operator re-deduplicates
+    // the whole shared upstream in the analyzer (measured on g19: driver
+    // time outside jobs 4.6 s -> 10.1 s per call). Under AQE the cut runs
+    // the solve's shuffle stages when the frame is built, so building
+    // this body starts jobs; the lazy single-tile solve itself does not.
     val comp = connectedComponents8(segCells, nx, keys = Seq("xid", "it"),
-      staticSingleTile = fitsOneTile(nz, nx))
+      staticSingleTile = fitsOneTile(nz, nx)).localCheckpoint(eager = false)
     // endpoint distances to the owning X point. Pinned: consumed by
-    // both `keep` and `raster`, and on the lazy single-tile CC path a
-    // re-scan would re-run the contour-component labeling.
+    // both `keep` and `raster`.
     val pts = graft.CacheScope.retain(
       segs.join(comp, Seq("xid", "it", "iz", "ix"))
         .select(col("xid"), col("comp"),
@@ -975,10 +974,10 @@ object Topology {
       .filter(col("filled") === 0)
       .select("xid", "it", "iz", "ix", "touch_edge")
     // pinned: zcomp feeds both the interior test and the final member
-    // join; on the lazy single-tile CC path a re-scan would re-label.
+    // join.
     val zcomp = graft.CacheScope.retain(connectedComponents(
       zeros.select("xid", "it", "iz", "ix"), nx, keys = Seq("xid", "it"),
-      staticSingleTile = fitsOneTile(nz, nx))
+      staticSingleTile = fitsOneTile(nz, nx)).localCheckpoint(eager = false)
       .join(zeros, Seq("xid", "it", "iz", "ix")))
     val interior = zcomp.groupBy("xid", "comp")
       .agg(max(col("touch_edge") ||

@@ -2,6 +2,7 @@ package graft.grid
 
 import graft.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import GridQueries.{grid, gridCte, NZ, NX}
 
@@ -199,7 +200,8 @@ object TopologyQueries {
     Q("g13_connected_components",
       (s, d) => {
         val cells = grid(s, d).filter(col("b1") > 200).select("it", "iz", "ix")
-        Topology.connectedComponents(cells, NX)
+        Topology.connectedComponents(cells, NX,
+          staticSingleTile = Topology.fitsOneTile(NZ, NX))
           .orderBy("it", "iz", "ix")
       },
       Some(s"""WITH RECURSIVE $gridCte,
@@ -223,18 +225,18 @@ object TopologyQueries {
     Q("g14_region_extrema",
       (s, d) => {
         val g = grid(s, d)
-        // scoped persist: feeds the threshold aggregate AND the probe
-        // join. An unframed Window.partitionBy("it") would avoid the
-        // reuse but forces a whole time step through one task — at the
-        // 100 TB design point an `it` plane is billions of cells.
-        // CacheScope bounds the block lifetime to the query scope.
-        val mx = graft.CacheScope.retain(
-          GridOps.extremumFilter(g, "b1", NZ, NX, isMax = true, "fmax"))
-        val thr = mx.groupBy("it")
-          .agg((avg("fmax") + lit(1) * stddev_pop("fmax")).as("thr"))
-        val hot = mx.join(broadcast(thr), Seq("it"))
+        // The threshold is a per-plane window: a plane is always
+        // NZ x NX = 256 cells, and the grid memo is partitioned by `it`,
+        // so the window reads it with no exchange and the filter frame
+        // is scanned once.
+        val mx = GridOps.extremumFilter(g, "b1", NZ, NX, isMax = true, "fmax")
+        val plane = Window.partitionBy("it")
+        val hot = mx
+          .withColumn("thr", avg("fmax").over(plane)
+            + lit(1) * stddev_pop("fmax").over(plane))
           .filter(col("fmax") > col("thr")).select("it", "iz", "ix")
-        val comp = Topology.connectedComponents(hot, NX)
+        val comp = Topology.connectedComponents(hot, NX,
+          staticSingleTile = Topology.fitsOneTile(NZ, NX))
         val withV = comp.join(g.select("it", "iz", "ix", "b1"), Seq("it", "iz", "ix"))
         // ONE aggregation: max of (value, -pos) struct orders by value
         // first, then by highest -pos = lowest row-major position among

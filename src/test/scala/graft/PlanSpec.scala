@@ -138,6 +138,35 @@ class PlanSpec extends AnyFunSuite {
       s"3-D smoothing should shuffle at most 3 times, got $hashShuffles")
   }
 
+  test("g04 and g14 read the it-partitioned grid memo with no hash exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Plans extends AdaptiveSparkPlanHelper
+    // counted on the final adaptive plan's nodes, not its string: the
+    // cached relation's own repartition by `it` prints inline there
+    for (q <- Seq("g04_gradient", "g14_region_extrema")) {
+      val df = QueryRegistry.queries(q)(spark, sf)
+      df.collect()
+      val hash = Plans.collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec
+            if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+      }
+      assert(hash.isEmpty,
+        s"$q shuffles the grid again: ${hash.map(_.outputPartitioning)}")
+    }
+  }
+
+  test("g13 and g14 build with no Spark job: the single-tile CC stays lazy") {
+    import org.apache.spark.sql.graftbridge.ListenerBus
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    for (q <- Seq("g13_connected_components", "g14_region_extrema")) {
+      val jobs = ListenerBus.jobsDuring(spark.sparkContext)(
+        QueryRegistry.queries(q)(spark, sf))
+      assert(jobs == 0, s"$q started $jobs job(s) at construction")
+    }
+  }
+
   test("globalRank never re-shuffles: no window, no join, no hash exchange") {
     import org.apache.spark.sql.functions._
     val df = graft.relational.Ranking.globalRank(

@@ -146,6 +146,17 @@ class TopologySpec extends AnyFunSuite {
     }
   }
 
+  test("static single-tile CC construction starts no Spark job") {
+    import org.apache.spark.sql.graftbridge.ListenerBus
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val cells = (for (it <- 0 until 2; iz <- 0 until 24; ix <- 0 until 24
+      if ((iz * 37 + ix * 61 + it * 13) % 7) < 3)
+      yield (it, iz, ix)).toDF("it", "iz", "ix")
+    val jobs = ListenerBus.jobsDuring(spark.sparkContext)(
+      Topology.connectedComponents(cells, 24, staticSingleTile = true))
+    assert(jobs == 0, s"static single-tile CC started $jobs job(s)")
+  }
+
   test("graphComponents driver fast path matches the distributed loop") {
     // keyed edge list with a LONG chain (forces many loop iterations),
     // a star, a triangle, and an isolated pair across two key groups —
