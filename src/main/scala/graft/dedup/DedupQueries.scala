@@ -170,7 +170,7 @@ object DedupQueries {
     * per-row path (the streaming/arrival side). Rows are identical:
     * pos IS the band index.
     */
-  private[dedup] def bandsOf(sig: DataFrame): DataFrame = {
+  private[graft] def bandsOf(sig: DataFrame): DataFrame = {
     val buckets = (0 until NumHashes / BandRows).map { b =>
       val cols = (b * BandRows until (b + 1) * BandRows).map(i => col(s"h$i"))
       concat_ws(",", cols: _*)
@@ -237,16 +237,15 @@ object DedupQueries {
     * Row set and est_jaccard are identical to
     * verifiedPairsFrom(candidatesFromBands(bands), sig).
     *
-    * PRECONDITION (shared with the distinct()+verify path): the
-    * band and signature tables must be duplicate-ROW-free. Every
-    * serving flow satisfies it — indexes are built once (memoized
-    * builds) or advanced through FENCED batch commits, and compaction
-    * restores it otherwise. A pre-compaction artifact carrying
-    * unfenced-replay duplicate rows would multiply output pairs here
-    * (dup band rows pass the first-band predicate once each; dup sig
-    * rows fan the verify join out) — the OLD distinct()+verify path
-    * had the same sig-side fan-out, just one factor smaller; neither
-    * is a correct reader of a duplicated artifact.
+    * PRECONDITION (shared with [[verifiedPairsFrom]]): the signature
+    * table must be duplicate-ROW-free, and the band table derives from
+    * it. Every serving flow satisfies it: the served band table is
+    * `bandsOf` of the served signatures, and the signature component
+    * is built once (memoized builds) or advanced through FENCED batch
+    * commits, with compaction restoring it otherwise. Duplicate
+    * signature rows fan the verify join out (and their band rows each
+    * pass the first-band predicate), so a duplicated artifact has no
+    * correct reader on either path.
     */
   private[dedup] def verifiedPairsFromBands(bands: DataFrame,
       sig: DataFrame): DataFrame = {
@@ -294,18 +293,17 @@ object DedupQueries {
 
   /** Verified near-dup pairs SERVED FROM the persisted index at `path`
     * — the q117 discipline applied to the pair-graph dashboards
-    * (q112/q149): signatures and band buckets are columnar parquet
-    * reads, never re-derived from corpus text. Hash-identical to
+    * (q112/q149): signatures are a columnar parquet read, never
+    * re-derived from corpus text, and the band buckets are a per-row
+    * projection of them. Hash-identical to
     * [[minhashPairsOf]] over the same corpus (DedupIndexSpec pins the
     * parity); what changes is the suite's resident footprint — the
     * explode+tokenize+groupBy lineage runs once at build time instead
     * of being recomputed and re-retained by every dashboard query.
     */
   private[dedup] def pairsFromIndexUnsorted(s: SparkSession,
-      path: String): DataFrame = {
-    val sig = graft.CacheScope.retain(indexSignatures(s, path))
-    verifiedPairsFromBands(indexBands(s, path), sig)
-  }
+      path: String): DataFrame =
+    pairsFromSignaturesUnsorted(indexSignatures(s, path))
 
   def defs: Seq[Q] = Seq(
     // ---- exact dedup groups keyed by content hash. At scale: one shuffle
@@ -383,7 +381,7 @@ object DedupQueries {
     // The shingle -> minhash -> band pipeline runs ONCE into the
     // persisted shingle index ([[servedShingleDedupIndex]]); the
     // declared query serves the bucket-join + verify legs from its
-    // columnar signature/band tables (the q112/q149 discipline).
+    // columnar signature table (the q112/q149 discipline).
     Q("q51_shingle_minhash_pairs",
       (s, d) => pairsFromIndexUnsorted(s,
           servedShingleDedupIndex(s, Tables.documents(s, d), d))
@@ -547,10 +545,9 @@ object DedupQueries {
       (s, d) => {
         val docs = Tables.documents(s, d)
         // both policies serve from the SAME persisted shingle index as
-        // q51/q95 — the signature/band lineage is built once per corpus
+        // q51/q95 — the signature lineage is built once per corpus
         val idx = servedShingleDedupIndex(s, docs, d)
-        val sig = graft.CacheScope.retain(indexSignatures(s, idx))
-        val star = dedupClustersStarParts(docs, indexBands(s, idx), sig)
+        val star = dedupClustersStarFromIndex(docs, idx)
           .select(col("doc_id"), col("cluster").as("cs"))
         val ex = dedupClustersFromIndex(docs, idx)
           .select(col("doc_id"), col("cluster").as("ce"))
@@ -627,13 +624,14 @@ object DedupQueries {
         val docs = Tables.documents(s, d)
         val sigCorp = graft.CacheScope.retain(minhashSignaturesOf(
           docs.filter(col("doc_id") < NeardupArrivalSplit)))
-        incrementalIngest(docs, NeardupArrivalSplit, sigCorp, bandsOf(sigCorp))
+        incrementalIngest(docs, NeardupArrivalSplit, sigCorp)
       },
       Some(incrementalIngestOracleSql)),
 
     // ---- q117: the q110 ingest flow SERVED FROM THE PERSISTED INDEX
-    // artifact — corpus signatures and band entries read back from the
-    // parquet the build step wrote, never recomputed from raw text.
+    // artifact — corpus signatures read back from the parquet the
+    // build step wrote (band entries derived from them), never
+    // recomputed from raw text.
     // This is the artifact lifecycle a 100 TB deployment runs: ONE
     // index-build job per corpus snapshot ([[buildDedupIndex]],
     // the fit-once shape of fitIvfQuantizer), then every ingest batch /
@@ -650,8 +648,7 @@ object DedupQueries {
         val docs = Tables.documents(s, d)
         val idx = servedDedupIndex(s, docs, d)
         incrementalIngest(docs, NeardupArrivalSplit,
-          graft.CacheScope.retain(indexSignatures(s, idx)),
-          indexBands(s, idx))
+          graft.CacheScope.retain(indexSignatures(s, idx)))
       },
       Some(incrementalIngestOracleSql)),
 
@@ -661,7 +658,7 @@ object DedupQueries {
     // committed (eager localCheckpoint — the in-engine stand-in for a
     // pipeline's batch-output commit, which must precede the index
     // mutation); [[advanceDedupIndex]] appends the admitted docs'
-    // signatures/bands; phase 2 ingests batch 2 (ids >= split2)
+    // signatures; phase 2 ingests batch 2 (ids >= split2)
     // against the ADVANCED artifact, so a batch-2 arrival drops
     // against original corpus AND admitted batch-1 docs — but never
     // against a batch-1 doc that was itself dropped. Dropped arrivals
@@ -679,7 +676,7 @@ object DedupQueries {
     // drop or de-prioritize; one aggregation over the banded pair
     // graph, SERVED from the persisted full-corpus dedup index
     // ([[servedFullDedupIndex]]) — the dashboard reads columnar
-    // signature/band parquet instead of being the suite's third
+    // signature parquet instead of being the suite's third
     // from-scratch LSH recompute (retained recomputes like these
     // were measured detonating 4-10x under heap pressure).
     Q("q112_source_overlap",
@@ -937,15 +934,16 @@ object DedupQueries {
     // by hand. One extra equi-join of the pair list against the band
     // table per side — pair-bounded, never corpus-quadratic; the band
     // list is emitted as a sorted comma string so both engines hash
-    // identically. Signatures AND bands come from the persisted
-    // full-corpus index (the q117 serve discipline): the retained
-    // frames here are cheap columnar parquet reads, not a fourth
-    // resident copy of the tokenize+hash lineage.
+    // identically. Signatures come from the persisted full-corpus
+    // index (the q117 serve discipline) and the bands are a per-row
+    // projection of them: the retained frame is a cheap columnar
+    // parquet read, not a fourth resident copy of the tokenize+hash
+    // lineage.
     Q("q149_neardup_explain",
       (s, d) => {
         val idx = servedFullDedupIndex(s, Tables.documents(s, d), d)
         val sig = graft.CacheScope.retain(indexSignatures(s, idx))
-        val bands = indexBands(s, idx)
+        val bands = bandsOf(sig)
         // ONE band-collision join, immediately rolled up to PAIR
         // granularity — the aggregated evidence rows feed both the
         // candidate list and the final join, so the band-granularity
@@ -1522,11 +1520,11 @@ object DedupQueries {
 
   def advanceNgramIndex(admitted: DataFrame, w: Int, root: String,
       batchId: Option[Long] = None): Unit =
-    graft.sources.ArtifactVersions.advance(root, batchId,
-      windowHashesOf(admitted, w).select("h").distinct())("grams" -> identity)
+    graft.sources.ArtifactVersions.advance(root, "grams", batchId)(
+      windowHashesOf(admitted, w).select("h").distinct())
 
   def compactNgramIndex(s: SparkSession, root: String): Unit =
-    graft.sources.ArtifactVersions.compact(s, root, Seq("grams"))
+    graft.sources.ArtifactVersions.compact(s, root, "grams")
 
   /** Scrub arrivals against the persisted index: a window is removable
     * iff its hash EXISTS in the artifact (left-semi join — arrival-side
@@ -1769,13 +1767,14 @@ object DedupQueries {
     * bucket. Star contraction on the intra-batch leg (q50's starEdges
     * shape): groupBy-min combines map-side; a degenerate mega-bucket
     * hits the join as an AQE-splittable skewed key, not a |bucket|²
-    * blowup. package-private so DedupIndexSpec can pin the policy's
-    * recall contract on crafted signatures.
+    * blowup. The corpus band table is `bandsOf(sigCorp)`.
+    * package-private so DedupIndexSpec can pin the policy's recall
+    * contract on crafted signatures.
     */
   private[dedup] def ingestDupArrivals(sigArr: DataFrame, arrBands: DataFrame,
-      sigCorp: DataFrame, corpBands: DataFrame): DataFrame = {
+      sigCorp: DataFrame): DataFrame = {
     val candCorp = arrBands
-      .join(corpBands
+      .join(bandsOf(sigCorp)
           .select(col("doc_id").as("prior_doc"), col("band"), col("bucket")),
         Seq("band", "bucket"))
       .select(col("doc_id").as("arr_doc"), col("prior_doc"))
@@ -1793,17 +1792,17 @@ object DedupQueries {
       .select(col("arr_doc").as("doc_id")).distinct()
   }
 
-  /** The q110/q117 ingest flow given the corpus-side signature/band
-    * tables — recomputed from text (q110) or read from the persisted
-    * index artifact (q117). Per-row signatures ONLY on the arrival side
+  /** The q110/q117 ingest flow given the corpus-side signature table —
+    * recomputed from text (q110) or read from the persisted index
+    * artifact (q117). Per-row signatures ONLY on the arrival side
     * (the streaming shape — zero shuffles before the band join).
     */
   private def incrementalIngest(docs: DataFrame, split: Long,
-      sigCorp: DataFrame, corpBands: DataFrame): DataFrame = {
+      sigCorp: DataFrame): DataFrame = {
     val sigArr = graft.CacheScope.retain(
       signaturesPerRow(docs.filter(col("doc_id") >= split)))
     val arrBands = graft.CacheScope.retain(bandsOf(sigArr))
-    val dupArrivals = ingestDupArrivals(sigArr, arrBands, sigCorp, corpBands)
+    val dupArrivals = ingestDupArrivals(sigArr, arrBands, sigCorp)
     docs.filter(col("doc_id") < split)
       .select(col("doc_id"), lit("existing").as("status"))
       .unionAll(docs.filter(col("doc_id") >= split).select("doc_id")
@@ -1853,8 +1852,7 @@ object DedupQueries {
     buildDedupIndex(docs.filter(col("doc_id") < split1), idx)
     val phase1 = incrementalIngest(
       docs.filter(col("doc_id") < split2), split1,
-      graft.CacheScope.retain(indexSignatures(s, idx)),
-      indexBands(s, idx)).localCheckpoint(true)
+      graft.CacheScope.retain(indexSignatures(s, idx))).localCheckpoint(true)
     advanceDedupIndex(
       docs.join(phase1.filter(col("status") === "added"
           && col("doc_id") >= split1).select("doc_id"),
@@ -1863,8 +1861,7 @@ object DedupQueries {
       signaturesPerRow(docs.filter(col("doc_id") >= split2)))
     val dup2 = ingestDupArrivals(sigArr2,
       graft.CacheScope.retain(bandsOf(sigArr2)),
-      graft.CacheScope.retain(indexSignatures(s, idx)),
-      indexBands(s, idx))
+      graft.CacheScope.retain(indexSignatures(s, idx)))
     phase1.unionAll(
         docs.filter(col("doc_id") >= split2).select("doc_id")
           .join(dup2, Seq("doc_id"), "left_anti")
@@ -1929,10 +1926,13 @@ object DedupQueries {
          ORDER BY doc_id"""
   }
 
-  /** The dedup index ([[graft.sources.ArtifactVersions]] components
-    * `signatures` (doc_id, h0..h15) and `bands` (doc_id, band,
-    * bucket)): every later dedup/ingest query reads these columnar
-    * tables instead of re-tokenizing and re-hashing the corpus text.
+  /** The dedup index (one [[graft.sources.ArtifactVersions]]
+    * component, `signatures` (doc_id, h0..h15)): every later
+    * dedup/ingest query reads this columnar table instead of
+    * re-tokenizing and re-hashing the corpus text, and derives the band
+    * buckets (doc_id, band, bucket) as [[bandsOf]] of it. The bands are
+    * not persisted: a per-row projection plus explode of the signature
+    * row is cheaper to derive than to write, list and scan.
     */
   def buildDedupIndex(docs: DataFrame, path: String): Unit =
     buildDedupIndexFrom(minhashSignaturesOf(docs), path)
@@ -1941,11 +1941,8 @@ object DedupQueries {
     * shingle pipelines share one artifact layout, so every serve-side
     * reader works on either.
     */
-  def buildDedupIndexFrom(signatures: DataFrame, path: String): Unit = {
-    val sig = graft.CacheScope.retain(signatures)
-    graft.sources.ArtifactVersions.build(path,
-      "signatures" -> sig, "bands" -> bandsOf(sig))
-  }
+  def buildDedupIndexFrom(signatures: DataFrame, path: String): Unit =
+    graft.sources.ArtifactVersions.build(path, "signatures" -> signatures)
 
   /** One micro-batch of the STREAMING ingest path
     * (Streams.nearDupIngestSink): admission decisions for `batch`
@@ -1968,8 +1965,7 @@ object DedupQueries {
       // as a near-dup from one that never arrived; only the 'added'
       // side feeds the index advance. (ingestDupArrivals returns
       // distinct doc_ids, so the left join cannot fan out.)
-      val dups = ingestDupArrivals(sigArr, arrBands, idxSig,
-        indexBands(s, path))
+      val dups = ingestDupArrivals(sigArr, arrBands, idxSig)
       batch.select("doc_id")
         .join(dups.withColumn("__dup", lit(true)), Seq("doc_id"), "left")
         .select(col("doc_id"),
@@ -1978,14 +1974,14 @@ object DedupQueries {
         .localCheckpoint(true)
     }
 
-  /** Append the admitted docs' signature and band rows. The caller
+  /** Append the admitted docs' signature rows. The caller
     * commits (materializes) the admitting batch's own reads of the
     * artifact before advancing — q119 with an eager localCheckpoint.
     */
   def advanceDedupIndex(admitted: DataFrame, path: String,
       batchId: Option[Long] = None): Unit =
-    graft.sources.ArtifactVersions.advance(path, batchId,
-      signaturesPerRow(admitted))("signatures" -> identity, "bands" -> bandsOf)
+    graft.sources.ArtifactVersions.advance(path, "signatures", batchId)(
+      signaturesPerRow(admitted))
 
   /** An index served once per corpus per JVM, keyed on the documents'
     * content: bench run 1 pays the build, later runs measure serving.
@@ -2021,15 +2017,11 @@ object DedupQueries {
   def indexSignatures(s: SparkSession, path: String): DataFrame =
     graft.sources.ArtifactVersions.read(s, path, "signatures")
 
-  def indexBands(s: SparkSession, path: String): DataFrame =
-    graft.sources.ArtifactVersions.read(s, path, "bands")
-
   /** A doc's rows are pure functions of its text, so the distinct
     * rewrite keeps the served pair graph (DedupIndexSpec pins it).
     */
   def compactDedupIndex(s: SparkSession, path: String): Unit =
-    graft.sources.ArtifactVersions.compact(
-      s, path, Seq("signatures", "bands"))
+    graft.sources.ArtifactVersions.compact(s, path, "signatures")
 
   /** CTE chain computing MinHash signatures (`sig`) and their band
     * buckets (`bands`) — the shared head of every LSH oracle.
@@ -2305,12 +2297,11 @@ object DedupQueries {
     * sparse — shingles).
     *
     * SERVED from the persisted full-corpus index (the q112/q149
-    * discipline): the star edges come from the artifact's band parquet
-    * and verification from its signature parquet — the
-    * explode+tokenize+hash lineage runs once at build time, shared
-    * with every other full-corpus LSH dashboard, instead of being
-    * recomputed and re-retained per query (DedupIndexSpec pins
-    * served ≡ recomputed cluster-for-cluster).
+    * discipline): the star edges and the verification both read the
+    * artifact's signature parquet — the tokenize+hash lineage runs
+    * once at build time, shared with every other full-corpus LSH
+    * dashboard, instead of being recomputed and re-retained per query
+    * (DedupIndexSpec pins served ≡ recomputed cluster-for-cluster).
     */
   def dedupClusters(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -2352,22 +2343,13 @@ object DedupQueries {
       graft.CacheScope.retain(minhashSignaturesOf(docs)))
 
   /** The star-contracted policy over caller-supplied signatures (token
-    * or shingle unit) — `sig` is read twice (edges + verification), so
-    * callers should pass a retained/persisted frame.
+    * or shingle unit, recomputed or read from an index); the band
+    * table is `bandsOf(sig)`. `sig` feeds the edges and both sides of
+    * the verify join, so callers pass a retained frame.
     */
-  private def dedupClustersStarFrom(docs: DataFrame, sig: DataFrame): DataFrame =
-    dedupClustersStarParts(docs, bandsOf(sig), sig)
-
-  /** The star policy over caller-supplied band and signature tables —
-    * the shared core of the recompute path ([[dedupClustersStarFrom]],
-    * which derives bands from the signatures) and the artifact-served
-    * path ([[dedupClustersStarFromIndex]], which reads both tables as
-    * columnar parquet). `sig` feeds both sides of the verify join, so
-    * callers pass a retained frame.
-    */
-  private[dedup] def dedupClustersStarParts(docs: DataFrame,
-      bands: DataFrame, sig: DataFrame): DataFrame = {
-    val se = starEdgesFromBands(bands)
+  private def dedupClustersStarFrom(docs: DataFrame,
+      sig: DataFrame): DataFrame = {
+    val se = starEdgesFromBands(bandsOf(sig))
     val a = sig.as("a"); val b = sig.as("b")
     val agree = agreeExpr("a", "b")
     val edges = se.join(a, col("s") === col("a.doc_id"))
@@ -2377,16 +2359,14 @@ object DedupQueries {
     clustersFromEdges(docs, edges)
   }
 
-  /** The q50/q99 serve path: star-contracted clusters with both the
-    * band and signature tables read from the persisted index at
-    * `path` (the star twin of [[dedupClustersFromIndex]]).
+  /** The q50/q99/q104 serve path: star-contracted clusters over the
+    * signatures of the persisted index at `path` (the star twin of
+    * [[dedupClustersFromIndex]]).
     */
   private[dedup] def dedupClustersStarFromIndex(docs: DataFrame,
-      path: String): DataFrame = {
-    val s = docs.sparkSession
-    dedupClustersStarParts(docs, indexBands(s, path),
-      graft.CacheScope.retain(indexSignatures(s, path)))
-  }
+      path: String): DataFrame =
+    dedupClustersStarFrom(docs,
+      graft.CacheScope.retain(indexSignatures(docs.sparkSession, path)))
 
   /** Exact pairwise-threshold clustering: CC over the [[minhashPairs]]
     * est>=0.5 graph built from `signatures`; docs with no near-dup pair

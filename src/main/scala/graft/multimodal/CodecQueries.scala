@@ -1256,7 +1256,7 @@ object CodecQueries {
     // ---- q171: IMAGE NEAR-DUP INGEST from the PERSISTED phash index
     // — the image-side q117: the corpus's PPM variants (ids ≡ 0 mod 6,
     // below the cutoff) are hashed ONCE into the artifact
-    // (hashes + bands components), then the arriving PNG variants
+    // (its `hashes` component), then the arriving PNG variants
     // (ids ≡ 3 mod 6) are gated against it: banded candidates
     // (pigeonhole-complete at the verify threshold) → exact hamming
     // verify → `dup` with the lowest matching corpus doc, or `added`.

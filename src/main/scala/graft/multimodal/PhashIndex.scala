@@ -5,11 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** PERSISTED perceptual-hash index — the image-side twin of the dedup
   * index: how a multimodal corpus keeps itself near-dup-free at ingest
-  * without ever re-hashing the corpus. [[graft.sources.ArtifactVersions]]
-  * components:
-  *
-  *   - `hashes`: (doc_id, hash) — one 56-bit dHash per image
-  *   - `bands`:  (doc_id, band, v) — the 4 x 14-bit LSH bands
+  * without ever re-hashing the corpus. Its one
+  * [[graft.sources.ArtifactVersions]] component is `hashes`: (doc_id,
+  * hash), one 56-bit dHash per image. The 4 x 14-bit LSH band table
+  * (doc_id, band, v) is [[bandsOf]] of it, derived at read time.
   *
   * Scale shape: ingest work is arrival-side only — decode+hash per
   * arrival, one band equi-join against the index, hamming verify
@@ -27,26 +26,20 @@ object PhashIndex {
       .toDF("doc_id", "band", "v")
   }
 
-  def buildPhashIndex(hashes: DataFrame, path: String): Unit = {
-    val h = graft.CacheScope.retain(hashes)
-    graft.sources.ArtifactVersions.build(path,
-      "hashes" -> h, "bands" -> bandsOf(h))
-  }
+  def buildPhashIndex(hashes: DataFrame, path: String): Unit =
+    graft.sources.ArtifactVersions.build(path, "hashes" -> hashes)
 
   def indexHashes(s: SparkSession, path: String): DataFrame =
     graft.sources.ArtifactVersions.read(s, path, "hashes")
 
-  def indexBands(s: SparkSession, path: String): DataFrame =
-    graft.sources.ArtifactVersions.read(s, path, "bands")
-
   /** Advance with admitted images' (doc_id, hash) rows. */
   def advancePhashIndex(admitted: DataFrame, path: String,
       batchId: Option[Long] = None): Unit =
-    graft.sources.ArtifactVersions.advance(path, batchId,
-      admitted.select("doc_id", "hash"))("hashes" -> identity, "bands" -> bandsOf)
+    graft.sources.ArtifactVersions.advance(path, "hashes", batchId)(
+      admitted.select("doc_id", "hash"))
 
   def compactPhashIndex(s: SparkSession, path: String): Unit =
-    graft.sources.ArtifactVersions.compact(s, path, Seq("hashes", "bands"))
+    graft.sources.ArtifactVersions.compact(s, path, "hashes")
 
   /** Admission decisions for arriving image hashes against the
     * persisted index: banded candidates (pigeonhole-complete at the
@@ -63,7 +56,7 @@ object PhashIndex {
     val arr = graft.CacheScope.retain(arrivals.select("doc_id", "hash"))
     val idxH = graft.CacheScope.retain(indexHashes(s, path))
     val cand = bandsOf(arr).as("a")
-      .join(indexBands(s, path).as("c"),
+      .join(bandsOf(idxH).as("c"),
         col("a.band") === col("c.band") && col("a.v") === col("c.v"))
       .select(col("a.doc_id").as("doc_id"),
         col("c.doc_id").as("corpus_doc"))

@@ -2002,9 +2002,9 @@ object SimilarityQueries {
     */
   def advanceIvfIndex(arrivals: DataFrame, path: String,
       batchId: Option[Long] = None): Unit =
-    graft.sources.ArtifactVersions.advance(path, batchId, arrivals)(
-      "assignments" -> (a => assignToCentroids(a,
-        indexCentroids(a.sparkSession, path))))
+    graft.sources.ArtifactVersions.advance(path, "assignments", batchId)(
+      assignToCentroids(arrivals,
+        indexCentroids(arrivals.sparkSession, path)))
 
   def indexAssignments(s: SparkSession, path: String): DataFrame =
     graft.sources.ArtifactVersions.read(s, path, "assignments")
@@ -2018,7 +2018,7 @@ object SimilarityQueries {
     */
   def compactIvfIndex(s: SparkSession, path: String): Unit =
     graft.sources.ArtifactVersions.compact(
-      s, path, Seq("assignments"), copied = Seq("centroids"))
+      s, path, "assignments", copied = Seq("centroids"))
 
   /** The q118/q130 serve path: probe vec 0's nprobe=2 nearest lists from
     * the artifact's centroid table, candidates from its assignment

@@ -6,11 +6,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one lifecycle of every persisted artifact: the dedup index
-  * (`signatures`, `bands`), the n-gram window index (`grams`), the IVF
-  * index (`centroids`, `assignments`), the perceptual-hash index
-  * (`hashes`, `bands`) and the streaming sinks' versioned logs
-  * (`audit`, `stats`). This module is the only code that knows the
-  * layout:
+  * (`signatures`), the n-gram window index (`grams`), the IVF index
+  * (`centroids`, `assignments`), the perceptual-hash index (`hashes`)
+  * and the streaming sinks' versioned logs (`audit`, `stats`). This
+  * module is the only code that knows the layout:
   *
   * {{{
   *   root/CURRENT            names the live version
@@ -22,16 +21,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * first compaction moves them under v1); every index build publishes
   * a version.
   *
+  * An artifact persists a component only if no other component of the
+  * same artifact determines it row by row; readers derive everything
+  * else at read time (the dedup and phash band tables are `bandsOf` of
+  * the signature / hash component). So an advance appends to exactly
+  * one component, under one fence.
+  *
   *   - [[build]] writes every component into a fresh version dir and
   *     then publishes it. A reader that resolved the previous version
   *     keeps a consistent artifact: versions are never rewritten.
-  *   - [[advance]] appends rows to the live version's components: a
-  *     fenced [[BatchCommits.appendBatch]] per component with a batch
-  *     id (exactly-once under replay, each component fenced on its
-  *     own), a plain append without one. Appending per-row derivations
-  *     equals rebuilding from the advanced corpus, because every
-  *     component row is a pure function of one admitted row.
-  *   - [[compact]] rewrites the live components into the next version
+  *   - [[advance]] appends rows to one live component: a fenced
+  *     [[BatchCommits.appendBatch]] with a batch id (exactly-once under
+  *     replay), a plain append without one. Appending per-row
+  *     derivations equals rebuilding from the advanced corpus, because
+  *     every component row is a pure function of one admitted row.
+  *   - [[compact]] rewrites a live component into the next version
   *     (full-row distinct, so replayed byte-identical rows collapse and
   *     genuinely different rows survive), carries the newest fence
   *     markers, sweeps stranded staging dirs and publishes.
@@ -116,61 +120,49 @@ object ArtifactVersions {
     publish(root, v)
   }
 
-  /** Append `rows`' derivations to the live version's components. With
-    * a `batchId` each component commits fenced; `rows` is evaluated
-    * only if some component still lacks the batch, and is retained for
-    * the call (a scope of its own) when several components derive from
-    * it. Cached plans under `root` are refreshed after the append.
+  /** Append `rows` to the live version's `component`. With a
+    * `batchId` the append commits fenced, and a batch the component
+    * already holds evaluates nothing. Cached plans under `root` are
+    * refreshed after the append.
     */
-  def advance(root: String, batchId: Option[Long], rows: => DataFrame)(
-      components: (String, DataFrame => DataFrame)*): Unit = {
-    val dir = live(root)
-    val todo = components.filterNot { case (c, _) =>
-      batchId.exists(BatchCommits.isCommitted(s"$dir/$c", _))
-    }
-    if (todo.nonEmpty) {
-      val s = graft.CacheScope.scoped {
-        val r = if (todo.size > 1) graft.CacheScope.retain(rows) else rows
-        todo.foreach { case (c, derive) =>
-          batchId match {
-            case Some(id) =>
-              BatchCommits.appendBatch(derive(r), s"$dir/$c", id): Unit
-            case None => derive(r).write.mode("append").parquet(s"$dir/$c")
-          }
-        }
-        r.sparkSession
+  def advance(root: String, component: String, batchId: Option[Long])(
+      rows: => DataFrame): Unit = {
+    val dir = s"${live(root)}/$component"
+    if (!batchId.exists(BatchCommits.isCommitted(dir, _))) {
+      val r = rows
+      batchId match {
+        case Some(id) => BatchCommits.appendBatch(r, dir, id): Unit
+        case None => r.write.mode("append").parquet(dir)
       }
-      s.catalog.refreshByPath(root)
+      r.sparkSession.catalog.refreshByPath(root)
     }
   }
 
-  /** Compact the live `components` into the next version and publish
+  /** Compact the live `component` into the next version and publish
     * it, then drop cached plans resolved against the old paths.
     *
-    * Per component: exactly one non-empty committed `batch-<id>` dir
-    * and no flat files is one attempt's output and cannot hold replay
-    * duplicates, so it is copied verbatim under the same batch-dir
-    * name (the next compaction copies it again); anything else is
-    * rewritten as its full-row distinct. `copied` components (frozen
-    * tables such as IVF centroids) are copied verbatim when flat, so
-    * every version dir is self-contained. The flat v0 compacts into
-    * v1 and stays as the grace copy until the next compaction.
+    * Exactly one non-empty committed `batch-<id>` dir and no flat
+    * files is one attempt's output and cannot hold replay duplicates,
+    * so it is copied verbatim under the same batch-dir name (the next
+    * compaction copies it again); anything else is rewritten as its
+    * full-row distinct. `copied` components (frozen tables such as IVF
+    * centroids) are copied verbatim when flat, so every version dir is
+    * self-contained. The flat v0 compacts into v1 and stays as the
+    * grace copy until the next compaction.
     */
-  def compact(s: SparkSession, root: String, components: Seq[String],
+  def compact(s: SparkSession, root: String, component: String,
       copied: Seq[String] = Nil): Unit = {
     val old = live(root)
     val v = prepareNext(root)
-    for (c <- components) {
-      singleWriteFiles(s"$old/$c") match {
-        case Some((batchName, files)) =>
-          copyFilesInto(files, s"$v/$c/$batchName")
-        case None =>
-          BatchCommits.readComponent(s, s"$old/$c").distinct()
-            .write.parquet(s"$v/$c")
-      }
-      BatchCommits.carryMarkers(s"$old/$c", s"$v/$c")
-      BatchCommits.sweepStaging(s"$old/$c")
+    singleWriteFiles(s"$old/$component") match {
+      case Some((batchName, files)) =>
+        copyFilesInto(files, s"$v/$component/$batchName")
+      case None =>
+        BatchCommits.readComponent(s, s"$old/$component").distinct()
+          .write.parquet(s"$v/$component")
     }
+    BatchCommits.carryMarkers(s"$old/$component", s"$v/$component")
+    BatchCommits.sweepStaging(s"$old/$component")
     for (c <- copied)
       flatFiles(s"$old/$c") match {
         case Some(files) => copyFilesInto(files, s"$v/$c")
@@ -178,7 +170,7 @@ object ArtifactVersions {
       }
     publish(root, v)
     if (old != root)
-      (components ++ copied).foreach(c =>
+      (component +: copied).foreach(c =>
         deleteRecursively(Paths.get(root, c)))
     s.catalog.refreshByPath(root)
   }

@@ -21,14 +21,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `batch-<id>`. The rename is the commit AND the processed-batchId
   * record:
   *
-  *   - crash mid-staging: the orphan `.staging-<id>` dir stays
-  *     invisible; the replay overwrites it and commits;
+  *   - crash mid-staging: the orphan `.staging-<id>-<uuid>` dir stays
+  *     invisible; the replay sweeps it, stages afresh and commits;
   *   - crash after the rename: the replay finds `batch-<id>` and
-  *     SKIPS — no double append, ever;
-  *   - multi-component advances (signatures + bands) fence each
-  *     component independently, so a crash between the two renames
-  *     replays into "skip the committed one, complete the missing
-  *     one" — recovery, not duplication.
+  *     SKIPS — no double append, ever.
+  *
+  * One micro-batch that advances several artifacts (the n-gram index,
+  * then the dedup index) fences each artifact's component
+  * independently, so a crash between the two commits replays into
+  * "skip the committed one, complete the missing one" — recovery, not
+  * duplication.
   *
   * Readers use [[readComponent]] (recursive file lookup) so a
   * component holds flat build files and committed batch dirs side by
@@ -101,8 +103,8 @@ object BatchCommits {
             "pairing (e.g. a checkpoint restored from backup); rebuild " +
             "the component or restore the matching checkpoint.")
     }
-    // retire DEAD attempts' leftovers for this id (unique names don't
-    // self-clean the way the old shared name did); a LIVE same-id
+    // retire DEAD attempts' leftovers for this id (a per-attempt name
+    // is never overwritten by a later attempt); a LIVE same-id
     // attempt can't exist under the single-committer-per-checkpoint
     // contract above — and a zombie that loses its staging dir here
     // fails its rename loudly instead of promoting mixed bytes
@@ -136,13 +138,9 @@ object BatchCommits {
     * the compaction paths run.
     */
   def sweepStaging(dir: String, batchId: Option[Long] = None): Unit = {
-    // the pre-uuid layout staged at exactly `.staging-<id>` — a crashed
-    // attempt from an older binary must still be reclaimed
-    val legacy = batchId.map(id => s".staging-$id")
     val prefix = batchId.fold(".staging-")(id => s".staging-$id-")
     Option(new java.io.File(dir).listFiles).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && (f.getName.startsWith(prefix)
-        || legacy.contains(f.getName)))
+      .filter(f => f.isDirectory && f.getName.startsWith(prefix))
       .foreach(f => ArtifactVersions.deleteRecursively(f.toPath))
   }
 

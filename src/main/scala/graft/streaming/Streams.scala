@@ -238,7 +238,7 @@ object Streams {
   /** Compaction of a versioned sink log with one component. */
   private def compactLog(component: String)
       : (SparkSession, String) => Unit =
-    (s, root) => ArtifactVersions.compact(s, root, Seq(component))
+    (s, root) => ArtifactVersions.compact(s, root, component)
 
   /** Streaming span scrub + index advance — q154's loop live: each
     * micro-batch of arriving docs is scrubbed against the persisted
@@ -404,7 +404,7 @@ object Streams {
     DedupQueries.advanceNgramIndex(admitted, w, ngramIdx, Some(batchId))
     DedupQueries.advanceDedupIndex(admitted, dedupIdx, Some(batchId))
     // BOTH artifacts compact on the cadence — grams (q156) and the
-    // dedup signatures/bands (its transplant): a live stream is
+    // dedup signatures (its transplant): a live stream is
     // exactly where per-batch dirs pile up
     compactOnCadence(s, batchId, compactEvery, Seq(
       ngramIdx -> DedupQueries.compactNgramIndex _,
@@ -484,9 +484,9 @@ object Streams {
     */
   private[graft] def mediaCurationBatch(batch: DataFrame, batchId: Long,
       outDir: String, compactEvery: Int): Unit = CacheScope.scoped {
-    ArtifactVersions.advance(outDir, Some(batchId),
+    ArtifactVersions.advance(outDir, "audit", Some(batchId))(
       graft.multimodal.CodecQueries.mediaCurationDecisions(batch).toDF()
-        .withColumn("batch_id", lit(batchId)))("audit" -> identity)
+        .withColumn("batch_id", lit(batchId)))
     compactOnCadence(batch.sparkSession, batchId, compactEvery,
       Seq(outDir -> compactLog("audit")))
   }
@@ -496,9 +496,9 @@ object Streams {
     */
   private[graft] def mediaIngestBatch(batch: DataFrame, batchId: Long,
       outDir: String, compactEvery: Int): Unit = CacheScope.scoped {
-    ArtifactVersions.advance(outDir, Some(batchId),
+    ArtifactVersions.advance(outDir, "stats", Some(batchId))(
       graft.multimodal.CodecQueries.mediaDecisions(batch).toDF()
-        .withColumn("batch_id", lit(batchId)))("stats" -> identity)
+        .withColumn("batch_id", lit(batchId)))
     compactOnCadence(batch.sparkSession, batchId, compactEvery,
       Seq(outDir -> compactLog("stats")))
   }
@@ -572,9 +572,9 @@ object Streams {
       : Unit = CacheScope.scoped {
     import graft.multimodal.{CodecQueries, PhashIndex}
     val s = batch.sparkSession
-    ArtifactVersions.advance(outDir, Some(batchId),
+    ArtifactVersions.advance(outDir, "audit", Some(batchId))(
       CodecQueries.imageCurationIngestDecisions(batch, indexPath)
-        .withColumn("batch_id", lit(batchId)))("audit" -> identity)
+        .withColumn("batch_id", lit(batchId)))
     // the advance payload derives from the COMMITTED audit rows. On a
     // replay AFTER a compaction flip the batch dir survives only as an
     // EMPTY carried fence marker (no part files): the audit compacts

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -12,7 +13,8 @@ import org.apache.spark.sql.types.StructType
   * Column API in Spark 4 (the alternative, FunctionRegistry + expr(),
   * is also wired up in graft.functions.VectorOps.register), plus
   * InternalRow-level RDD round-trips for iterative algorithms that fuse
-  * side computations (accumulators) into a materialization pass.
+  * side computations (accumulators) into a materialization pass, and a
+  * listener-bus drain for tools that read listener state.
   */
 object Bridge {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
@@ -26,6 +28,12 @@ object Bridge {
       schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** Block until every event posted so far has reached every listener
+    * (the listener bus is package-private).
+    */
+  def drainListenerBus(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   /** Rebind `df`'s (analyzed) logical plan to another session — the
     * mechanism behind conf-scoped child sessions (`newSession()` shares

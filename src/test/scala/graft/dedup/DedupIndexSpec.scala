@@ -34,7 +34,7 @@ class DedupIndexSpec extends AnyFunSuite {
     val readBack = DedupQueries.indexSignatures(spark, idx)
     assert(readBack.schema.fieldNames.sameElements(direct.schema.fieldNames))
     assert(direct.exceptAll(readBack).isEmpty && readBack.exceptAll(direct).isEmpty)
-    val bandsBack = DedupQueries.indexBands(spark, idx)
+    val bandsBack = DedupQueries.bandsOf(readBack)
     val bandsDirect = DedupQueries.bandsOf(direct)
     assert(bandsDirect.exceptAll(bandsBack).isEmpty
       && bandsBack.exceptAll(bandsDirect).isEmpty)
@@ -93,8 +93,8 @@ class DedupIndexSpec extends AnyFunSuite {
     val sb = DedupQueries.indexSignatures(spark, rebuilt)
     assert(sa.count() == 40)
     assert(sa.exceptAll(sb).isEmpty && sb.exceptAll(sa).isEmpty)
-    val ba = DedupQueries.indexBands(spark, idx)
-    val bb = DedupQueries.indexBands(spark, rebuilt)
+    val ba = DedupQueries.bandsOf(sa)
+    val bb = DedupQueries.bandsOf(sb)
     assert(ba.exceptAll(bb).isEmpty && bb.exceptAll(ba).isEmpty)
     graft.CacheScope.flush(spark)
   }
@@ -114,7 +114,8 @@ class DedupIndexSpec extends AnyFunSuite {
     assert(DedupQueries.indexSignatures(spark, idx).count() == 55)
     val wantSig = DedupQueries.indexSignatures(spark, idx)
       .dropDuplicates("doc_id").collect().toSet
-    val wantBands = DedupQueries.indexBands(spark, idx)
+    val wantBands = DedupQueries.bandsOf(
+        DedupQueries.indexSignatures(spark, idx))
       .dropDuplicates("doc_id", "band").collect().toSet
     val wantPairs = DedupQueries.pairsFromIndexUnsorted(spark, idx)
       .collect().toSet
@@ -124,7 +125,8 @@ class DedupIndexSpec extends AnyFunSuite {
     assert(DedupQueries.indexSignatures(spark, idx).count() == 40)
     assert(DedupQueries.indexSignatures(spark, idx).collect().toSet
       == wantSig)
-    assert(DedupQueries.indexBands(spark, idx).collect().toSet == wantBands)
+    assert(DedupQueries.bandsOf(DedupQueries.indexSignatures(spark, idx))
+      .collect().toSet == wantBands)
     assert(DedupQueries.pairsFromIndexUnsorted(spark, idx).collect().toSet
       == wantPairs)
     // a live version dir resolves, and a post-flip advance must land
@@ -188,11 +190,10 @@ class DedupIndexSpec extends AnyFunSuite {
     assert(bc == 9, s"crafted B/C agreement was $bc, wanted 9")
     val bands = DedupQueries.bandsOf(sigs)
     val emptySigs = sigs.limit(0)
-    val emptyBands = bands.limit(0)
     // star policy: candidates only vs band-bucket minima -> B,C each
     // verify against A (agree 4 < 8) -> NO dup found
     val starDups = DedupQueries
-      .ingestDupArrivals(sigs, bands, emptySigs, emptyBands)
+      .ingestDupArrivals(sigs, bands, emptySigs)
       .as[Long].collect().toSet
     assert(starDups.isEmpty,
       s"star policy unexpectedly caught the twin pair: $starDups")

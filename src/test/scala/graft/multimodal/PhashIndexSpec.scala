@@ -50,7 +50,7 @@ class PhashIndexSpec extends AnyFunSuite {
     }
 
     // advance with the admitted arrivals: artifact ≡ rebuild from
-    // (corpus + admitted), frame for frame, both components
+    // (corpus + admitted), frame for frame, hashes and derived bands
     val admitted = arrivals.join(
       dec.filter(col("status") === "added").select("doc_id"), "doc_id")
     PhashIndex.advancePhashIndex(admitted, idx)
@@ -60,8 +60,8 @@ class PhashIndexSpec extends AnyFunSuite {
         .unionAll(admitted.select("doc_id", "hash")), rebuilt)
     assert(frame(PhashIndex.indexHashes(spark, idx)) ==
       frame(PhashIndex.indexHashes(spark, rebuilt)))
-    assert(frame(PhashIndex.indexBands(spark, idx)) ==
-      frame(PhashIndex.indexBands(spark, rebuilt)))
+    assert(frame(PhashIndex.bandsOf(PhashIndex.indexHashes(spark, idx))) ==
+      frame(PhashIndex.bandsOf(PhashIndex.indexHashes(spark, rebuilt))))
     graft.CacheScope.flush(spark)
   }
 

@@ -93,4 +93,28 @@ class ArtifactVersionsSpec extends AnyFunSuite {
     assert(DedupQueries.indexSignatures(spark, root).count() == 40)
     graft.CacheScope.flush(spark)
   }
+
+  test("the dedup and phash indexes persist one component each: " +
+      "signatures and hashes, the band tables are derived") {
+    def entries(dir: String): Set[String] =
+      Option(new java.io.File(dir).listFiles).getOrElse(Array.empty)
+        .filter(_.isDirectory).map(_.getName).toSet
+    val sf = "/root/testdata/sf0.001"
+    val docs = graft.Tables.documents(spark, sf).select("doc_id", "text")
+    val dd = graft.TempArtifacts.dir("graft_artver_one_dd")
+    DedupQueries.buildDedupIndex(docs.filter(col("doc_id") < 25), dd)
+    DedupQueries.advanceDedupIndex(
+      docs.filter(col("doc_id") >= 25 && col("doc_id") < 40), dd, Some(0L))
+    val ddLive = ArtifactVersions.live(dd)
+    assert(entries(ddLive) == Set("signatures"))
+    assert(entries(s"$ddLive/signatures") == Set("batch-0"))
+    import graft.multimodal.{CodecQueries, PhashIndex}
+    val ph = graft.TempArtifacts.dir("graft_artver_one_ph")
+    PhashIndex.buildPhashIndex(CodecQueries.phashHashesOf(spark, sf,
+      col("doc_id") % 6 === 0 && col("doc_id") < 100), ph)
+    PhashIndex.advancePhashIndex(CodecQueries.phashHashesOf(spark, sf,
+      col("doc_id") % 6 === 3 && col("doc_id") < 100), ph)
+    assert(entries(ArtifactVersions.live(ph)) == Set("hashes"))
+    graft.CacheScope.flush(spark)
+  }
 }

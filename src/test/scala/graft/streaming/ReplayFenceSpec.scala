@@ -27,6 +27,10 @@ class ReplayFenceSpec extends AnyFunSuite {
   private def snap(df: DataFrame): (Long, Set[String]) =
     (df.count(), df.collect().map(_.toString).toSet)
 
+  /** The dedup index's band table, derived from its signatures. */
+  private def bandsOf(idx: String): DataFrame =
+    DedupQueries.bandsOf(DedupQueries.indexSignatures(spark, idx))
+
   test("BatchCommits: second commit of the same batch is a no-op; " +
       "readComponent sees flat files plus committed batch dirs; " +
       "a stranded staging dir stays invisible and is reclaimed") {
@@ -85,7 +89,7 @@ class ReplayFenceSpec extends AnyFunSuite {
     DedupQueries.buildDedupIndex(base, idxRef)
     Streams.nearDupIngestBatch(b1, 0L, idxRef, outRef)
     val wantSig = snap(DedupQueries.indexSignatures(spark, idxRef))
-    val wantBand = snap(DedupQueries.indexBands(spark, idxRef))
+    val wantBand = snap(bandsOf(idxRef))
     val wantOut = snap(BatchCommits.readComponent(spark, outRef))
 
     // full replay: the whole batch body runs twice with the same id
@@ -94,7 +98,7 @@ class ReplayFenceSpec extends AnyFunSuite {
     Streams.nearDupIngestBatch(b1, 0L, idxA, outA)
     Streams.nearDupIngestBatch(b1, 0L, idxA, outA)
     assert(snap(DedupQueries.indexSignatures(spark, idxA)) == wantSig)
-    assert(snap(DedupQueries.indexBands(spark, idxA)) == wantBand)
+    assert(snap(bandsOf(idxA)) == wantBand)
     assert(snap(BatchCommits.readComponent(spark, outA)) == wantOut)
 
     // crash window: decisions committed, advance never ran — the
@@ -107,7 +111,7 @@ class ReplayFenceSpec extends AnyFunSuite {
       outB, 0L)
     Streams.nearDupIngestBatch(b1, 0L, idxB, outB)
     assert(snap(DedupQueries.indexSignatures(spark, idxB)) == wantSig)
-    assert(snap(DedupQueries.indexBands(spark, idxB)) == wantBand)
+    assert(snap(bandsOf(idxB)) == wantBand)
     assert(snap(BatchCommits.readComponent(spark, outB)) == wantOut)
     graft.CacheScope.flush(spark)
   }
@@ -164,16 +168,14 @@ class ReplayFenceSpec extends AnyFunSuite {
     assert(snap(BatchCommits.readComponent(spark, outA)) == wantOut)
 
     // crash between the n-gram advance and the dedup advance: model it
-    // by deleting the dedup components' batch commits after a full run
+    // by deleting the dedup index's batch commit after a full run
     val (ngB, ddB, outB) = fresh("b")
     Streams.curationIngestBatch(b1, 0L, ngB, ddB, w, outB, 0)
-    for (c <- Seq("/signatures/batch-0", "/bands/batch-0")) {
-      val p = java.nio.file.Paths.get(
-        graft.sources.ArtifactVersions.live(ddB) + c)
-      Option(p.toFile.listFiles).getOrElse(Array.empty)
-        .foreach(f => java.nio.file.Files.delete(f.toPath))
-      java.nio.file.Files.delete(p)
-    }
+    val p = java.nio.file.Paths.get(
+      graft.sources.ArtifactVersions.live(ddB) + "/signatures/batch-0")
+    Option(p.toFile.listFiles).getOrElse(Array.empty)
+      .foreach(f => java.nio.file.Files.delete(f.toPath))
+    java.nio.file.Files.delete(p)
     // the manual deletion bypasses the advance path's refreshByPath —
     // drop any cached listing before re-reading
     spark.catalog.refreshByPath(ddB)
@@ -196,14 +198,14 @@ class ReplayFenceSpec extends AnyFunSuite {
     DedupQueries.advanceDedupIndex(b1, idx, Some(0L))
     DedupQueries.compactDedupIndex(spark, idx)
     val wantSig = snap(DedupQueries.indexSignatures(spark, idx))
-    val wantBand = snap(DedupQueries.indexBands(spark, idx))
+    val wantBand = snap(bandsOf(idx))
     // the crash window: advance committed into the OLD version, the
     // compaction flipped, the stream checkpoint was never written —
     // the replay targets the NEW live version and must hit the fence
     DedupQueries.advanceDedupIndex(b1, idx, Some(0L))
     assert(snap(DedupQueries.indexSignatures(spark, idx)) == wantSig,
       "replay advanced the compacted index despite the carried marker")
-    assert(snap(DedupQueries.indexBands(spark, idx)) == wantBand)
+    assert(snap(bandsOf(idx)) == wantBand)
     // a genuinely NEW batch still lands
     DedupQueries.advanceDedupIndex(
       docs.filter(col("doc_id") < 5).select("doc_id", "text"), idx, Some(1L))
@@ -305,7 +307,7 @@ class ReplayFenceSpec extends AnyFunSuite {
     val root1 = tmp("graft_rf_idc1")
     val c1 = s"$root1/grams"
     assert(BatchCommits.appendBatch(Seq(7L, 7L, 8L).toDF("x"), c1, 0L))
-    ArtifactVersions.compact(spark, root1, Seq("grams"))
+    ArtifactVersions.compact(spark, root1, "grams")
     val v1 = ArtifactVersions.live(root1)
     assert(ArtifactVersions.read(spark, root1, "grams")
       .as[Long].collect().sorted.toSeq == Seq(7L, 7L, 8L),
@@ -320,7 +322,7 @@ class ReplayFenceSpec extends AnyFunSuite {
       "fast path must copy into the committed batch dir, not flat")
     // ...so a SECOND flip with no new writes is identity again and the
     // duplicate rows survive it too
-    ArtifactVersions.compact(spark, root1, Seq("grams"))
+    ArtifactVersions.compact(spark, root1, "grams")
     val v1b = ArtifactVersions.live(root1)
     assert(v1b != v1)
     assert(ArtifactVersions.read(spark, root1, "grams")
@@ -332,7 +334,7 @@ class ReplayFenceSpec extends AnyFunSuite {
     val c2 = s"$root2/grams"
     assert(BatchCommits.appendBatch(Seq(1L, 2L).toDF("x"), c2, 0L))
     assert(BatchCommits.appendBatch(Seq(1L, 2L).toDF("x"), c2, 1L))
-    ArtifactVersions.compact(spark, root2, Seq("grams"))
+    ArtifactVersions.compact(spark, root2, "grams")
     assert(ArtifactVersions.read(spark, root2, "grams")
       .as[Long].collect().sorted.toSeq == Seq(1L, 2L),
       "multi-write compaction no longer collapses replayed rows")
