@@ -22,7 +22,9 @@ object JobAudit {
   private val WarmCalls = 3
 
   /** Jobs per root call site of one call: counts, summed job wall ms,
-    * and the root site of each SQL execution id.
+    * and the root site of each SQL execution id, read from the
+    * execution's start event (a write whose only jobs are AQE stages
+    * has no other job to learn it from).
     */
   private final class SiteJobs extends org.apache.spark.scheduler.SparkListener {
     import java.util.concurrent.ConcurrentHashMap
@@ -40,9 +42,16 @@ object JobAudit {
         .getOrElse("-")
       val site =
         if (raw.contains("CompletableFuture")) s"exec=$execId (aqe stage)"
-        else { execSite.putIfAbsent(execId, raw); raw }
+        else raw
       sites.merge(site, 1, (a, b) => a + b)
       started.put(j.jobId, (site, j.time))
+    }
+
+    override def onOtherEvent(
+        e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+      case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+        execSite.put(s.executionId.toString, s.description)
+      case _ =>
     }
 
     override def onJobEnd(

@@ -13,10 +13,11 @@ import org.apache.spark.sql.expressions.Window
   * The reference's sequential pieces become:
   *  - contour extraction -> per-cell segment emission (corner join + case
   *    analysis), no polyline chaining needed downstream;
-  *  - flood fill / nd.label -> min-label propagation with pointer
-  *    jumping (O(log diameter) rounds), keyed by (group..., it) so MANY
-  *    independent fills (one per X point / per current-sheet region) run
-  *    in ONE driver loop — the reference's nested Python loops
+  *  - flood fill / nd.label -> a union-find inside each (group..., tile)
+  *    block of cells, then one solve over the small contracted graph of
+  *    cross-tile root adjacencies ([[ccTiled]]); keyed by (group..., it)
+  *    so MANY independent fills (one per X point / per current-sheet
+  *    region) run in ONE solve — the reference's nested Python loops
   *    (vpicdataset.py:444, 506, 514) become tags in a single plan.
   *
   * Serializable so that task closures calling its private helpers (the
@@ -199,84 +200,19 @@ object Topology extends Serializable {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Connected components of `cells` under 4- or 8-adjacency, computed
-    * independently per distinct value of `keys` (e.g. (it) or (xid, it) —
-    * many flood fills in one loop). Label = min linear cell id reachable —
-    * deterministic, matches region partitioning of flood fill (the
-    * reference's RNG visit order is incidental; SURVEY §2A 22j).
-    * Min-label propagation + pointer jumping -> O(log diameter) rounds;
-    * localCheckpoint cuts lineage. The cluster-scale relative of
-    * small-star/large-star CC.
+  /** Round cap of [[graphCCLoop]]; a solve still changing labels at the
+    * cap throws instead of returning partial labels.
     */
-  private def ccImpl(cells: DataFrame, nx: Int, dirs8: Boolean,
-      keys: Seq[String], maxIter: Int): DataFrame = {
-    val offsets = if (dirs8)
-      for (di <- -1 to 1; dj <- -1 to 1 if !(di == 0 && dj == 0)) yield (di, dj)
+  private[grid] val MaxIter = 1000
+
+  /** Side of a [[ccTiled]] tile: one task holds at most Tile² cells. */
+  private[grid] val Tile = 512
+
+  /** Neighbour offsets of 4- or 8-adjacency. */
+  private def stencil(dirs8: Boolean): Seq[(Int, Int)] =
+    if (dirs8) for (di <- -1 to 1; dj <- -1 to 1 if !(di == 0 && dj == 0))
+      yield (di, dj)
     else Seq((-1, 0), (1, 0), (0, -1), (0, 1))
-    val dirs = array(offsets.map { case (di, dj) =>
-      struct(lit(di).as("di"), lit(dj).as("dj")) }: _*)
-    val spark = cells.sparkSession
-    // HARD lineage cut: localCheckpoint alone still lets per-iteration
-    // cost grow without bound in a loop (measured: 0.3s -> 186s by
-    // iteration 24 on Spark 4.1); rebuilding the DataFrame from the
-    // checkpointed RDD keeps every iteration flat.
-    def cut(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.localCheckpoint(true).rdd, df.schema)
-    val k = keys.map(col)
-    var lab = cut(cells.select((k :+ col("iz") :+ col("ix")): _*)
-      .withColumn("id", col("iz").cast("long") * nx + col("ix"))
-      .withColumn("comp", col("id")))
-    // superseded-iteration blocks are freed explicitly: every round's
-    // localCheckpoint pins MEMORY_AND_DISK blocks that would otherwise
-    // survive until the driver GCs the RDD reference — on a
-    // 20+-iteration solve that is 20 label tables resident at once.
-    // Once `next` is materialized the previous round's blocks are dead
-    // (each round rebuilds msgs/ptr from the NEW table only), so peak
-    // residency is two rounds, not the iteration count.
-    var prevRdd: Option[org.apache.spark.rdd.RDD[_]] = None
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
-      val msgs = lab.withColumn("d", explode(dirs))
-        .select((k :+ (col("iz") + col("d.di")).as("iz")
-          :+ (col("ix") + col("d.dj")).as("ix") :+ col("comp")): _*)
-        .groupBy((k :+ col("iz") :+ col("ix")): _*).agg(min("comp").as("mcomp"))
-      val gathered = lab.join(msgs, keys ++ Seq("iz", "ix"), "left")
-        .withColumn("tmp", least(col("comp"), coalesce(col("mcomp"), col("comp"))))
-      // pointer jump: follow tmp (always some cell's id) to that cell's
-      // current label; strictly accelerates convergence.
-      val ptr = lab.select((keys.map(c => col(c).as(s"p_$c"))
-        :+ col("id").as("p_id") :+ col("comp").as("p_comp")): _*)
-      val jumpCond = keys.map(c => col(c) === col(s"p_$c"))
-        .reduceOption(_ && _).map(_ && col("tmp") === col("p_id"))
-        .getOrElse(col("tmp") === col("p_id"))
-      val jumped = gathered.join(ptr, jumpCond, "left")
-        .withColumn("newcomp", least(col("tmp"), coalesce(col("p_comp"), col("tmp"))))
-      // one job per round: the change count rides an accumulator inside
-      // the materialization pass (overcount on task retry only flips an
-      // extra harmless iteration). Rows are copied before caching
-      // (toRdd reuses UnsafeRow buffers).
-      val withCh = jumped.select((k :+ col("iz") :+ col("ix") :+ col("id")
-        :+ col("newcomp").as("comp")
-        :+ (col("newcomp") < col("comp")).as("ch")): _*)
-      val chIdx = withCh.schema.fieldIndex("ch")
-      val acc = spark.sparkContext.longAccumulator
-      val rdd = org.apache.spark.sql.graftbridge.Bridge.toInternalRdd(withCh).map { r =>
-        if (!r.isNullAt(chIdx) && r.getBoolean(chIdx)) acc.add(1L)
-        r.copy()
-      }
-      rdd.localCheckpoint()
-      val next = org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(
-        spark, rdd, withCh.schema)
-      next.count() // materialize; fills the accumulator
-      changed = acc.value
-      prevRdd.foreach(_.unpersist(false))
-      prevRdd = Some(rdd)
-      lab = next.drop("ch")
-      iter += 1
-    }
-    lab.drop("id")
-  }
 
   /** Tile-local union-find inside one task (pure function of the cell
     * set): labels every cell with the min linear id of its tile-local
@@ -332,8 +268,7 @@ object Topology extends Serializable {
     * tile-boundary graph, which is orders of magnitude smaller than the
     * cell set — iterations are cheap even at cluster scale.
     */
-  private def graphCC(edges: DataFrame, keys: Seq[String],
-      maxIter: Int): DataFrame = {
+  private def graphCC(edges: DataFrame, keys: Seq[String]): DataFrame = {
     val k = keys.map(col)
     // Materialize the raw edge list ONCE before symmetrizing: the
     // unionAll of two selects would otherwise evaluate the (often
@@ -375,7 +310,7 @@ object Topology extends Serializable {
       nodeType == org.apache.spark.sql.types.IntegerType
     if (integralNodes && e0.count() <= MaxDriverEdges)
       driverCC(e0, keys, nodeType)
-    else graphCCLoop(e0, keys, maxIter)
+    else graphCCLoop(e0, keys, MaxIter)
   }
 
   /** Largest edge list [[graphCC]] solves on the driver (x ~40 B). */
@@ -383,11 +318,16 @@ object Topology extends Serializable {
 
   /** The distributed leg of [[graphCC]] over a (keys..., s, t) edge list
     * `e0` that the caller has already materialized or cached: min-label
-    * propagation with pointer jumping, one job per round.
+    * propagation with pointer jumping, one job per round, O(log
+    * diameter) rounds. `maxIter` is [[MaxIter]] outside tests.
     */
   private[grid] def graphCCLoop(e0: DataFrame, keys: Seq[String],
       maxIter: Int): DataFrame = {
     val spark = e0.sparkSession
+    // HARD lineage cut: localCheckpoint alone still lets per-iteration
+    // cost grow without bound in a loop (measured: 0.3s -> 186s by
+    // iteration 24 on Spark 4.1); rebuilding the DataFrame from the
+    // checkpointed RDD keeps every iteration flat.
     def cut(df: DataFrame): DataFrame =
       spark.createDataFrame(df.localCheckpoint(true).rdd, df.schema)
     val k = keys.map(col)
@@ -396,8 +336,12 @@ object Topology extends Serializable {
     // node set: s-side of the symmetrized list covers every endpoint
     var lab = cut(e.select((k :+ col("s").as("node")): _*).distinct()
       .withColumn("comp", col("node")))
-    // free superseded iterations' checkpoint blocks (see ccImpl): peak
-    // residency two label tables, not one per round.
+    // superseded rounds' blocks are freed explicitly: every round's
+    // localCheckpoint pins MEMORY_AND_DISK blocks that would otherwise
+    // survive until the driver GCs the RDD reference. Once `next` is
+    // materialized the previous round's blocks are dead (each round
+    // rebuilds msgs/ptr from the NEW table only), so peak residency is
+    // two label tables, not one per round.
     var prevRdd: Option[org.apache.spark.rdd.RDD[_]] = None
     var changed = 1L
     var iter = 0
@@ -414,8 +358,9 @@ object Topology extends Serializable {
       val jumped = gathered.join(ptr, cond, "left")
         .withColumn("newcomp", least(col("tmp"), coalesce(col("p_comp"), col("tmp"))))
       // one job per round: the change count rides an accumulator inside
-      // the materialization pass (same pattern as ccImpl; a task-retry
-      // overcount only costs one harmless extra iteration)
+      // the materialization pass (a task-retry overcount only costs one
+      // harmless extra iteration). Rows are copied before caching
+      // (toRdd reuses UnsafeRow buffers).
       val withCh = jumped.select((k :+ col("node")
         :+ col("newcomp").as("comp")
         :+ (col("newcomp") < col("comp")).as("ch")): _*)
@@ -435,6 +380,9 @@ object Topology extends Serializable {
       lab = next.drop("ch")
       iter += 1
     }
+    if (changed > 0)
+      throw new IllegalStateException(s"connected components did not" +
+        s" converge in $maxIter rounds ($changed labels still changing)")
     lab
   }
 
@@ -507,60 +455,24 @@ object Topology extends Serializable {
     * 2. only tile-BOUNDARY cells (an O(perimeter/area) fraction) are
     *    self-joined to find cross-tile adjacencies, contracted to edges
     *    between local roots;
-    * 3. the iterative min-label loop runs on that contracted graph —
-    *    thousands of times smaller than the cell set — and the result is
-    *    joined back.
-    * Labels equal the min linear cell id reachable, identical to the
-    * plain iterative scheme ([[ccIterative]], kept for parity tests).
+    * 3. [[graphCC]] solves that contracted graph — thousands of times
+    *    smaller than the cell set — and the result is joined back.
+    * An (nz, nx) extent inside one tile skips steps 2-3: the local roots
+    * ARE the components, and the labeling stays a LAZY plan (grouping +
+    * in-task union-find) that fuses into whichever job consumes it, so
+    * building it starts no Spark job. Consumers that read that result
+    * twice must retain it, since there is no checkpoint to absorb a
+    * re-scan. Labels equal the min linear cell id reachable, identical
+    * to the plain iterative scheme ([[connectedComponentsIterative]],
+    * kept for parity tests).
     */
-  /** Min/max (tz, tx) extent observed during the tile-labeling pass —
-    * merging is idempotent, so task retries cannot corrupt the answer
-    * (an overcounted extent could only WIDEN, and widening only ever
-    * demotes the fast path to the always-correct full solve).
-    */
-  private class TileExtentAccumulator
-      extends org.apache.spark.util.AccumulatorV2[(Int, Int), (Int, Int, Int, Int)] {
-    @volatile private var z0 = Int.MaxValue
-    @volatile private var z1 = Int.MinValue
-    @volatile private var x0 = Int.MaxValue
-    @volatile private var x1 = Int.MinValue
-    def isZero: Boolean = z0 == Int.MaxValue
-    def copy(): TileExtentAccumulator = {
-      val c = new TileExtentAccumulator
-      c.z0 = z0; c.z1 = z1; c.x0 = x0; c.x1 = x1; c
-    }
-    def reset(): Unit = {
-      z0 = Int.MaxValue; z1 = Int.MinValue
-      x0 = Int.MaxValue; x1 = Int.MinValue
-    }
-    def add(v: (Int, Int)): Unit = {
-      z0 = math.min(z0, v._1); z1 = math.max(z1, v._1)
-      x0 = math.min(x0, v._2); x1 = math.max(x1, v._2)
-    }
-    def merge(o: org.apache.spark.util.AccumulatorV2[(Int, Int), (Int, Int, Int, Int)]): Unit =
-      o match {
-        case t: TileExtentAccumulator =>
-          z0 = math.min(z0, t.z0); z1 = math.max(z1, t.z1)
-          x0 = math.min(x0, t.x0); x1 = math.max(x1, t.x1)
-      }
-    def value: (Int, Int, Int, Int) = (z0, z1, x0, x1)
-    /** true when no cells were seen (trivially local) or every cell sits
-      * in the same tile.
-      */
-    def isSingleTile: Boolean = isZero || (z0 == z1 && x0 == x1)
-  }
-
-  private def ccTiled(cells: DataFrame, nx: Int, dirs8: Boolean,
-      keys: Seq[String], maxIter: Int, tile: Int,
-      staticSingleTile: Boolean = false): DataFrame = {
+  private[grid] def ccTiled(cells: DataFrame, nz: Int, nx: Int,
+      keys: Seq[String], dirs8: Boolean, tile: Int): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types._
-    val spark = cells.sparkSession
+    val singleTile = nz <= tile && nx <= tile
     val nk = keys.length
-    val offs: Seq[(Int, Int)] =
-      if (dirs8) for (di <- -1 to 1; dj <- -1 to 1 if !(di == 0 && dj == 0))
-        yield (di, dj)
-      else Seq((-1, 0), (1, 0), (0, -1), (0, 1))
+    val offs = stencil(dirs8)
     val sel = cells.select((keys.map(col)
       :+ col("iz").cast("int") :+ col("ix").cast("int")): _*)
     val keyFields = sel.schema.fields.take(nk).toSeq
@@ -577,15 +489,6 @@ object Topology extends Serializable {
       .withColumn("tz", floor(col("iz").cast("double") / tile).cast("int"))
       .withColumn("tx", floor(col("ix").cast("double") / tile).cast("int"))
     val gcols = keys.map(col) :+ col("tz") :+ col("tx")
-    // tile-extent accumulator rides the labeling pass: min/max merging
-    // is idempotent under task retries, and it makes the single-tile
-    // check below cost ZERO extra jobs (the value is final once
-    // `labeled` materializes, which the localCheckpoint does eagerly).
-    // Skipped entirely on the STATIC single-tile path (no accumulator
-    // reader exists there).
-    val extentOpt =
-      if (staticSingleTile) None else Some(new TileExtentAccumulator)
-    extentOpt.foreach(spark.sparkContext.register(_, "cc tile extent"))
     val labSchema = StructType(keyFields ++ Seq(
       StructField("iz", IntegerType), StructField("ix", IntegerType),
       StructField("root", LongType)))
@@ -593,17 +496,14 @@ object Topology extends Serializable {
       withTile.schema.fields.take(nk) ++ withTile.schema.fields.takeRight(2))
     def labelTile(k: Row, rows: Iterator[Row]): Iterator[Row] = {
       val kv = k.toSeq.take(nk)
-      extentOpt.foreach(_.add((k.getInt(nk), k.getInt(nk + 1))))
       val cellsOfTile = rows.map { r =>
         val iz = r.getInt(nk); val ix = r.getInt(nk + 1)
-        // the static hint is a caller CONTRACT (the accumulator path
-        // demotes out-of-tile grids to the full solve; this path has no
-        // accumulator) — violating it must fail loudly, never silently
-        // split a component
-        if (staticSingleTile && (iz < 0 || iz >= tile || ix < 0 || ix >= tile))
+        // a cell outside the declared extent's one tile would be split
+        // from its neighbours silently: fail loudly instead
+        if (singleTile && (iz < 0 || iz >= tile || ix < 0 || ix >= tile))
           throw new IllegalArgumentException(
-            s"staticSingleTile CC received cell ($iz, $ix) outside" +
-              s" [0, $tile) - caller's single-tile hint is wrong")
+            s"CC over a $nz x $nx extent received cell ($iz, $ix)" +
+              s" outside [0, $tile)")
         (iz, ix)
       }.toVector
       localLabels(cellsOfTile, nx, offs).map { case (iz, ix, root) =>
@@ -614,19 +514,9 @@ object Topology extends Serializable {
     val labeledLazy = withTile.groupBy(gcols: _*)
       .as[Row, Row](Encoders.row(tileKey), Encoders.row(withTile.schema))
       .flatMapGroups(labelTile _)(Encoders.row(labSchema))
-    // STATIC single-tile path: when the caller knows every cell index
-    // lies in [0, tile) on both axes (a grid with nz, nx <= tile), the
-    // whole grid is ONE tile by construction — local roots ARE the
-    // components and no boundary graph can exist. The labeling then
-    // stays a LAZY plan (grouping + in-task union-find) that fuses into
-    // whichever job consumes it: no eager localCheckpoint, no extent
-    // accumulator, no job at construction. Consumers that read the
-    // result twice must retain it, since there is no checkpoint to
-    // absorb a re-scan.
-    if (staticSingleTile)
-      return labeledLazy.withColumn("comp", col("root"))
-        .select((keys.map(col) :+ col("iz") :+ col("ix") :+ col("comp")): _*)
-    val extent = extentOpt.get
+    if (singleTile)
+      return labeledLazy
+        .select((keys.map(col) :+ col("iz") :+ col("ix") :+ col("root").as("comp")): _*)
     // localCheckpoint (not persist): the backing blocks are cleaned by the
     // ContextCleaner once unreferenced — no cache-manager pinning.
     val labeled = labeledLazy.localCheckpoint(true)
@@ -655,75 +545,61 @@ object Topology extends Serializable {
       .filter(col("s") =!= col("t"))
       .distinct()
 
-    // Single-tile fast path: the extent accumulator (final here — the
-    // checkpoint above was eager) detects when the whole grid lives in
-    // ONE tile. Every component is then tile-local and the labels ARE
-    // the local roots, so the contracted-graph solve (localCheckpoint +
-    // per-iteration jobs, all on empty inputs) is skipped outright at
-    // zero added cost. This is the common case for per-plane keyed
-    // solves (a key group rarely spans 512 cells per axis at the sizes
-    // the per-X-point and per-region stages produce); multi-tile grids
-    // fall through to the full two-level solve.
-    if (extent.isSingleTile)
-      return labeled.withColumn("comp", col("root"))
-        .select((keys.map(col) :+ col("iz") :+ col("ix") :+ col("comp")): _*)
-
-    // 3. solve the contracted graph, map back
-    val mapping = graphCC(edges, keys, maxIter)
+    // 3. solve the contracted graph, map back. The root -> label map is
+    // almost always tiny (AQE demotes the broadcast if it is not).
+    val mapping = graphCC(edges, keys)
       .select((keys.map(c => col(c).as(s"m_$c"))
         :+ col("node") :+ col("comp").as("gcomp")): _*)
     val joinCond = keys.map(c => col(c) === col(s"m_$c"))
       .foldLeft(col("root") === col("node"))(_ && _)
-    val out = labeled.join(broadcastIfSmall(mapping), joinCond, "left")
+    labeled.join(broadcast(mapping), joinCond, "left")
       .withColumn("comp", coalesce(col("gcomp"), col("root")))
       .select((keys.map(col) :+ col("iz") :+ col("ix") :+ col("comp")): _*)
-    out
   }
 
-  /** Broadcast hint pass-through: the contracted-graph label map is almost
-    * always tiny; AQE will demote if it is not.
+  /** Connected components of `cells` under 4-adjacency (8 with `dirs8`),
+    * computed independently per distinct value of `keys` (e.g. (it) or
+    * (xid, it) — many flood fills in one solve), on a grid whose cell
+    * indices lie in [0, nz) x [0, nx). Label = min linear cell id
+    * (iz * nx + ix) reachable — deterministic, matches region
+    * partitioning of flood fill (the reference's RNG visit order is
+    * incidental; SURVEY §2A 22j). See [[ccTiled]].
     */
-  private def broadcastIfSmall(df: DataFrame): DataFrame = broadcast(df)
-
-  /** Connected components of `cells` (4-adjacency) per `keys` group:
-    * tile-local union-find + contracted boundary graph (see [[ccTiled]]).
-    * `tile` bounds per-task memory (tile² cells).
-    */
-  def connectedComponents(cells: DataFrame, nx: Int,
-      keys: Seq[String] = Seq("it"), maxIter: Int = 1000,
-      tile: Int = 512, staticSingleTile: Boolean = false): DataFrame =
-    ccTiled(cells, nx, dirs8 = false, keys, maxIter, tile, staticSingleTile)
-
-  /** Connected components under 8-adjacency (contour-cell grouping). */
-  def connectedComponents8(cells: DataFrame, nx: Int,
-      keys: Seq[String] = Seq("it"), maxIter: Int = 1000,
-      tile: Int = 512, staticSingleTile: Boolean = false): DataFrame =
-    ccTiled(cells, nx, dirs8 = true, keys, maxIter, tile, staticSingleTile)
-
-  /** True when a grid with extents (nz, nx) provably fits one CC tile
-    * (all indices in [0, tile) on both axes) — callers pass this as
-    * `staticSingleTile` to get the lazy, checkpoint-free solve. "Lazy"
-    * holds under AQE too: building the solve starts no Spark job; the
-    * labeling runs inside whichever action consumes it.
-    */
-  def fitsOneTile(nz: Int, nx: Int, tile: Int = 512): Boolean =
-    nz <= tile && nx <= tile
+  def connectedComponents(cells: DataFrame, nz: Int, nx: Int,
+      keys: Seq[String] = Seq("it"), dirs8: Boolean = false): DataFrame =
+    ccTiled(cells, nz, nx, keys, dirs8, Tile)
 
   /** Public entry to the contracted-graph CC solver: connected
     * components over an arbitrary (s, t) edge list, returning
     * (node, comp) with comp = min node id reachable. Also serves the
     * dedup surface (clusters over the MinHash-LSH pair graph).
     */
-  def graphComponents(edges: DataFrame, keys: Seq[String] = Seq.empty,
-      maxIter: Int = 1000): DataFrame =
-    graphCC(edges, keys, maxIter)
+  def graphComponents(edges: DataFrame,
+      keys: Seq[String] = Seq.empty): DataFrame =
+    graphCC(edges, keys)
 
-  /** The plain iterative min-label scheme over raw cells — kept as the
-    * reference implementation for parity tests of [[ccTiled]].
+  /** The plain iterative scheme over raw cells — the parity reference
+    * of [[ccTiled]]: [[graphCCLoop]] over the cell-adjacency edge list,
+    * node id = iz * nx + ix. The (0, 0) step gives every cell a
+    * self-edge, so an isolated cell is a node too.
     */
-  def connectedComponentsIterative(cells: DataFrame, nx: Int, dirs8: Boolean,
-      keys: Seq[String] = Seq("it"), maxIter: Int = 1000): DataFrame =
-    ccImpl(cells, nx, dirs8, keys, maxIter)
+  private[grid] def connectedComponentsIterative(cells: DataFrame, nx: Int,
+      dirs8: Boolean, keys: Seq[String] = Seq("it")): DataFrame = {
+    val k = keys.map(col)
+    val nodes = cells.select((k :+ col("iz") :+ col("ix")
+      :+ (col("iz").cast("long") * nx + col("ix")).as("id")): _*)
+    val steps = array(((0, 0) +: stencil(dirs8)).map { case (di, dj) =>
+      struct(lit(di).as("di"), lit(dj).as("dj")) }: _*)
+    val edges = nodes.withColumn("d", explode(steps))
+      .select((k :+ (col("iz") + col("d.di")).as("niz")
+        :+ (col("ix") + col("d.dj")).as("nix") :+ col("id").as("s")): _*)
+      .join(nodes.select((k :+ col("iz").as("niz") :+ col("ix").as("nix")
+        :+ col("id").as("t")): _*), keys ++ Seq("niz", "nix"))
+      .select((k :+ col("s") :+ col("t")): _*)
+    val labels = graphCCLoop(graft.CacheScope.retain(edges), keys, MaxIter)
+    nodes.join(labels.withColumnRenamed("node", "id"), keys :+ "id")
+      .select((k :+ col("iz") :+ col("ix") :+ col("comp")): _*)
+  }
 
   /** Current-sheet detection (reference vpicdataset.py:481-520) on an
     * already-smoothed field: 10x10 extremum filters, mean±3σ thresholds
@@ -763,8 +639,7 @@ object Topology extends Serializable {
         when(col("fmax") > col("max_thr"), lit(1)),
         when(col("fmin") < col("min_thr"), lit(-1)))).as("sgn"))
       .filter(col("sgn").isNotNull)
-    val regions = connectedComponents(cells, nx, keys = Seq("sgn", "it"),
-      staticSingleTile = fitsOneTile(nz, nx))
+    val regions = connectedComponents(cells, nz, nx, keys = Seq("sgn", "it"))
     val withV = regions.join(grid, Seq("it", "iz", "ix"))
     // per-region extremum of the smoothed field (nd.maximum_position /
     // nd.maximum; ties broken by (iz, ix) order like np argmax).
@@ -791,10 +666,9 @@ object Topology extends Serializable {
         col("iz"), col("ix"))
     // scoped persist: the grow labels feed both the seed lookup and
     // the final membership join — without it the solve's output plan
-    // (checkpoint-join or fast-path projection) re-evaluates per use
+    // (the lazy labeling or the contracted-graph join) re-evaluates per use
     val cc = graft.CacheScope.retain(
-      connectedComponents(tagged, nx, keys = Seq("sgn", "rid", "it"),
-        staticSingleTile = fitsOneTile(nz, nx)))
+      connectedComponents(tagged, nz, nx, keys = Seq("sgn", "rid", "it")))
     val seeds = cc.join(broadcast(ext),
         cc("sgn") === col("r_sgn") && cc("rid") === ext("rid")
           && cc("it") === col("r_it")
@@ -891,8 +765,8 @@ object Topology extends Serializable {
     // time outside jobs 4.6 s -> 10.1 s per call). Under AQE the cut runs
     // the solve's shuffle stages when the frame is built, so building
     // this body starts jobs; the lazy single-tile solve itself does not.
-    val comp = connectedComponents8(segCells, nx, keys = Seq("xid", "it"),
-      staticSingleTile = fitsOneTile(nz, nx)).localCheckpoint(eager = false)
+    val comp = connectedComponents(segCells, nz, nx, keys = Seq("xid", "it"),
+      dirs8 = true).localCheckpoint(eager = false)
     // endpoint distances to the owning X point. Pinned: consumed by
     // both `keep` and `raster`.
     val pts = graft.CacheScope.retain(
@@ -976,8 +850,8 @@ object Topology extends Serializable {
     // pinned: zcomp feeds both the interior test and the final member
     // join.
     val zcomp = graft.CacheScope.retain(connectedComponents(
-      zeros.select("xid", "it", "iz", "ix"), nx, keys = Seq("xid", "it"),
-      staticSingleTile = fitsOneTile(nz, nx)).localCheckpoint(eager = false)
+      zeros.select("xid", "it", "iz", "ix"), nz, nx, keys = Seq("xid", "it"))
+      .localCheckpoint(eager = false)
       .join(zeros, Seq("xid", "it", "iz", "ix")))
     val interior = zcomp.groupBy("xid", "comp")
       .agg(max(col("touch_edge") ||

@@ -200,9 +200,7 @@ object TopologyQueries {
     Q("g13_connected_components",
       (s, d) => {
         val cells = grid(s, d).filter(col("b1") > 200).select("it", "iz", "ix")
-        Topology.connectedComponents(cells, NX,
-          staticSingleTile = Topology.fitsOneTile(NZ, NX))
-          .orderBy("it", "iz", "ix")
+        Topology.connectedComponents(cells, NZ, NX).orderBy("it", "iz", "ix")
       },
       Some(s"""WITH RECURSIVE $gridCte,
               m AS MATERIALIZED (SELECT it, iz, ix, CAST(iz * $NX + ix AS BIGINT) AS id
@@ -235,8 +233,7 @@ object TopologyQueries {
           .withColumn("thr", avg("fmax").over(plane)
             + lit(1) * stddev_pop("fmax").over(plane))
           .filter(col("fmax") > col("thr")).select("it", "iz", "ix")
-        val comp = Topology.connectedComponents(hot, NX,
-          staticSingleTile = Topology.fitsOneTile(NZ, NX))
+        val comp = Topology.connectedComponents(hot, NZ, NX)
         val withV = comp.join(g.select("it", "iz", "ix", "b1"), Seq("it", "iz", "ix"))
         // ONE aggregation: max of (value, -pos) struct orders by value
         // first, then by highest -pos = lowest row-major position among
@@ -315,8 +312,8 @@ object TopologyQueries {
     // Cost note: most of a g19 run is fixed per-run cost (planning +
     // codegen + scheduling), not a data-scaling term. Small grids run
     // AQE-off at a static shuffle width inside a child newSession, so
-    // the returned masks also execute AQE-off, and statically
-    // single-tile CC solves stay lazy (no eager checkpoint per solve).
+    // the returned masks also execute AQE-off, and single-tile CC
+    // solves stay lazy (no eager checkpoint per solve).
     // What remains is the spine collect, the separatrix solve, and the
     // overlapped current-sheet chain — real work plus scheduling
     // quanta that amortize at cluster scale

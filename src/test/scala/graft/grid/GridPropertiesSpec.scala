@@ -99,7 +99,7 @@ class GridPropertiesSpec extends AnyFunSuite {
     val cells = (for (iz <- 0 until 12; ix <- 0 until 12
       if rnd.nextDouble() < 0.4) yield (0, iz, ix)).toDF("it", "iz", "ix")
     def labels(df: org.apache.spark.sql.DataFrame) =
-      Topology.connectedComponents(df, nx = 12, tile = 4)
+      Topology.ccTiled(df, 12, 12, Seq("it"), dirs8 = false, tile = 4)
         .select("iz", "ix", "comp").as[(Int, Int, Long)].collect().toSet
     val base = labels(cells)
     val shuffled = labels(cells.repartition(7, col("ix")))

@@ -85,7 +85,7 @@ class TopologySpec extends AnyFunSuite {
       (0, 5, 5), (0, 5, 6), // second comp
       (1, 0, 0) // different time step -> own comp
     ).toDF("it", "iz", "ix")
-    val cc = Topology.connectedComponents(cells, 16)
+    val cc = Topology.connectedComponents(cells, 16, 16)
       .select("it", "iz", "ix", "comp")
       .as[(Int, Int, Int, Long)].collect()
     val comps = cc.groupBy(r => (r._1, r._4)).view.mapValues(_.length).toMap
@@ -93,68 +93,87 @@ class TopologySpec extends AnyFunSuite {
     assert(comps.values.toSeq.sorted == Seq(1, 2, 3))
   }
 
-  test("tiled CC matches the iterative scheme across tile boundaries") {
-    // Deterministic pseudo-random mask on a 24x24 grid with components
-    // that straddle 8-cell tile boundaries (tile=8 forces boundary
-    // merging through the contracted graph; 3x3 tiles, several multi-tile
-    // blobs). 4- and 8-adjacency both checked.
-    val cells = (for (it <- 0 until 2; iz <- 0 until 24; ix <- 0 until 24
+  // Deterministic pseudo-random mask on a 24x24 grid with components
+  // that straddle 8-cell tile boundaries.
+  private def mask24: DataFrame =
+    (for (it <- 0 until 2; iz <- 0 until 24; ix <- 0 until 24
       if ((iz * 37 + ix * 61 + it * 13) % 7) < 3)
       yield (it, iz, ix)).toDF("it", "iz", "ix")
+
+  private def labelSet(df: DataFrame): Set[(Int, Int, Int, Long)] =
+    df.select("it", "iz", "ix", "comp").as[(Int, Int, Int, Long)]
+      .collect().toSet
+
+  test("tiled CC matches the iterative scheme across tile boundaries") {
+    // tile=8 forces boundary merging through the contracted graph (3x3
+    // tiles, several multi-tile blobs). 4- and 8-adjacency both checked.
+    val cells = mask24
     for (dirs8 <- Seq(false, true)) {
-      val tiled = (if (dirs8) Topology.connectedComponents8(cells, 24, tile = 8)
-        else Topology.connectedComponents(cells, 24, tile = 8))
-        .select("it", "iz", "ix", "comp")
-        .as[(Int, Int, Int, Long)].collect().toSet
-      val iter = Topology.connectedComponentsIterative(cells, 24, dirs8)
-        .select("it", "iz", "ix", "comp")
-        .as[(Int, Int, Int, Long)].collect().toSet
+      val tiled = labelSet(Topology.ccTiled(cells, 24, 24, Seq("it"), dirs8,
+        tile = 8))
+      val iter = labelSet(Topology.connectedComponentsIterative(cells, 24, dirs8))
       assert(tiled == iter, s"dirs8=$dirs8: tiled and iterative CC differ")
     }
   }
 
-  test("static single-tile CC (lazy, checkpoint-free) matches the default solve") {
-    // same mask as the boundary test, solved with the default tile=512
-    // (one tile -> accumulator fast path, eager checkpoint) vs the
-    // staticSingleTile hint (lazy plan, no accumulator, no checkpoint):
-    // labels must be identical, and the lazy result must survive TWO
-    // independent materializations (no checkpoint to hide a
-    // non-deterministic re-run)
-    val cells = (for (it <- 0 until 2; iz <- 0 until 24; ix <- 0 until 24
-      if ((iz * 37 + ix * 61 + it * 13) % 7) < 3)
-      yield (it, iz, ix)).toDF("it", "iz", "ix")
+  test("multi-tile extent with every cell in one tile: empty contracted graph, labels match the iterative reference") {
+    // nz = nx = 24 with tile=8 takes the two-level path, but every cell
+    // lies in tile (0, 0), so no cross-tile edge exists and graphCC
+    // solves an empty graph; the local roots must come back unchanged.
+    val cells = mask24.filter(col("iz") < 8 && col("ix") < 8)
     for (dirs8 <- Seq(false, true)) {
-      def solve(hint: Boolean) =
-        (if (dirs8) Topology.connectedComponents8(cells, 24,
-          staticSingleTile = hint)
-        else Topology.connectedComponents(cells, 24,
-          staticSingleTile = hint))
-          .select("it", "iz", "ix", "comp")
-          .as[(Int, Int, Int, Long)].collect().toSet
-      val lazySolve = if (dirs8) Topology.connectedComponents8(cells, 24,
-        staticSingleTile = true)
-      else Topology.connectedComponents(cells, 24, staticSingleTile = true)
-      val a = solve(hint = false)
-      val b = solve(hint = true)
-      assert(a == b, s"dirs8=$dirs8: static single-tile labels differ")
-      val m1 = lazySolve.select("it", "iz", "ix", "comp")
-        .as[(Int, Int, Int, Long)].collect().toSet
-      val m2 = lazySolve.select("it", "iz", "ix", "comp")
-        .as[(Int, Int, Int, Long)].collect().toSet
-      assert(m1 == m2 && m1 == a,
-        s"dirs8=$dirs8: lazy re-materialization not stable")
+      val tiled = labelSet(Topology.ccTiled(cells, 24, 24, Seq("it"), dirs8,
+        tile = 8))
+      val iter = labelSet(Topology.connectedComponentsIterative(cells, 24, dirs8))
+      assert(tiled.nonEmpty && tiled == iter,
+        s"dirs8=$dirs8: one-tile cells on the multi-tile path differ")
+    }
+    val empty = cells.filter(lit(false))
+    assert(Topology.ccTiled(empty, 24, 24, Seq("it"), dirs8 = false,
+      tile = 8).count() == 0, "multi-tile path: rows from no cells")
+    assert(Topology.connectedComponents(empty, 24, 24).count() == 0,
+      "single-tile path: rows from no cells")
+    graft.CacheScope.flush(spark)
+  }
+
+  test("single-tile CC chosen by the extent matches the iterative reference and survives two materializations") {
+    // a 24x24 extent fits one 512-cell tile, so the solve is the lazy
+    // labeling with no checkpoint: two independent materializations
+    // must agree (no checkpoint to hide a non-deterministic re-run)
+    val cells = mask24
+    for (dirs8 <- Seq(false, true)) {
+      val lazySolve = Topology.connectedComponents(cells, 24, 24, dirs8 = dirs8)
+      val iter = labelSet(Topology.connectedComponentsIterative(cells, 24, dirs8))
+      val m1 = labelSet(lazySolve)
+      val m2 = labelSet(lazySolve)
+      assert(m1 == iter, s"dirs8=$dirs8: single-tile labels differ")
+      assert(m1 == m2, s"dirs8=$dirs8: lazy re-materialization not stable")
+    }
+    graft.CacheScope.flush(spark)
+  }
+
+  test("single-tile CC chosen by the extent starts no Spark job when built") {
+    import org.apache.spark.sql.graftbridge.ListenerBus
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val cells = mask24
+    for (dirs8 <- Seq(false, true)) {
+      val jobs = ListenerBus.jobsDuring(spark.sparkContext)(
+        Topology.connectedComponents(cells, 24, 24, dirs8 = dirs8))
+      assert(jobs == 0, s"dirs8=$dirs8: single-tile CC started $jobs job(s)")
     }
   }
 
-  test("static single-tile CC construction starts no Spark job") {
-    import org.apache.spark.sql.graftbridge.ListenerBus
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-    val cells = (for (it <- 0 until 2; iz <- 0 until 24; ix <- 0 until 24
-      if ((iz * 37 + ix * 61 + it * 13) % 7) < 3)
-      yield (it, iz, ix)).toDF("it", "iz", "ix")
-    val jobs = ListenerBus.jobsDuring(spark.sparkContext)(
-      Topology.connectedComponents(cells, 24, staticSingleTile = true))
-    assert(jobs == 0, s"static single-tile CC started $jobs job(s)")
+  test("single-tile CC fails loudly on a cell outside its one tile") {
+    // the 16x16 extent selects the single-tile path; a cell beyond the
+    // 512-cell tile would be split from its neighbours silently
+    val cells = Seq((0, 0, 0), (0, 600, 3)).toDF("it", "iz", "ix")
+    val e = intercept[Exception](
+      Topology.connectedComponents(cells, 16, 16).collect())
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    assert(causes(e).exists(c =>
+      String.valueOf(c.getMessage).contains("outside [0, 512)")),
+      s"unexpected: $e")
   }
 
   test("graphComponents driver fast path matches the distributed loop") {
@@ -166,7 +185,7 @@ class TopologySpec extends AnyFunSuite {
     val star = Seq((0, 100L, 101L), (0, 100L, 102L), (0, 100L, 103L))
     val other = Seq((1, 5L, 9L), (1, 9L, 2L), (1, 50L, 60L), (1, 60L, 50L))
     val edges = (chain ++ star ++ other).toDF("k", "s", "t")
-    val loop = Topology.graphCCLoop(edges, Seq("k"), maxIter = 1000)
+    val loop = Topology.graphCCLoop(edges, Seq("k"), maxIter = Topology.MaxIter)
       .as[(Int, Long, Long)].collect().toSet
     val drv = Topology.graphComponents(edges, Seq("k"))
       .as[(Int, Long, Long)].collect().toSet
@@ -175,6 +194,13 @@ class TopologySpec extends AnyFunSuite {
     // spot-check semantics: chain collapses to min id 1, key groups stay apart
     assert(drv.contains((0, 40L, 1L)) && drv.contains((0, 103L, 100L))
       && drv.contains((1, 2L, 2L)) && drv.contains((1, 60L, 50L)))
+  }
+
+  test("graphCCLoop throws at its round cap instead of returning partial labels") {
+    val edges = (1L until 40L).map(i => (0, i, i + 1)).toDF("k", "s", "t")
+    val e = intercept[IllegalStateException](
+      Topology.graphCCLoop(edges, Seq("k"), maxIter = 1))
+    assert(e.getMessage.contains("did not converge in 1 rounds"))
   }
 
   test("tiled CC on a 256x256 mask matches a driver union-find ground truth") {
@@ -203,7 +229,8 @@ class TopologySpec extends AnyFunSuite {
 
     val cells = pts.toSeq.map { case (iz, ix) => (0, iz, ix) }
       .toDF("it", "iz", "ix")
-    val got = Topology.connectedComponents(cells, nx, tile = 64)
+    val got = Topology.ccTiled(cells, nz, nx, Seq("it"), dirs8 = false,
+      tile = 64)
       .select("iz", "ix", "comp").as[(Int, Int, Long)].collect()
       .map { case (iz, ix, c) => (iz, ix) -> c }.toMap
     assert(got.size == expected.size)
