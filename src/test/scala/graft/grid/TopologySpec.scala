@@ -136,16 +136,21 @@ class TopologySpec extends AnyFunSuite {
     graft.CacheScope.flush(spark)
   }
 
-  test("single-tile CC chosen by the extent matches the iterative reference and survives two materializations") {
-    // a 24x24 extent fits one 512-cell tile, so the solve is the lazy
-    // labeling with no checkpoint: two independent materializations
-    // must agree (no checkpoint to hide a non-deterministic re-run)
+  test("static single-tile CC (lazy, checkpoint-free) matches the default solve") {
+    // a 24x24 extent fits one 512-cell tile, so the default solve is the
+    // lazy labeling with no checkpoint. Its labels must equal the
+    // two-level solve (tile=8 forces it) and the iterative reference,
+    // and two independent materializations must agree (no checkpoint
+    // to hide a non-deterministic re-run)
     val cells = mask24
     for (dirs8 <- Seq(false, true)) {
       val lazySolve = Topology.connectedComponents(cells, 24, 24, dirs8 = dirs8)
+      val twoLevel = labelSet(Topology.ccTiled(cells, 24, 24, Seq("it"), dirs8,
+        tile = 8))
       val iter = labelSet(Topology.connectedComponentsIterative(cells, 24, dirs8))
       val m1 = labelSet(lazySolve)
       val m2 = labelSet(lazySolve)
+      assert(m1 == twoLevel, s"dirs8=$dirs8: single-tile and two-level labels differ")
       assert(m1 == iter, s"dirs8=$dirs8: single-tile labels differ")
       assert(m1 == m2, s"dirs8=$dirs8: lazy re-materialization not stable")
     }
