@@ -200,6 +200,32 @@ class PlanSpec extends AnyFunSuite {
     assert(wins.length == 2, s"expected 2 collapsed windows, got ${wins.length}")
   }
 
+  test("q101 spreads the MinHash kernel by doc_id: its only hash exchanges " +
+      "are doc_id's, and the distinct adds none") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Plans extends AdaptiveSparkPlanHelper
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val df = QueryRegistry.queries("q101_neardup_arrivals")(spark, sf)
+    df.collect()
+    // the final adaptive plan's exchange nodes; range and broadcast
+    // exchanges (the ORDER BY, the corpus-side probe) are not counted
+    val hash = Plans.collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.collect { case h: HashPartitioning => h }
+    def keys(h: HashPartitioning): Seq[String] = h.expressions.map {
+      case a: AttributeReference => a.name
+      case e => e.sql
+    }
+    assert(hash.nonEmpty, "the documents scan feeds the kernel unshuffled")
+    assert(!hash.exists(keys(_) == Seq("doc_id", "corpus_doc", "band")),
+      s"the distinct re-shuffles: ${hash.mkString(", ")}")
+    assert(hash.forall(h => keys(h) == Seq("doc_id") && h.numPartitions == n),
+      s"expected only hashpartitioning(doc_id, $n): ${hash.mkString(", ")}")
+  }
+
   test("q110 incremental ingest keeps the anti-join and reuses cached signatures") {
     val p = plan("q110_incremental_ingest")
     assert(p.contains("LeftAnti"), "survivor selection must be an anti-join")

@@ -241,4 +241,40 @@ class DedupIndexSpec extends AnyFunSuite {
     assert(full != want, "the rewrite must change the pair set")
     assert(rewritten == want, "q51 served the stale index")
   }
+
+  test("serve reads start no Spark job: readComponent resolves the " +
+      "schema inference would from one footer") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.graftbridge.ListenerBus
+    import graft.multimodal.{CodecQueries, PhashIndex}
+    val docs = graft.Tables.documents(spark, sf).select("doc_id", "text")
+    // dedup signatures: flat build files, a fenced batch dir and an
+    // unfenced append
+    val dd = graft.TempArtifacts.dir("graft_idx_read_dd")
+    DedupQueries.buildDedupIndex(docs.filter(col("doc_id") < 25), dd)
+    DedupQueries.advanceDedupIndex(
+      docs.filter(col("doc_id") >= 25 && col("doc_id") < 40), dd, Some(0L))
+    DedupQueries.advanceDedupIndex(
+      docs.filter(col("doc_id") >= 40 && col("doc_id") < 50), dd)
+    val ng = graft.TempArtifacts.dir("graft_idx_read_ng")
+    DedupQueries.buildNgramIndex(docs.filter(col("doc_id") < 25),
+      DedupQueries.DupW, ng)
+    val ph = graft.TempArtifacts.dir("graft_idx_read_ph")
+    PhashIndex.buildPhashIndex(CodecQueries.phashHashesOf(spark, sf,
+      col("doc_id") % 6 === 0 && col("doc_id") < 100), ph)
+    for ((root, component) <- Seq(dd -> "signatures", ng -> "grams",
+        ph -> "hashes")) {
+      val dir = s"${graft.sources.ArtifactVersions.live(root)}/$component"
+      var served: DataFrame = null
+      val jobs = ListenerBus.jobsDuring(spark.sparkContext) {
+        served = graft.sources.BatchCommits.readComponent(spark, dir)
+      }
+      assert(jobs == 0, s"reading $component started $jobs job(s)")
+      val inferred = spark.read.option("recursiveFileLookup", "true")
+        .parquet(dir)
+      assert(served.schema == inferred.schema, component)
+      assert(served.collect().toSet == inferred.collect().toSet, component)
+    }
+    graft.CacheScope.flush(spark)
+  }
 }
