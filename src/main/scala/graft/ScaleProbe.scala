@@ -131,7 +131,8 @@ object ScaleProbe {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val index = CacheScope.retain(
-      graft.dedup.DedupQueries.bandBucketsPerRow(corpus10))
+      graft.dedup.DedupQueries.bandsOf(
+        graft.dedup.DedupQueries.signaturesOf(corpus10, 1)))
     println(s"[scale] neardup_stream index rows=${index.count()} (10x corpus)")
     val mem = MemoryStream[(Long, String)]
     // count-only sink: on this twin-heavy degenerate corpus every

@@ -5,14 +5,16 @@ import org.apache.spark.sql.functions._
 
 /** Loaders for the driver's parquet tables (TESTDATA.md).
   *
-  * All reads are plain `spark.read.parquet` so Catalyst predicate pushdown
-  * and column pruning reach the scan. At 100 TB these tables would be
+  * All reads are plain parquet reads so Catalyst predicate pushdown and
+  * column pruning reach the scan; the schema comes from the file's
+  * footer on the driver ([[graft.sources.Formats.readParquet]]), so a
+  * load starts no schema-inference job. At 100 TB these tables would be
   * partitioned (e.g. lineitem by ship month); the loaders stay the single
   * choke point where that layout knowledge would live.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Formats.readParquet(spark, spark.read, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")

@@ -18,15 +18,6 @@ object DedupQueries {
   private def tokenSets(s: SparkSession, d: String): DataFrame =
     tokenSetsOf(Tables.documents(s, d))
 
-  /** (doc_id, token) stream WITHOUT the distinct shuffle — correct
-    * wherever the consumer is duplicate-tolerant (MinHash: min over a
-    * multiset equals min over its set). Saves a full shuffle of every
-    * token at signature-build time; set-cardinality consumers (exact
-    * Jaccard) must use [[tokenSetsOf]] instead.
-    */
-  private def tokenStreamOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
-
   /** 60-bit token hash with an exact cross-engine twin — see
     * [[graft.functions.Hashing]].
     */
@@ -72,13 +63,13 @@ object DedupQueries {
     * correlated across i (a correlated family measurably degrades the
     * Jaccard estimate).
     */
-  private val P = graft.functions.Hashing.P
+  private[dedup] val P = graft.functions.Hashing.P
   private def scatter(k: BigInt): Long = (k mod BigInt(P)).toLong
-  private def permA(i: Int): Long =
+  private[dedup] def permA(i: Int): Long =
     scatter(BigInt(i + 1) * BigInt("9E3779B97F4A7C15", 16)) | 1L
-  private def permB(i: Int): Long =
+  private[dedup] def permB(i: Int): Long =
     scatter(BigInt(i + 1) * BigInt("C2B2AE3D27D4EB4F", 16)) | 1L
-  private def permC(i: Int): Long =
+  private[dedup] def permC(i: Int): Long =
     scatter(BigInt(i) * BigInt("D6E8FEB86659FD93", 16) + 12345)
 
   /** w-token shingle sets: sliding windows of `w` consecutive tokens.
@@ -94,40 +85,23 @@ object DedupQueries {
                           i -> concat_ws(' ', slice(toks, i + 1, $w))))
            ELSE array() END""")).as("token"))
 
-  /** Per-doc MinHash signature: min over tokens of h_i(token) per
-    * permutation — one groupBy, signatures are NumHashes longs per doc.
-    * Scales as word-count does; no pairwise work yet.
-    */
-  def minhashSignatures(s: SparkSession, d: String): DataFrame =
-    minhashSignaturesOf(Tables.documents(s, d))
-
-  def minhashSignaturesOf(docs: DataFrame): DataFrame =
-    signaturesFromTokens(tokenStreamOf(docs))
-
-  /** MinHash signatures from any (doc_id, token) set — tokens or
-    * shingles.
-    */
-  def signaturesFromTokens(tokens: DataFrame): DataFrame = {
-    val md = md5(col("token"))
-    val toks = tokens
-      .withColumn("x1", conv(substring(md, 1, 15), 16, 10).cast("long") % P)
-      .withColumn("x2", conv(substring(md, 17, 15), 16, 10).cast("long") % P)
-    val aggs = (0 until NumHashes).map(i =>
-      min((col("x1") * permA(i) % P + col("x2") * permB(i) % P + permC(i)) % P)
-        .as(s"h$i"))
-    toks.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Per-ROW MinHash signatures via higher-order array functions — no
-    * explode, no aggregation, so the SAME expressions run as a stateless
-    * projection on a STREAM of documents. Bit-identical to the
-    * explode+groupBy batch path ([[signaturesFromTokens]]): the min over
-    * the token multiset equals the min over its set. The batch path
-    * remains preferable for batch jobs: measured at sf0.1, per-row
-    * minhash is ~2.7x SLOWER than explode+groupBy (16 array walks plus
-    * a materialized struct array per doc outweigh the saved shuffle),
-    * the opposite of SimHash where per-row wins ([[simhashPerRow]] —
-    * one hash per token, and the explode path pays TWO shuffles).
+  /** Per-doc MinHash signatures (doc_id, h0..h15) over the `w`-token
+    * shingles of each document's text (`w` = 1: its tokens): h_i is the
+    * min over the shingle set of permutation i. The ONLY place
+    * signatures are computed: every token- and shingle-unit query, the
+    * persisted indexes, the ingest flows and the Streams sinks call it,
+    * and the oracles' explode+groupBy CTEs ([[sigBandCtes]]) are its
+    * reference.
+    *
+    * One fused [[graft.functions.MinHashSigs]] pass per row computes
+    * every slot (no explode, no aggregate on doc_id), so this is a
+    * stateless projection that also runs on a stream. Documents with
+    * NULL text or fewer than `w` tokens get no row, as in the CTEs; the
+    * filter tests the text before the kernel (a filter on the kernel's
+    * output would be pushed below it and run it twice). The array is
+    * materialized in its own projection and h0..h15 read its elements;
+    * CollapseProject keeps a non-cheap expression referenced many times
+    * un-inlined, so the digest pass runs once per row.
     *
     * The input is hash-partitioned by doc_id before the kernel: a scan
     * of a parquet file with one row group (every test table, and
@@ -136,45 +110,22 @@ object DedupQueries {
     * (spark.sql.shuffle.partitions, the core count under GraftSession)
     * because AQE coalesces a sub-MB shuffle like this one back into a
     * single partition. The output is partitioned by doc_id, so a
-    * downstream distinct/groupBy keyed on doc_id adds no exchange. A
-    * hash repartition is a stateless operator, so the kernel stays
-    * stream-safe.
+    * downstream distinct/groupBy keyed on doc_id adds no exchange.
     */
-  def signaturesPerRow(docs: DataFrame): DataFrame = {
-    // ONE fused pass: building an
-    // array<struct<x1,x2>> with a transform() and then running NumHashes
-    // separate array_min(transform(...)) projections costs 17
-    // interpreted HOF walks of every token array per row (HOFs are
-    // CodegenFallback). [[graft.functions.MinHashSigs]] computes all
-    // slots in one tight pass with identical arithmetic (bit-parity
-    // pinned by DedupSpec's per-row ≡ explode-path test). The array is
-    // materialized in its own projection and the h0..h15 columns read
-    // element_at from it; CollapseProject keeps non-cheap expressions
-    // referenced many times un-inlined, so the digest pass runs once
-    // per row (PlanSpec-visible: a single minhashsigs in the plan).
+  def signaturesOf(docs: DataFrame, w: Int): DataFrame = {
     val sigArr = graft.functions.MinHashOps.minhashSigs(
-      split(col("text"), " "), P,
+      split(col("text"), " "), w, P,
       (0 until NumHashes).map(permA),
       (0 until NumHashes).map(permB),
       (0 until NumHashes).map(permC))
     val parts = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    docs.repartition(parts, col("doc_id"))
+    // split with limit w yields min(tokens, w) pieces; NULL text fails too
+    docs.filter(col("text").isNotNull && size(split(col("text"), " ", w)) >= w)
+      .repartition(parts, col("doc_id"))
       .withColumn("__sigs", sigArr)
       .select(col("doc_id") +:
         (0 until NumHashes).map(i => col("__sigs")(i).as(s"h$i")): _*)
   }
-
-  /** Stream-safe (doc_id, band, bucket) table of a document set — the
-    * per-row signature path through the standard band layout.
-    */
-  def bandBucketsPerRow(docs: DataFrame): DataFrame =
-    bandsOf(signaturesPerRow(docs))
-
-  /** LSH candidate pairs: docs sharing any band bucket. Band hash joins
-    * replace the O(n^2) cross join — the scale path for near-dup at 100 TB.
-    */
-  def minhashCandidates(s: SparkSession, d: String): DataFrame =
-    minhashCandidatesFrom(minhashSignatures(s, d))
 
   /** (doc_id, band, bucket) LSH band entries of a signature table.
     * ONE posexplode over the per-band bucket array, not a per-band
@@ -192,9 +143,6 @@ object DedupQueries {
       posexplode(array(buckets: _*)).as(Seq("band", "bucket")))
   }
 
-  def minhashCandidatesFrom(sig: DataFrame): DataFrame =
-    candidatesFromBands(bandsOf(sig))
-
   /** LSH candidate pairs from an already-materialized (doc_id, band,
     * bucket) table — the serve-side entry: the persisted index's band
     * parquet joins itself directly, no re-derivation from signatures.
@@ -210,14 +158,14 @@ object DedupQueries {
 
   /** Estimated Jaccard from signature agreement for candidate pairs.
     * Signatures are persisted: they feed the band buckets AND both sides
-    * of the pair join — without the persist the explode+groupBy over all
-    * tokens runs three times.
+    * of the pair join — without the persist the signature build over
+    * all tokens runs three times.
     */
   def minhashPairs(s: SparkSession, d: String): DataFrame =
     minhashPairsOf(Tables.documents(s, d))
 
   def minhashPairsOf(docs: DataFrame): DataFrame =
-    pairsFromSignatures(minhashSignaturesOf(docs))
+    pairsFromSignatures(signaturesOf(docs, 1))
 
   private def pairsFromSignatures(signatures: DataFrame): DataFrame =
     pairsFromSignaturesUnsorted(signatures).orderBy("doc_a", "doc_b")
@@ -311,8 +259,8 @@ object DedupQueries {
     * projection of them. Hash-identical to
     * [[minhashPairsOf]] over the same corpus (DedupIndexSpec pins the
     * parity); what changes is the suite's resident footprint — the
-    * explode+tokenize+groupBy lineage runs once at build time instead
-    * of being recomputed and re-retained by every dashboard query.
+    * tokenize+hash lineage runs once at build time instead of being
+    * recomputed and re-retained by every dashboard query.
     */
   private[dedup] def pairsFromIndexUnsorted(s: SparkSession,
       path: String): DataFrame =
@@ -580,9 +528,9 @@ object DedupQueries {
     // ---- q101: batch twin of the STREAMING incremental near-dup path
     // (Streams.nearDupCandidatesStream): "arriving" docs (upper half of
     // the corpus) band-bucket-joined against the "existing" corpus index
-    // (lower half), both through the per-row HOF signature builder. The
-    // oracle rebuilds bands via the explode-path CTEs — per-row and
-    // explode signatures are bit-identical (DedupSpec parity), so this
+    // (lower half), both signed by the stream-safe [[signaturesOf]].
+    // The oracle rebuilds bands via the explode+groupBy CTEs (DedupSpec
+    // pins signaturesOf's bit-parity with that form), so this
     // hash-checks the whole streaming join end-to-end.
     Q("q101_neardup_arrivals",
       (s, d) => {
@@ -590,7 +538,7 @@ object DedupQueries {
         val split = NeardupArrivalSplit
         graft.streaming.Streams.nearDupCandidatesStream(
             docs.filter(col("doc_id") >= split),
-            bandBucketsPerRow(docs.filter(col("doc_id") < split)))
+            bandsOf(signaturesOf(docs.filter(col("doc_id") < split), 1)))
           .distinct()
           .orderBy("doc_id", "corpus_doc", "band")
       },
@@ -611,12 +559,11 @@ object DedupQueries {
     // arrivals drop. q101 -> verify -> upsert in one plan: how a
     // deduped training corpus is maintained day over day.
     //
-    // Scale shape of each leg: per-row signatures ONLY on the arrival
-    // side (the streaming shape — one doc_id hash exchange spreads the
-    // kernel over every core, no aggregation before the band join);
-    // the STATIC corpus side uses the batch explode+groupBy path, which
-    // is ~2.7x faster for batch frames (see [[signaturesPerRow]]). The
-    // intra-batch leg is STAR-CONTRACTED like q50: each arrival band
+    // Scale shape of each leg: both sides sign through [[signaturesOf]]
+    // (one doc_id hash exchange spreads the kernel over every core, no
+    // aggregation before the band join); the corpus side is retained
+    // for the band join and the verify join. The intra-batch leg is
+    // STAR-CONTRACTED like q50: each arrival band
     // bucket contracts to member -> min-arrival edges, so the leg is
     // linear in band entries even when twins flood one bucket — never
     // the O(|bucket|²) pairwise self-join.
@@ -636,8 +583,8 @@ object DedupQueries {
     Q("q110_incremental_ingest",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val sigCorp = graft.CacheScope.retain(minhashSignaturesOf(
-          docs.filter(col("doc_id") < NeardupArrivalSplit)))
+        val sigCorp = graft.CacheScope.retain(signaturesOf(
+          docs.filter(col("doc_id") < NeardupArrivalSplit), 1))
         incrementalIngest(docs, NeardupArrivalSplit, sigCorp)
       },
       Some(incrementalIngestOracleSql)),
@@ -1103,7 +1050,7 @@ object DedupQueries {
     // identical signature.
     val nearDrop = graft.CacheScope.retain(
       pairsFromSignaturesUnsorted(
-        minhashSignaturesOf(docs.join(surv1, Seq("doc_id"))))
+        signaturesOf(docs.join(surv1, Seq("doc_id")), 1))
         .select(greatest(col("doc_a"), col("doc_b")).as("doc_id"))
         .distinct())
     val surv2 = graft.CacheScope.retain(
@@ -1135,7 +1082,7 @@ object DedupQueries {
     val srcOf = docs.select(col("doc_id"), col("source"))
     val srcSigs = graft.CacheScope.retain {
       val m = (0 until NumHashes).map(i => min(col(s"h$i")).as(s"h$i"))
-      minhashSignaturesOf(docs).join(srcOf, "doc_id")
+      signaturesOf(docs, 1).join(srcOf, "doc_id")
         .groupBy("source").agg(m.head, m.tail: _*)
     }
     srcSigs.as("a").crossJoin(broadcast(srcSigs.as("b")))
@@ -1154,10 +1101,9 @@ object DedupQueries {
     * (QueriesSpec), never in the declared query.
     */
   def exactSourceJaccardOf(docs: DataFrame): DataFrame = {
-    val srcOf = docs.select(col("doc_id"), col("source"))
     val toks = graft.CacheScope.retain(
-      tokenStreamOf(docs).join(srcOf, "doc_id")
-        .select("source", "token").distinct())
+      docs.select(col("source"), explode(split(col("text"), " ")).as("token"))
+        .distinct())
     val sizes = toks.groupBy("source").agg(count(lit(1)).as("n"))
     val inter = toks.as("ta").join(toks.as("tb"),
         col("ta.token") === col("tb.token")
@@ -1751,8 +1697,11 @@ object DedupQueries {
     * [[simhashOf]] (same distinct token set, same h60, same ±1 sums) with
     * ZERO shuffles: the explode path pays a distinct shuffle of every
     * token plus the groupBy shuffle; this one is a stateless projection
-    * (stream-safe, like [[signaturesPerRow]]). The explode path remains
-    * for corpora with mega-documents, which it parallelizes across tasks.
+    * (stream-safe, like [[signaturesOf]]). A document with NULL text
+    * gets no row, as on the explode path: a simhash of 0 would put every
+    * such document at distance 0 from the others. The explode path
+    * remains for corpora with mega-documents, which it parallelizes
+    * across tasks.
     */
   def simhashPerRow(docs: DataFrame): DataFrame = {
     val hs = expr(
@@ -1766,7 +1715,7 @@ object DedupQueries {
     val sig = (0 until SimHashBits).map(i =>
         when(col(s"b$i") > 0, lit(1L << i)).otherwise(0L))
       .reduce(_.bitwiseOR(_))
-    docs.withColumn("hs", hs)
+    docs.filter(col("text").isNotNull).withColumn("hs", hs)
       .select(col("doc_id") +: bitSums: _*)
       .select(col("doc_id"), sig.as("simhash"))
   }
@@ -1815,7 +1764,7 @@ object DedupQueries {
   private def incrementalIngest(docs: DataFrame, split: Long,
       sigCorp: DataFrame): DataFrame = {
     val sigArr = graft.CacheScope.retain(
-      signaturesPerRow(docs.filter(col("doc_id") >= split)))
+      signaturesOf(docs.filter(col("doc_id") >= split), 1))
     val arrBands = graft.CacheScope.retain(bandsOf(sigArr))
     val dupArrivals = ingestDupArrivals(sigArr, arrBands, sigCorp)
     docs.filter(col("doc_id") < split)
@@ -1873,7 +1822,7 @@ object DedupQueries {
           && col("doc_id") >= split1).select("doc_id"),
         "doc_id").select("doc_id", "text"), idx)
     val sigArr2 = graft.CacheScope.retain(
-      signaturesPerRow(docs.filter(col("doc_id") >= split2)))
+      signaturesOf(docs.filter(col("doc_id") >= split2), 1))
     val dup2 = ingestDupArrivals(sigArr2,
       graft.CacheScope.retain(bandsOf(sigArr2)),
       graft.CacheScope.retain(indexSignatures(s, idx)))
@@ -1950,7 +1899,7 @@ object DedupQueries {
     * row is cheaper to derive than to write, list and scan.
     */
   def buildDedupIndex(docs: DataFrame, path: String): Unit =
-    buildDedupIndexFrom(minhashSignaturesOf(docs), path)
+    buildDedupIndexFrom(signaturesOf(docs, 1), path)
 
   /** Build from an arbitrary signature table — the word-token and
     * shingle pipelines share one artifact layout, so every serve-side
@@ -1972,7 +1921,7 @@ object DedupQueries {
   def ingestBatchDecisions(batch: DataFrame, path: String): DataFrame =
     graft.CacheScope.scoped {
       val s = batch.sparkSession
-      val sigArr = graft.CacheScope.retain(signaturesPerRow(batch))
+      val sigArr = graft.CacheScope.retain(signaturesOf(batch, 1))
       val arrBands = graft.CacheScope.retain(bandsOf(sigArr))
       val idxSig = graft.CacheScope.retain(indexSignatures(s, path))
       // EVERY arrival gets a decision row ('added' or 'dup') — a
@@ -1996,7 +1945,7 @@ object DedupQueries {
   def advanceDedupIndex(admitted: DataFrame, path: String,
       batchId: Option[Long] = None): Unit =
     graft.sources.ArtifactVersions.advance(path, "signatures", batchId)(
-      signaturesPerRow(admitted))
+      signaturesOf(admitted, 1))
 
   /** An index served once per corpus per JVM, keyed on the documents'
     * content: bench run 1 pays the build, later runs measure serving.
@@ -2021,7 +1970,7 @@ object DedupQueries {
   private def servedShingleDedupIndex(s: SparkSession, docs: DataFrame,
       d: String): String =
     servedIndex(d, "graft_dedup_index_shingle")(buildDedupIndexFrom(
-      signaturesFromTokens(shingleSets(docs, ShingleW)), _))
+      signaturesOf(docs, ShingleW), _))
 
   /** The pre-arrival corpus's n-gram window index, for q154. */
   private def servedNgramIndex(s: SparkSession, docs: DataFrame,
@@ -2092,7 +2041,7 @@ object DedupQueries {
     * text): (doc_id, kept) for every doc.
     */
   private def fuzzyDedupOf(docs: DataFrame): DataFrame = {
-    val sig = graft.CacheScope.retain(minhashSignaturesOf(docs))
+    val sig = graft.CacheScope.retain(signaturesOf(docs, 1))
     val bands = bandsOf(sig)
     val bm = bands.groupBy("band", "bucket").agg(min("doc_id").as("m"))
     val edges = bands.join(bm, Seq("band", "bucket"))
@@ -2355,7 +2304,7 @@ object DedupQueries {
 
   def dedupClustersStarOf(docs: DataFrame): DataFrame =
     dedupClustersStarFrom(docs,
-      graft.CacheScope.retain(minhashSignaturesOf(docs)))
+      graft.CacheScope.retain(signaturesOf(docs, 1)))
 
   /** The star-contracted policy over caller-supplied signatures (token
     * or shingle unit, recomputed or read from an index); the band

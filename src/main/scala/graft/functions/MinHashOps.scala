@@ -25,10 +25,20 @@ import org.apache.spark.sql.types._
   * contributes nothing (array_min skips the NULL element the SQL chain
   * produced for it); an empty token array yields all-NULL slots
   * (array_min of an empty array is NULL).
+  *
+  * At shingle width `w` > 1 the hashed units are the n - w + 1 windows
+  * of `w` consecutive tokens, each hashed as
+  * `concat_ws(' ', slice(tokens, i + 1, w))` would be: the window's
+  * token bytes and the ' ' separators go through `md.update` in turn,
+  * so no shingle string or array is built. A NULL token and its
+  * separator are skipped, and a window of NULL tokens only contributes
+  * nothing (at `w` = 1, the NULL-token rule above). Fewer than `w`
+  * tokens yields all-NULL slots.
   */
-case class MinHashSigs(child: Expression, p: Long,
+case class MinHashSigs(child: Expression, w: Int, p: Long,
     as: Seq[Long], bs: Seq[Long], cs: Seq[Long])
     extends UnaryExpression with CodegenFallback {
+  require(w >= 1, s"shingle width $w < 1")
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def nullable: Boolean = true
   override def checkInputDataTypes()
@@ -53,10 +63,21 @@ case class MinHashSigs(child: Expression, p: Long,
     var any = false
     val md = java.security.MessageDigest.getInstance("MD5")
     var i = 0
-    while (i < n) {
-      if (!toks.isNullAt(i)) {
+    while (i + w <= n) {
+      // digest the window's non-NULL tokens joined by ' ' (w = 1: the token)
+      var empty = true
+      var t = i
+      while (t < i + w) {
+        if (!toks.isNullAt(t)) {
+          if (!empty) md.update(' '.toByte)
+          md.update(toks.getUTF8String(t).getBytes)
+          empty = false
+        }
+        t += 1
+      }
+      if (!empty) {
         any = true
-        val d = md.digest(toks.getUTF8String(i).getBytes)
+        val d = md.digest()
         // 60-bit halves = hex chars [0,15) and [16,31) of md5Hex:
         // big-endian 8-byte words shifted past the dropped low nibble
         var v1 = 0L; var v2 = 0L
@@ -86,8 +107,10 @@ case class MinHashSigs(child: Expression, p: Long,
 }
 
 object MinHashOps {
-  /** Column API: the k MinHash slots of a token-array column. */
-  def minhashSigs(tokens: Column, p: Long,
+  /** Column API: the k MinHash slots of a token-array column over its
+    * `w`-token shingles (`w` = 1: the tokens themselves).
+    */
+  def minhashSigs(tokens: Column, w: Int, p: Long,
       as: Seq[Long], bs: Seq[Long], cs: Seq[Long]): Column =
-    Bridge.toColumn(MinHashSigs(Bridge.toExpression(tokens), p, as, bs, cs))
+    Bridge.toColumn(MinHashSigs(Bridge.toExpression(tokens), w, p, as, bs, cs))
 }

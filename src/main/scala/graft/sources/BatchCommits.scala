@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The per-batch fence: EXACTLY-ONCE batch appends for a parquet
@@ -200,37 +199,9 @@ object BatchCommits {
     * `batch-<id>` subdirectories. Recursive lookup (with Spark's
     * hidden-name filtering) sees both; a plain non-recursive parquet
     * read would silently miss the subdirectories. The schema comes from
-    * one visible data file's footer, read on the driver: without a
-    * schema, `spark.read.parquet` infers it with a Spark job, which a
-    * serve read would pay before the query's own action. Inference
-    * without schema merging also reads a single footer, so the result
-    * is the same. With no data file the read infers as before (and
-    * fails the way Spark fails on an empty or missing path).
+    * one data file's footer ([[Formats.readParquet]]), so a serve read
+    * starts no Spark job before the query's own action.
     */
-  def readComponent(s: SparkSession, dir: String): DataFrame = {
-    val reader = s.read.option("recursiveFileLookup", "true")
-    firstDataFile(s, dir)
-      .fold(reader)(f => reader.schema(
-        org.apache.spark.sql.graftbridge.Bridge.parquetFooterSchema(s, f)))
-      .parquet(dir)
-  }
-
-  /** The first file under `dir` that Spark's recursive listing reads:
-    * no name on its path below `dir` starts with '_' or '.'.
-    */
-  private def firstDataFile(s: SparkSession, dir: String)
-      : Option[FileStatus] = {
-    val root = new HPath(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def walk(d: HPath): Option[FileStatus] = {
-      val (dirs, files) = fs.listStatus(d).toSeq
-        .filterNot(f => f.getPath.getName.startsWith("_") ||
-          f.getPath.getName.startsWith("."))
-        .partition(_.isDirectory)
-      files.headOption.orElse(
-        dirs.iterator.flatMap(f => walk(f.getPath)).nextOption())
-    }
-    scala.util.Try(fs.getFileStatus(root)).toOption
-      .filter(_.isDirectory).flatMap(_ => walk(root))
-  }
+  def readComponent(s: SparkSession, dir: String): DataFrame =
+    Formats.readParquet(s, s.read.option("recursiveFileLookup", "true"), dir)
 }

@@ -104,7 +104,8 @@ object Streams {
     */
   def nearDupCandidatesStream(docs: DataFrame,
       corpusBands: DataFrame): DataFrame =
-    graft.dedup.DedupQueries.bandBucketsPerRow(docs)
+    graft.dedup.DedupQueries.bandsOf(
+        graft.dedup.DedupQueries.signaturesOf(docs, 1))
       .join(corpusBands
           .withColumnRenamed("doc_id", "corpus_doc"),
         Seq("band", "bucket"))

@@ -226,6 +226,29 @@ class PlanSpec extends AnyFunSuite {
       s"expected only hashpartitioning(doc_id, $n): ${hash.mkString(", ")}")
   }
 
+  test("q119's index build and q51's shingle-index build sign with one " +
+      "fused kernel: no Generate, no aggregate on doc_id") {
+    import graft.dedup.DedupQueries
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate}
+    import org.apache.spark.sql.functions.col
+    CacheScope.flush(spark) // a retained twin would plan as its cache
+    val docs = Tables.documents(spark, sf)
+    // the frames buildDedupIndex and the served shingle index write
+    for ((label, sig) <- Seq(
+        "q119 build" -> DedupQueries.signaturesOf(
+          docs.filter(col("doc_id") < DedupQueries.NeardupArrivalSplit), 1),
+        "q51 build" -> DedupQueries.signaturesOf(docs, DedupQueries.ShingleW))) {
+      val p = sig.queryExecution.optimizedPlan
+      val kernels = p.collect { case n => n.expressions.flatMap(_.collect {
+        case k: graft.functions.MinHashSigs => k }) }.flatten
+      assert(kernels.size == 1, s"$label: ${kernels.size} minhashsigs\n$p")
+      assert(p.collect { case g: Generate => g }.isEmpty, s"$label:\n$p")
+      assert(p.collect { case a: Aggregate if a.groupingExpressions
+          .exists(_.references.exists(_.name == "doc_id")) => a }.isEmpty,
+        s"$label:\n$p")
+    }
+  }
+
   test("q110 incremental ingest keeps the anti-join and reuses cached signatures") {
     val p = plan("q110_incremental_ingest")
     assert(p.contains("LeftAnti"), "survivor selection must be an anti-join")

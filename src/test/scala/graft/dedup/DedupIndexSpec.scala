@@ -30,7 +30,7 @@ class DedupIndexSpec extends AnyFunSuite {
     val docs = graft.Tables.documents(spark, sf).limit(50)
     val idx = graft.TempArtifacts.dir("graft_idx_spec")
     DedupQueries.buildDedupIndex(docs, idx)
-    val direct = DedupQueries.minhashSignaturesOf(docs)
+    val direct = DedupQueries.signaturesOf(docs, 1)
     val readBack = DedupQueries.indexSignatures(spark, idx)
     assert(readBack.schema.fieldNames.sameElements(direct.schema.fieldNames))
     assert(direct.exceptAll(readBack).isEmpty && readBack.exceptAll(direct).isEmpty)
@@ -53,14 +53,13 @@ class DedupIndexSpec extends AnyFunSuite {
     graft.CacheScope.flush(spark)
     // same layout, shingle signatures (the q51/q95 serve route)
     val sIdx = graft.TempArtifacts.dir("graft_idx_shingle")
-    DedupQueries.buildDedupIndexFrom(DedupQueries.signaturesFromTokens(
-      DedupQueries.shingleSets(docs, DedupQueries.ShingleW)), sIdx)
+    DedupQueries.buildDedupIndexFrom(
+      DedupQueries.signaturesOf(docs, DedupQueries.ShingleW), sIdx)
     graft.CacheScope.flush(spark)
     val servedS = DedupQueries.pairsFromIndexUnsorted(spark, sIdx)
       .collect().toSet
     val recomputedS = DedupQueries.pairsFromSignaturesUnsorted(
-      DedupQueries.signaturesFromTokens(
-        DedupQueries.shingleSets(docs, DedupQueries.ShingleW)))
+      DedupQueries.signaturesOf(docs, DedupQueries.ShingleW))
       .collect().toSet
     assert(servedS == recomputedS && servedS.nonEmpty)
     graft.CacheScope.flush(spark)
@@ -232,9 +231,8 @@ class DedupIndexSpec extends AnyFunSuite {
     val rewritten = q51(spark, d).collect().toSeq
     graft.CacheScope.flush(spark)
     val idx = graft.TempArtifacts.dir("graft_served_fresh")
-    DedupQueries.buildDedupIndexFrom(DedupQueries.signaturesFromTokens(
-      DedupQueries.shingleSets(graft.Tables.documents(spark, d),
-        DedupQueries.ShingleW)), idx)
+    DedupQueries.buildDedupIndexFrom(DedupQueries.signaturesOf(
+      graft.Tables.documents(spark, d), DedupQueries.ShingleW), idx)
     val want = DedupQueries.pairsFromIndexUnsorted(spark, idx)
       .orderBy("doc_a", "doc_b").collect().toSeq
     graft.CacheScope.flush(spark)

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.SharedSpark
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -101,12 +102,12 @@ class DedupSpec extends AnyFunSuite {
     // O(bucket²) pairwise candidate expansion (no est filter on either
     // side — the contraction claim is about connectivity).
     val docs = graft.Tables.documents(spark, sf)
-    val sig = DedupQueries.minhashSignaturesOf(docs).localCheckpoint()
+    val sig = DedupQueries.signaturesOf(docs, 1).localCheckpoint()
     val starComp = graft.grid.Topology.graphComponents(
         DedupQueries.starEdges(sig))
       .as[(Long, Long)].collect().toMap
     val pairComp = graft.grid.Topology.graphComponents(
-        DedupQueries.minhashCandidatesFrom(sig)
+        DedupQueries.candidatesFromBands(DedupQueries.bandsOf(sig))
           .select(col("doc_a").as("s"), col("doc_b").as("t")))
       .as[(Long, Long)].collect().toMap
     assert(starComp.nonEmpty && starComp == pairComp,
@@ -243,16 +244,54 @@ class DedupSpec extends AnyFunSuite {
     assert(perRow == agg)
   }
 
+  /** The explode+groupBy form of the signature table over a (doc_id,
+    * token) unit table: the shape of the oracles' `tok`/`hb`/`sig` CTEs
+    * in Spark, the reference `signaturesOf` must match bit for bit.
+    */
+  private def explodeSignatures(units: DataFrame): DataFrame = {
+    import DedupQueries.{P, permA, permB, permC}
+    val md = md5(col("token"))
+    val hs = units
+      .withColumn("x1", conv(substring(md, 1, 15), 16, 10).cast("long") % P)
+      .withColumn("x2", conv(substring(md, 17, 15), 16, 10).cast("long") % P)
+    val aggs = (0 until DedupQueries.NumHashes).map(i =>
+      min((col("x1") * permA(i) % P + col("x2") * permB(i) % P + permC(i)) % P)
+        .as(s"h$i"))
+    hs.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
+  }
+
   test("per-row HOF signatures are bit-identical to the explode+groupBy path") {
     val docs = graft.Tables.documents(spark, sf)
-    val agg = DedupQueries.minhashSignaturesOf(docs)
-      .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
-    val perRow = DedupQueries.signaturesPerRow(docs)
-      .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
-    assert(perRow.keySet == agg.keySet)
-    perRow.foreach { case (id, sig) =>
-      assert(sig == agg(id), s"doc $id signature diverges")
+    def bySig(df: DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    val tokens = docs.select(col("doc_id"),
+      explode(split(col("text"), " ")).as("token"))
+    for ((w, units) <- Seq(1 -> tokens,
+        DedupQueries.ShingleW -> DedupQueries.shingleSets(docs,
+          DedupQueries.ShingleW))) {
+      val agg = bySig(explodeSignatures(units))
+      val perRow = bySig(DedupQueries.signaturesOf(docs, w))
+      assert(perRow.nonEmpty && perRow.keySet == agg.keySet, s"w=$w")
+      perRow.foreach { case (id, sig) =>
+        assert(sig == agg(id), s"w=$w: doc $id signature diverges")
+      }
     }
+  }
+
+  test("NULL text and short documents make no signature and no pair") {
+    // two NULL texts once shared bucket "" of every band (all-NULL
+    // slots) and a simhash of 0; doc 4 has fewer than ShingleW tokens
+    val docs = Seq[(Long, String)]((1L, null), (2L, null),
+      (3L, "a b c d"), (4L, "x y")).toDF("doc_id", "text")
+    val ids = (df: DataFrame) =>
+      df.select("doc_id").as[Long].collect().toSet
+    assert(ids(DedupQueries.signaturesOf(docs, 1)) == Set(3L, 4L))
+    assert(ids(DedupQueries.signaturesOf(docs, DedupQueries.ShingleW)) ==
+      Set(3L))
+    assert(DedupQueries.candidatesFromBands(DedupQueries.bandsOf(
+      DedupQueries.signaturesOf(docs, 1))).count() == 0)
+    assert(ids(DedupQueries.simhashPerRow(docs)) == Set(3L, 4L))
+    assert(DedupQueries.simhashHammingPairs(docs).count() == 0)
   }
 
   test("q179 split leakage: exactly the cross-split subset of the q30 " +
@@ -326,7 +365,7 @@ class DedupSpec extends AnyFunSuite {
       (4L, "alpha beta gamma delta epsilon zeta") // third copy
     ).toDF("doc_id", "text")
     val sig = graft.CacheScope.retain(
-      DedupQueries.minhashSignaturesOf(docs))
+      DedupQueries.signaturesOf(docs, 1))
     val fused = DedupQueries
       .verifiedPairsFromBands(DedupQueries.bandsOf(sig), sig)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))

@@ -15,8 +15,8 @@ class EmptyInputSpec extends AnyFunSuite {
   private def empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
 
   test("signatures, bands, and pair join are empty on an empty corpus") {
-    assert(DedupQueries.signaturesPerRow(empty).count() == 0)
-    assert(DedupQueries.bandBucketsPerRow(empty).count() == 0)
+    assert(DedupQueries.signaturesOf(empty, 1).count() == 0)
+    assert(DedupQueries.bandsOf(DedupQueries.signaturesOf(empty, 1)).count() == 0)
     assert(DedupQueries.minhashPairsOf(empty).count() == 0)
   }
 

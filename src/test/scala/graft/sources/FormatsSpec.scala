@@ -23,4 +23,22 @@ class FormatsSpec extends AnyFunSuite {
   test("orc export/load round-trips exactly")(roundTrip("orc"))
   test("csv export/load round-trips exactly with explicit schema")(roundTrip("csv"))
   test("json export/load round-trips exactly with explicit schema")(roundTrip("json"))
+
+  test("table loads take the footer schema: no Spark job, the inferred schema") {
+    import org.apache.spark.sql.graftbridge.ListenerBus
+    import org.apache.spark.sql.types.{StructType, TimestampNTZType}
+    for (name <- Seq("documents", "lineitem", "nation", "embeddings", "events")) {
+      var loaded: org.apache.spark.sql.DataFrame = null
+      val jobs = ListenerBus.jobsDuring(spark.sparkContext) {
+        loaded = Tables.table(spark, sf, name)
+      }
+      assert(jobs == 0, s"loading $name started $jobs job(s)")
+      assert(loaded.schema == spark.read.parquet(s"$sf/$name.parquet").schema,
+        name)
+    }
+    // the events loader still branches on the observed ts type
+    val raw = spark.read.parquet(s"$sf/events.parquet")
+    assert(Tables.events(spark, sf).schema == StructType(raw.schema.map(f =>
+      if (f.name == "ts") f.copy(dataType = TimestampNTZType) else f)))
+  }
 }

@@ -286,7 +286,8 @@ class StreamsSpec extends AnyFunSuite {
     implicit val sc = spark.sqlContext
     val sf = "/root/testdata/sf0.001"
     val corpus = graft.Tables.documents(spark, sf)
-    val corpusBands = graft.dedup.DedupQueries.bandBucketsPerRow(corpus)
+    val corpusBands = graft.dedup.DedupQueries.bandsOf(
+      graft.dedup.DedupQueries.signaturesOf(corpus, 1))
     val doc0Text = corpus.filter(col("doc_id") === 0)
       .select("text").head().getString(0)
     val mem = MemoryStream[(Long, String)]
