@@ -620,9 +620,9 @@ object DedupQueries {
     // pipeline's batch-output commit, which must precede the index
     // mutation); [[advanceDedupIndex]] appends the admitted docs'
     // signatures; phase 2 ingests batch 2 (ids >= split2)
-    // against the ADVANCED artifact, so a batch-2 arrival drops
-    // against original corpus AND admitted batch-1 docs — but never
-    // against a batch-1 doc that was itself dropped. Dropped arrivals
+    // against the ADVANCED artifact, so a batch 2 arrival drops
+    // against original corpus AND admitted batch 1 docs — but never
+    // against a batch 1 doc that was itself dropped. Dropped arrivals
     // emit no rows (q110's contract). A fresh (non-memoized) index dir
     // per call: advance MUTATES the artifact, so sharing q117's
     // serve-only copy would poison it.
@@ -832,7 +832,7 @@ object DedupQueries {
     // q154 lifecycle. Advance is a pure append, so replayed batches
     // (the at-least-once sink caveat) bloat the artifact with duplicate
     // hash rows and small files; compaction rewrites the distinct set
-    // under v2 behind the atomic CURRENT pointer and provably changes
+    // under v2 behind the atomic version pointer and provably changes
     // nothing a set-semantics consumer can see. See
     // [[indexCompactionFlow]]; the oracle derives every count and the
     // post-compaction re-scrub from the same set algebra.
@@ -1483,9 +1483,6 @@ object DedupQueries {
     graft.sources.ArtifactVersions.advance(root, "grams", batchId)(
       windowHashesOf(admitted, w).select("h").distinct())
 
-  def compactNgramIndex(s: SparkSession, root: String): Unit =
-    graft.sources.ArtifactVersions.compact(s, root, "grams")
-
   /** Scrub arrivals against the persisted index: a window is removable
     * iff its hash EXISTS in the artifact (left-semi join — arrival-side
     * work only; the index is a columnar scan, never re-derived).
@@ -1551,7 +1548,7 @@ object DedupQueries {
     advanceNgramIndex(admitted, w, root) // the normal advance...
     advanceNgramIndex(admitted, w, root) // ...and its at-least-once replay
     val nBefore = liveGrams(s, root).count()
-    compactNgramIndex(s, root)
+    graft.sources.ArtifactVersions.compact(s, root)
     val nAfter = liveGrams(s, root).count()
     val live = java.nio.file.Paths.get(graft.sources.ArtifactVersions
       .live(root)).getFileName.toString
@@ -1834,7 +1831,7 @@ object DedupQueries {
   }
 
   /** DuckDB twin of q119: the two-phase ingest with the advanced
-    * corpus. corp2 = corp1 plus the band entries of batch-1 docs that
+    * corpus. corp2 = corp1 plus the band entries of batch 1 docs that
     * survived phase 1 — the SQL image of [[advanceDedupIndex]]'s
     * append.
     */
@@ -1980,12 +1977,6 @@ object DedupQueries {
 
   def indexSignatures(s: SparkSession, path: String): DataFrame =
     graft.sources.ArtifactVersions.read(s, path, "signatures")
-
-  /** A doc's rows are pure functions of its text, so the distinct
-    * rewrite keeps the served pair graph (DedupIndexSpec pins it).
-    */
-  def compactDedupIndex(s: SparkSession, path: String): Unit =
-    graft.sources.ArtifactVersions.compact(s, path, "signatures")
 
   /** CTE chain computing MinHash signatures (`sig`) and their band
     * buckets (`bands`) — the shared head of every LSH oracle.

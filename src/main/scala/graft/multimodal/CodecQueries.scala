@@ -1233,7 +1233,8 @@ object CodecQueries {
         // replay batch 0 after the flips: must be fenced, not re-append
         graft.streaming.Streams.mediaIngestBatch(even, 0L, root,
           compactEvery = 0)
-        graft.sources.ArtifactVersions.read(s, root, "stats")
+        graft.sources.ArtifactVersions.read(s, root,
+            graft.streaming.Streams.Log)
           .groupBy("kind", "status", "codec")
           .agg(count(lit(1)).as("n"),
             sum(when(col("exact_sum") >= 0, col("exact_sum"))

@@ -38,9 +38,6 @@ object PhashIndex {
     graft.sources.ArtifactVersions.advance(path, "hashes", batchId)(
       admitted.select("doc_id", "hash"))
 
-  def compactPhashIndex(s: SparkSession, path: String): Unit =
-    graft.sources.ArtifactVersions.compact(s, path, "hashes")
-
   /** Admission decisions for arriving image hashes against the
     * persisted index: banded candidates (pigeonhole-complete at the
     * verify threshold) → exact hamming verify → per arrival `dup` with

@@ -1368,7 +1368,7 @@ object SimilarityQueries {
     // frozen centroids (q130); measure centroid drift (q142); when max
     // drift exceeds [[DriftBudget]], rebuild the FULL index under v2
     // and atomically publish — readers of v1 are never disturbed; serve
-    // the q118 recall probe from whatever CURRENT resolves to. The only
+    // the q118 recall probe from whatever version is live. The only
     // driver-side decision is the trigger itself — a max over the
     // k-row drift table (metadata-scale by construction), exactly the
     // scalar a production scheduler would poll. The oracle recomputes
@@ -1494,7 +1494,8 @@ object SimilarityQueries {
         // replay batch 0 after batch 1: fenced, must not double pairs
         graft.streaming.Streams.semanticLeakAuditBatch(b0, 0L, d, idx,
           audit, corpus)
-        graft.sources.BatchCommits.readComponent(s, audit)
+        graft.sources.ArtifactVersions.read(s, audit,
+            graft.streaming.Streams.Log)
           .select(col("train_vec"), col("val_vec"), col("cos"),
             col("batch_id"))
           .orderBy("train_vec", "val_vec")
@@ -1595,7 +1596,7 @@ object SimilarityQueries {
       valf.select(col("vec_id").as("val_vec"), col("i"),
         col("v").as("av")), "val_vec")
     // assignment rows are DISTINCT'd first: the artifact contract
-    // (compactIvfIndex) allows byte-identical duplicate rows from
+    // (ArtifactVersions.compact) allows byte-identical duplicate rows from
     // unfenced replays pre-compaction, and set semantics is what makes
     // the served candidate set replay-invariant — without it a
     // duplicated (vec_id, lst) row would double every component row
@@ -2011,14 +2012,6 @@ object SimilarityQueries {
 
   def indexCentroids(s: SparkSession, path: String): DataFrame =
     graft.sources.ArtifactVersions.read(s, path, "centroids")
-
-  /** An assignment row is a pure function of the vector and the frozen
-    * centroids, so the distinct rewrite keeps the served candidate set;
-    * the centroid table is copied verbatim.
-    */
-  def compactIvfIndex(s: SparkSession, path: String): Unit =
-    graft.sources.ArtifactVersions.compact(
-      s, path, "assignments", copied = Seq("centroids"))
 
   /** The q118/q130 serve path: probe vec 0's nprobe=2 nearest lists from
     * the artifact's centroid table, candidates from its assignment

@@ -7,19 +7,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one lifecycle of every persisted artifact: the dedup index
   * (`signatures`), the n-gram window index (`grams`), the IVF index
-  * (`centroids`, `assignments`), the perceptual-hash index (`hashes`)
-  * and the streaming sinks' versioned logs (`audit`, `stats`). This
-  * module is the only code that knows the layout:
+  * (`centroids`, `assignments`), the perceptual-hash index (`hashes`),
+  * the URL frontier and the streaming sinks' decision logs. This
+  * module (with [[BatchCommits]], its per-batch fence) is the only code
+  * that knows the layout:
   *
   * {{{
   *   root/CURRENT            names the live version
-  *   root/vN/<component>/    build files + committed batch-<id> dirs
+  *   root/vN/<component>/    build files, committed batch-<id> dirs
+  *                           and unfenced append-<uuid> dirs
   * }}}
   *
-  * A root without `CURRENT` is the implicit v0: its components sit
-  * directly under `root`. Only stream-sink logs start that way (their
-  * first compaction moves them under v1); every index build publishes
-  * a version.
+  * Every root has this form: a build publishes a version, and the
+  * first advance of a root without `CURRENT` publishes an empty `v1`.
   *
   * An artifact persists a component only if no other component of the
   * same artifact determines it row by row; readers derive everything
@@ -32,13 +32,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     keeps a consistent artifact: versions are never rewritten.
   *   - [[advance]] appends rows to one live component: a fenced
   *     [[BatchCommits.appendBatch]] with a batch id (exactly-once under
-  *     replay), a plain append without one. Appending per-row
-  *     derivations equals rebuilding from the advanced corpus, because
-  *     every component row is a pure function of one admitted row.
-  *   - [[compact]] rewrites a live component into the next version
-  *     (full-row distinct, so replayed byte-identical rows collapse and
-  *     genuinely different rows survive), carries the newest fence
-  *     markers, sweeps stranded staging dirs and publishes.
+  *     replay), a plain append into its own dir without one. Appending
+  *     per-row derivations equals rebuilding from the advanced corpus,
+  *     because every component row is a pure function of one admitted
+  *     row. [[committed]] reads back what one batch committed.
+  *   - [[compact]] rewrites the whole live version into the next one:
+  *     an advanced component becomes its full-row distinct (replayed
+  *     byte-identical rows collapse, genuinely different rows survive),
+  *     a component that only its build wrote is copied verbatim; it
+  *     carries the newest fence markers, sweeps stranded staging dirs
+  *     and publishes.
   *   - [[pruneVersions]] retires versions beyond a grace window.
   *
   * Publishing flips `CURRENT` with temp-file + fsync + atomic rename,
@@ -59,10 +62,16 @@ object ArtifactVersions {
       .toString)
   }
 
-  /** The live version's directory: the published one, else `root`
-    * itself (the flat v0 of a stream-sink log).
-    */
-  def live(root: String): String = current(root).getOrElse(root)
+  /** The live version's directory. */
+  def live(root: String): String = current(root).getOrElse(
+    throw new IllegalStateException(s"$root has no published version"))
+
+  /** The live version, publishing an empty `v1` on the first write. */
+  private def liveOrFirst(root: String): String = current(root).getOrElse {
+    val v = prepareNext(root)
+    publish(root, v)
+    v
+  }
 
   /** A live component: its build files plus committed batch dirs. */
   def read(s: SparkSession, root: String, component: String): DataFrame =
@@ -122,79 +131,101 @@ object ArtifactVersions {
 
   /** Append `rows` to the live version's `component`. With a
     * `batchId` the append commits fenced, and a batch the component
-    * already holds evaluates nothing. Cached plans under `root` are
-    * refreshed after the append.
+    * already holds evaluates nothing; without one the rows land in a
+    * fresh `append-<uuid>` dir, so the build's own files stay apart.
+    * Cached plans under `root` are refreshed after the append.
     */
   def advance(root: String, component: String, batchId: Option[Long])(
       rows: => DataFrame): Unit = {
-    val dir = s"${live(root)}/$component"
+    val dir = s"${liveOrFirst(root)}/$component"
     if (!batchId.exists(BatchCommits.isCommitted(dir, _))) {
       val r = rows
       batchId match {
         case Some(id) => BatchCommits.appendBatch(r, dir, id): Unit
-        case None => r.write.mode("append").parquet(dir)
+        case None => r.write.parquet(
+          s"$dir/append-${java.util.UUID.randomUUID().toString.take(8)}")
       }
       r.sparkSession.catalog.refreshByPath(root)
     }
   }
 
-  /** Compact the live `component` into the next version and publish
+  /** The rows batch `batchId` committed to the live `component`,
+    * whichever attempt landed them. None when the live version holds
+    * no data for the batch: a compaction rewrote it into the
+    * component's distinct set and only its carried (empty) fence
+    * marker remains. A body that runs its fenced advances before its
+    * compaction may read None as "every advance derived from this
+    * batch already landed".
+    */
+  def committed(s: SparkSession, root: String, component: String,
+      batchId: Long): Option[DataFrame] =
+    current(root)
+      .map(v => BatchCommits.batchDir(s"$v/$component", batchId).toFile)
+      .filter(hasFiles)
+      .map(d => BatchCommits.readComponent(s, d.toString))
+
+  /** Does the live `component` hold any data file? False before the
+    * first publish, and for a version published by a first advance
+    * that crashed before its commit.
+    */
+  def holdsData(root: String, component: String): Boolean =
+    current(root).exists(v => hasFiles(new java.io.File(v, component)))
+
+  /** Compact the whole live version into the next one and publish
     * it, then drop cached plans resolved against the old paths.
     *
-    * Exactly one non-empty committed `batch-<id>` dir and no flat
-    * files is one attempt's output and cannot hold replay duplicates,
-    * so it is copied verbatim under the same batch-dir name (the next
-    * compaction copies it again); anything else is rewritten as its
-    * full-row distinct. `copied` components (frozen tables such as IVF
-    * centroids) are copied verbatim when flat, so every version dir is
-    * self-contained. The flat v0 compacts into v1 and stays as the
-    * grace copy until the next compaction.
+    * A component with no subdirectory holds only its build's one write
+    * and is copied verbatim (frozen tables such as IVF centroids, or an
+    * index never advanced), so every version dir is self-contained. An
+    * advanced component that holds exactly one non-empty committed
+    * `batch-<id>` dir and nothing else is one attempt's output and
+    * cannot hold replay duplicates, so it is copied verbatim under the
+    * same batch-dir name (the next compaction copies it again); any
+    * other advanced component is rewritten as its full-row distinct.
+    * Advanced components carry their newest fence markers, and every
+    * component's stranded staging dirs are swept.
     */
-  def compact(s: SparkSession, root: String, component: String,
-      copied: Seq[String] = Nil): Unit = {
+  def compact(s: SparkSession, root: String): Unit = {
     val old = live(root)
     val v = prepareNext(root)
-    singleWriteFiles(s"$old/$component") match {
-      case Some((batchName, files)) =>
-        copyFilesInto(files, s"$v/$component/$batchName")
-      case None =>
-        BatchCommits.readComponent(s, s"$old/$component").distinct()
-          .write.parquet(s"$v/$component")
-    }
-    BatchCommits.carryMarkers(s"$old/$component", s"$v/$component")
-    BatchCommits.sweepStaging(s"$old/$component")
-    for (c <- copied)
-      flatFiles(s"$old/$c") match {
-        case Some(files) => copyFilesInto(files, s"$v/$c")
-        case None => s.read.parquet(s"$old/$c").write.parquet(s"$v/$c")
+    for (c <- listDirs(old)) {
+      val to = s"$v/${c.getName}"
+      val (dirs, files) = visible(list(c)).partition(_.isDirectory)
+      if (dirs.isEmpty) copyFilesInto(files.toSeq, to)
+      else {
+        dirs.filter(hasFiles) match {
+          case Array(only) if files.isEmpty && dirs.forall(isBatchDir) =>
+            copyFilesInto(visible(list(only)).toSeq, s"$to/${only.getName}")
+          case _ =>
+            BatchCommits.readComponent(s, c.toString).distinct()
+              .write.parquet(to)
+        }
+        BatchCommits.carryMarkers(c.toString, to)
       }
+      BatchCommits.sweepStaging(c.toString)
+    }
     publish(root, v)
-    if (old != root)
-      (component +: copied).foreach(c =>
-        deleteRecursively(Paths.get(root, c)))
     s.catalog.refreshByPath(root)
   }
 
   /** The largest count of non-empty `batch-*` dirs across the live
     * version's components: what every serve read must list. Carried
     * fence markers (empty dirs) do not count, so a compacted artifact
-    * reads at most 1.
+    * reads at most 1; an unpublished root reads 0.
     */
   def fragmentation(root: String): Int =
-    listDirs(live(root))
-      .map(c => listDirs(c.getPath).count(d =>
-        d.getName.startsWith("batch-") && visible(list(d)).nonEmpty))
+    current(root).toSeq.flatMap(v => listDirs(v).toSeq)
+      .map(c => listDirs(c.getPath).count(d => isBatchDir(d) && hasFiles(d)))
       .maxOption.getOrElse(0)
 
-  /** Out-of-band maintenance between batches of a live stream: run the
-    * index's `compact` and prune old versions only when some component
-    * holds at least `minBatchDirs` batch dirs. The floor is 2: one
-    * batch dir is already compact, and the verbatim copy would publish
-    * a version on every call. Returns true iff a compaction ran.
+  /** Out-of-band maintenance between batches of a live stream:
+    * [[compact]] and prune old versions only when some component holds
+    * at least `minBatchDirs` batch dirs. The floor is 2: one batch dir
+    * is already compact, and the verbatim copy would publish a version
+    * on every call. Returns true iff a compaction ran.
     */
   def compactIfFragmented(s: SparkSession, root: String,
-      minBatchDirs: Int)(compact: (SparkSession, String) => Unit)
-      : Boolean = {
+      minBatchDirs: Int): Boolean = {
     require(minBatchDirs >= 2,
       s"compactIfFragmented($root): minBatchDirs=$minBatchDirs — one " +
         "committed batch dir is already the compact state, so a " +
@@ -238,27 +269,14 @@ object ArtifactVersions {
   private def listDirs(dir: String): Array[java.io.File] =
     list(new java.io.File(dir)).filter(_.isDirectory)
 
-  /** The component's one non-empty committed batch dir and its data
-    * files, if that (plus empty markers) is all it holds.
-    */
-  private def singleWriteFiles(dir: String)
-      : Option[(String, Seq[java.io.File])] = {
-    val (dirs, files) = visible(list(new java.io.File(dir)))
-      .partition(_.isDirectory)
-    if (files.nonEmpty || !dirs.forall(_.getName.startsWith("batch-"))) None
-    else dirs.filter(d => visible(list(d)).nonEmpty) match {
-      case Array(only) =>
-        Some((only.getName, visible(list(only)).filter(_.isFile).toSeq))
-      case _ => None
-    }
-  }
+  private def isBatchDir(d: java.io.File): Boolean =
+    d.getName.startsWith("batch-")
 
-  /** A flat dir's data files (no subdirectories at all), or None. */
-  private def flatFiles(dir: String): Option[Seq[java.io.File]] = {
-    val entries = visible(list(new java.io.File(dir)))
-    if (entries.nonEmpty && entries.forall(_.isFile)) Some(entries.toSeq)
-    else None
-  }
+  /** Does `d` hold a data file, at any depth? A carried fence marker
+    * (an empty batch dir) does not.
+    */
+  private def hasFiles(d: java.io.File): Boolean =
+    visible(list(d)).exists(f => f.isFile || hasFiles(f))
 
   private def visible(fs: Array[java.io.File]): Array[java.io.File] =
     fs.filterNot(f =>

@@ -4,9 +4,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The per-batch fence: EXACTLY-ONCE batch appends for a parquet
-  * directory, either a component of an [[ArtifactVersions]] artifact
-  * or a streaming decision log.
+/** The per-batch fence: EXACTLY-ONCE batch appends for one component
+  * of an [[ArtifactVersions]] artifact (an index component, the URL
+  * frontier or a streaming decision log). Only [[ArtifactVersions]]
+  * calls it.
   *
   * The problem: Structured Streaming's foreachBatch is at-least-once —
   * a crash between the batch's side effects and the checkpoint commit
@@ -33,11 +34,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * duplication.
   *
   * Readers use [[readComponent]] (recursive file lookup) so a
-  * component holds flat build files and committed batch dirs side by
-  * side. On a cluster the same protocol runs against any store with
-  * atomic directory rename (HDFS); on S3-style stores the rename
-  * becomes a manifest write, which is exactly the _spark_metadata /
-  * table-format commit design this models.
+  * component holds flat build files, committed batch dirs and unfenced
+  * append dirs side by side. On a cluster the same protocol runs
+  * against any store with atomic directory rename (HDFS); on S3-style
+  * stores the rename becomes a manifest write, which is exactly the
+  * _spark_metadata / table-format commit design this models.
   *
   * CONTRACT: a fenced component is paired 1:1 with ONE streaming
   * checkpoint location for its whole life. The fence keys on the
@@ -52,8 +53,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * every restart of the same checkpoint and would orphan the prior
   * run's commits exactly when the fence must see them.
   */
-object BatchCommits {
-  private def batchDir(dir: String, batchId: Long): Path =
+private[sources] object BatchCommits {
+  def batchDir(dir: String, batchId: Long): Path =
     Paths.get(dir, s"batch-$batchId")
 
   /** Has `batchId` already been committed to this component? */
@@ -196,11 +197,12 @@ object BatchCommits {
       .toSeq
 
   /** Read a component that may hold flat build files plus committed
-    * `batch-<id>` subdirectories. Recursive lookup (with Spark's
-    * hidden-name filtering) sees both; a plain non-recursive parquet
-    * read would silently miss the subdirectories. The schema comes from
-    * one data file's footer ([[Formats.readParquet]]), so a serve read
-    * starts no Spark job before the query's own action.
+    * `batch-<id>` and `append-<uuid>` subdirectories. Recursive lookup
+    * (with Spark's hidden-name filtering) sees all of them; a plain
+    * non-recursive parquet read would silently miss the
+    * subdirectories. The schema comes from one data file's footer
+    * ([[Formats.readParquet]]), so a serve read starts no Spark job
+    * before the query's own action.
     */
   def readComponent(s: SparkSession, dir: String): DataFrame =
     Formats.readParquet(s, s.read.option("recursiveFileLookup", "true"), dir)

@@ -41,7 +41,8 @@ object Streams {
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
+    val rawSchema = graft.sources.Formats.readParquet(spark, spark.read,
+      s"$dir/events.parquet").schema
     // events.parquet is a single file; the file stream source requires a
     // directory or glob, so match the file with a glob pattern.
     val stream = spark.readStream.schema(rawSchema)
@@ -147,6 +148,20 @@ object Streams {
       .foreachBatch(f)
       .start()
 
+  /** The one component of every sink's decision log: each `outDir` is
+    * an [[graft.sources.ArtifactVersions]] root holding it.
+    */
+  private[graft] val Log = "audit"
+
+  /** Commit `rows`, tagged with `batchId`, as that batch's append to the
+    * decision log at `outDir`, fenced on the id: a replayed batch whose
+    * rows already landed evaluates nothing.
+    */
+  private def logDecisions(outDir: String, batchId: Long)(
+      rows: => DataFrame): Unit =
+    ArtifactVersions.advance(outDir, Log, Some(batchId))(
+      rows.withColumn("batch_id", lit(batchId)))
+
   /** STREAMING INDEX ADVANCE: the near-dup ingest loop as a live
     * stream. Each micro-batch of arriving documents (doc_id, text) is
     * scored against the PERSISTED dedup index
@@ -160,8 +175,8 @@ object Streams {
     * match the batch flow on the same splits.
     *
     * EXACTLY-ONCE: every write is an atomic per-batch commit fenced on
-    * the replayable batchId ([[graft.sources.BatchCommits]]) — the
-    * decision log commits first, a replayed batch skips whatever a
+    * the replayable batchId ([[graft.sources.ArtifactVersions.advance]])
+    * — the decision log commits first, a replayed batch skips whatever a
     * crash already committed and completes only the missing component
     * appends, and the admitted set those appends derive from is read
     * back from the COMMITTED decision rows, never recomputed against a
@@ -188,28 +203,24 @@ object Streams {
   private[graft] def nearDupIngestBatch(batch: DataFrame, batchId: Long,
       indexPath: String, outDir: String, compactEvery: Int = 0)
       : Unit = CacheScope.scoped {
-    import graft.sources.BatchCommits
-    if (!BatchCommits.isCommitted(outDir, batchId))
-      BatchCommits.appendBatch(
-        graft.dedup.DedupQueries.ingestBatchDecisions(batch, indexPath)
-          .withColumn("batch_id", lit(batchId)),
-        outDir, batchId): Unit
+    val s = batch.sparkSession
+    logDecisions(outDir, batchId)(
+      graft.dedup.DedupQueries.ingestBatchDecisions(batch, indexPath))
     // the advance payload derives from the COMMITTED decisions (plus
     // the source's replayed bytes), so a post-crash replay appends
     // exactly what the original attempt decided
-    val committed = batch.sparkSession.read.parquet(outDir + s"/batch-$batchId")
-    graft.dedup.DedupQueries.advanceDedupIndex(
-      batch.join(committed.filter(col("status") === "added")
-          .select("doc_id"), "doc_id")
-        .select("doc_id", "text"), indexPath, Some(batchId))
-    compactOnCadence(batch.sparkSession, batchId, compactEvery,
-      Seq(indexPath -> graft.dedup.DedupQueries.compactDedupIndex _))
+    ArtifactVersions.committed(s, outDir, Log, batchId).foreach(c =>
+      graft.dedup.DedupQueries.advanceDedupIndex(
+        batch.join(c.filter(col("status") === "added").select("doc_id"),
+            "doc_id")
+          .select("doc_id", "text"), indexPath, Some(batchId)))
+    compactOnCadence(s, batchId, compactEvery, Seq(indexPath))
   }
 
   /** The advance sinks' shared compaction cadence: every `every`
-    * committed batches, fold each artifact's batch dirs into the next
-    * version ([[graft.sources.ArtifactVersions.compact]] via the
-    * per-index compact functions) and retire old versions — a
+    * committed batches, fold each artifact root's batch dirs into the
+    * next version ([[graft.sources.ArtifactVersions.compact]]) and
+    * retire old versions — a
     * long-running stream must not accumulate one batch dir per
     * micro-batch (the serve-read listing is linear in them) nor one
     * full index copy per compaction (retention keeps live + one grace
@@ -223,23 +234,18 @@ object Streams {
     * one slow batch per cycle for bounded serve reads; a deployment
     * with hard per-batch SLAs should disable it here and run
     * [[graft.sources.ArtifactVersions.compactIfFragmented]] out-of-band
-    * instead (same per-index compact functions, same versioned-flip
+    * instead (same whole-root compaction, same versioned-flip
     * protocol, safe between batches of a live stream — the fence
     * markers carry across the flip — and threshold-gated on the
     * actual batch-dir count rather than a blind cadence).
     */
   private def compactOnCadence(s: SparkSession, batchId: Long, every: Int,
-      artifacts: Seq[(String, (SparkSession, String) => Unit)]): Unit =
+      roots: Seq[String]): Unit =
     if (every > 0 && (batchId + 1) % every == 0)
-      artifacts.foreach { case (path, compact) =>
-        compact(s, path)
-        ArtifactVersions.pruneVersions(path): Unit
+      roots.foreach { root =>
+        ArtifactVersions.compact(s, root)
+        ArtifactVersions.pruneVersions(root): Unit
       }
-
-  /** Compaction of a versioned sink log with one component. */
-  private def compactLog(component: String)
-      : (SparkSession, String) => Unit =
-    (s, root) => ArtifactVersions.compact(s, root, component)
 
   /** Streaming span scrub + index advance — q154's loop live: each
     * micro-batch of arriving docs is scrubbed against the persisted
@@ -255,12 +261,12 @@ object Streams {
     * batchId fence first, and the index advance derives its window
     * hashes from the COMMITTED cleaned text — a replay can neither
     * double-append nor re-scrub against an index its first attempt
-    * already advanced ([[graft.sources.BatchCommits]]). Compaction on
-    * a replayed cadence boundary just produces one more version with
-    * the identical distinct set — idempotent in effect.
+    * already advanced ([[graft.sources.ArtifactVersions.advance]]).
+    * Compaction on a replayed cadence boundary just produces one more
+    * version with the identical distinct set — idempotent in effect.
     *
-    * `compactEvery` > 0 runs [[graft.dedup.DedupQueries
-    * .compactNgramIndex]] after every that-many batches — a live
+    * `compactEvery` > 0 compacts the index root after every that-many
+    * batches — a live
     * stream is exactly where the append-only artifact's small files
     * pile up. Compaction is transparent to the scrub by construction
     * (DedupSpec pins frame equality across the version flip; the spec
@@ -284,20 +290,14 @@ object Streams {
   private[graft] def spanScrubBatch(batch: DataFrame, batchId: Long,
       indexPath: String, w: Int, outDir: String,
       compactEvery: Int): Unit = CacheScope.scoped {
-    import graft.sources.BatchCommits
     val s = batch.sparkSession
-    if (!BatchCommits.isCommitted(outDir, batchId))
-      BatchCommits.appendBatch(
-        graft.dedup.DedupQueries
-          .spanScrubAgainstIndex(s, batch, indexPath, w)
-          .withColumn("batch_id", lit(batchId)),
-        outDir, batchId): Unit
-    val committed = s.read.parquet(outDir + s"/batch-$batchId")
-    graft.dedup.DedupQueries.advanceNgramIndex(
-      committed.select(col("doc_id"), col("clean_text").as("text")),
-      w, indexPath, Some(batchId))
-    compactOnCadence(s, batchId, compactEvery,
-      Seq(indexPath -> graft.dedup.DedupQueries.compactNgramIndex _))
+    logDecisions(outDir, batchId)(graft.dedup.DedupQueries
+      .spanScrubAgainstIndex(s, batch, indexPath, w))
+    ArtifactVersions.committed(s, outDir, Log, batchId).foreach(c =>
+      graft.dedup.DedupQueries.advanceNgramIndex(
+        c.select(col("doc_id"), col("clean_text").as("text")),
+        w, indexPath, Some(batchId)))
+    compactOnCadence(s, batchId, compactEvery, Seq(indexPath))
   }
 
   /** THE COMPOSED INGEST LOOP — q144's curation pipeline live, wired
@@ -324,19 +324,20 @@ object Streams {
     * replay after any crash point skips what committed and completes
     * what didn't, with the original attempt's exact payload — the
     * scrub is never re-run against an index the first attempt already
-    * advanced, which also retires the old localCheckpoint dance this
-    * sink needed to keep its two advances synchronized.
+    * advanced, and the two advances read one committed payload, so
+    * they agree without a checkpoint of their own.
     *
-    * RETENTION (deliberate asymmetry, all advance sinks): `outDir`
-    * grows one committed batch dir per micro-batch FOREVER and is NOT
-    * compacted here — it is the sink's PRODUCT (the curated docs +
-    * audit trail), an append-only export stream the DOWNSTREAM
-    * consumer owns, exactly like any other output dataset it would
-    * archive or expire on its own schedule. The pipeline itself only
-    * ever re-reads `batch-<current>` (during the advance), so outDir's
-    * growth never touches the hot path — unlike the index components,
-    * whose every serve read lists all batch dirs, which is why THEY
-    * compact on the cadence and outDir does not.
+    * RETENTION (deliberate asymmetry, the near-dup, span-scrub and
+    * curation sinks): `outDir` grows one committed batch dir per
+    * micro-batch FOREVER and is NOT compacted here — it is the sink's
+    * PRODUCT (the curated docs + audit trail), an append-only export
+    * stream the DOWNSTREAM consumer owns, exactly like any other
+    * output dataset it would archive or expire on its own schedule.
+    * The pipeline itself only ever re-reads the current batch's commit
+    * (during the advance), so outDir's growth never touches the hot
+    * path — unlike the index components, whose every serve read lists
+    * all batch dirs, which is why THEY compact on the cadence and
+    * outDir does not.
     *
     * Per-batch cost: all three stages are arrival-side joins against
     * columnar artifacts plus one stateless scan — nothing rescans the
@@ -358,9 +359,8 @@ object Streams {
       ngramIdx: String, dedupIdx: String, w: Int, outDir: String,
       compactEvery: Int): Unit = CacheScope.scoped {
     import graft.dedup.DedupQueries
-    import graft.sources.BatchCommits
     val s = batch.sparkSession
-    if (!BatchCommits.isCommitted(outDir, batchId)) {
+    logDecisions(outDir, batchId) {
       // cleaned feeds the gate AND the audit projection
       val cleaned = CacheScope.retain(DedupQueries
         .spanScrubAgainstIndex(s, batch, ngramIdx, w)
@@ -386,30 +386,26 @@ object Streams {
       // localCheckpoint'ed inside — one stable evaluation
       val decisions =
         DedupQueries.ingestBatchDecisions(survivors, dedupIdx)
-      BatchCommits.appendBatch(
-        cleaned
-          .join(flags, Seq("doc_id"))
-          .join(rep, Seq("doc_id"), "left")
-          .join(decisions, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("clean_text"),
-            col("n_removed"),
-            when(!col("keep"), lit("quality_drop"))
-              .when(!col("keep_repetition"), lit("repetition_drop"))
-              .otherwise(col("status")).as("status"),
-            lit(batchId).as("batch_id")),
-        outDir, batchId): Unit
+      cleaned
+        .join(flags, Seq("doc_id"))
+        .join(rep, Seq("doc_id"), "left")
+        .join(decisions, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("clean_text"),
+          col("n_removed"),
+          when(!col("keep"), lit("quality_drop"))
+            .when(!col("keep_repetition"), lit("repetition_drop"))
+            .otherwise(col("status")).as("status"))
     }
-    val admitted = s.read.parquet(outDir + s"/batch-$batchId")
-      .filter(col("status") === "added")
-      .select(col("doc_id"), col("clean_text").as("text"))
-    DedupQueries.advanceNgramIndex(admitted, w, ngramIdx, Some(batchId))
-    DedupQueries.advanceDedupIndex(admitted, dedupIdx, Some(batchId))
+    ArtifactVersions.committed(s, outDir, Log, batchId).foreach { c =>
+      val admitted = c.filter(col("status") === "added")
+        .select(col("doc_id"), col("clean_text").as("text"))
+      DedupQueries.advanceNgramIndex(admitted, w, ngramIdx, Some(batchId))
+      DedupQueries.advanceDedupIndex(admitted, dedupIdx, Some(batchId))
+    }
     // BOTH artifacts compact on the cadence — grams (q156) and the
     // dedup signatures (its transplant): a live stream is
     // exactly where per-batch dirs pile up
-    compactOnCadence(s, batchId, compactEvery, Seq(
-      ngramIdx -> DedupQueries.compactNgramIndex _,
-      dedupIdx -> DedupQueries.compactDedupIndex _))
+    compactOnCadence(s, batchId, compactEvery, Seq(ngramIdx, dedupIdx))
   }
 
   /** Streaming advance of the IVF index — the ANN-side twin of
@@ -422,8 +418,8 @@ object Streams {
     * one-shot assignment of the same vectors regardless of how the
     * stream batches them (StreamsSpec pins this batching-invariance).
     * EXACTLY-ONCE: the append is an atomic per-batch commit fenced on
-    * the batchId ([[graft.sources.BatchCommits]]) — a replayed batch
-    * finds its commit and skips.
+    * the batchId ([[graft.sources.ArtifactVersions.advance]]) — a
+    * replayed batch finds its commit and skips.
     */
   def ivfAdvanceSink(vecs: DataFrame, indexPath: String,
       checkpointDir: String, compactEvery: Int = 0)
@@ -432,8 +428,7 @@ object Streams {
       graft.similarity.SimilarityQueries.advanceIvfIndex(batch, indexPath,
         Some(batchId))
       compactOnCadence(batch.sparkSession, batchId, compactEvery,
-        Seq(indexPath ->
-          graft.similarity.SimilarityQueries.compactIvfIndex _))
+        Seq(indexPath))
     }
 
   /** STREAMING MEDIA INGEST GATE: decode-validate-on-ingest for the
@@ -444,13 +439,13 @@ object Streams {
     * malformed payloads are QUARANTINED with the decoder's error —
     * per-row fault isolation, so one corrupt stream can neither crash
     * the pipeline nor silently contribute garbage features, and every
-    * arrival is accounted for in the stats artifact. q164 is the batch
+    * arrival is accounted for in the decision log. q164 is the batch
     * twin; StreamsSpec pins stream ≡ batch on the same arrivals.
     *
     * EXACTLY-ONCE: one atomic per-batch commit fenced on the
-    * replayable batchId ([[graft.sources.BatchCommits]]); a replayed
-    * batch finds its fence and skips. The stats log compacts on the
-    * cadence like every other long-running artifact.
+    * replayable batchId ([[graft.sources.ArtifactVersions.advance]]);
+    * a replayed batch finds its fence and skips. The decision log
+    * compacts on the cadence like every other long-running artifact.
     *
     * 100 TB shape: the batch body is per-row CPU batched per partition
     * — ZERO shuffles (decode, summarize, and the quarantine decision
@@ -468,7 +463,7 @@ object Streams {
     * every arriving payload is decode-validated and its modality's
     * low-information gate (blank / clipped / static) applied on the
     * DECODED content, one audit row per arrival committed fenced to
-    * the artifact's `audit` component. Same exactly-once and
+    * the decision log. Same exactly-once and
     * compaction discipline as [[mediaIngestSink]]; the batch body is
     * one map-only pass (zero shuffles). q181 is the batch twin;
     * StreamsSpec pins stream ≡ batch on the same arrivals.
@@ -485,11 +480,9 @@ object Streams {
     */
   private[graft] def mediaCurationBatch(batch: DataFrame, batchId: Long,
       outDir: String, compactEvery: Int): Unit = CacheScope.scoped {
-    ArtifactVersions.advance(outDir, "audit", Some(batchId))(
-      graft.multimodal.CodecQueries.mediaCurationDecisions(batch).toDF()
-        .withColumn("batch_id", lit(batchId)))
-    compactOnCadence(batch.sparkSession, batchId, compactEvery,
-      Seq(outDir -> compactLog("audit")))
+    logDecisions(outDir, batchId)(
+      graft.multimodal.CodecQueries.mediaCurationDecisions(batch).toDF())
+    compactOnCadence(batch.sparkSession, batchId, compactEvery, Seq(outDir))
   }
 
   /** One micro-batch of [[mediaIngestSink]] — exposed for the
@@ -497,11 +490,9 @@ object Streams {
     */
   private[graft] def mediaIngestBatch(batch: DataFrame, batchId: Long,
       outDir: String, compactEvery: Int): Unit = CacheScope.scoped {
-    ArtifactVersions.advance(outDir, "stats", Some(batchId))(
-      graft.multimodal.CodecQueries.mediaDecisions(batch).toDF()
-        .withColumn("batch_id", lit(batchId)))
-    compactOnCadence(batch.sparkSession, batchId, compactEvery,
-      Seq(outDir -> compactLog("stats")))
+    logDecisions(outDir, batchId)(
+      graft.multimodal.CodecQueries.mediaDecisions(batch).toDF())
+    compactOnCadence(batch.sparkSession, batchId, compactEvery, Seq(outDir))
   }
 
   /** STREAMING IMAGE NEAR-DUP INGEST — [[nearDupIngestSink]]'s image
@@ -528,19 +519,14 @@ object Streams {
       indexPath: String, outDir: String, compactEvery: Int)
       : Unit = CacheScope.scoped {
     import graft.multimodal.PhashIndex
-    import graft.sources.BatchCommits
-    if (!BatchCommits.isCommitted(outDir, batchId))
-      BatchCommits.appendBatch(
-        PhashIndex.phashIngestDecisions(batch, indexPath)
-          .withColumn("batch_id", lit(batchId)),
-        outDir, batchId): Unit
-    val committed = batch.sparkSession.read
-      .parquet(outDir + s"/batch-$batchId")
-    PhashIndex.advancePhashIndex(
-      committed.filter(col("status") === "added")
-        .select("doc_id", "hash"), indexPath, Some(batchId))
-    compactOnCadence(batch.sparkSession, batchId, compactEvery,
-      Seq(indexPath -> PhashIndex.compactPhashIndex _))
+    val s = batch.sparkSession
+    logDecisions(outDir, batchId)(
+      PhashIndex.phashIngestDecisions(batch, indexPath))
+    ArtifactVersions.committed(s, outDir, Log, batchId).foreach(c =>
+      PhashIndex.advancePhashIndex(
+        c.filter(col("status") === "added").select("doc_id", "hash"),
+        indexPath, Some(batchId)))
+    compactOnCadence(s, batchId, compactEvery, Seq(indexPath))
   }
 
   /** STREAMING COMPOSED IMAGE CURATION — the q186 gate run live:
@@ -554,7 +540,7 @@ object Streams {
     * discipline), so a post-crash replay appends exactly what the
     * original attempt decided. The per-batch retain holds METADATA only
     * (media_id/reason/stat/hash — never payloads or decoded pixels,
-    * the q144 lesson); q186 is the batch twin and StreamsSpec pins
+    * as in q144); q186 is the batch twin and StreamsSpec pins
     * stream ≡ batch on the same arrivals.
     */
   def imageCurationSink(media: DataFrame, indexPath: String,
@@ -573,29 +559,18 @@ object Streams {
       : Unit = CacheScope.scoped {
     import graft.multimodal.{CodecQueries, PhashIndex}
     val s = batch.sparkSession
-    ArtifactVersions.advance(outDir, "audit", Some(batchId))(
-      CodecQueries.imageCurationIngestDecisions(batch, indexPath)
-        .withColumn("batch_id", lit(batchId)))
-    // the advance payload derives from the COMMITTED audit rows. On a
-    // replay AFTER a compaction flip the batch dir survives only as an
-    // EMPTY carried fence marker (no part files): the audit compacts
-    // on the cadence, and compaction runs strictly AFTER the (itself
-    // fenced) index advance in this body — so a marker with no data
-    // proves the advance already landed and there is nothing to apply.
-    val batchDir = new java.io.File(
-      s"${ArtifactVersions.live(outDir)}/audit/batch-$batchId")
-    val hasData = Option(batchDir.listFiles).exists(_.exists(f =>
-      !f.getName.startsWith(".") && !f.getName.startsWith("_")))
-    if (hasData) {
-      val committed = s.read.parquet(batchDir.toString)
+    logDecisions(outDir, batchId)(
+      CodecQueries.imageCurationIngestDecisions(batch, indexPath))
+    // the advance payload derives from the COMMITTED audit rows; the
+    // audit compacts on the cadence strictly AFTER the (itself fenced)
+    // index advance, so a batch whose rows a compaction folded away
+    // has nothing left to apply
+    ArtifactVersions.committed(s, outDir, Log, batchId).foreach(c =>
       PhashIndex.advancePhashIndex(
-        committed.filter(col("keep"))
+        c.filter(col("keep"))
           .select(col("media_id").as("doc_id"), col("hash")),
-        indexPath, Some(batchId))
-    }
-    compactOnCadence(s, batchId, compactEvery, Seq(
-      outDir -> compactLog("audit"),
-      indexPath -> PhashIndex.compactPhashIndex _))
+        indexPath, Some(batchId)))
+    compactOnCadence(s, batchId, compactEvery, Seq(outDir, indexPath))
   }
 
   /** STREAMING SEMANTIC-LEAK GATE — q187's embedding-level split-
@@ -632,18 +607,14 @@ object Streams {
       batchId: Long, corpusDir: String, indexPath: String,
       outDir: String, corpus: Option[DataFrame] = None)
       : Unit = CacheScope.scoped {
-    import graft.sources.BatchCommits
     import graft.similarity.SimilarityQueries
     // without `corpus` the corpus flat view is retained per batch; a
     // multi-batch BATCH caller (q192) passes it retained once for the
     // whole query instead
-    if (!BatchCommits.isCommitted(outDir, batchId))
-      BatchCommits.appendBatch(
-        SimilarityQueries.semanticLeakPairsOf(batch.sparkSession,
-            corpusDir, SimilarityQueries.flatVecs(batch), indexPath,
-            corpus = corpus)
-          .withColumn("batch_id", lit(batchId)),
-        outDir, batchId): Unit
+    logDecisions(outDir, batchId)(
+      SimilarityQueries.semanticLeakPairsOf(batch.sparkSession,
+        corpusDir, SimilarityQueries.flatVecs(batch), indexPath,
+        corpus = corpus))
   }
 
   /** STREAMING URL FRONTIER — q193's canonicalization + first-copy-
@@ -676,26 +647,15 @@ object Streams {
     */
   private[graft] def urlFrontierBatch(batch: DataFrame, batchId: Long,
       frontierPath: String, outDir: String): Unit = CacheScope.scoped {
-    import graft.sources.BatchCommits
-    val s = batch.sparkSession
-    if (!BatchCommits.isCommitted(outDir, batchId))
-      BatchCommits.appendBatch(
-        graft.text.TextQueries.urlFrontierDecisions(batch, frontierPath)
-          .withColumn("batch_id", lit(batchId)),
-        outDir, batchId): Unit
+    logDecisions(outDir, batchId)(
+      graft.text.TextQueries.urlFrontierDecisions(batch, frontierPath))
     // the frontier ADVANCE derives from the COMMITTED decision rows
-    // (kept AND capped — decisions are sticky) and fences
-    // independently: a replay after a crash between the two commits
-    // completes the advance from the exact bytes the original
-    // attempt decided
-    if (!BatchCommits.isCommitted(frontierPath, batchId)) {
-      val committed = s.read.parquet(outDir + s"/batch-$batchId")
-      BatchCommits.appendBatch(
-        committed.filter(col("status") =!= "duplicate")
-          .select(col("canonical_url"), col("domain"), col("keeper"),
-            (col("status") === "kept").as("kept")),
-        frontierPath, batchId): Unit
-    }
+    // and fences independently: a replay after a crash between the
+    // two commits completes the advance from the exact bytes the
+    // original attempt decided
+    ArtifactVersions.committed(batch.sparkSession, outDir, Log, batchId)
+      .foreach(graft.text.TextQueries.advanceFrontier(_, frontierPath,
+        batchId))
   }
 
   /** Streaming advance of the CORPUS-STATISTICS artifact (the q143

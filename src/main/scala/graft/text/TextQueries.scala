@@ -1340,7 +1340,8 @@ SELECT * FROM rep ORDER BY doc_id""")),
         // replay batch 0 after the frontier advanced: fences skip,
         // decisions must not change
         graft.streaming.Streams.urlFrontierBatch(b(0), 0L, frontier, audit)
-        graft.sources.BatchCommits.readComponent(s, audit)
+        graft.sources.ArtifactVersions.read(s, audit,
+            graft.streaming.Streams.Log)
           .select("canonical_url", "domain", "batch_id", "keeper",
             "n_docs", "status")
           .orderBy("canonical_url", "batch_id")
@@ -1382,26 +1383,38 @@ SELECT * FROM rep ORDER BY doc_id""")),
   /** The persisted URL FRONTIER's seen set: every canonical decided
     * so far — kept AND domain-capped, because decisions are STICKY (a
     * capped canonical re-arriving must read 'duplicate', never be
-    * re-litigated against a fresh domain budget). One fenced
-    * `batch-<id>` dir per micro-batch ([[graft.sources.BatchCommits]]
-    * discipline); empty-schema frame before the first commit.
+    * re-litigated against a fresh domain budget). The one component of
+    * the [[graft.sources.ArtifactVersions]] root at `frontierPath`,
+    * one fenced commit per micro-batch; empty-schema frame before the
+    * first commit lands.
     */
   private[graft] def readFrontier(s: SparkSession,
       frontierPath: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val f = new java.io.File(frontierPath)
-    val hasBatch = f.isDirectory && Option(f.listFiles())
-      .exists(_.exists(_.getName.startsWith("batch-")))
-    if (!hasBatch)
+    if (!graft.sources.ArtifactVersions.holdsData(frontierPath, Frontier))
       s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(Seq(
           StructField("canonical_url", StringType),
           StructField("domain", StringType),
           StructField("keeper", LongType),
           StructField("kept", BooleanType))))
-    else graft.sources.BatchCommits.readComponent(s, frontierPath)
+    else graft.sources.ArtifactVersions.read(s, frontierPath, Frontier)
       .select("canonical_url", "domain", "keeper", "kept")
   }
+
+  private val Frontier = "seen"
+
+  /** Advance the frontier with one batch's committed decision rows:
+    * every decided canonical, kept AND capped (decisions are sticky),
+    * fenced on `batchId`.
+    */
+  private[graft] def advanceFrontier(decisions: DataFrame,
+      frontierPath: String, batchId: Long): Unit =
+    graft.sources.ArtifactVersions.advance(frontierPath, Frontier,
+      Some(batchId))(
+      decisions.filter(col("status") =!= "duplicate")
+        .select(col("canonical_url"), col("domain"), col("keeper"),
+          (col("status") === "kept").as("kept")))
 
   /** One micro-batch of URL-frontier decisions against the persisted
     * seen set — the shared core of the q194 batch twin and the live

@@ -119,7 +119,7 @@ class DedupIndexSpec extends AnyFunSuite {
     val wantPairs = DedupQueries.pairsFromIndexUnsorted(spark, idx)
       .collect().toSet
     graft.CacheScope.flush(spark)
-    DedupQueries.compactDedupIndex(spark, idx)
+    graft.sources.ArtifactVersions.compact(spark, idx)
     // exactly the distinct set survives; the serve graph is unchanged
     assert(DedupQueries.indexSignatures(spark, idx).count() == 40)
     assert(DedupQueries.indexSignatures(spark, idx).collect().toSet
@@ -265,7 +265,7 @@ class DedupIndexSpec extends AnyFunSuite {
       val dir = s"${graft.sources.ArtifactVersions.live(root)}/$component"
       var served: DataFrame = null
       val jobs = ListenerBus.jobsDuring(spark.sparkContext) {
-        served = graft.sources.BatchCommits.readComponent(spark, dir)
+        served = graft.sources.ArtifactVersions.read(spark, root, component)
       }
       assert(jobs == 0, s"reading $component started $jobs job(s)")
       val inferred = spark.read.option("recursiveFileLookup", "true")

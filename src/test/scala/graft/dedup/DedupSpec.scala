@@ -202,7 +202,7 @@ class DedupSpec extends AnyFunSuite {
         r.getString(4))).toSet
     def grams() = DedupQueries.liveGrams(spark, root).count()
     val (before, nBefore) = (scrub(), grams())
-    DedupQueries.compactNgramIndex(spark, root)
+    graft.sources.ArtifactVersions.compact(spark, root)
     assert(graft.sources.ArtifactVersions.live(root).endsWith("v2"),
       "compaction must publish the next version")
     assert(grams() < nBefore, "the replayed duplicate rows must be gone")

@@ -80,7 +80,7 @@ class PhashIndexSpec extends AnyFunSuite {
     assert(frame(PhashIndex.indexHashes(spark, idx)) == before)
     // compact (version flip), then replay again: the carried markers
     // must still fence; serving is unchanged
-    PhashIndex.compactPhashIndex(spark, idx)
+    graft.sources.ArtifactVersions.compact(spark, idx)
     assert(frame(PhashIndex.indexHashes(spark, idx)) == before)
     PhashIndex.advancePhashIndex(batch, idx, Some(0L))
     assert(frame(PhashIndex.indexHashes(spark, idx)) == before,

@@ -116,7 +116,7 @@ class IvfIndexSpec extends AnyFunSuite {
       .dropDuplicates("vec_id").collect().toSet
     val wantCent = SimilarityQueries.indexCentroids(spark, idx)
       .collect().toSet
-    SimilarityQueries.compactIvfIndex(spark, idx)
+    graft.sources.ArtifactVersions.compact(spark, idx)
     assert(SimilarityQueries.indexAssignments(spark, idx).count() == n)
     assert(SimilarityQueries.indexAssignments(spark, idx).collect().toSet
       == wantAssign)

@@ -68,15 +68,18 @@ class ArtifactVersionsSpec extends AnyFunSuite {
     DedupQueries.buildDedupIndex(docs.filter(col("doc_id") < 25), root)
     val readerPath = ArtifactVersions.live(root)
     assert(readerPath.endsWith("v1"))
-    assert(DedupQueries.indexSignatures(spark, readerPath).count() == 25)
+    // a reader holding a resolved version reads its component dir
+    def held(v: String) =
+      BatchCommits.readComponent(spark, s"$v/signatures")
+    assert(held(readerPath).count() == 25)
     // rebuild (e.g. a drift trigger fired): the wider corpus becomes v2
     DedupQueries.buildDedupIndex(docs.filter(col("doc_id") < 40), root)
-    assert(DedupQueries.indexSignatures(spark, readerPath).count() == 25,
+    assert(held(readerPath).count() == 25,
       "reader disturbed by a rebuild")
     // new resolutions see v2; the held v1 path stays intact
     assert(ArtifactVersions.live(root).endsWith("v2"))
     assert(DedupQueries.indexSignatures(spark, root).count() == 40)
-    assert(DedupQueries.indexSignatures(spark, readerPath).count() == 25,
+    assert(held(readerPath).count() == 25,
       "published rebuild must not rewrite old versions")
     graft.CacheScope.flush(spark)
   }
@@ -116,5 +119,96 @@ class ArtifactVersionsSpec extends AnyFunSuite {
       col("doc_id") % 6 === 3 && col("doc_id") < 100), ph)
     assert(entries(ArtifactVersions.live(ph)) == Set("hashes"))
     graft.CacheScope.flush(spark)
+  }
+
+  test("the first fenced advance on an empty root publishes v1; " +
+      "replaying its id evaluates nothing") {
+    import spark.implicits._
+    val root = graft.TempArtifacts.dir("graft_artver_first")
+    assert(ArtifactVersions.current(root).isEmpty)
+    ArtifactVersions.advance(root, "log", Some(0L))(Seq(1L, 2L).toDF("x"))
+    assert(ArtifactVersions.live(root).endsWith("v1"))
+    ArtifactVersions.advance(root, "log", Some(0L))(
+      throw new AssertionError("the replay evaluated its rows"))
+    assert(ArtifactVersions.live(root).endsWith("v1"))
+    assert(ArtifactVersions.read(spark, root, "log")
+      .as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+  }
+
+  test("committed returns the first attempt's rows when a replay " +
+      "offers a different payload, and None for a batch never committed") {
+    import spark.implicits._
+    val root = graft.TempArtifacts.dir("graft_artver_committed")
+    ArtifactVersions.advance(root, "log", Some(3L))(Seq(1L).toDF("x"))
+    ArtifactVersions.advance(root, "log", Some(3L))(Seq(99L).toDF("x"))
+    assert(ArtifactVersions.committed(spark, root, "log", 3L)
+      .map(_.as[Long].collect().toSeq).contains(Seq(1L)))
+    assert(ArtifactVersions.committed(spark, root, "log", 4L).isEmpty)
+  }
+
+  test("committed returns None after a compaction has rewritten the " +
+      "batch; the rows still read and the fence still holds") {
+    import spark.implicits._
+    val root = graft.TempArtifacts.dir("graft_artver_committed_cmp")
+    ArtifactVersions.advance(root, "log", Some(0L))(Seq(1L).toDF("x"))
+    ArtifactVersions.advance(root, "log", Some(1L))(Seq(2L).toDF("x"))
+    ArtifactVersions.compact(spark, root)
+    assert(ArtifactVersions.live(root).endsWith("v2"))
+    assert(ArtifactVersions.committed(spark, root, "log", 0L).isEmpty)
+    assert(ArtifactVersions.committed(spark, root, "log", 1L).isEmpty)
+    assert(ArtifactVersions.holdsData(root, "log"))
+    assert(ArtifactVersions.read(spark, root, "log")
+      .as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    ArtifactVersions.advance(root, "log", Some(1L))(
+      throw new AssertionError("the carried marker did not fence"))
+  }
+
+  test("compact(s, root) on an IVF-shaped root copies the never-advanced " +
+      "component's files byte for byte and rewrites the advanced one") {
+    import spark.implicits._
+    val root = graft.TempArtifacts.dir("graft_artver_ivf_shape")
+    ArtifactVersions.build(root,
+      "centroids" -> Seq((0, 0, 0.5), (1, 0, 1.5)).toDF("clabel", "ci", "c"),
+      "assignments" -> Seq((10L, 0), (11L, 1)).toDF("vec_id", "lst"))
+    ArtifactVersions.advance(root, "assignments", Some(0L))(
+      Seq((12L, 0)).toDF("vec_id", "lst"))
+    ArtifactVersions.advance(root, "assignments", None)(
+      Seq((12L, 0)).toDF("vec_id", "lst"))
+    val old = ArtifactVersions.live(root)
+    ArtifactVersions.compact(spark, root)
+    val now = ArtifactVersions.live(root)
+    assert(now != old)
+    def files(v: String): Map[String, Seq[Byte]] =
+      new java.io.File(v, "centroids").listFiles
+        .filter(f => f.isFile && !f.getName.startsWith(".") &&
+          !f.getName.startsWith("_"))
+        .map(f => f.getName ->
+          java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+    assert(files(old).nonEmpty && files(now) == files(old))
+    // the advanced component collapses the unfenced duplicate
+    assert(ArtifactVersions.read(spark, root, "assignments")
+      .as[(Long, Int)].collect().sorted.toSeq ==
+      Seq((10L, 0), (11L, 1), (12L, 0)))
+  }
+
+  test("no main file outside graft/sources names the artifact layout " +
+      "or calls the batch fence") {
+    val layout = ("(batch|append)-(?![a-z])|\\bCURRENT\\b(?!\\s+ROW)|" +
+      "\\b(isCommitted|appendBatch|readComponent|BatchCommits)\\b").r
+    val main = new java.io.File("src/main/scala")
+    assert(main.isDirectory, s"run from the repo root: no $main")
+    def scala(d: java.io.File): Seq[java.io.File] =
+      d.listFiles.toSeq.flatMap(f =>
+        if (f.isDirectory) scala(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val sources = new java.io.File(main, "graft/sources").getPath
+    val hits = for {
+      f <- scala(main) if !f.getPath.startsWith(sources)
+      text = new String(java.nio.file.Files.readAllBytes(f.toPath),
+        java.nio.charset.StandardCharsets.UTF_8)
+      m <- layout.findAllMatchIn(text)
+    } yield s"${f.getPath}:${text.take(m.start).count(_ == '\n') + 1}: " +
+      m.matched
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

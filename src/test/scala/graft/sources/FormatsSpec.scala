@@ -36,6 +36,15 @@ class FormatsSpec extends AnyFunSuite {
       assert(loaded.schema == spark.read.parquet(s"$sf/$name.parquet").schema,
         name)
     }
+    // the events stream declares the footer schema the same way
+    var stream: org.apache.spark.sql.DataFrame = null
+    val streamJobs = ListenerBus.jobsDuring(spark.sparkContext) {
+      stream = graft.streaming.Streams.eventsStream(spark, sf)
+    }
+    assert(streamJobs == 0, s"building the events stream started " +
+      s"$streamJobs job(s)")
+    assert(stream.isStreaming &&
+      stream.columns.toSeq == Tables.events(spark, sf).columns.toSeq)
     // the events loader still branches on the observed ts type
     val raw = spark.read.parquet(s"$sf/events.parquet")
     assert(Tables.events(spark, sf).schema == StructType(raw.schema.map(f =>

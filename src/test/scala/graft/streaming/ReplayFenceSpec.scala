@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SharedSpark
 import graft.dedup.DedupQueries
-import graft.sources.BatchCommits
+import graft.sources.ArtifactVersions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * after any crash point leaves every artifact byte-identical to the
   * no-crash run. Each test drives the sinks' extracted per-batch
   * bodies directly (the only way to force a same-id replay
-  * deterministically) and asserts artifact equality — the contract
-  * the old "replay caveat" scaladocs disclaimed.
+  * deterministically) and asserts artifact equality. The fence itself
+  * is BatchCommitsSpec's subject.
   */
 class ReplayFenceSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -27,56 +27,13 @@ class ReplayFenceSpec extends AnyFunSuite {
   private def snap(df: DataFrame): (Long, Set[String]) =
     (df.count(), df.collect().map(_.toString).toSet)
 
+  /** A sink's decision log. */
+  private def log(outDir: String): DataFrame =
+    ArtifactVersions.read(spark, outDir, Streams.Log)
+
   /** The dedup index's band table, derived from its signatures. */
   private def bandsOf(idx: String): DataFrame =
     DedupQueries.bandsOf(DedupQueries.indexSignatures(spark, idx))
-
-  test("BatchCommits: second commit of the same batch is a no-op; " +
-      "readComponent sees flat files plus committed batch dirs; " +
-      "a stranded staging dir stays invisible and is reclaimed") {
-    import spark.implicits._
-    val dir = tmp("graft_bc") + "/component"
-    Seq(1L, 2L).toDF("x").write.parquet(dir) // the flat build write
-    assert(!BatchCommits.isCommitted(dir, 7L))
-    assert(BatchCommits.appendBatch(Seq(3L).toDF("x"), dir, 7L))
-    assert(BatchCommits.isCommitted(dir, 7L))
-    // the replay: different payload on purpose — it must NOT land
-    assert(!BatchCommits.appendBatch(Seq(99L).toDF("x"), dir, 7L))
-    // a crashed attempt's (per-attempt-unique) staging dir is hidden
-    // from readers...
-    Seq(42L).toDF("x").write.parquet(dir + "/.staging-8-deadcafe")
-    assert(BatchCommits.readComponent(spark, dir)
-      .as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
-    // ...and the retried commit of the same batch reclaims it
-    assert(BatchCommits.appendBatch(Seq(4L).toDF("x"), dir, 8L))
-    assert(BatchCommits.readComponent(spark, dir)
-      .as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, ".staging-8-deadcafe")))
-  }
-
-  test("BatchCommits: a stray FILE at the target name is an error, " +
-      "not a swallowed race — and the fence still holds afterwards") {
-    import spark.implicits._
-    val dir = tmp("graft_bc_exotic") + "/component"
-    Seq(1L).toDF("x").write.parquet(dir)
-    // simulate the exotic failure: something that is NOT a committed
-    // batch directory (e.g. a botched manual restore) sits at the name
-    java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "batch-9"))
-    val e = intercept[java.nio.file.FileSystemException] {
-      BatchCommits.appendBatch(Seq(2L).toDF("x"), dir, 9L)
-    }
-    assert(e != null)
-    // the failed attempt left no staging litter behind
-    assert(Option(new java.io.File(dir).listFiles).get
-      .forall(f => !f.getName.startsWith(".staging-")))
-    // a real committed dir still fences: remove the stray, commit, replay
-    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "batch-9"))
-    assert(BatchCommits.appendBatch(Seq(2L).toDF("x"), dir, 9L))
-    assert(!BatchCommits.appendBatch(Seq(99L).toDF("x"), dir, 9L))
-    assert(BatchCommits.readComponent(spark, dir)
-      .as[Long].collect().sorted.toSeq == Seq(1L, 2L))
-  }
 
   test("nearDupIngestBatch: full replay and crash-after-decisions " +
       "replay both leave the artifact and decision log unchanged") {
@@ -90,7 +47,7 @@ class ReplayFenceSpec extends AnyFunSuite {
     Streams.nearDupIngestBatch(b1, 0L, idxRef, outRef)
     val wantSig = snap(DedupQueries.indexSignatures(spark, idxRef))
     val wantBand = snap(bandsOf(idxRef))
-    val wantOut = snap(BatchCommits.readComponent(spark, outRef))
+    val wantOut = snap(log(outRef))
 
     // full replay: the whole batch body runs twice with the same id
     val idxA = tmp("graft_rf_nd_a"); val outA = tmp("graft_rf_nd_aout")
@@ -99,20 +56,19 @@ class ReplayFenceSpec extends AnyFunSuite {
     Streams.nearDupIngestBatch(b1, 0L, idxA, outA)
     assert(snap(DedupQueries.indexSignatures(spark, idxA)) == wantSig)
     assert(snap(bandsOf(idxA)) == wantBand)
-    assert(snap(BatchCommits.readComponent(spark, outA)) == wantOut)
+    assert(snap(log(outA)) == wantOut)
 
     // crash window: decisions committed, advance never ran — the
     // replay must complete the advance from the COMMITTED decisions
     val idxB = tmp("graft_rf_nd_b"); val outB = tmp("graft_rf_nd_bout")
     DedupQueries.buildDedupIndex(base, idxB)
-    BatchCommits.appendBatch(
+    ArtifactVersions.advance(outB, Streams.Log, Some(0L))(
       DedupQueries.ingestBatchDecisions(b1, idxB)
-        .withColumn("batch_id", lit(0L)),
-      outB, 0L)
+        .withColumn("batch_id", lit(0L)))
     Streams.nearDupIngestBatch(b1, 0L, idxB, outB)
     assert(snap(DedupQueries.indexSignatures(spark, idxB)) == wantSig)
     assert(snap(bandsOf(idxB)) == wantBand)
-    assert(snap(BatchCommits.readComponent(spark, outB)) == wantOut)
+    assert(snap(log(outB)) == wantOut)
     graft.CacheScope.flush(spark)
   }
 
@@ -127,7 +83,7 @@ class ReplayFenceSpec extends AnyFunSuite {
     val idxRef = tmp("graft_rf_ss_ref"); val outRef = tmp("graft_rf_ss_refout")
     DedupQueries.buildNgramIndex(base, w, idxRef)
     Streams.spanScrubBatch(b1, 0L, idxRef, w, outRef, 0)
-    val wantOut = snap(BatchCommits.readComponent(spark, outRef))
+    val wantOut = snap(log(outRef))
 
     val idx = tmp("graft_rf_ss"); val out = tmp("graft_rf_ss_out")
     DedupQueries.buildNgramIndex(base, w, idx)
@@ -136,7 +92,7 @@ class ReplayFenceSpec extends AnyFunSuite {
     Streams.spanScrubBatch(b1, 0L, idx, w, out, 0) // the replay
     assert(snap(DedupQueries.liveGrams(spark, idx)) == grams1,
       "replay appended grams despite the fence")
-    assert(snap(BatchCommits.readComponent(spark, out)) == wantOut)
+    assert(snap(log(out)) == wantOut)
     graft.CacheScope.flush(spark)
   }
 
@@ -158,21 +114,21 @@ class ReplayFenceSpec extends AnyFunSuite {
     Streams.curationIngestBatch(b1, 0L, ngR, ddR, w, outR, 0)
     val wantGrams = snap(DedupQueries.liveGrams(spark, ngR))
     val wantSig = snap(DedupQueries.indexSignatures(spark, ddR))
-    val wantOut = snap(BatchCommits.readComponent(spark, outR))
+    val wantOut = snap(log(outR))
 
     val (ngA, ddA, outA) = fresh("a")
     Streams.curationIngestBatch(b1, 0L, ngA, ddA, w, outA, 0)
     Streams.curationIngestBatch(b1, 0L, ngA, ddA, w, outA, 0)
     assert(snap(DedupQueries.liveGrams(spark, ngA)) == wantGrams)
     assert(snap(DedupQueries.indexSignatures(spark, ddA)) == wantSig)
-    assert(snap(BatchCommits.readComponent(spark, outA)) == wantOut)
+    assert(snap(log(outA)) == wantOut)
 
     // crash between the n-gram advance and the dedup advance: model it
     // by deleting the dedup index's batch commit after a full run
     val (ngB, ddB, outB) = fresh("b")
     Streams.curationIngestBatch(b1, 0L, ngB, ddB, w, outB, 0)
     val p = java.nio.file.Paths.get(
-      graft.sources.ArtifactVersions.live(ddB) + "/signatures/batch-0")
+      ArtifactVersions.live(ddB) + "/signatures/batch-0")
     Option(p.toFile.listFiles).getOrElse(Array.empty)
       .foreach(f => java.nio.file.Files.delete(f.toPath))
     java.nio.file.Files.delete(p)
@@ -184,7 +140,7 @@ class ReplayFenceSpec extends AnyFunSuite {
       "replay double-advanced the n-gram index")
     assert(snap(DedupQueries.indexSignatures(spark, ddB)) == wantSig,
       "replay did not complete the missing dedup advance exactly once")
-    assert(snap(BatchCommits.readComponent(spark, outB)) == wantOut)
+    assert(snap(log(outB)) == wantOut)
     graft.CacheScope.flush(spark)
   }
 
@@ -196,7 +152,7 @@ class ReplayFenceSpec extends AnyFunSuite {
     val idx = tmp("graft_rf_flip")
     DedupQueries.buildDedupIndex(base, idx)
     DedupQueries.advanceDedupIndex(b1, idx, Some(0L))
-    DedupQueries.compactDedupIndex(spark, idx)
+    ArtifactVersions.compact(spark, idx)
     val wantSig = snap(DedupQueries.indexSignatures(spark, idx))
     val wantBand = snap(bandsOf(idx))
     // the crash window: advance committed into the OLD version, the
@@ -224,120 +180,24 @@ class ReplayFenceSpec extends AnyFunSuite {
     val split = SimilarityQueries.AnnAdvanceSplit
     val idx = tmp("graft_rf_ivf_flip")
     SimilarityQueries.buildIvfIndex(f.filter(col("vec_id") < split), idx)
-    val built = graft.sources.ArtifactVersions.live(idx)
+    val built = ArtifactVersions.live(idx)
     val arr = f.filter(col("vec_id") >= split).localCheckpoint(true)
     SimilarityQueries.advanceIvfIndex(arr, idx, Some(0L))
-    SimilarityQueries.compactIvfIndex(spark, idx)
+    ArtifactVersions.compact(spark, idx)
     val want = snap(SimilarityQueries.indexAssignments(spark, idx))
     SimilarityQueries.advanceIvfIndex(arr, idx, Some(0L)) // the replay
     assert(snap(SimilarityQueries.indexAssignments(spark, idx)) == want,
       "replay advanced the compacted IVF index despite the carried marker")
     // the built version survives the FIRST flip as the grace copy...
     assert(new java.io.File(built, "assignments").isDirectory)
-    SimilarityQueries.compactIvfIndex(spark, idx)
-    graft.sources.ArtifactVersions.pruneVersions(idx)
+    ArtifactVersions.compact(spark, idx)
+    ArtifactVersions.pruneVersions(idx)
     // ...and the prune after the SECOND flip retires it (grace window
     // over); the served frame is unchanged
     assert(!new java.io.File(built, "assignments").exists)
     assert(!new java.io.File(built, "centroids").exists)
     assert(snap(SimilarityQueries.indexAssignments(spark, idx)) == want)
     graft.CacheScope.flush(spark)
-  }
-
-  test("carryMarkers keeps only the newest MarkerKeep ids; sweepStaging " +
-      "retires stranded attempt dirs") {
-    val oldDir = tmp("graft_rf_mk") + "/c"; val newDir = tmp("graft_rf_mk2")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(oldDir))
-    val n = BatchCommits.MarkerKeep + 9
-    (0 until n).foreach(i => java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(oldDir, s"batch-$i")))
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(oldDir, ".staging-3-cafe"))
-    val carried = BatchCommits.carryMarkers(oldDir, newDir)
-    assert(carried == (9L until n.toLong),
-      s"wanted the ${BatchCommits.MarkerKeep} newest, got $carried")
-    val landed = Option(new java.io.File(newDir).listFiles).get
-      .map(_.getName).toSet
-    assert(landed == (9 until n).map(i => s"batch-$i").toSet)
-    // markers are EMPTY (fence-only) — readers see no rows in them
-    assert(new java.io.File(newDir, "batch-9").listFiles.isEmpty)
-    BatchCommits.sweepStaging(oldDir)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(oldDir, ".staging-3-cafe")))
-  }
-
-  test("appendBatch rejects an id deeper than MarkerKeep below the " +
-      "newest committed id — an out-of-contract replay surfaces " +
-      "loudly instead of double-appending") {
-    import spark.implicits._
-    val dir = tmp("graft_rf_deep") + "/component"
-    assert(BatchCommits.appendBatch(Seq(1L).toDF("x"), dir, 0L))
-    assert(BatchCommits.appendBatch(Seq(2L).toDF("x"), dir, 20L))
-    // inside the fence window: allowed. With dense ids 0..mx a
-    // compaction keeps the MarkerKeep NEWEST markers — the window
-    // (mx - MarkerKeep, mx] — so mx - MarkerKeep + 1 is the oldest id
-    // whose marker is guaranteed to survive
-    assert(BatchCommits.appendBatch(Seq(3L).toDF("x"), dir,
-      20L - BatchCommits.MarkerKeep + 1))
-    // AT the boundary: in the dense case this id's marker is exactly
-    // the first one a compaction drops — must throw, not silently
-    // append (regression: the old `<` guard admitted it)
-    val eb = intercept[IllegalStateException] {
-      BatchCommits.appendBatch(Seq(9L).toDF("x"), dir,
-        20L - BatchCommits.MarkerKeep)
-    }
-    assert(eb.getMessage.contains("MarkerKeep"))
-    // deeper than the window: a compaction may have dropped the
-    // fence — must throw, not silently append
-    val e = intercept[IllegalStateException] {
-      BatchCommits.appendBatch(Seq(4L).toDF("x"), dir, 1L)
-    }
-    assert(e.getMessage.contains("MarkerKeep"))
-    // ...and nothing landed for the rejected id
-    assert(!BatchCommits.isCommitted(dir, 1L))
-  }
-
-  test("identity compaction: a single-write component is copied " +
-      "verbatim (in-write duplicate rows preserved, marker carried); " +
-      "a multi-write component still collapses replayed rows") {
-    import spark.implicits._
-    import graft.sources.ArtifactVersions
-    // single write WITH legitimate duplicate rows: the fast path must
-    // not distinct them away
-    val root1 = tmp("graft_rf_idc1")
-    val c1 = s"$root1/grams"
-    assert(BatchCommits.appendBatch(Seq(7L, 7L, 8L).toDF("x"), c1, 0L))
-    ArtifactVersions.compact(spark, root1, "grams")
-    val v1 = ArtifactVersions.live(root1)
-    assert(ArtifactVersions.read(spark, root1, "grams")
-      .as[Long].collect().sorted.toSeq == Seq(7L, 7L, 8L),
-      "identity compaction altered a single write's rows")
-    assert(new java.io.File(s"$v1/grams", "batch-0").isDirectory,
-      "fence marker not carried by the fast path")
-    // the copy PRESERVES the batch-dir provenance (a flat copy would
-    // make the NEXT flip's detector fall back to the distinct rewrite
-    // and merge the in-write duplicates)...
-    assert(Option(new java.io.File(s"$v1/grams/batch-0").listFiles).get
-      .exists(f => f.isFile && f.getName.endsWith(".parquet")),
-      "fast path must copy into the committed batch dir, not flat")
-    // ...so a SECOND flip with no new writes is identity again and the
-    // duplicate rows survive it too
-    ArtifactVersions.compact(spark, root1, "grams")
-    val v1b = ArtifactVersions.live(root1)
-    assert(v1b != v1)
-    assert(ArtifactVersions.read(spark, root1, "grams")
-      .as[Long].collect().sorted.toSeq == Seq(7L, 7L, 8L),
-      "second identity flip merged the single write's duplicate rows")
-    // two writes with a byte-identical replayed payload (the unfenced
-    // lifecycle flow compaction exists for): the rewrite path dedups
-    val root2 = tmp("graft_rf_idc2")
-    val c2 = s"$root2/grams"
-    assert(BatchCommits.appendBatch(Seq(1L, 2L).toDF("x"), c2, 0L))
-    assert(BatchCommits.appendBatch(Seq(1L, 2L).toDF("x"), c2, 1L))
-    ArtifactVersions.compact(spark, root2, "grams")
-    assert(ArtifactVersions.read(spark, root2, "grams")
-      .as[Long].collect().sorted.toSeq == Seq(1L, 2L),
-      "multi-write compaction no longer collapses replayed rows")
   }
 
   test("IVF and CMS advances: same-id replay is a no-op") {
@@ -372,7 +232,6 @@ class ReplayFenceSpec extends AnyFunSuite {
   test("compactIfFragmented: below threshold is a no-op (version " +
       "unchanged); at threshold it compacts, serves identically, and " +
       "fragmentation collapses") {
-    import graft.sources.ArtifactVersions
     val w = DedupQueries.DupW
     val split = 25L
     val idx = tmp("graft_rf_frag")
@@ -390,14 +249,14 @@ class ReplayFenceSpec extends AnyFunSuite {
     val verBefore = ArtifactVersions.live(idx)
     // below threshold: nothing happens
     assert(!ArtifactVersions.compactIfFragmented(spark, idx,
-      fragBefore + 1)(DedupQueries.compactNgramIndex))
+      fragBefore + 1))
     assert(ArtifactVersions.live(idx) == verBefore,
       "no-op trigger must not publish a version")
     // at threshold: compacts, fragmentation collapses (markers are
     // excluded from the metric — else any threshold <= MarkerKeep
     // would re-trigger forever), served grams identical
     assert(ArtifactVersions.compactIfFragmented(spark, idx,
-      fragBefore)(DedupQueries.compactNgramIndex))
+      fragBefore))
     val verAfter = ArtifactVersions.live(idx)
     assert(verAfter != verBefore)
     assert(snap(DedupQueries.liveGrams(spark, idx)) == want,
@@ -407,7 +266,7 @@ class ReplayFenceSpec extends AnyFunSuite {
     // the trigger CONVERGES: an immediate re-run at the same
     // threshold finds nothing to do and publishes nothing
     assert(!ArtifactVersions.compactIfFragmented(spark, idx,
-      fragBefore)(DedupQueries.compactNgramIndex))
+      fragBefore))
     assert(ArtifactVersions.live(idx) == verAfter,
       "converged trigger must not publish another version")
     graft.CacheScope.flush(spark)

@@ -358,7 +358,7 @@ class StreamsSpec extends AnyFunSuite {
     // two advances, two compactions: v1 (build) -> v2 -> v3 live
     assert(graft.sources.ArtifactVersions.live(idxS).endsWith("v3"),
       "per-batch compaction must have published v3")
-    val got = graft.sources.BatchCommits.readComponent(spark, out)
+    val got = graft.sources.ArtifactVersions.read(spark, out, Streams.Log)
       .select("doc_id", "n_tokens", "n_spans", "n_removed", "clean_text")
       .collect().toSeq.map(row5).sortBy(_._1)
     assert(got.nonEmpty && got == want)
@@ -456,7 +456,7 @@ class StreamsSpec extends AnyFunSuite {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
     } finally q.stop()
-    val got = graft.sources.BatchCommits.readComponent(spark, out)
+    val got = graft.sources.ArtifactVersions.read(spark, out, Streams.Log)
       .select("doc_id", "n_removed", "status", "batch_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
       .toSeq.sortBy(_._1)
@@ -509,7 +509,8 @@ class StreamsSpec extends AnyFunSuite {
     // decisions: static 'existing' + streamed ADMISSIONS == batch flow
     // (the batch flow's contract emits no rows for drops; the stream's
     // outDir additionally records them as 'dup' for auditability)
-    val streamed = graft.sources.BatchCommits.readComponent(spark, out)
+    val streamed =
+      graft.sources.ArtifactVersions.read(spark, out, Streams.Log)
     val total = docs.filter(col("doc_id") < split1)
       .select(col("doc_id"), lit("existing").as("status"))
       .unionAll(streamed.filter(col("status") === "added")
@@ -645,7 +646,7 @@ class StreamsSpec extends AnyFunSuite {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2Hashes: _*); q.processAllAvailable()
     } finally q.stop()
-    val dec = graft.sources.BatchCommits.readComponent(spark, out)
+    val dec = graft.sources.ArtifactVersions.read(spark, out, Streams.Log)
       .collect().map(r => r.getLong(0) -> (r.getString(2), r.getLong(3)))
       .toMap
     b1.foreach { case (id, _) =>
@@ -707,7 +708,8 @@ class StreamsSpec extends AnyFunSuite {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
     } finally q.stop()
-    def served() = graft.sources.ArtifactVersions.read(spark, out, "stats")
+    def served() =
+      graft.sources.ArtifactVersions.read(spark, out, Streams.Log)
       .select("media_id", "kind", "status", "codec", "width", "height",
         "n_units", "exact_sum", "error")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
@@ -757,7 +759,7 @@ class StreamsSpec extends AnyFunSuite {
       mem.addData(b2: _*); q.processAllAvailable()
     } finally q.stop()
     def served() = {
-      graft.sources.ArtifactVersions.read(spark, out, "audit")
+      graft.sources.ArtifactVersions.read(spark, out, Streams.Log)
         .select("media_id", "kind", "reason", "keep", "gate_stat")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
           r.getBoolean(3), r.getLong(4))).sortBy(_._1).toSeq
@@ -826,7 +828,7 @@ class StreamsSpec extends AnyFunSuite {
       mem.addData(b2: _*); q.processAllAvailable()
     } finally q.stop()
     def served() = {
-      graft.sources.ArtifactVersions.read(spark, out, "audit")
+      graft.sources.ArtifactVersions.read(spark, out, Streams.Log)
         .select("media_id", "reason", "keep", "gate_stat", "hash",
           "dup_of")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getBoolean(2),
@@ -912,7 +914,8 @@ class StreamsSpec extends AnyFunSuite {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
     } finally q.stop()
-    def served() = graft.sources.BatchCommits.readComponent(spark, out)
+    def served() =
+      graft.sources.ArtifactVersions.read(spark, out, Streams.Log)
       .select("train_vec", "val_vec", "cos").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val got = served()
@@ -952,8 +955,8 @@ class StreamsSpec extends AnyFunSuite {
       Streams.urlFrontierBatch(rows.toDF("doc_id", "url"), k.toLong,
         fB, aB)
     }
-    def decisions(dir: String) = graft.sources.BatchCommits
-      .readComponent(spark, dir)
+    def decisions(dir: String) = graft.sources.ArtifactVersions
+      .read(spark, dir, Streams.Log)
       .select("canonical_url", "batch_id", "keeper", "n_docs", "status")
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
@@ -974,8 +977,7 @@ class StreamsSpec extends AnyFunSuite {
       "streamed decision log must equal the batch twin's")
     // forced replay of batch 0 AFTER the frontier advanced: both
     // fences must skip — not one decision row or frontier row changes
-    def frontierRows(dir: String) = graft.sources.BatchCommits
-      .readComponent(spark, dir)
+    def frontierRows(dir: String) = TextQueries.readFrontier(spark, dir)
       .collect().map(_.toString).toSeq.sorted
     val fBefore = frontierRows(fS)
     Streams.urlFrontierBatch(batches(0).toDF("doc_id", "url"), 0L,
@@ -984,12 +986,33 @@ class StreamsSpec extends AnyFunSuite {
     assert(frontierRows(fS) == fBefore, "replay changed the frontier")
     // stickiness: every decided canonical (kept AND capped) is in the
     // frontier exactly once; kept per domain never exceeds the cap
-    val fr = graft.sources.BatchCommits.readComponent(spark, fS)
+    val fr = TextQueries.readFrontier(spark, fS)
     assert(fr.groupBy("canonical_url").count()
       .filter(col("count") > 1).count() == 0)
     val overCap = fr.filter(col("kept")).groupBy("domain").count()
       .filter(col("count") > TextQueries.UrlDomainCap).count()
     assert(overCap == 0, "a domain exceeded the politeness cap")
     graft.CacheScope.flush(spark)
+  }
+
+  test("a frontier whose first commit crashed after the first publish " +
+      "reads as the empty, typed frame") {
+    import graft.text.TextQueries
+    val frontier = graft.TempArtifacts.dir("graft_urlf_crash")
+    // the first advance publishes v1, then its commit's write fails
+    val failing = spark.range(1).select(
+      lit("https://a.example/x").as("canonical_url"),
+      lit("a.example").as("domain"), col("id").as("keeper"),
+      raise_error(lit("crash before the commit")).cast("string")
+        .as("status"))
+    intercept[Exception] {
+      TextQueries.advanceFrontier(failing, frontier, 0L)
+    }
+    assert(graft.sources.ArtifactVersions.live(frontier).endsWith("v1"))
+    val read = TextQueries.readFrontier(spark, frontier)
+    assert(read.isEmpty)
+    assert(read.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("canonical_url" -> "string", "domain" -> "string",
+        "keeper" -> "bigint", "kept" -> "boolean"))
   }
 }
